@@ -27,28 +27,6 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 
-def fan_out_small_scan(df: DataFrame) -> DataFrame:
-    """Unsplittable-input mitigation (optimization guide §2.5 "one huge
-    unsplittable file ... otherwise repartition immediately after the
-    read"): a small parquet file holds ONE row group, so its scan is ONE
-    task no matter how many cores the session has — any expensive per-row
-    compute that follows serializes on a single core. When the plan's scan
-    yields fewer partitions than the session's parallelism, round-robin
-    repartition so the compute fans out; on a real multi-split corpus
-    (the 100 TB shape) the gate never fires and the plan is unchanged —
-    this is NOT a local-only constant, it is the standard mitigation with
-    a scale-adaptive gate.
-
-    Callers must only use this where results are partition-invariant:
-    per-row/per-pair deterministic expressions, exact-integer aggregates,
-    or order-fixed folds — never upstream of a cross-row double
-    accumulation whose partial-merge order could drift."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        return df.repartition(sc.defaultParallelism)
-    return df
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")

@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
+from ..materialize import materialize, release
 from .topk import Metric, _arrow_vectors, _topk_set_mask, distance_col, knn_window
 
 # The Arrow kernels collect the query matrix driver-side and rank probes
@@ -107,7 +108,6 @@ def _probe_lists_job(
         metric="sqeuclidean",
         id_col="centroid_id",
         vec_col="centroid",
-        fan_out=False,
     ).select("query_id", "neighbor_id").collect()
     pairs = sorted(
         (qpos[int(r["query_id"])], int(r["neighbor_id"])) for r in rows
@@ -784,14 +784,11 @@ def _kmeans_numpy(
     # re-anchor) for memory headroom the host didn't need. The winner
     # selection is order-independent, so the cap changes wall time only,
     # never the trained artifact.
-    import os
     from concurrent.futures import ThreadPoolExecutor
 
-    try:
-        total_mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    except (ValueError, OSError):  # non-POSIX fallback
-        total_mem = 16 << 30
-    budget = max(2 << 30, min(16 << 30, total_mem // 8))
+    from ..session import host_memory_bytes
+
+    budget = max(2 << 30, min(16 << 30, host_memory_bytes() // 8))
     # restart count scales DOWN with k: per-restart cost grows linearly in k
     # while restart-to-restart inertia variance shrinks (each restart is a
     # mean over k centroid basins; FAISS ships nredo=1 at every k). k<2048
@@ -976,13 +973,7 @@ class IVFIndex:
         # (rating buckets, categories) must survive into the index artifact
         # so filtered search predicates bind against it — same contract as
         # build_fixed
-        # fan_out: the Arrow assignment kernel runs on the scan's tasks, so
-        # a single-split corpus serializes the whole assignment DGEMM on one
-        # core (guide §2.5; no-op on multi-split corpora). Per-row argmin —
-        # partition-invariant.
-        from ..datasets import fan_out_small_scan
-
-        assigned = _with_partition_id(fan_out_small_scan(corpus), centers, vec_col)
+        assigned = _with_partition_id(corpus, centers, vec_col)
         if materialize:
             # materialize: the index artifact. materialize=False leaves the
             # assignment lazy so a composing consumer (IVFPQ) can fuse it
@@ -1058,11 +1049,7 @@ class IVFIndex:
             "centroid_id int, centroid array<float>",
         )
         n = len(centers)
-        # fan_out: same single-split mitigation as build() — the exact
-        # assignment kernel is per-row, partition-invariant
-        from ..datasets import fan_out_small_scan
-
-        assigned = _with_partition_id_exact(fan_out_small_scan(corpus), centers, vec_col)
+        assigned = _with_partition_id_exact(corpus, centers, vec_col)
         if materialize:
             # bucket co-location — see build() for the rationale
             assigned = (
@@ -1170,9 +1157,9 @@ class IVFIndex:
             )
         # restrict to the layout schema: extra new_rows columns would write
         # wider parquet files whose union with the base fails on load
-        assigned = _with_partition_id(
-            new_rows.select(*layout_cols), centers, vec_col
-        ).persist()
+        assigned = materialize(
+            _with_partition_id(new_rows.select(*layout_cols), centers, vec_col)
+        )
         n = assigned.count()
         try:
             frac = _sample_fraction(spark, path)
@@ -1198,7 +1185,7 @@ class IVFIndex:
                 _write_sidecars(
                     root, assigned, id_col=id_col, drop_cols=(vec_col,), fraction=frac
                 )
-        assigned.unpersist()
+        release(assigned)
         return n
 
     @staticmethod
@@ -1310,7 +1297,6 @@ class IVFIndex:
             metric="sqeuclidean" if self.metric != "inner_product" else "inner_product",
             id_col="centroid_id",
             vec_col="centroid",
-            fan_out=False,
         ).select("query_id", F.col("neighbor_id").alias("partition_id"))
 
         # 2. candidates via equi-join on the bucket key. The probe list is
@@ -1431,7 +1417,6 @@ class IVFIndex:
             metric="sqeuclidean" if self.metric != "inner_product" else "inner_product",
             id_col="centroid_id",
             vec_col="centroid",
-            fan_out=False,
         ).select("query_id", F.col("neighbor_id").alias("partition_id"))
         cand = (
             F.broadcast(probes).join(corpus, "partition_id")

@@ -44,6 +44,7 @@ from ..functions.text import (
     word_shingles_sql,
 )
 from ..functions import vector as V
+from ..materialize import materialize, release
 
 __all__ = [
     "exact_dedup",
@@ -203,31 +204,21 @@ def minhash_pairs(
     Returns (doc_a, doc_b, jaccard) with verified jaccard >= threshold; at a
     shingle level this matches ngram_jaccard_pairs whenever LSH recall
     captures the pair (probabilistic containment, tested as a property)."""
-    from ..datasets import fan_out_small_scan
-
-    # fan the per-row shingle+signature compute out of a single-split scan
-    # (guide §2.5; no-op on multi-split corpora). Partition-safe: every
-    # downstream value is a per-row expression, an exact-integer aggregate,
-    # or an exact int/int ratio — nothing folds doubles across rows.
-    shingled = fan_out_small_scan(
-        documents.select(F.col("doc_id"), F.col(text_col))
-    ).select(
+    shingled = documents.select(
         F.col("doc_id"), word_shingles(F.col(text_col), n).alias("shingles")
     ).filter(F.size("shingles") > 0)
     # Separate projection: `shingles` is referenced twice below (output +
     # signature input), which keeps CollapseProject from re-inlining the
-    # shingle construction into both uses. Materialization matters because
-    # the plan references this relation three times (bands + both verify
-    # sides); at scale this is the persisted signature table of the dedup
-    # pipeline. localCheckpoint(eager) rather than cache(): the operator
-    # returns lazily so it could never unpersist, and a CacheManager entry
-    # would serve stale data to any later canonicalized-matching subplan in
-    # the same session.
-    sh = shingled.select(
-        "doc_id",
-        "shingles",
-        minhash_signature_from_shingles(F.col("shingles")).alias("sig"),
-    ).localCheckpoint(eager=True)
+    # shingle construction into both uses. Materialized because the plan
+    # reads this relation three times (bands + both verify sides): the
+    # signature table of the dedup pipeline.
+    sh = materialize(
+        shingled.select(
+            "doc_id",
+            "shingles",
+            minhash_signature_from_shingles(F.col("shingles")).alias("sig"),
+        )
+    )
 
     bands = sh.select(
         "doc_id",
@@ -389,17 +380,11 @@ def simhash_pairs_banded(
     so candidates come from h+1 equi-joins on (band_id, band_bits), never a
     crossJoin, and the hamming verify keeps exactly simhash_pairs' result."""
     n_bands = max_hamming + 1
-    # materialized once: the plan references the signature relation on both
-    # join sides (same precedent as minhash_pairs; at scale this is the
-    # persisted signature table). localCheckpoint(eager), not cache() — the
-    # operator returns lazily and could never unpersist (see minhash_pairs).
-    from ..datasets import fan_out_small_scan
-
-    s = fan_out_small_scan(
-        documents.select(F.col("doc_id"), F.col(text_col))
-    ).select(
-        F.col("doc_id"), simhash_col(F.col(text_col)).alias("sig")
-    ).localCheckpoint(eager=True)
+    # materialized once: the plan reads the signature relation on both join
+    # sides (the minhash_pairs signature table)
+    s = materialize(
+        documents.select(F.col("doc_id"), simhash_col(F.col(text_col)).alias("sig"))
+    )
     bands = s.select(
         "doc_id",
         "sig",
@@ -479,19 +464,15 @@ def embedding_dup_pairs_lsh(
 
     dim = len(embeddings.select(vec_col).first()[0])
     planes = _hyperplanes(dim, n_bits, n_tables, seed)
-    # materialized once (feeds the key fan-out and both verify sides);
-    # localCheckpoint(eager), not persist() — the operator returns lazily
-    # and could never unpersist (see minhash_pairs).
-    from ..datasets import fan_out_small_scan
-
-    tagged = _tag_buckets(
-        fan_out_small_scan(
-            embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        ),
-        "v",
-        planes,
-        "b",
-    ).localCheckpoint(eager=True)
+    # materialized once: feeds the key explode and both verify sides
+    tagged = materialize(
+        _tag_buckets(
+            embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")),
+            "v",
+            planes,
+            "b",
+        )
+    )
 
     # ONE self-join on the composite (table, bucket) key: each side explodes
     # its per-table keys in the same scan (narrow fan-out), so candidate
@@ -586,37 +567,29 @@ def duplicate_components(
     their own (trivial) components and don't need rows at 100 TB scale.
     """
     edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = (
+    edges = materialize(
         edges.unionAll(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .cache()
+        ).distinct()
     )
     # Each round's plan references the previous round's TWICE (join + union),
     # so without truncation the logical tree doubles per round and analyzer
     # time alone goes exponential (measured: unusable past ~6 rounds on a
-    # chain graph). localCheckpoint(eager) materializes the round and replaces
-    # its plan with a leaf — the same discipline GraphFrames' connected
-    # components uses. Executor-local persistence is fine here (local/driver
-    # recompute semantics); on a fault-sensitive cluster run set a reliable
-    # spark.sparkContext.setCheckpointDir and swap in .checkpoint(). There is
-    # no public API to free a localCheckpoint's blocks; superseded rounds are
-    # reclaimed by the ContextCleaner once their Python refs drop, and the
-    # live set is bounded by max_iter vertex-sized relations.
-    labels = (
+    # chain graph). Materializing each round replaces its plan with a leaf —
+    # the same discipline GraphFrames' connected components uses.
+    labels = materialize(
         edges.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
-    ).localCheckpoint(eager=True)
+    )
     for _ in range(max_iter):
-        neighbor_min = (
+        neighbor_min = materialize(
             edges.join(labels, edges["dst"] == labels["id"])
             .select(F.col("src").alias("id"), "label")
             .unionAll(labels)
             .groupBy("id")
             .agg(F.min("label").alias("label"))
-        ).localCheckpoint(eager=True)
+        )
         # existence probe only: limit(1) is safe here BECAUSE both sides are
-        # eagerly checkpointed leaves (with lazy caches a limited job would
+        # eagerly materialized leaves (with lazy caches a limited job would
         # materialize only some partitions and poison later rounds)
         changed = (
             neighbor_min.alias("n")
@@ -625,6 +598,7 @@ def duplicate_components(
             .limit(1)
             .count()
         )
+        release(labels)
         labels = neighbor_min
         if changed == 0:
             break
@@ -634,13 +608,13 @@ def duplicate_components(
         # clusters are shallow (cliques-ish), so hitting this means either
         # an adversarial input (raise and re-run with the large-star/
         # small-star O(log n) variant) or max_iter set too low.
-        edges.unpersist()
+        release(edges, labels)
         raise RuntimeError(
             f"duplicate_components did not converge within max_iter={max_iter} "
             "label-propagation rounds (graph diameter exceeds max_iter); "
             "raise max_iter — labels at this point are NOT transitive closure"
         )
-    edges.unpersist()
+    release(edges)
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("component_id"))
 
 
@@ -665,39 +639,39 @@ def duplicate_components_star(
                   u; m = min of its (all smaller) neighbors; u and every
                   neighbor attach to m.
     Both are one map-combinable min-groupBy + one equi-join; each round's
-    edge set is localCheckpoint'ed (same plan-truncation discipline as
+    edge set is materialized (same plan-truncation discipline as
     duplicate_components — the round's plan would otherwise nest the
     previous round's twice). At fixpoint the edges form stars rooted at
     component minima; labels fall out of one final min-groupBy.
     """
-    spark = pairs.sparkSession
 
-    def _checkpoint_with_checksum(e: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
+    def _materialize_with_checksum(e: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
         # fuse the fixpoint checksum into the SAME job that materializes
         # the round's edges: observe() computes the aggregate as a side
-        # effect of the eager localCheckpoint (one job per round instead of
+        # effect of the eager materialization (one job per round instead of
         # two — the checksum collect was pure fixed cost at any scale)
         from pyspark.sql import Observation
 
         obs = Observation()
-        out = e.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-        ).localCheckpoint(eager=True)
+        out = materialize(
+            e.observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
+            )
+        )
         m = obs.get
         return out, (int(m["n"]), int(m["h"]))
 
-    edges, prev = _checkpoint_with_checksum(
+    edges, prev = _materialize_with_checksum(
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    vertices = (
+    vertices = materialize(
         edges.select(F.col("u").alias("id"))
         .unionAll(edges.select(F.col("v").alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     def _large_star(e: DataFrame) -> DataFrame:
@@ -731,11 +705,14 @@ def duplicate_components_star(
         )
 
     for _ in range(max_rounds):
-        edges, cur = _checkpoint_with_checksum(_small_star(_large_star(edges)))
+        stale = edges
+        edges, cur = _materialize_with_checksum(_small_star(_large_star(edges)))
+        release(stale)
         if cur == prev:
             break
         prev = cur
     else:
+        release(edges, vertices)
         raise RuntimeError(
             f"duplicate_components_star did not stabilize in {max_rounds} "
             "rounds (expected O(log n)); the edge set is still changing"
@@ -970,13 +947,9 @@ def contamination_flags_bloom(
     broadcast variable consumed by a pandas_udf bit test (or a literal
     BINARY column), not an array-of-literals expression — the expression
     tree itself would be 16M nodes."""
-    from ..datasets import fan_out_small_scan
-
     # (doc_id, shh) exactly like the exact form: word_shingles is
     # array_distinct per document, so no corpus-wide distinct is needed.
-    # fan_out: the shingle+md5 compute over the TRAINING side is the
-    # operator's heavy scan (guide §2.5); values are per-row exact.
-    d = fan_out_small_scan(docs.select("doc_id", text_col)).select(
+    d = docs.select(
         "doc_id", F.explode(word_shingles(F.col(text_col), n)).alias("sh")
     ).select("doc_id", str_hash_col(F.col("sh")).alias("shh"))
     # The eval shingle set is read three times (the sizing count, the
@@ -994,12 +967,10 @@ def contamination_flags_bloom(
     )
     if m is None:
         obs = Observation()
-        e = e.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
-            eager=True
-        )
+        e = materialize(e.observe(obs, F.count(F.lit(1)).alias("n")))
         m = _bloom_size_for(int(obs.get["n"]))
     else:
-        e = e.localCheckpoint(eager=True)
+        e = materialize(e)
     bm = bloom_bitmap(e, col="shh", m=m, kb=kb, hashed=True)
     if m // 64 <= _BLOOM_LITERAL_MAX_WORDS:
         # small bitmap: whole-stage-codegen arithmetic on a literal array
@@ -1598,8 +1569,8 @@ def _semdedup_assigned(
     max_cluster_rows: int | None,
 ) -> DataFrame:
     """Single shared cluster-assignment pass for ``semdedup_pairs`` /
-    ``semdedup_keep`` (one ``IVFIndex.build_fixed`` call, persisted by the
-    build, reused by every downstream join).
+    ``semdedup_keep`` (one ``IVFIndex.build_fixed`` assignment, materialized
+    once and reused by every downstream join).
 
     ``n_clusters=None`` derives the paper-regime default
     ``ceil(N / SEMDEDUP_ROWS_PER_CLUSTER)`` from a corpus count — one extra
@@ -1616,12 +1587,15 @@ def _semdedup_assigned(
         n_rows = embeddings.count()
         n_clusters = max(2, -(-n_rows // SEMDEDUP_ROWS_PER_CLUSTER))
     idx = IVFIndex.build_fixed(
-        embeddings, n_centroids=n_clusters, id_col=id_col, vec_col=vec_col
+        embeddings, n_centroids=n_clusters, id_col=id_col, vec_col=vec_col,
+        materialize=False,
     )
-    assigned = idx.assigned.select(
-        F.col("partition_id").alias("cluster_id"),
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
+    assigned = materialize(
+        idx.assigned.select(
+            F.col("partition_id").alias("cluster_id"),
+            F.col(id_col).alias("id"),
+            F.col(vec_col).alias("v"),
+        )
     )
     if max_cluster_rows is not None:
         biggest = (
@@ -1706,7 +1680,7 @@ def semdedup_keep(
     pairs' id_b side, removed with one left_anti join — no iteration.
 
     Runs ONE shared cluster assignment (a single ``IVFIndex.build_fixed``,
-    persisted) feeding both the pair generation and the keep base — not a
+    materialized) feeding both the pair generation and the keep base — not a
     second full-corpus quantizer pass.
 
     ``arrow_kernel=True`` swaps the within-cluster |cluster|² expression

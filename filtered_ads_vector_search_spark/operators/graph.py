@@ -10,7 +10,7 @@ The implementation is the standard power iteration expressed relationally:
   rank'(v) = (1 - d) / N + d * sum_{u -> v} rank(u) / outdeg(u)
 Each round is ONE equi-join (ranks onto edges) + ONE map-combinable
 groupBy(dst) sum — the same per-round cost as a label-propagation round —
-with the iterate localCheckpoint'ed (same plan-truncation discipline as
+with the iterate materialized (same plan-truncation discipline as
 duplicate_components: a lazy lineage would nest every previous round's
 plan). Dangling vertices (no out-edges) redistribute their mass uniformly,
 the standard correction, computed as one scalar aggregate per round.
@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..materialize import materialize, release
 
 __all__ = ["pagerank"]
 
@@ -46,25 +48,26 @@ def pagerank(
         e = e.distinct()
     else:
         e = e.unionAll(e.select(F.col("t").alias("s"), F.col("s").alias("t"))).distinct()
-    e = e.localCheckpoint(eager=True)
+    e = materialize(e)
 
-    nodes = (
+    nodes = materialize(
         e.select(F.col("s").alias("node"))
         .unionAll(e.select(F.col("t").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n = nodes.count()
     if n == 0:
+        release(e)
         return nodes.withColumn("rank", F.lit(0.0))
     outdeg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
     # outdeg is LOOP-INVARIANT: attach it to the edge relation once before
     # the loop (guide §2.4 — one join instead of one per round; at 100 TB
-    # that removes n_iter shuffles of the edge relation). Checkpoint the
-    # joined relation so every round reads the materialized artifact.
-    e_deg = e.join(outdeg, "s").localCheckpoint(eager=True)
+    # that removes n_iter shuffles of the edge relation). Materialize the
+    # joined relation so every round reads it.
+    e_deg = materialize(e.join(outdeg, "s"))
 
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
+    done = None  # the last materialized round
     base = (1.0 - damping) / n
     for i in range(n_iter):
         contribs = (
@@ -94,8 +97,12 @@ def pagerank(
         # plan truncation every OTHER round (every round when directed —
         # the dangling collect is an action over the lazy iterate): a
         # 2-round lineage is two joins + one aggregate deep, well inside
-        # planning cost, and halving the eager checkpoint jobs halves the
+        # planning cost, and halving the eager materialization jobs halves the
         # per-round fixed cost that dominates PageRank at bench scale.
         if directed or i % 2 == 1 or i == n_iter - 1:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = materialize(ranks)
+            if done is not None:
+                release(done)
+            done = ranks
+    release(e, nodes, e_deg)
     return ranks.select("node", F.round("rank", round_digits).alias("rank"))

@@ -27,7 +27,7 @@ hop moves the beam monotonically closer (the beam never worsens — the
 union keeps current members). Fixed ``n_hops`` bounds the walk statically
 — the CAGRA policy, not HNSW's dynamic stop, which a declarative plan
 cannot express without a driver-side convergence loop. Each hop's scored
-relation is localCheckpoint'ed (the pagerank / duplicate_components_star
+relation is materialized (the pagerank / duplicate_components_star
 plan-truncation discipline): the per-hop plan stays constant-size instead
 of nesting every previous hop's subtree.
 
@@ -61,6 +61,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize, release
 from .topk import Metric, distance_col
 
 __all__ = ["fixed_entry_nodes", "graph_search", "ivf_entries"]
@@ -105,7 +106,6 @@ def ivf_entries(
         metric="sqeuclidean",
         id_col="centroid_id",
         vec_col="centroid",
-        fan_out=False,
     ).select("query_id", F.col("neighbor_id").alias("partition_id"))
     wm = Window.partitionBy("partition_id").orderBy(
         F.md5(F.col("node_id").cast("string")).asc(),
@@ -189,16 +189,7 @@ def graph_search(
                 F.col("src_id").alias("_dst"),
             )
         )
-    from ..datasets import fan_out_small_scan
-
-    # the per-hop scoring join STREAMS this relation (broadcast cand), so a
-    # single-split corpus scan serializes every hop's distance folds on one
-    # task (guide §2.5) — fan it out once; no-op on multi-split corpora.
-    # Partition-safe: scoring is the pure per-row expression documented on
-    # score_all, and beam_cut's aggregation is set-semantic.
-    nodes = fan_out_small_scan(
-        corpus.select(F.col(id_col).alias("node_id"), F.col(vec_col))
-    )
+    nodes = corpus.select(F.col(id_col).alias("node_id"), F.col(vec_col))
     passing = (
         corpus.filter(predicate).select(F.col(id_col).alias("node_id"))
         if predicate is not None
@@ -271,11 +262,11 @@ def graph_search(
     # stage update (AdaptiveSparkPlanExec.onUpdatePlan -> explainString),
     # which is what actually dominated — a 6-hop walk pinned the driver
     # single-core for >25 min in PlanStringConcat with 18 GB of plan
-    # strings. localCheckpoint(eager=True) per hop truncates the lineage to
-    # a LogicalRDD (the pagerank / duplicate_components_star discipline):
-    # hop-local constant-size plans, one tiny materialization job per hop.
-    # Checkpointed relations are frontier-sized — bounded at any corpus
-    # scale.
+    # strings. Materializing per hop truncates the lineage to a leaf (the
+    # pagerank / duplicate_components_star discipline): hop-local
+    # constant-size plans, one tiny materialization job per hop.
+    # Materialized relations are frontier-sized — bounded at any corpus
+    # scale; each hop releases the previous hop's.
     def keep_passing(scored: DataFrame) -> DataFrame:
         # restrict scored rows to selector-passing nodes WITHOUT ever
         # broadcasting the (corpus-scale) passing relation: intersect the
@@ -294,33 +285,39 @@ def graph_search(
     # scored once per path (bit-identical rows the aggregation collapses);
     # the candidate relation stays bounded at |Q| x beam x (degree + 1),
     # and trading the duplicate fold evaluations for a whole (query, node)
-    # distinct exchange per hop is the win at every scale. The checkpoint
+    # distinct exchange per hop is the win at every scale. Materialization
     # moves to the FRONTIER (|Q| x beam rows, the smallest relation in the
-    # walk) — each hop's plan then starts from a LogicalRDD and stays
-    # constant-size. The filtered path additionally checkpoints each hop's
+    # walk) — each hop's plan then starts from a leaf and stays
+    # constant-size. The filtered path additionally materializes each hop's
     # scored relation (it feeds both the beam and the result accumulator).
     scored = score_all(seeds)
     if passing is not None:
-        scored = scored.localCheckpoint(eager=True)
-    frontier = beam_cut(scored).localCheckpoint(eager=True)
+        scored = materialize(scored)
+    frontier = materialize(beam_cut(scored))
     visited_passing = keep_passing(scored) if passing is not None else None
-    for _ in range(n_hops):
+    for hop in range(n_hops):
+        # the previous hop's materializations, freed once this hop's exist
+        stale = [frontier]
         expanded = (
             F.broadcast(frontier.select("query_id", "node_id"))
             .join(edges, "node_id")
             .select("query_id", F.col("_dst").alias("node_id"))
         )
         cand = frontier.select("query_id", "node_id").unionByName(expanded)
-        scored = score_all(cand)
+        scored_prev, scored = scored, score_all(cand)
         if passing is not None:
-            scored = scored.localCheckpoint(eager=True)
-        frontier = beam_cut(scored).localCheckpoint(eager=True)
+            scored = materialize(scored)
+            stale.append(scored_prev)
+        frontier = materialize(beam_cut(scored))
         if passing is not None:
             # the accumulator is itself a growing union chain — truncate it
             # per hop for the same hop-local-plan reason as scored
-            visited_passing = visited_passing.unionByName(
-                keep_passing(scored)
-            ).localCheckpoint(eager=True)
+            if hop > 0:
+                stale.append(visited_passing)
+            visited_passing = materialize(
+                visited_passing.unionByName(keep_passing(scored))
+            )
+        release(*stale)
 
     if passing is not None:
         # the result list: every visited passing node, deduped (the same

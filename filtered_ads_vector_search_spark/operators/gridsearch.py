@@ -22,6 +22,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..materialize import materialize, release
 from ..sources.sinks import append_metrics_csv
 from .ann import IVFIndex
 from .recall import recall_at_k
@@ -83,9 +84,8 @@ def grid_search(
     KMeans tier stays the quality path."""
     cfg = cfg if cfg is not None else GridConfig()  # no shared mutable default
     filtered = corpus.filter(predicate) if predicate is not None else corpus
-    # one-time exact oracle, cached across all combos (reference :613-623)
-    truth = knn_scalable(queries, filtered, k=cfg.k, metric=cfg.metric).cache()
-    truth.count()
+    # one-time exact oracle, materialized across all combos (reference :613-623)
+    truth = materialize(knn_scalable(queries, filtered, k=cfg.k, metric=cfg.metric))
     n_queries = queries.count()
 
     results: list[dict] = []
@@ -142,7 +142,7 @@ def grid_search(
             append_metrics_csv(row, csv_path)  # incremental sink (reference :690-693)
         index.unpersist()
 
-    truth.unpersist()
+    release(truth)
     return spark.createDataFrame(results)
 
 
@@ -180,14 +180,13 @@ def grid_search_lsh(
     run_name: str = "lsh",
     csv_path: str | None = None,
 ) -> DataFrame:
-    """LSH-family grid: same lifecycle as grid_search (one cached truth,
+    """LSH-family grid: same lifecycle as grid_search (one materialized truth,
     per-combo build/search/recall/QPS rows, same CSV schema modulo knobs)."""
     from .lsh import LSHIndex
 
     cfg = cfg if cfg is not None else LSHGridConfig()
     filtered = corpus.filter(predicate) if predicate is not None else corpus
-    truth = knn_scalable(queries, filtered, k=cfg.k, metric=cfg.metric).cache()
-    truth.count()
+    truth = materialize(knn_scalable(queries, filtered, k=cfg.k, metric=cfg.metric))
     n_queries = queries.count()
 
     results: list[dict] = []
@@ -225,7 +224,7 @@ def grid_search_lsh(
             append_metrics_csv(row, csv_path)
         index.unpersist()
 
-    truth.unpersist()
+    release(truth)
     return spark.createDataFrame(results)
 
 
@@ -298,8 +297,7 @@ def grid_search_ivfpq(
 
     cfg = cfg if cfg is not None else IVFPQGridConfig()
     filtered = corpus.filter(predicate) if predicate is not None else corpus
-    truth = knn_scalable(queries, filtered, k=cfg.k, metric="sqeuclidean").cache()
-    truth.count()
+    truth = materialize(knn_scalable(queries, filtered, k=cfg.k, metric="sqeuclidean"))
     n_queries = queries.count()
 
     mem0 = storage_memory_gb(spark)
@@ -344,5 +342,5 @@ def grid_search_ivfpq(
         if csv_path:
             append_metrics_csv(row, csv_path)
     index.unpersist()
-    truth.unpersist()
+    release(truth)
     return spark.createDataFrame(results)

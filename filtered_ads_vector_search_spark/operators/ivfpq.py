@@ -47,6 +47,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize, release
 from .ann import (
     IVFIndex,
     _arrow_bucket_topk,
@@ -460,7 +461,7 @@ class IVFPQIndex:
             F.col(vec).alias(idx.vec_col) if c == idx.vec_col else F.col(c)
             for c in layout_cols
         ]
-        out = base.select(*cols, F.col("partition_id"), F.col("codes")).persist()
+        out = materialize(base.select(*cols, F.col("partition_id"), F.col("codes")))
         n = out.count()
         try:
             frac = _sample_fraction(spark, path)
@@ -490,7 +491,7 @@ class IVFPQIndex:
                     drop_cols=(idx.vec_col, "codes"),
                     fraction=frac,
                 )
-        out.unpersist()
+        release(out)
         # load() persisted the selectivity sample sidecar; this sits in the
         # foreachBatch hot path (one call per micro-batch), so the cache
         # entry must be released or it leaks once per batch forever
@@ -665,7 +666,6 @@ class IVFPQIndex:
             metric="sqeuclidean",
             id_col="centroid_id",
             vec_col="centroid",
-            fan_out=False,
         ).select("query_id", F.col("neighbor_id").alias("partition_id"))
 
         # Codebooks ride as a broadcast 1-row relation, NOT an inline literal:
@@ -789,20 +789,21 @@ class IVFPQIndex:
         right there over the collected matrix (ann._probe_lists_numpy, same
         fold + tie-break as the knn_window job the expression path runs).
         """
+        # OPQ: the caller passes ROTATED queries; use the rotated centroid
+        # relation to match, so probe ranking and the scorers' residuals both
+        # live in rotated space — (Q@R - (c@R)) == (q - c)@R, the space the
+        # codes quantize. It is the relation the expression form reads, so
+        # both forms see the same rotated doubles (a matrix-at-once c @ R
+        # rounds differently from the per-row products).
+        cent_df = self.centroids
+        if self.rotation is not None:
+            cent_df = self._rotated_centroids_df()
         m, n_codes, sd = _validate(self.codebooks)
         cent = np.zeros((self.n_centroids, m * sd), dtype=np.float64)
-        for r in self.centroids.collect():
+        for r in cent_df.collect():
             cent[int(r["centroid_id"])] = np.asarray(
                 r["centroid"], dtype=np.float64
             )
-        # OPQ: the caller passes ROTATED queries; rotate the centroid matrix
-        # to match, so probe ranking and the scorers' residuals both live in
-        # rotated space — (Q@R - (c@R)) == (q - c)@R, the space the codes
-        # quantize. The distributed probe fallback gets the rotated relation.
-        cent_df = self.centroids
-        if self.rotation is not None:
-            cent = cent @ np.ascontiguousarray(self.rotation, dtype=np.float64)
-            cent_df = self._rotated_centroids_df()
         CB = np.ascontiguousarray(self.codebooks, dtype=np.float64)
         return _arrow_bucket_topk(
             queries,

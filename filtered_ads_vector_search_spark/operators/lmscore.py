@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as T
 from ..functions.hashing import P, portable_hash_col, portable_hash_sql
+from ..materialize import materialize
 
 __all__ = [
     "ngram_lm_perplexity",
@@ -82,17 +83,8 @@ def ngram_lm_perplexity(
     summed terms are O(1e1) magnitude so double addition order affects at
     most ~1e-13 — far inside round_digits.
     """
-    from ..datasets import fan_out_small_scan
-
-    # fan the three tokenize/bigram map stages out of a single-split scan
-    # (guide §2.5; no-op on multi-split corpora). The per-doc avg(logp)
-    # already merges partials from the two shuffled joins, and its addition
-    # noise (~1e-13 on O(1e1) terms) is documented as far inside the
-    # 4-decimal rounding.
-    lowered = fan_out_small_scan(
-        documents.select("doc_id", text_col)
-    ).select("doc_id", F.lower(F.col(text_col)).alias("lt"))
-    # the unigram relation is materialized ONCE (eager localCheckpoint):
+    lowered = documents.select("doc_id", F.lower(F.col(text_col)).alias("lt"))
+    # the unigram relation is materialized ONCE:
     # vocab size V is then a scalar aggregate over the checkpointed rows,
     # broadcast back as a one-row relation. This keeps the one-corpus-pass
     # property (a separate aggregate branch re-ran the whole tokenize+
@@ -100,11 +92,10 @@ def ngram_lm_perplexity(
     # partitionBy() global window it replaces, which funneled the entire
     # unigram vocabulary through a single task — a straggler seam at
     # web-scale vocabularies (guide §2.5/§5). Same integer V either way.
-    uni = (
+    uni = materialize(
         lowered.select(F.explode(T.tokens(F.col("lt"))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c1"))
-        .localCheckpoint(eager=True)
     )
     vocab = uni.agg(F.count(F.lit(1)).alias("v"))
     uni = uni.crossJoin(F.broadcast(vocab))
@@ -225,17 +216,8 @@ def dsir_weights(
     <= n_buckets rows, so the score join is a broadcast; the corpus never
     shuffles on a corpus-sized key.
     """
-    from ..datasets import fan_out_small_scan
     from ..functions.hashing import str_hash_col
 
-    # fan both featurize scans out of a single split (guide §2.5; no-op on
-    # multi-split corpora). Bit-safe: bucket counts are exact integers, and
-    # the per-doc logweight folds a doc's occurrences WITHIN its partition
-    # (the lam join is a broadcast, so explode locality is preserved) in
-    # the same explode order as before.
-    documents = fan_out_small_scan(
-        documents.select("doc_id", "lang", text_col)
-    )
     ex = _featurize(documents, text_col, n_buckets)
     # ONE map-combinable aggregate produces BOTH per-bucket counts (raw_f,
     # and tgt_f as a conditional sum) — the separate raw / tgt groupBys and

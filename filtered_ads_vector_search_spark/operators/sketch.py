@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as T
 from ..functions.hashing import portable_hash_col, portable_hash_sql, str_hash_col, str_hash_sql
+from ..materialize import materialize
 
 __all__ = [
     "cms_build",
@@ -90,23 +91,14 @@ def cms_heavy_hitters(
     the vocab-sized aggregate and exists for the comparison, not the scale
     path (estimate-only callers join candidates against the broadcast
     sketch)."""
-    from ..datasets import fan_out_small_scan
-
-    truth = (
-        fan_out_small_scan(documents.select(text_col))
-        .select(F.explode(T.tokens(F.lower(F.col(text_col)))).alias("term"))
+    # materialized once: the vocab-sized relation feeds BOTH the sketch
+    # build and the probe side — without it each branch re-tokenizes the
+    # corpus (exchange reuse does not fire across the two differently-
+    # shaped consumers). Bounded by vocabulary size at any corpus scale.
+    truth = materialize(
+        documents.select(F.explode(T.tokens(F.lower(F.col(text_col)))).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("true_count"))
-        # materialized once: the vocab-sized relation feeds BOTH the sketch
-        # build and the probe side — without it each branch re-tokenizes the
-        # corpus (exchange reuse does not fire across the two differently-
-        # shaped consumers). Bounded by vocabulary size at any corpus scale.
-        # localCheckpoint(eager) rather than persist(): the operator returns
-        # lazily so it could never unpersist, and a CacheManager entry leaks
-        # into every later query in the session (a canonicalized-matching
-        # subplan — e.g. a repeated run of this operator — would silently
-        # read the stale cache instead of recomputing).
-        .localCheckpoint(eager=True)
     )
     # The audit form computes the vocab-sized true counts anyway, and the
     # sketch cell counts are sums of per-term counts — so build the sketch

@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens, tokens_sql
+from ..materialize import materialize, release
 
 __all__ = [
     "doc_terms",
@@ -90,16 +91,10 @@ def bm25_search(
     # and its join exchange disappear; dl rides the doc_terms groupBy key,
     # functionally dependent on doc_id). Values are bit-identical: exact
     # integer counts either way.
-    from ..datasets import fan_out_small_scan
-
     toks = F.filter(
         tokens(F.lower(F.col(text_col))), lambda t: t != ""
     )
-    # fan the tokenize scan out of a single split (guide §2.5; no-op on a
-    # multi-split corpus). Partition-safe: tf/df/dl/totals are exact
-    # integers and the per-(query, doc) score is the order-fixed
-    # term-ascending fold — nothing depends on partial-merge order.
-    base = fan_out_small_scan(docs.select(id_col, text_col)).select(
+    base = docs.select(
         F.col(id_col).alias("doc_id"), toks.alias("_toks")
     ).filter(F.size("_toks") > 0)
     dt = (
@@ -288,15 +283,14 @@ def append_to_term_index(
 
     meta = spark.read.parquet(f"{path}/meta").collect()[0]
     n_buckets = int(meta["n_buckets"])
-    # persist: tot.collect, the row count, and three writes would otherwise
-    # re-tokenize/re-aggregate new_docs ~5x — this sits in the streaming
-    # foreachBatch hot path
-    dt = (
+    # materialized: tot.collect, the row count, and three writes would
+    # otherwise re-tokenize/re-aggregate new_docs ~5x — this sits in the
+    # streaming foreachBatch hot path
+    dt = materialize(
         doc_terms(new_docs, id_col, text_col)
         .withColumn("term_bucket", _term_bucket(F.col("term"), n_buckets))
-        .persist()
     )
-    dlen = dt.groupBy("doc_id").agg(F.sum("tf").alias("dl")).persist()
+    dlen = materialize(dt.groupBy("doc_id").agg(F.sum("tf").alias("dl")))
     stats = dt.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     tot = dlen.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
@@ -314,8 +308,7 @@ def append_to_term_index(
     dlen.write.mode(mode).parquet(f"{root}/doclen")
     stats.write.mode(mode).parquet(f"{root}/stats")
     meta_df.coalesce(1).write.mode(mode).parquet(f"{root}/meta")
-    dt.unpersist()
-    dlen.unpersist()
+    release(dt, dlen)
     return n
 
 

@@ -90,7 +90,6 @@ def knn_window(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     distance: tuple[Column, bool] | None = None,
-    fan_out: bool = True,
 ) -> DataFrame:
     """Declarative filtered exact top-k: crossJoin + window rank limit.
 
@@ -98,22 +97,9 @@ def knn_window(
     passing corpus rows return fewer rows (filter-before-top-k semantics).
     ``distance``: optional custom (distance expression over q_vec/vec_col,
     ascending?) pair — e.g. packed-word hamming — replacing ``metric``.
-
-    ``fan_out``: the corpus side STREAMS through the broadcast nested-loop
-    join, so with a single-split input every per-pair distance fold runs in
-    one task (guide §2.5 unsplittable input) — fan it out to the session's
-    parallelism (no-op on multi-split corpora). Partition-safe: the fold is
-    a per-pair deterministic expression and the window tie-break is total
-    ((dist, neighbor_id)). Callers ranking a KNOWN-tiny corpus (centroid
-    probe lists) pass False — a repartition exchange on a 32-row relation
-    is pure overhead in loops like grid sweeps.
     """
     q_side = queries
     c_side = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col))
-    if fan_out:
-        from ..datasets import fan_out_small_scan
-
-        c_side = fan_out_small_scan(c_side)
     if distance is not None:
         d, asc = distance
     elif metric == "cosine":
@@ -373,11 +359,6 @@ def knn_scalable(
                 names=["query_id", "neighbor_id", "dist"],
             )
 
-    # NOT fanned out of a single-split scan (unlike knn_window): measured at
-    # bench SF, the round-robin repartition + 32 per-task broadcast
-    # deserializations cost MORE than the vectorized kernel saves
-    # (0.38 s -> 0.65 s) — the numpy kernel is microseconds/row, so a
-    # single-split input only exists at scales where one task is fine.
     partials = corpus.select(id_col, vec_col).mapInArrow(
         local_topk, schema="query_id bigint, neighbor_id bigint, dist double"
     )

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text as T
+from ..materialize import materialize, release
 from ..operators import dedup as DD
 from ..operators import quality as QL
 from ..operators.chunking import pack_sequences
@@ -102,27 +103,21 @@ def curate_corpus(
     _lap("after_quality_gate")
 
     # 2. PII redaction (rewrites text; length/token stats recomputed).
-    # Persist: every later stage count + both writes would otherwise replay
-    # the gate + Gopher + regex chain from the scan.
-    red = (
+    # Materialized: every later stage count + both writes would otherwise
+    # replay the gate + Gopher + regex chain from the scan.
+    red = materialize(
         gated.select(
             "doc_id",
             T.pii_redact(F.col("text")).alias("text"),
-        )
-        .select("doc_id", "text", T.token_count(F.col("text")).alias("n_tok"))
-        .persist()
+        ).select("doc_id", "text", T.token_count(F.col("text")).alias("n_tok"))
     )
-    # materialize the redaction cache NOW so its wall time lands on its own
-    # stage key instead of bleeding into after_exact_dedup (the later exact
-    # count then reads the cache — no duplicated work)
-    red.count()
     _lap("pii_redaction")
 
     # 3. exact dedup: keep the lowest doc_id per identical text
     canon = red.groupBy(F.md5("text").alias("_h")).agg(
         F.min("doc_id").alias("doc_id")
     )
-    exact = red.join(canon.select("doc_id"), "doc_id").persist()
+    exact = materialize(red.join(canon.select("doc_id"), "doc_id"))
     metrics["after_exact_dedup"] = exact.count()
     _lap("after_exact_dedup")
 
@@ -157,20 +152,19 @@ def curate_corpus(
         metrics["after_dsir_select"] = survivors.count()
         _lap("after_dsir_select")
 
-    survivors = survivors.persist()
-    # same discipline: fill the survivors cache on its own stage key so
-    # packed_rows (and the writes) time only their own work
-    survivors.count()
+    # materialized on its own stage key so packed_rows (and the writes)
+    # time only their own work
+    kept = materialize(survivors)
     _lap("persist_survivors")
 
     # 6. token-budget packing of the survivors
     packing = pack_sequences(
-        survivors.select("doc_id", "n_tok"), "n_tok", budget=pack_budget
+        kept.select("doc_id", "n_tok"), "n_tok", budget=pack_budget
     )
     metrics["packed_rows"] = packing.count()
     _lap("packed_rows")
 
-    survivors.select("doc_id", "text", "n_tok").write.mode("overwrite").parquet(
+    kept.select("doc_id", "text", "n_tok").write.mode("overwrite").parquet(
         f"{out_dir}/documents.parquet"
     )
     packing.write.mode("overwrite").parquet(f"{out_dir}/packing.parquet")
@@ -180,9 +174,10 @@ def curate_corpus(
         spark, f"{out_dir}/metrics.json", json.dumps(metrics, indent=1, sort_keys=True)
     )
     _lap("write_artifacts")
-    red.unpersist()
-    exact.unpersist()
-    survivors.unpersist()
+    # everything the funnel materialized, the operators' own included:
+    # pairs reads minhash_pairs' signature table, survivors the component
+    # labels and decontaminate's eval shingle set
+    release(red, exact, pairs, survivors, kept)
     return metrics
 
 

@@ -52,11 +52,4 @@ def mock_embed(
             pdf[out_col] = _embed_batch(pdf[text_col], dim)
             yield pdf
 
-    # fan_out: the embed boundary runs on the scan's tasks; a single-split
-    # input serializes every (mock or real-RPC) embed call on one task
-    # (guide §2.5; no-op on multi-split corpora) — exactly the case where a
-    # production endpoint wants concurrent batches. Per-row md5-seeded
-    # embedding — partition-invariant.
-    from ..datasets import fan_out_small_scan
-
-    return fan_out_small_scan(df).mapInPandas(run, schema=schema)
+    return df.mapInPandas(run, schema=schema)

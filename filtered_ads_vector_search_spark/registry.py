@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from .functions import hashing as H
 from .functions import text as T
 from .functions import vector as V
+from .materialize import materialize
 from .operators import dedup as DD
 from .operators import lmscore as LM
 from .operators import evaluate as E
@@ -275,8 +276,8 @@ def _recall_sq8_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _recall_curve_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@k' of the sq8 tier for k' in {1, 5, 10} (the reference reports
     recall across the k/itopk grid; this is the per-k curve for one combo)."""
-    found = _knn_spark(spark, sf_dir, "sqeuclidean", quant="sq8").cache()
-    truth = _knn_spark(spark, sf_dir, "sqeuclidean").cache()
+    found = materialize(_knn_spark(spark, sf_dir, "sqeuclidean", quant="sq8"))
+    truth = materialize(_knn_spark(spark, sf_dir, "sqeuclidean"))
     out = None
     for kk in (1, 5, K):
         r = recall_at_k(

@@ -12,7 +12,15 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark"]
+__all__ = ["get_spark", "stop_spark", "host_memory_bytes"]
+
+
+def host_memory_bytes() -> int:
+    """Physical RAM of this host (16 GiB where POSIX sysconf is missing)."""
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):  # non-POSIX fallback
+        return 16 << 30
 
 
 def get_spark(
@@ -24,6 +32,9 @@ def get_spark(
     """Build (or fetch) a SparkSession.
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or ``*``.
+    ``shuffle_partitions`` defaults to ``$SPARK_GRAFT_CPUS``, else ``cpus``,
+    else 32. On a local master the driver heap defaults to half the host's
+    RAM, at most 24g; ``$SPARK_DRIVER_MEMORY`` overrides it.
     """
     if cpus is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -36,7 +47,7 @@ def get_spark(
     master = os.environ.get("SPARK_GRAFT_MASTER", master)
     is_local = master.startswith("local")
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", cpus or 32))
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -71,9 +82,11 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(16 * 1024 * 1024)),
         )
         # local mode: driver JVM == the one executor; size the heap well above
-        # the working set so benchmark timings measure the plan, not G1 GC.
+        # the working set so benchmark timings measure the plan, not G1 GC,
+        # but inside the host's RAM.
+        heap_mb = min(24 << 10, host_memory_bytes() // 2 >> 20)
         builder = builder.config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g")
+            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", f"{heap_mb}m")
         )
     elif os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES"):
         builder = builder.config(

@@ -109,6 +109,24 @@ def main() -> None:
         "The engine's scale properties are plan properties. `tests/test_plan_properties.py`",
         "asserts the load-bearing ones; this document shows the actual plans.",
         "",
+        "Two engine-wide rules shape every plan below:",
+        "",
+        "- **Parallelism comes from the data.** A scan runs one task per input split;",
+        "  a shuffle runs `spark.sql.shuffle.partitions` tasks (AQE coalesces them).",
+        "  No operator repartitions for parallelism or asks an input for its",
+        "  partition count, so building a lazily returned result launches no Spark",
+        "  job. The only repartitions left group rows by a key (index buckets,",
+        "  compaction, Z-order layouts, WebDataset shards).",
+        "- **One way to materialize.** An intermediate read more than once, or an",
+        "  iterative round whose lineage must be cut, goes through",
+        "  `materialize(df)` (`filtered_ads_vector_search_spark/materialize.py`):",
+        "  eager, lineage-truncating, written to the checkpoint directory when the",
+        "  SparkContext has one (it then survives executor loss) and kept in the",
+        "  executors' block managers otherwise. `release(df)` frees it; loops release",
+        "  superseded rounds. The index artifacts (`IVFIndex.assigned`,",
+        "  `IVFPQIndex.coded`, `LSHIndex.tagged`, the selectivity samples) stay",
+        "  `persist()`ed and each index's `unpersist()` frees them.",
+        "",
     ]
     for title, df in dfs.items():
         plan = "\n".join(l[:200] for l in physical_plan(df, "simple").splitlines()[:28])

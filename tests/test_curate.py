@@ -46,3 +46,16 @@ def test_curate_with_dsir_selection(spark, tmp_path):
     kept_lang = surv.join(docs.select("doc_id", "lang"), "doc_id")
     n_en = kept_lang.filter(F.col("lang") == "en").count()
     assert n_en > 25, n_en
+
+
+def test_curate_corpus_releases_what_it_materialized(spark, tmp_path):
+    """Every intermediate the funnel materializes — its own and the
+    operators' (signature table, component labels, eval shingles) — is
+    released before curate_corpus returns."""
+    sc = spark.sparkContext
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    docs = spark.read.parquet(f"{SF_TEST}/documents.parquet")
+    rdds, cached = set(sc._jsc.getPersistentRDDs().keySet()), cache.cachedData().size()
+    curate_corpus(spark, docs, str(tmp_path / "out"), gopher=False, min_quality=0)
+    assert set(sc._jsc.getPersistentRDDs().keySet()) - rdds == set()
+    assert cache.cachedData().size() == cached

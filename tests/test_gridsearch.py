@@ -14,6 +14,8 @@ from filtered_ads_vector_search_spark.operators import topk as TK
 
 from conftest import SF_SMOKE
 
+FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
+
 
 def test_param_grid_constraint():
     cfg = GridConfig(n_centroids=[4, 8], nprobe=[2, 8, 16])
@@ -109,9 +111,9 @@ def test_summarize_works_for_both_grid_families(spark):
 
 
 def test_yaml_config_roundtrip_reference_files(spark):
-    """Load the reference's own filter_config.yaml/params_config.yaml
-    (utils_grid_search.py:90-139 semantics) and drive a grid run at the
-    smoke SF from them."""
+    """Load filter_config.yaml/params_config.yaml fixtures in the reference's
+    schema (utils_grid_search.py:90-139 semantics) and drive a grid run at
+    the smoke SF from them."""
     from filtered_ads_vector_search_spark.operators.filters import with_rating_bucket
     from filtered_ads_vector_search_spark.operators.gridsearch import grid_search
     from filtered_ads_vector_search_spark.sources import (
@@ -121,7 +123,7 @@ def test_yaml_config_roundtrip_reference_files(spark):
         lsh_grid_from_config,
     )
 
-    cfg = load_all_input_configs("/root/reference")
+    cfg = load_all_input_configs(FIXTURES)
     # merge semantics: active_filters selection, settings flattened, defaults
     assert [name for _, name in cfg["filter_configurations"]] == ["mid_rated"]
     assert cfg["filter_configurations"][0][0] == ["1.0-2.0", "2.0-3.0"]
@@ -164,8 +166,8 @@ def test_yaml_load_config_default_fallback(tmp_path):
 
 
 def test_cli_end_to_end_reference_configs(spark, tmp_path):
-    """Drive the CLI exactly as a reference user would — their own YAML
-    configs, both algo types — and check the reference-shaped artifacts:
+    """Drive the CLI exactly as a reference user would — YAML configs in
+    their schema, both algo types — and check the reference-shaped artifacts:
     per-run incremental CSV (one row per combo) + all_runs_summary.csv
     (best_recall/best_qps per run). Reference: cuvs_bench_grid_search_v3.py
     main:746-838 + argparse :845-874."""
@@ -178,7 +180,7 @@ def test_cli_end_to_end_reference_configs(spark, tmp_path):
             [
                 "--data", SF_SMOKE,
                 "--quantization-folder", "full_precision",
-                "--config-path", "/root/reference",
+                "--config-path", FIXTURES,
                 "--algo-type", algo,
                 "--results-dir", str(tmp_path / algo),
                 "--limit-values", "1",
@@ -209,7 +211,7 @@ def test_cli_half_precision_tier(spark, tmp_path):
         [
             "--data", SF_SMOKE,
             "--quantization-folder", "half_precision",
-            "--config-path", "/root/reference",
+            "--config-path", FIXTURES,
             "--algo-type", "cagra",
             "--results-dir", str(tmp_path),
             "--limit-values", "1",
@@ -252,8 +254,8 @@ def test_grid_search_ivfpq_end_to_end(spark, tmp_path):
 
 
 def test_cli_ivfpq_algo_type(spark, tmp_path):
-    """--algo-type ivfpq drives the composed-tier sweep from the reference's
-    own YAML (itopk_size -> rerank axis) and writes the same artifacts."""
+    """--algo-type ivfpq drives the composed-tier sweep from YAML in the
+    reference's schema (itopk_size -> rerank axis) and writes the same artifacts."""
     import csv
 
     from filtered_ads_vector_search_spark.cli import run
@@ -262,7 +264,7 @@ def test_cli_ivfpq_algo_type(spark, tmp_path):
         [
             "--data", SF_SMOKE,
             "--quantization-folder", "full_precision",
-            "--config-path", "/root/reference",
+            "--config-path", FIXTURES,
             "--algo-type", "ivfpq",
             "--results-dir", str(tmp_path),
             "--limit-values", "1",

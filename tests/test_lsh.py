@@ -100,8 +100,21 @@ def test_lsh_arrow_bitwise_equals_expr(spark):
     including exact dist doubles — to the interpreted expression path, for
     every supported metric and under multiprobe (the kernel replicates the
     element-ascending folds, the (dist, neighbor_id) tie-break, and the
-    bucket-sign arithmetic driver-side)."""
+    bucket-sign arithmetic driver-side). Zero-norm vectors on both sides
+    exercise the cosine zero-denominator branch."""
     q, c = _setup(spark)
+    zero = F.lit(0.0).cast("float")
+    q = q.unionByName(
+        q.limit(2).select(
+            (F.col("query_id") + 10_000_000).alias("query_id"),
+            F.transform("q_vec", lambda x: zero).alias("q_vec"),
+        )
+    )
+    c = c.unionByName(
+        c.limit(3)
+        .withColumn("vec_id", F.col("vec_id") + 10_000_000)
+        .withColumn("embedding", F.transform("embedding", lambda x: zero))
+    )
     idx = LSHIndex.build(c, n_bits=4, n_tables=8, metric="cosine", seed=42)
     for mp in (0, 2):
         a = sorted(map(tuple, idx.search(q, k=10, multiprobe=mp, kernel="arrow").collect()))

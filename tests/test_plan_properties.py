@@ -122,6 +122,29 @@ def test_ivfpq_adc_search_single_shuffle(spark):
         idx.unpersist()
 
 
+def test_lazy_results_launch_no_jobs_over_a_shuffled_input(spark):
+    """Parallelism comes from the input's splits and
+    spark.sql.shuffle.partitions, so building a lazily returned result runs
+    nothing — even over an input that already holds a shuffle, where asking
+    for its partition count would run the upstream stages."""
+    from filtered_ads_vector_search_spark.pipeline.embed import mock_embed
+
+    sc = spark.sparkContext
+    docs = spark.read.parquet(f"{SF_TEST}/documents.parquet")
+    q, c = TK.split_queries(spark.read.parquet(f"{SF_TEST}/embeddings.parquet"))
+    shuffled_docs = docs.groupBy("doc_id").agg(F.first("text").alias("text"))
+    shuffled_corpus = c.groupBy("vec_id").agg(F.first("embedding").alias("embedding"))
+    group = "build-lazy-results"
+    sc.setJobGroup(group, "plan construction only")
+    try:
+        mock_embed(shuffled_docs, "text")
+        TK.knn_window(q, shuffled_corpus, k=10)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+
+
 def test_dsir_score_join_broadcasts(spark):
     """DSIR scoring: the per-bucket lambda relation (<= n_buckets rows) joins
     the exploded corpus via BroadcastHashJoin — no SortMergeJoin anywhere, so
