@@ -28,6 +28,7 @@ nprobe/n_centroids of the data; AQE handles residual skew.
 
 from __future__ import annotations
 
+import math
 import time
 from dataclasses import dataclass
 
@@ -573,6 +574,66 @@ def _estimate_selectivity(relation: DataFrame, predicate: Column) -> float:
     return (row["kept"] / row["n"]) if row["n"] else 1.0
 
 
+def _selectivity(index, predicate: Column) -> float:
+    """`_estimate_selectivity` once per (index, predicate): the sample (or
+    in-memory relation) it aggregates never changes for the index's life,
+    so the estimate is memoized on the index, keyed by the predicate's
+    expression string, until `unpersist()`. A 0.0 estimate is memoized
+    too."""
+    memo = index.__dict__.setdefault("_sel_memo", {})
+    key = str(predicate)
+    if key not in memo:
+        relation = index.sel_sample
+        if relation is None:
+            relation = index.coded if hasattr(index, "codebooks") else index.assigned
+        memo[key] = _estimate_selectivity(relation, predicate)
+    return memo[key]
+
+
+def _widened_nprobe(index, nprobe: int, predicate: Column) -> tuple[float, int]:
+    """(selectivity s, ceil(nprobe / s)): a filter keeping s of the corpus
+    thins every probed bucket to s of its rows, so holding the candidate
+    count constant takes nprobe / s probes. Zero sample hits put the filter
+    below the sample's resolution (~1/SEL_SAMPLE_ROWS), the ultra-selective
+    case widening exists for: open every bucket."""
+    sel = _selectivity(index, predicate)
+    return sel, (int(math.ceil(nprobe / sel)) if sel > 0 else index.n_centroids)
+
+
+def _centroid_relation(spark, centers: np.ndarray) -> tuple[DataFrame, np.ndarray]:
+    """The ``centroids`` relation for float64 ``centers`` plus its
+    driver-side matrix: the relation stores array<float>, so the matrix is
+    ``centers`` rounded through float32 — exactly what collecting the
+    relation returns."""
+    mat = centers.astype(np.float32).astype(np.float64)
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in c]) for i, c in enumerate(mat)],
+        "centroid_id int, centroid array<float>",
+    )
+    return df, mat
+
+
+def _centroid_rows_matrix(rows) -> np.ndarray:
+    """Collected (centroid_id, centroid) rows as an id-ordered matrix."""
+    dim = len(rows[0]["centroid"]) if rows else 0
+    cent = np.zeros((len(rows), dim), dtype=np.float64)
+    for r in rows:
+        cent[int(r["centroid_id"])] = np.asarray(r["centroid"], dtype=np.float64)
+    return cent
+
+
+def centroid_matrix(index) -> np.ndarray:
+    """The one driver-side centroid matrix of an IVF/IVFPQ index: id-ordered
+    float64 holding the float32 values its ``centroids`` relation stores,
+    read by every in-memory probe ranking, append and residual encode.
+    Builds and loads fill it; other indexes pay one cached collect."""
+    mat = getattr(index, "_centroid_mat", None)
+    if mat is None:
+        mat = _centroid_rows_matrix(index.centroids.collect())
+        index._centroid_mat = mat
+    return mat
+
+
 def _compact_layout(
     spark,
     path: str,
@@ -964,11 +1025,7 @@ class IVFIndex:
         # a high-selectivity filter can leave fewer rows than centroids
         n_centroids = min(n_centroids, len(X))
         centers = _kmeans_numpy(X, n_centroids, seed=seed, max_iter=max_iter)
-        spark = corpus.sparkSession
-        centroids = spark.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
-            "centroid_id int, centroid array<float>",
-        )
+        centroids, mat = _centroid_relation(corpus.sparkSession, centers)
         # pass-through assignment, not a narrow select: metadata columns
         # (rating buckets, categories) must survive into the index artifact
         # so filtered search predicates bind against it — same contract as
@@ -1002,10 +1059,13 @@ class IVFIndex:
             id_col=id_col,
             vec_col=vec_col,
         )
-        # driver-side centroid matrix for composing builders (IVFPQ residual
-        # training) — saves them a centroids.collect() round trip; the
-        # DataFrame float roundtrip is exact, so using either is identical
+        # two matrices, and they differ: the array<float> relation rounds the
+        # float64 k-means centers to float32. Row assignment above and IVFPQ
+        # residual training read the float64 centers (_centers_np); search,
+        # append and residual encode read the float32-rounded ones
+        # (centroid_matrix), as a loaded layout does
         idx._centers_np = centers
+        idx._centroid_mat = mat
         return idx
 
     @staticmethod
@@ -1043,12 +1103,7 @@ class IVFIndex:
         if not pick:
             raise ValueError("cannot build an IVF index over an empty corpus")
         centers = np.array([r[vec_col] for r in pick], dtype=np.float64)
-        spark = corpus.sparkSession
-        centroids = spark.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
-            "centroid_id int, centroid array<float>",
-        )
-        n = len(centers)
+        centroids, mat = _centroid_relation(corpus.sparkSession, centers)
         assigned = _with_partition_id_exact(corpus, centers, vec_col)
         if materialize:
             # bucket co-location — see build() for the rationale
@@ -1058,15 +1113,17 @@ class IVFIndex:
                 .persist()
             )
             assigned.count()
-        return IVFIndex(
+        idx = IVFIndex(
             centroids=centroids,
             assigned=assigned,
             metric=metric,
-            n_centroids=n,
+            n_centroids=len(mat),
             build_seconds=time.time() - t0,
             id_col=id_col,
             vec_col=vec_col,
         )
+        idx._centroid_mat = mat
+        return idx
 
     def write_bucketed(self, path: str, n_buckets: int | None = None) -> None:
         """Persist the IVF layout: corpus Parquet partitioned by partition_id
@@ -1096,21 +1153,24 @@ class IVFIndex:
         partition directories (partition pruning / dynamic partition pruning
         at the scan — verified in tests)."""
         centroids = spark.read.parquet(f"{path}/centroids")
+        mat = _centroid_rows_matrix(centroids.collect())
         assigned = _read_layout(spark, path, "assigned")
         try:
             sel_sample = _read_sidecar(spark, path, "sample").persist()
         except Exception:  # pre-sidecar layout vintage
             sel_sample = None
-        return IVFIndex(
+        idx = IVFIndex(
             centroids=centroids,
             assigned=assigned,
             metric=metric,
-            n_centroids=centroids.count(),
+            n_centroids=len(mat),
             build_seconds=0.0,
             id_col=id_col,
             vec_col=vec_col,
             sel_sample=sel_sample,
         )
+        idx._centroid_mat = mat
+        return idx
 
     @staticmethod
     def append_to_layout(
@@ -1135,9 +1195,8 @@ class IVFIndex:
         idempotent per batch id, i.e. effectively exactly-once. Loads union
         the base with all batch directories; `compact_layout` folds them
         back in. Returns the number of rows appended."""
-        centroids = spark.read.parquet(f"{path}/centroids").orderBy("centroid_id")
-        centers = np.array(
-            [r["centroid"] for r in centroids.collect()], dtype=np.float64
+        centers = _centroid_rows_matrix(
+            spark.read.parquet(f"{path}/centroids").collect()
         )
         if len(centers) == 0:
             raise ValueError(f"no centroids found under {path}")
@@ -1239,23 +1298,11 @@ class IVFIndex:
         the layout's tiny persisted sample sidecar when one exists (loaded
         indexes), else one single-pass aggregate over the in-memory persisted
         assignment — the full index relation of a written layout is never
-        scanned by the search path.
+        scanned by the search path. Each (index, predicate) is estimated
+        once (`_selectivity`).
         """
         if adaptive_nprobe and predicate is not None:
-            sel = _estimate_selectivity(
-                self.sel_sample if self.sel_sample is not None else self.assigned,
-                predicate,
-            )
-            if sel > 0:
-                import math
-
-                nprobe = int(math.ceil(nprobe / sel))
-            else:
-                # zero sample hits means the predicate is at or below the
-                # sample's resolution (~1/SEL_SAMPLE_ROWS) — the ultra-
-                # selective case widening exists FOR; open every bucket
-                # rather than silently keeping the base nprobe
-                nprobe = self.n_centroids
+            nprobe = _widened_nprobe(self, nprobe, predicate)[1]
         nprobe = min(nprobe, self.n_centroids)
 
         corpus = self.assigned
@@ -1290,14 +1337,7 @@ class IVFIndex:
             )
 
         # 1. rank centroids per query: tiny broadcast cross join + window
-        probes = knn_window(
-            queries,
-            self.centroids,
-            k=nprobe,
-            metric="sqeuclidean" if self.metric != "inner_product" else "inner_product",
-            id_col="centroid_id",
-            vec_col="centroid",
-        ).select("query_id", F.col("neighbor_id").alias("partition_id"))
+        probes = self._probes(queries, nprobe)
 
         # 2. candidates via equi-join on the bucket key. The probe list is
         #    queries x nprobe rows — always the small side; broadcast it
@@ -1388,13 +1428,6 @@ class IVFIndex:
                     "range_search(arrow_score=True) implements the "
                     f"sqeuclidean fold; got metric={self.metric!r}"
                 )
-            rows = self.centroids.collect()
-            dim = len(rows[0]["centroid"]) if rows else 0
-            cent = np.zeros((self.n_centroids, dim), dtype=np.float64)
-            for r in rows:
-                cent[int(r["centroid_id"])] = np.asarray(
-                    r["centroid"], dtype=np.float64
-                )
             return _arrow_bucket_topk(
                 queries,
                 corpus,
@@ -1406,18 +1439,11 @@ class IVFIndex:
                 extra=(),
                 bucket_scorer=_sqeuclidean_bucket_scorer,
                 kernel_name="range_search_arrow",
-                probe_spec=(cent, nprobe, self.centroids),
+                probe_spec=(centroid_matrix(self), nprobe, self.centroids),
                 radius=radius,
             )
 
-        probes = knn_window(
-            queries,
-            self.centroids,
-            k=nprobe,
-            metric="sqeuclidean" if self.metric != "inner_product" else "inner_product",
-            id_col="centroid_id",
-            vec_col="centroid",
-        ).select("query_id", F.col("neighbor_id").alias("partition_id"))
+        probes = self._probes(queries, nprobe)
         cand = (
             F.broadcast(probes).join(corpus, "partition_id")
             .join(F.broadcast(queries), "query_id")
@@ -1431,6 +1457,18 @@ class IVFIndex:
             .filter(pred)
             .select("query_id", "neighbor_id", "dist")
         )
+
+    def _probes(self, queries: DataFrame, nprobe: int) -> DataFrame:
+        """(query_id, partition_id): each query's nprobe nearest cells, as
+        the knn_window job over the ``centroids`` relation."""
+        return knn_window(
+            queries,
+            self.centroids,
+            k=nprobe,
+            metric="sqeuclidean" if self.metric != "inner_product" else "inner_product",
+            id_col="centroid_id",
+            vec_col="centroid",
+        ).select("query_id", F.col("neighbor_id").alias("partition_id"))
 
     def _score_candidates_arrow(
         self,
@@ -1447,11 +1485,6 @@ class IVFIndex:
         expansion (last-ulps-equal distances, same probe sets/tie-break).
         Probe ranking happens inside the scaffold via ``probe_spec``
         (driver-side, same fold/tie-break either way)."""
-        rows = self.centroids.collect()
-        dim = len(rows[0]["centroid"]) if rows else 0
-        cent = np.zeros((self.n_centroids, dim), dtype=np.float64)
-        for r in rows:
-            cent[int(r["centroid_id"])] = np.asarray(r["centroid"], dtype=np.float64)
         return _arrow_bucket_topk(
             queries,
             corpus,
@@ -1463,13 +1496,14 @@ class IVFIndex:
             extra=(),
             bucket_scorer=_sqeuclidean_blas_scorer if blas else _sqeuclidean_bucket_scorer,
             kernel_name="arrow_score",
-            probe_spec=(cent, nprobe, self.centroids),
+            probe_spec=(centroid_matrix(self), nprobe, self.centroids),
         )
 
     def unpersist(self) -> None:
         self.assigned.unpersist()
         if self.sel_sample is not None:
             self.sel_sample.unpersist()
+        self.__dict__.pop("_sel_memo", None)
 
 
 @dataclass
@@ -1503,8 +1537,6 @@ def search_sharded(
     index whose ``search`` takes (queries, k=..., **kwargs) — IVFIndex
     (``arrow_score=...``) and IVFPQIndex (``rerank=...``, ``arrow_adc=...``)
     both qualify."""
-    import math
-
     # cap probe, not a full count: limit(cap+1) early-exits the scan as soon
     # as cap+1 rows exist, so the common under-cap case never pays a full
     # count job over a (possibly huge) query relation
@@ -1569,10 +1601,11 @@ def plan_filtered_search(
     Selectivity comes from the layout's tiny sample sidecar when one exists,
     else one single-pass aggregate over the in-memory relation — identical
     policy to adaptive_nprobe, so planner routing is reproducible in SQL
-    (the registry oracles both tiers, tier label included).
+    (the registry oracles both tiers, tier label included). It is estimated
+    once per (index, predicate) and the Arrow tiers read the index's
+    driver-side `centroid_matrix`, so planning a repeated query launches no
+    Spark job.
     """
-    import math
-
     from .topk import knn_scalable
 
     is_pq = hasattr(index, "codebooks")
@@ -1589,10 +1622,7 @@ def plan_filtered_search(
         )
         return FilteredSearchPlan("ann", None, eff, res)
 
-    sel = _estimate_selectivity(
-        index.sel_sample if index.sel_sample is not None else relation, predicate
-    )
-    widened = int(math.ceil(nprobe / sel)) if sel > 0 else index.n_centroids
+    sel, widened = _widened_nprobe(index, nprobe, predicate)
     eff = min(widened, index.n_centroids)
 
     if widened >= index.n_centroids and can_exact:
@@ -1654,8 +1684,6 @@ def plan_filtered_range_search(
     IVFIndex only: range semantics need full vectors (the assigned relation
     always carries them; the coded IVFPQ tier has no radius contract —
     FAISS's IVFPQ range_search rides ADC error bounds we don't claim)."""
-    import math
-
     from .range_search import range_scalable, range_window
 
     if predicate is None:
@@ -1667,11 +1695,7 @@ def plan_filtered_range_search(
             ),
         )
 
-    sel = _estimate_selectivity(
-        index.sel_sample if index.sel_sample is not None else index.assigned,
-        predicate,
-    )
-    widened = int(math.ceil(nprobe / sel)) if sel > 0 else index.n_centroids
+    sel, widened = _widened_nprobe(index, nprobe, predicate)
     eff = min(widened, index.n_centroids)
 
     if widened >= index.n_centroids:

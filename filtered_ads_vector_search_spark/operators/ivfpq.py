@@ -52,13 +52,15 @@ from .ann import (
     IVFIndex,
     _arrow_bucket_topk,
     _batch_root,
+    _centroid_rows_matrix,
     _compact_layout,
-    _estimate_selectivity,
     _read_layout,
     _read_sidecar,
     _sample_fraction,
     _sample_gate,
+    _widened_nprobe,
     _write_sidecars,
+    centroid_matrix,
 )
 from .pq import (
     Codebooks,
@@ -227,10 +229,7 @@ class IVFPQIndex:
         # buckets included) passes through so filtered search predicates
         # bind against the coded layout; only the vector is dropped when
         # the caller asked for a codes-only artifact.
-        centers = None
-        if residual:
-            rows = ivf.centroids.orderBy("centroid_id").collect()
-            centers = np.array([r["centroid"] for r in rows], dtype=np.float64)
+        centers = centroid_matrix(ivf)
         # repartition+sort on the bucket key: co-locate each bucket so the
         # Arrow ADC kernel's per-(batch, bucket) top-R partials actually cap
         # (see IVFIndex.build) — one build-time shuffle of the coded rows
@@ -239,7 +238,7 @@ class IVFPQIndex:
                 ivf.assigned,
                 codebooks,
                 vec_col,
-                centers=centers,
+                centers=centers if residual else None,
                 drop_vec=not keep_vectors,
                 encode_mode=encode_mode,
                 rotation=rotation,
@@ -253,7 +252,7 @@ class IVFPQIndex:
         # fuse into this single corpus scan
         coded.count()
         ivf.assigned.unpersist()  # no-op for the lazy path; safe either way
-        return IVFPQIndex(
+        idx = IVFPQIndex(
             centroids=ivf.centroids,
             coded=coded,
             codebooks=codebooks,
@@ -265,6 +264,8 @@ class IVFPQIndex:
             residual=residual,
             rotation=rotation,
         )
+        idx._centroid_mat = centers
+        return idx
 
     @staticmethod
     def build_fixed(
@@ -424,8 +425,6 @@ class IVFPQIndex:
         ``batch_id`` switches to an idempotent per-batch overwrite directory
         (see IVFIndex.append_to_layout — same replay semantics). Returns rows
         appended."""
-        import numpy as np
-
         from .ann import _with_partition_id
 
         idx = IVFPQIndex.load(spark, path)
@@ -442,13 +441,7 @@ class IVFPQIndex:
                 "predicates against these, so appending NULLs would silently "
                 "hide appended vectors from filtered results"
             )
-        centers = np.array(
-            [
-                r["centroid"]
-                for r in idx.centroids.orderBy("centroid_id").collect()
-            ],
-            dtype=np.float64,
-        )
+        centers = centroid_matrix(idx)
         assigned = _with_partition_id(new_rows, centers, vec)
         base = pq_encode_with_codes_arrow(
             assigned,
@@ -521,6 +514,7 @@ class IVFPQIndex:
         partition directories of the coded table (partition pruning at the
         scan — the bucketed layout is the point of the tier)."""
         centroids = spark.read.parquet(f"{path}/centroids")
+        mat = _centroid_rows_matrix(centroids.collect())
         coded = _read_layout(spark, path, "coded")
         meta = spark.read.parquet(f"{path}/meta").collect()[0]
         books = [
@@ -536,11 +530,11 @@ class IVFPQIndex:
             sel_sample = _read_sidecar(spark, path, "sample").persist()
         except Exception:  # pre-sidecar layout vintage
             sel_sample = None
-        return IVFPQIndex(
+        idx = IVFPQIndex(
             centroids=centroids,
             coded=coded,
             codebooks=books,
-            n_centroids=centroids.count(),
+            n_centroids=len(mat),
             build_seconds=0.0,
             id_col=meta["id_col"],
             vec_col=meta["vec_col"],
@@ -549,6 +543,8 @@ class IVFPQIndex:
             sel_sample=sel_sample,
             rotation=rot,
         )
+        idx._centroid_mat = mat
+        return idx
 
     def search(
         self,
@@ -604,24 +600,10 @@ class IVFPQIndex:
             )
         m, n_codes, sd = _validate(self.codebooks)
         if adaptive_nprobe and predicate is not None:
-            # same policy as IVFIndex.search: a filter keeping s of the corpus
-            # thins every probed bucket to s of its rows, so holding the
-            # candidate count constant takes nprobe/s probes (clamped below).
-            # Estimated from the tiny sample sidecar when loaded from a
-            # layout — the coded relation is never scanned outside the probe
-            # join itself.
-            sel = _estimate_selectivity(
-                self.sel_sample if self.sel_sample is not None else self.coded,
-                predicate,
-            )
-            if sel > 0:
-                import math
-
-                nprobe = int(math.ceil(nprobe / sel))
-            else:
-                # zero sample hits = predicate below the sample's resolution:
-                # open every bucket (see IVFIndex.search)
-                nprobe = self.n_centroids
+            # same policy as IVFIndex.search, estimated from the tiny sample
+            # sidecar when loaded from a layout — the coded relation is
+            # never scanned outside the probe join itself
+            nprobe = _widened_nprobe(self, nprobe, predicate)[1]
         nprobe = min(nprobe, self.n_centroids)
 
         corpus = self.coded
@@ -635,7 +617,7 @@ class IVFPQIndex:
             q_search = rotate_vecs(
                 queries.select("query_id", "q_vec"), self.rotation, "q_vec"
             )
-            cent_search = self._rotated_centroids_df()
+            cent_search = self._rotated_centroids()[1]
         else:
             q_search = queries
             cent_search = self.centroids
@@ -733,25 +715,21 @@ class IVFPQIndex:
             cand, queries, corpus, k, rerank, joined_vectors=True
         )
 
-    def _rotated_centroids_df(self) -> DataFrame:
-        """Memoized (centroid_id, centroid @ R) relation — n_centroids rows,
-        rotated once on the driver (the centroid table is bounded by the
-        same collect discipline every search already relies on)."""
-        cached = getattr(self, "_cent_rot_df", None)
-        if cached is not None:
-            return cached
-        rows = self.centroids.collect()
-        R = np.ascontiguousarray(self.rotation, dtype=np.float64)
-        data = [
-            (int(r["centroid_id"]),
-             [float(x) for x in np.asarray(r["centroid"], dtype=np.float64) @ R])
-            for r in rows
-        ]
-        df = self.coded.sparkSession.createDataFrame(
-            data, "centroid_id int, centroid array<double>"
-        )
-        self._cent_rot_df = df
-        return df
+    def _rotated_centroids(self) -> tuple[np.ndarray, DataFrame]:
+        """Memoized rotated centroids: the id-ordered matrix of the per-row
+        products ``c @ R`` (a matrix-at-once product rounds differently) and
+        its (centroid_id, centroid) array<double> relation, which holds the
+        same doubles — rotated once on the driver from `centroid_matrix`."""
+        cached = getattr(self, "_cent_rot", None)
+        if cached is None:
+            R = np.ascontiguousarray(self.rotation, dtype=np.float64)
+            mat = np.array([c @ R for c in centroid_matrix(self)])
+            df = self.coded.sparkSession.createDataFrame(
+                [(i, [float(x) for x in c]) for i, c in enumerate(mat)],
+                "centroid_id int, centroid array<double>",
+            )
+            cached = self._cent_rot = (mat, df)
+        return cached
 
     def _adc_candidates_arrow(
         self,
@@ -783,27 +761,22 @@ class IVFPQIndex:
         candidates are pre-sorted by neighbor_id so a STABLE argsort on
         distance reproduces the (adc_dist, neighbor_id) tie-break exactly.
 
-        Driver-side collects are the query matrix (bounded: raises above
-        ann._SCORE_MAX_QUERIES queries — shard the query batch upstream) and
-        the centroid table — never the coded corpus. Probe ranking happens
+        The one driver-side collect is the query matrix (bounded: raises
+        above ann._SCORE_MAX_QUERIES queries — shard the query batch
+        upstream); the centroids come from the index's `centroid_matrix`,
+        and the coded corpus never reaches the driver. Probe ranking happens
         right there over the collected matrix (ann._probe_lists_numpy, same
         fold + tie-break as the knn_window job the expression path runs).
         """
-        # OPQ: the caller passes ROTATED queries; use the rotated centroid
-        # relation to match, so probe ranking and the scorers' residuals both
-        # live in rotated space — (Q@R - (c@R)) == (q - c)@R, the space the
-        # codes quantize. It is the relation the expression form reads, so
-        # both forms see the same rotated doubles (a matrix-at-once c @ R
-        # rounds differently from the per-row products).
-        cent_df = self.centroids
+        # OPQ: the caller passes ROTATED queries; use the rotated centroids
+        # to match, so probe ranking and the scorers' residuals both live in
+        # rotated space — (Q@R - (c@R)) == (q - c)@R, the space the codes
+        # quantize. The expression form reads the relation holding the same
+        # rotated doubles, so both forms rank probes identically.
         if self.rotation is not None:
-            cent_df = self._rotated_centroids_df()
-        m, n_codes, sd = _validate(self.codebooks)
-        cent = np.zeros((self.n_centroids, m * sd), dtype=np.float64)
-        for r in cent_df.collect():
-            cent[int(r["centroid_id"])] = np.asarray(
-                r["centroid"], dtype=np.float64
-            )
+            cent, cent_df = self._rotated_centroids()
+        else:
+            cent, cent_df = centroid_matrix(self), self.centroids
         CB = np.ascontiguousarray(self.codebooks, dtype=np.float64)
         return _arrow_bucket_topk(
             queries,
@@ -881,3 +854,4 @@ class IVFPQIndex:
         self.coded.unpersist()
         if self.sel_sample is not None:
             self.sel_sample.unpersist()
+        self.__dict__.pop("_sel_memo", None)

@@ -52,6 +52,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .ann import centroid_matrix
 from .topk import Metric, _arrow_vectors, _local_topk_tuples, distance_col
 
 __all__ = ["knn_graph_window", "knn_graph_bucketed"]
@@ -210,9 +211,9 @@ def knn_graph_bucketed(
         # pure expression overhead — while the kernel walks the same pairs
         # as vectorized numpy and emits only the n x nprobe survivors (the
         # scale form; probe SETS bit-identical, see _exploded_probes_arrow).
-        cent_rows = index.centroids.orderBy("centroid_id").collect()
-        cent = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
-        probes = _exploded_probes_arrow(src, cent, nprobe, mode=probe_mode)
+        probes = _exploded_probes_arrow(
+            src, centroid_matrix(index), nprobe, mode=probe_mode
+        )
         residents = index.assigned.select(
             F.col(id_col).alias("neighbor_id"), "partition_id", vec_col
         )

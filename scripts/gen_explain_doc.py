@@ -109,7 +109,7 @@ def main() -> None:
         "The engine's scale properties are plan properties. `tests/test_plan_properties.py`",
         "asserts the load-bearing ones; this document shows the actual plans.",
         "",
-        "Two engine-wide rules shape every plan below:",
+        "Three engine-wide rules shape every plan below:",
         "",
         "- **Parallelism comes from the data.** A scan runs one task per input split;",
         "  a shuffle runs `spark.sql.shuffle.partitions` tasks (AQE coalesces them).",
@@ -126,6 +126,13 @@ def main() -> None:
         "  superseded rounds. The index artifacts (`IVFIndex.assigned`,",
         "  `IVFPQIndex.coded`, `LSHIndex.tagged`, the selectivity samples) stay",
         "  `persist()`ed and each index's `unpersist()` frees them.",
+        "- **An index holds one driver-side centroid matrix; selectivity is",
+        "  estimated once per (index, predicate).** The Arrow kernels rank probes",
+        "  over `centroid_matrix(index)` (the float32 values the `centroids`",
+        "  relation stores, cached on the index by its build or load), and the",
+        "  planners memoize each predicate's sample estimate until `unpersist()`.",
+        "  Planning a filtered search the index has seen before launches no job;",
+        "  the `centroids` relation stays for the expression-path probe join.",
         "",
     ]
     for title, df in dfs.items():

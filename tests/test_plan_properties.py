@@ -145,6 +145,43 @@ def test_lazy_results_launch_no_jobs_over_a_shuffled_input(spark):
     assert jobs == []
 
 
+def test_replanning_a_filtered_search_launches_no_jobs(spark):
+    """An index holds one driver-side centroid matrix and one selectivity
+    estimate per (index, predicate), so planning a filtered search the index
+    has seen before runs nothing — on the ANN route (Arrow BLAS tier, the
+    benchmark's form) and on the exact_filtered route. The query batch is a
+    local relation, which collects without a job."""
+    from filtered_ads_vector_search_spark.operators.ann import (
+        IVFIndex,
+        plan_filtered_search,
+    )
+
+    sc = spark.sparkContext
+    q, c = TK.split_queries(spark.read.parquet(f"{SF_TEST}/embeddings.parquet"))
+    local_q = spark.createDataFrame(q.limit(20).toPandas(), q.schema)
+    idx = IVFIndex.build(FL.with_rating_bucket(c), n_centroids=16, seed=42)
+    try:
+        for name, tier in (("low_rated", "ann"), ("mid_rated", "exact_filtered")):
+            def plan():
+                return plan_filtered_search(
+                    idx, local_q, k=10, nprobe=4,
+                    predicate=FL.named_filter_predicate(name), arrow="blas",
+                )
+
+            plan()
+            group = f"replan-{name}"
+            sc.setJobGroup(group, "planning a seen predicate")
+            try:
+                again = plan()
+                jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert again.tier == tier
+            assert jobs == [], (name, jobs)
+    finally:
+        idx.unpersist()
+
+
 def test_dsir_score_join_broadcasts(spark):
     """DSIR scoring: the per-bucket lambda relation (<= n_buckets rows) joins
     the exploded corpus via BroadcastHashJoin — no SortMergeJoin anywhere, so

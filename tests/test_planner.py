@@ -194,3 +194,98 @@ def test_range_no_predicate_and_arrow_parity(qc, ivf):
         for r in b.result.collect()
     )
     assert ra == rb and len(ra) > 0
+
+
+# --- planning state held by the index: one selectivity estimate per
+# (index, predicate), and nothing cached once the index is unpersisted ---
+
+
+def test_selectivity_is_estimated_once_per_index_and_predicate(qc, monkeypatch):
+    """The planner, the range planner and adaptive_nprobe search (IVF and
+    IVFPQ) share one memoized estimate per (index, predicate). A predicate
+    keeping no row memoizes 0.0 rather than re-estimating; unpersist() drops
+    the memo."""
+    from filtered_ads_vector_search_spark.operators import ann as ANN
+    from filtered_ads_vector_search_spark.operators.ann import (
+        plan_filtered_range_search,
+    )
+    from filtered_ads_vector_search_spark.operators.ivfpq import IVFPQIndex
+
+    q, c = qc
+    estimated = []
+    real = ANN._estimate_selectivity
+
+    def counting(relation, predicate):
+        estimated.append(str(predicate))
+        return real(relation, predicate)
+
+    monkeypatch.setattr(ANN, "_estimate_selectivity", counting)
+    idx = IVFIndex.build_fixed(c, n_centroids=16)
+    pq = IVFPQIndex.build_fixed(c, n_centroids=8, m=4, n_codes=16)
+    try:
+        nothing = F.col("rating_bucket") == F.lit("no-such-bucket")
+        for _ in range(2):
+            plan = plan_filtered_search(idx, q, k=10, nprobe=4, predicate=nothing)
+            assert plan.tier == "exact_filtered" and plan.selectivity == 0.0
+            assert plan.result.count() == 0
+        assert len(estimated) == 1
+
+        # every call below builds a fresh Column: the memo keys on the
+        # predicate's expression, not on the object
+        named = FL.named_filter_predicate
+        s_low = plan_filtered_search(
+            idx, q, k=10, nprobe=4, predicate=named("low_rated")
+        ).selectivity
+        s_high = plan_filtered_search(
+            idx, q, k=10, nprobe=4, predicate=named("high_rated")
+        ).selectivity
+        assert len(estimated) == 3 and s_low != s_high
+
+        ranged = plan_filtered_range_search(
+            idx, q, radius=1.55, nprobe=4, predicate=named("low_rated")
+        )
+        assert ranged.selectivity == s_low
+        idx.search(q, k=10, nprobe=4, predicate=named("high_rated"), adaptive_nprobe=True)
+        assert len(estimated) == 3
+
+        # each index holds its own memo
+        plan = plan_filtered_search(pq, q, k=10, nprobe=4, predicate=named("low_rated"))
+        assert plan.tier == "ann"
+        pq.search(q, k=10, nprobe=4, predicate=named("low_rated"), adaptive_nprobe=True)
+        assert len(estimated) == 4
+
+        idx.unpersist()
+        assert "_sel_memo" not in vars(idx)
+        plan_filtered_search(idx, q, k=10, nprobe=4, predicate=named("low_rated"))
+        assert len(estimated) == 5
+    finally:
+        idx.unpersist()
+        pq.unpersist()
+
+
+def test_plan_then_unpersist_leaves_no_persistent_rdds(spark, qc, tmp_path):
+    """Build, plan both routes, consume the rows, unpersist: the persistent
+    RDDs are back at their baseline, for a built index and for one loaded
+    from its written layout (which persists the selectivity sample)."""
+    q, c = qc
+    jsc = spark.sparkContext._jsc
+
+    def persistent():
+        return set(jsc.getPersistentRDDs().keys())
+
+    baseline = persistent()
+    built = IVFIndex.build(c, n_centroids=16, seed=42)
+    path = str(tmp_path / "ivf")
+    built.write_bucketed(path)
+    loaded = IVFIndex.load(spark, path)
+    for idx in (built, loaded):
+        for name in ("low_rated", "mid_rated"):
+            plan = plan_filtered_search(
+                idx, q, k=10, nprobe=4,
+                predicate=FL.named_filter_predicate(name), arrow="blas",
+            )
+            assert plan.result.count() > 0
+    assert persistent() != baseline  # the live indexes hold their artifacts
+    built.unpersist()
+    loaded.unpersist()
+    assert persistent() == baseline

@@ -522,6 +522,64 @@ def test_probe_ranking_100k_centroids_no_driver_matrix(spark):
     corpus.unpersist()
 
 
+def test_centroid_matrix_equals_collected_relation_bit_for_bit(spark, tmp_path):
+    """Every index's driver-side centroid matrix holds exactly the doubles
+    collecting its ``centroids`` relation returns — trained and fixed
+    builds, a loaded layout, a directly constructed index and IVFPQ — so
+    the Arrow kernels rank probes over what the expression path reads. A
+    trained build's float64 k-means centers round to float32 on the way in."""
+    import numpy as np
+
+    from filtered_ads_vector_search_spark.operators.ann import centroid_matrix
+    from filtered_ads_vector_search_spark.operators.ivfpq import IVFPQIndex
+
+    def assert_bitwise(idx):
+        rows = {int(r["centroid_id"]): r["centroid"] for r in idx.centroids.collect()}
+        want = np.array([rows[i] for i in range(len(rows))], dtype=np.float64)
+        got = centroid_matrix(idx)
+        assert got.dtype == np.float64
+        assert got.shape == want.shape and len(got) == idx.n_centroids
+        assert np.array_equal(got.view(np.uint64), want.view(np.uint64))
+
+    q, c = _split(spark)
+    built = IVFIndex.build(c, n_centroids=8, seed=42)
+    assert_bitwise(built)
+    assert not np.array_equal(built._centers_np, centroid_matrix(built))
+    path = str(tmp_path / "ivf")
+    built.write_bucketed(path)
+    built.unpersist()
+    loaded = IVFIndex.load(spark, path)
+    assert_bitwise(loaded)
+    assert np.array_equal(centroid_matrix(loaded), centroid_matrix(built))
+    loaded.unpersist()
+
+    fixed = IVFIndex.build_fixed(c, n_centroids=8)
+    assert_bitwise(fixed)
+    direct = IVFIndex(
+        centroids=fixed.centroids,
+        assigned=fixed.assigned,
+        metric="sqeuclidean",
+        n_centroids=fixed.n_centroids,
+        build_seconds=0.0,
+    )
+    assert "_centroid_mat" not in vars(direct)  # falls back to one collect
+    assert_bitwise(direct)
+    assert centroid_matrix(direct) is centroid_matrix(direct)
+    fixed.unpersist()
+
+    trained = IVFPQIndex.build(c, n_centroids=8, m=4, n_codes=16, seed=42)
+    assert_bitwise(trained)
+    trained.unpersist()
+    pq = IVFPQIndex.build_fixed(c, n_centroids=8, m=4, n_codes=16)
+    assert_bitwise(pq)
+    pq_path = str(tmp_path / "ivfpq")
+    pq.write_bucketed(pq_path)
+    pq.unpersist()
+    pq_loaded = IVFPQIndex.load(spark, pq_path)
+    assert_bitwise(pq_loaded)
+    pq_loaded.unpersist()
+
+
 def test_arrow_kernels_empty_queries_return_empty(spark):
     """Both Arrow kernels honor the expression-path contract: an empty
     query batch returns an empty result instead of crashing on the
