@@ -33,17 +33,23 @@ import time
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
 from ..materialize import materialize, release
-from .topk import Metric, _arrow_vectors, _topk_set_mask, distance_col, knn_window
-
-# The Arrow kernels collect the query matrix driver-side and rank probes
-# over it in numpy (the same bounded-collect discipline as knn_scalable's
-# broadcast queries); above this many queries, shard the batch upstream.
-_SCORE_MAX_QUERIES = 100_000
+from .topk import (
+    MAX_BROADCAST_QUERIES,
+    Metric,
+    _arrow_vectors,
+    _sqeuclidean_blas_scorer,
+    _sqeuclidean_bucket_scorer,
+    _sqeuclidean_fold,
+    distance_col,
+    knn_window,
+    scan_topk,
+    topk_agg,
+)
 
 # Probe-ranking route inside the Arrow kernels: the driver-side numpy
 # ranking allocates a (4096 x n_centroids) float64 chunk — ~3 GB of
@@ -75,15 +81,12 @@ def _probe_lists_numpy(
     interpreted-HOF job that cost ~4.5s at 10k queries x 256 centroids —
     this is ~0.3s of numpy on the driver, bounded by the query-collect cap
     the kernel already enforces (chunked so temporaries stay ~100 MB)."""
-    n_cent = cent.shape[0]
-    t = min(nprobe, n_cent)
+    t = min(nprobe, cent.shape[0])
+    CT = np.ascontiguousarray(cent.T)
     bucket_queries: dict[int, list[int]] = {}
     for c0 in range(0, len(Q), _PROBE_CHUNK_QUERIES):
         Qc = Q[c0 : c0 + _PROBE_CHUNK_QUERIES]
-        D = np.zeros((len(Qc), n_cent), dtype=np.float64)
-        for el in range(Qc.shape[1]):  # ascending-element left fold
-            d = Qc[:, el, None] - cent[None, :, el]
-            D += d * d
+        D = _sqeuclidean_fold(Qc, CT)
         keep = np.argsort(D, axis=1, kind="stable")[:, :t]
         for i in range(len(Qc)):
             qi = c0 + i
@@ -93,7 +96,7 @@ def _probe_lists_numpy(
 
 
 def _probe_lists_job(
-    queries: DataFrame, centroids: DataFrame, nprobe: int, qpos: dict[int, int]
+    queries: DataFrame, centroids: DataFrame, nprobe: int, qids: np.ndarray
 ) -> dict[int, list[int]]:
     """Distributed probe ranking for the Arrow kernels — the expression-path
     knn_window probe job (broadcast queries x centroid relation -> partial
@@ -110,6 +113,7 @@ def _probe_lists_job(
         id_col="centroid_id",
         vec_col="centroid",
     ).select("query_id", "neighbor_id").collect()
+    qpos = {int(q): i for i, q in enumerate(qids)}
     pairs = sorted(
         (qpos[int(r["query_id"])], int(r["neighbor_id"])) for r in rows
     )
@@ -119,237 +123,40 @@ def _probe_lists_job(
     return bucket_queries
 
 
-def _arrow_bucket_topk(
+def _probed_scan(
     queries: DataFrame,
     corpus: DataFrame,
-    id_col: str,
-    data_col: str,
-    data_dtype: str,
-    top: int,
-    out_col: str,
-    extra: tuple,
-    bucket_scorer,
-    kernel_name: str,
+    who: str,
     probe_spec: tuple,
-    radius: float | None = None,
+    **kernel,
 ) -> DataFrame:
-    """Shared scaffolding of the Arrow scoring kernels (IVF exact /
-    IVFPQ ADC): bounded query collect, driver-side probe ranking
-    (``probe_spec`` = id-ordered centroid matrix + nprobe), broadcast,
-    static bucket pruning, per-bucket neighbor_id pre-sort (the exact
-    (score, id) tie-break via STABLE argsort), 256-query chunking to bound
-    the (q x n) block, and local top-``top`` partial emission for the
-    shared window merge. The kernels differ ONLY in ``bucket_scorer``:
+    """`scan_topk` over the probed buckets of an IVF-family layout: the
+    candidate groups are ``partition_id`` -> the queries probing it, ranked
+    driver-side over the collected query matrix. ``probe_spec`` = (centroid
+    matrix ordered by ascending centroid_id, nprobe, centroid relation).
+    Same fold and (dist, centroid_id) tie-break as the knn_window probe job
+    the expression path runs — UNLESS the centroid count (or the Q x C
+    matrix) is past the driver budget, in which case the ranking runs as
+    that very knn_window job, distributed (identical probe sets; see
+    _PROBE_DISTRIBUTED_CENTROIDS). ``kernel``: the scorer and the other
+    `scan_topk` knobs."""
+    cent_mat, nprobe, cent_df = probe_spec
 
-        bucket_scorer(Q, qsel, bucket_id, data, extra) -> chunk_fn
-        chunk_fn(c0, c1) -> (c1-c0, n_bucket_rows) float64 score matrix
+    def groups(qids, Q):
+        n_cent = cent_mat.shape[0]
+        if (
+            n_cent > _PROBE_DISTRIBUTED_CENTROIDS
+            or len(Q) * n_cent * 8 > _PROBE_MATRIX_BYTES
+        ):
+            bq = _probe_lists_job(queries, cent_df, min(nprobe, n_cent), qids)
+        else:
+            bq = _probe_lists_numpy(Q, cent_mat, nprobe)
+        return {
+            "partition_id": {b: np.array(v, dtype=np.int64) for b, v in bq.items()}
+        }
 
-    where ``data`` is the bucket's ``data_col`` rows as a (n, ...) array of
-    ``data_dtype``, already sorted by ascending neighbor_id. Keeping the
-    scaffold in one place keeps the two kernels' tie-break / chunking /
-    cap discipline from drifting apart — both assert bit-equality with
-    their expression forms."""
-    q_rows = queries.select("query_id", "q_vec").collect()
-    if not q_rows:  # expression-path contract: empty in, empty out
-        return corpus.sparkSession.createDataFrame(
-            [], f"query_id long, neighbor_id long, {out_col} double"
-        )
-    if len(q_rows) > _SCORE_MAX_QUERIES:
-        raise ValueError(
-            f"{kernel_name} collects the query matrix; got {len(q_rows)} "
-            f"queries > {_SCORE_MAX_QUERIES} — shard the batch upstream"
-        )
-    qids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-    Q = np.array([list(r["q_vec"]) for r in q_rows], dtype=np.float64)
-    qpos = {int(q): i for i, q in enumerate(qids)}
-    if len(qpos) != len(qids):
-        # the expression path would score each duplicate row; collapsing
-        # them into qpos silently (last q_vec wins) would break the asserted
-        # bit-identity contract — refuse malformed input instead
-        raise ValueError(
-            f"{kernel_name}: duplicate query_id rows in the query batch "
-            f"({len(qids)} rows, {len(qpos)} distinct ids)"
-        )
-    # (centroid matrix ordered by ascending centroid_id, nprobe, centroid
-    # relation): rank probes driver-side over the Q matrix just collected —
-    # same fold, same tie-break as the knn_window probe job the expression
-    # path runs — UNLESS the centroid count (or the Q x C matrix) is past
-    # the driver budget, in which case the ranking runs as that very
-    # knn_window job, distributed (identical probe sets; see
-    # _PROBE_DISTRIBUTED_CENTROIDS)
-    cent_mat, nprobe_, cent_df = probe_spec
-    n_cent = cent_mat.shape[0]
-    if (
-        n_cent > _PROBE_DISTRIBUTED_CENTROIDS
-        or len(Q) * n_cent * 8 > _PROBE_MATRIX_BYTES
-    ):
-        bucket_queries = _probe_lists_job(queries, cent_df, min(nprobe_, n_cent), qpos)
-    else:
-        bucket_queries = _probe_lists_numpy(Q, cent_mat, nprobe_)
-    bq = {b: np.array(v, dtype=np.int64) for b, v in bucket_queries.items()}
-    bc = corpus.sparkSession.sparkContext.broadcast((qids, Q, bq) + extra)
-    pruned = corpus.filter(
-        F.col("partition_id").isin([int(b) for b in bq])
-    ).select(
-        "partition_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.col(data_col).alias("_data"),
-    )
+    return scan_topk(queries, corpus, who, groups=groups, **kernel)
 
-    def score(batches):
-        import pyarrow as pa
-
-        payload = bc.value
-        qids_, Q_, bq_ = payload[0], payload[1], payload[2]
-        extra_ = payload[3:]
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            # mapInArrow + flat-buffer reshape: the data column becomes the
-            # (n, w) scoring matrix straight from the Arrow values buffer —
-            # the per-row tolist() this replaces materialized n x w Python
-            # objects per batch and DOMINATED the full-vector kernel at 5M
-            # (primitive upcasts are exact, so the scored doubles are
-            # bit-identical)
-            pids = (
-                batch.column(batch.schema.get_field_index("partition_id"))
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            nids = (
-                batch.column(batch.schema.get_field_index("neighbor_id"))
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            mat = _arrow_vectors(batch, "_data", dtype=data_dtype)
-            # group rows by bucket (stable sort keeps intra-bucket order,
-            # which the per-bucket id argsort below re-orders anyway — same
-            # per-bucket row multiset the pandas groupby produced)
-            g_order = np.argsort(pids, kind="stable")
-            g_pids = pids[g_order]
-            bounds = np.flatnonzero(np.r_[True, g_pids[1:] != g_pids[:-1], True])
-            # yield per BUCKET, not per input batch: each yielded frame
-            # becomes ONE Arrow IPC batch on the Python->JVM wire, and an
-            # unbucketed corpus relation can interleave hundreds of probed
-            # buckets inside one input batch — concatenating them produced
-            # single ~1 GB batches (queries x buckets x top rows) that
-            # exhausted Arrow's direct-memory pool at 5M x 10k queries. A
-            # per-bucket frame is bounded by queries_probing x top rows.
-            # (Measured alternative, rejected: compacting to top-`top` per
-            # (query, task) before emission cuts the wire volume ~3x under
-            # widened probing but runs ~40% SLOWER end to end — the
-            # task-end lexsort stalls the pipeline into the JVM partial
-            # WindowGroupLimit, which absorbs the per-bucket volume while
-            # the Python worker is still scoring.)
-            for s0, s1 in zip(bounds[:-1], bounds[1:]):
-                b = int(g_pids[s0])
-                qsel = bq_.get(b)
-                if qsel is None or len(qsel) == 0:
-                    continue
-                sel = g_order[s0:s1]
-                ids = nids[sel]
-                order = np.argsort(ids)  # ascending id => exact tie-break
-                ids = ids[order]
-                data = mat[sel][order]
-                chunk_fn = bucket_scorer(Q_, qsel, b, data, extra_)
-                n = len(ids)
-                t = min(top, n)
-                out_q: list[np.ndarray] = []
-                out_n: list[np.ndarray] = []
-                out_d: list[np.ndarray] = []
-                for c0 in range(0, len(qsel), 256):  # bound the (q x n) block
-                    c1 = min(c0 + 256, len(qsel))
-                    sc = chunk_fn(c0, c1)
-                    # radius mode (range search): membership is a per-cell
-                    # predicate — the emitted rows ARE the final relation
-                    # (no window merge downstream; every corpus row lives in
-                    # exactly one bucket, so no dedup either). top-k mode:
-                    # exact top-t SET selection (O(n) partition + lowest-id
-                    # tie fill — columns are id-ascending) instead of a full
-                    # stable argsort: the shared window merge re-ranks by
-                    # (score, id) globally, so only the SET and its score
-                    # values matter, and those are identical to the argsort
-                    # form's. The row-wise O(n log n) sort dominated the
-                    # kernel at 5M x 10k queries.
-                    if radius is not None:
-                        rows_i, cols = np.nonzero(sc <= radius)
-                    else:
-                        rows_i, cols = np.nonzero(_topk_set_mask(sc, t))
-                    out_q.append(qids_[qsel[c0:c1][rows_i]])
-                    out_n.append(ids[cols])
-                    out_d.append(sc[rows_i, cols])
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.concatenate(out_q), type=pa.int64()),
-                        pa.array(np.concatenate(out_n), type=pa.int64()),
-                        pa.array(np.concatenate(out_d), type=pa.float64()),
-                    ],
-                    names=["query_id", "neighbor_id", out_col],
-                )
-
-    return pruned.mapInArrow(
-        score, f"query_id long, neighbor_id long, {out_col} double"
-    )
-
-
-def _sqeuclidean_bucket_scorer(Q, qsel, _b, V, _extra):
-    """Element-ascending (x-y)^2 left fold — the same IEEE doubles as the
-    0.0D-seeded ascending aggregate fold of the expression form.
-
-    The fold runs over corpus-column TILES with the bucket matrix
-    pre-transposed: each (q_chunk x tile) temporary is ~8 MB (cache-
-    resident) instead of (q_chunk x |bucket|) per element, which at 5M-row
-    scale generated TBs of allocation traffic across the el-loop. Each
-    sc[i, j] still accumulates elements in ascending order from 0.0 —
-    tiling partitions j, never the fold order — so the scored doubles are
-    bit-identical."""
-    d = V.shape[1]
-    VT = np.ascontiguousarray(V.T)  # (d, n): row `el` is contiguous
-
-    def chunk(c0, c1):
-        Qc = Q[qsel[c0:c1]]
-        n = VT.shape[1]
-        sc = np.empty((len(Qc), n), dtype=np.float64)
-        for t0 in range(0, n, 4096):
-            t1 = min(t0 + 4096, n)
-            blk = np.zeros((len(Qc), t1 - t0), dtype=np.float64)
-            for el in range(d):  # ascending-element left fold
-                diff = Qc[:, el, None] - VT[el, t0:t1][None, :]
-                blk += diff * diff
-            sc[:, t0:t1] = blk
-        return sc
-
-    return chunk
-
-
-def _sqeuclidean_blas_scorer(Q, qsel, _b, V, _extra):
-    """||q||^2 - 2 q.v + ||v||^2 via one DGEMM — the same stable expansion
-    the exact tier (`topk._np_distances`) has scored with since round 3,
-    ~d times faster than the element fold at 64 dims. The summation order
-    differs from the fold, so doubles agree only to last-ulps — this is the
-    THROUGHPUT form (`arrow_score="blas"`), not the bit-identity form. The
-    top-k SET and ranks still match the expression path unless two rows
-    land within ~1e-12 relative of a tie — including EXACT-duplicate rows:
-    DGEMM's internal blocking can give identical input columns doubles one
-    ulp apart across a block boundary (observed with n=109 duplicates:
-    two distinct values on the plateau), so which duplicate id represents
-    a plateau in the top-k set may differ from the fold's lowest-id pick;
-    the selected distance MULTISET is unchanged (the rows are the same
-    vector), which is what the fuzz contract asserts. The oracle gate
-    compares at 6-decimal rounding,
-    which both expansions satisfy (knn_scalable has shipped on this one
-    against the DuckDB fold oracle for three driver rounds). Unlike the
-    fold (elementwise, batch-shape-invariant), DGEMM tiling varies with the
-    matrix shapes, so blas distances can also differ at last-ulps across
-    query-batch compositions (e.g. sharded vs single-shot) — ranks and
-    result sets are unaffected away from exact ties."""
-    Vn = (V * V).sum(axis=1)
-
-    def chunk(c0, c1):
-        Qc = Q[qsel[c0:c1]]
-        return (Qc * Qc).sum(axis=1)[:, None] - 2.0 * (Qc @ V.T) + Vn[None, :]
-
-    return chunk
 
 __all__ = ["IVFIndex"]
 
@@ -884,59 +691,44 @@ def _kmeans_numpy(
     return runs[min(range(n_runs), key=lambda i: (runs[i][0], i))][1]
 
 
-def _with_partition_id(df: DataFrame, centroids: np.ndarray, vec_col: str) -> DataFrame:
-    """``df`` + a ``partition_id`` column: nearest-centroid assignment over
-    the broadcast centroid matrix, as ONE mapInArrow pass — the single
-    full-corpus scan of a trained build. argmin of the `cn - 2 V.C`
-    expansion (|v|^2 is constant per row, argmin-safe); np.argmin's
-    first-minimum is the lowest-centroid-id tie-break. The vector column is
-    reshaped straight from the Arrow values buffer instead of a per-row
-    ``tolist()``, which at corpus scale (5M rows) was most of the
-    assignment scan's wall time under the prior pandas_udf form. All other
-    columns pass through untouched (filtered search binds predicates
-    against them)."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    C = np.ascontiguousarray(centroids, dtype=np.float64)
-    cn = (C * C).sum(axis=1)
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField("partition_id", IntegerType())]
-    )
-
-    def assign(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            V = _arrow_vectors(batch, vec_col)
-            d = cn[None, :] - 2.0 * (V @ C.T)  # |v|^2 constant per row
-            yield batch.append_column(
-                "partition_id",
-                pa.array(np.argmin(d, axis=1).astype(np.int32), type=pa.int32()),
-            )
-
-    return df.mapInArrow(assign, out_schema)
-
-
-def _with_partition_id_exact(
-    df: DataFrame, centroids: np.ndarray, vec_col: str
+def _with_partition_id(
+    df: DataFrame,
+    centroids: np.ndarray,
+    vec_col: str,
+    nprobe: int = 1,
+    mode: str = "blas",
 ) -> DataFrame:
-    """``df`` + ``partition_id`` via an assignment that is BIT-IDENTICAL to
-    the SQL-fold argmin the DuckDB oracles compute (build_fixed's contract):
-    per-element (x - y)*(x - y) is exact in any order, the distance
-    accumulates one element index per step in ascending order — the same
-    doubles as the 0.0-seeded element-ascending aggregate fold — and
-    np.argmin's first-minimum matches the strict-< keep-lowest-centroid
-    tie-break. No matmul rearrangement (the fast `cn - 2 v.C` form of
-    _with_partition_id changes ulps and could flip near-ties, which
-    training-free fixed builds cannot tolerate). Same ONE mapInArrow
-    pass-through shape as _with_partition_id — the flat-buffer decode is
-    exact, so swapping it for the prior per-row ``tolist()`` changes no
-    assignment."""
+    """``df`` + a ``partition_id`` column: nearest-centroid assignment over
+    the broadcast centroid matrix, as ONE mapInArrow pass (the single
+    full-corpus scan of a build). The vector column is reshaped straight
+    from the Arrow values buffer instead of a per-row ``tolist()``, which
+    at corpus scale (5M rows) was most of the assignment scan's wall time
+    under the prior pandas_udf form. All other columns pass through
+    untouched (filtered search binds predicates against them).
+
+    ``mode='blas'`` ranks by the ``cn - 2 V.C`` expansion (|v|^2 is
+    constant per row, rank-safe) — ONE DGEMM per batch, the trained-build
+    form; ulp rearrangement can flip exact near-ties. ``mode='exact'`` is
+    the element-ascending fold (`_sqeuclidean_fold`): BIT-IDENTICAL to the
+    SQL-fold argmin the DuckDB oracles compute (build_fixed's contract,
+    which training-free fixed builds need). Its temp traffic is
+    ~n x n_centroids x dim x 24 bytes (31 TB at 5M x 4096c, measured as
+    the whole wall time of the first 5M graph-bench attempt).
+
+    ``nprobe == 1`` keeps np.argmin (its first minimum is the strict-<
+    lowest-centroid-id tie-break) and appends the column in place.
+    ``nprobe > 1`` is the multi-probe form the k-NN graph needs: one output
+    row per probed bucket, by a stable argsort with the same lowest-id
+    tie-break (stable argsort orders NaN differently from argmin, so
+    assignments keep argmin)."""
     from pyspark.sql.types import IntegerType, StructField, StructType
 
+    if mode not in ("exact", "blas"):
+        raise ValueError(f"probe mode must be 'exact' or 'blas'; got {mode!r}")
     C = np.ascontiguousarray(centroids, dtype=np.float64)
+    CT = np.ascontiguousarray(C.T)
+    cn = (C * C).sum(axis=1)
+    t = min(nprobe, C.shape[0])
     out_schema = StructType(
         list(df.schema.fields) + [StructField("partition_id", IntegerType())]
     )
@@ -948,17 +740,18 @@ def _with_partition_id_exact(
             if batch.num_rows == 0:
                 continue
             V = _arrow_vectors(batch, vec_col)
-            # sequential accumulation over the element axis: identical
-            # left-to-right fold order with only (batch x k) working memory —
-            # a materialized (batch x k x dim) difference cube (or cumsum of
-            # it) peaks at multiple GB per task at real centroid counts
-            dist = np.zeros((V.shape[0], C.shape[0]), dtype=np.float64)
-            for i in range(C.shape[1]):
-                d = V[:, i, None] - C[None, :, i]
-                dist += d * d
+            if mode == "blas":
+                dist = cn[None, :] - 2.0 * (V @ C.T)
+            else:
+                dist = _sqeuclidean_fold(V, CT)
+            if t == 1:
+                keep = np.argmin(dist, axis=1)
+            else:
+                keep = np.argsort(dist, axis=1, kind="stable")[:, :t].ravel()
+                rep = np.repeat(np.arange(batch.num_rows), t)
+                batch = batch.take(pa.array(rep, type=pa.int64()))
             yield batch.append_column(
-                "partition_id",
-                pa.array(np.argmin(dist, axis=1).astype(np.int32), type=pa.int32()),
+                "partition_id", pa.array(keep.astype(np.int32), type=pa.int32())
             )
 
     return df.mapInArrow(assign, out_schema)
@@ -1086,7 +879,7 @@ class IVFIndex:
         ``build`` is the quality path.
 
         Assignment runs as an Arrow-batched exact kernel
-        (_with_partition_id_exact)
+        (_with_partition_id, mode='exact')
         whose fold order and tie-break are bit-identical to the oracle's SQL
         form (element-ascending squared-difference sum, lowest centroid_id
         on ties) — interpreted HOF expressions cost ~1ms/row for the
@@ -1104,7 +897,7 @@ class IVFIndex:
             raise ValueError("cannot build an IVF index over an empty corpus")
         centers = np.array([r[vec_col] for r in pick], dtype=np.float64)
         centroids, mat = _centroid_relation(corpus.sparkSession, centers)
-        assigned = _with_partition_id_exact(corpus, centers, vec_col)
+        assigned = _with_partition_id(corpus, centers, vec_col, mode="exact")
         if materialize:
             # bucket co-location — see build() for the rationale
             assigned = (
@@ -1327,14 +1120,7 @@ class IVFIndex:
             scored = self._score_candidates_arrow(
                 queries, nprobe, corpus, k, blas=(arrow_score == "blas")
             )
-            w = Window.partitionBy("query_id").orderBy(
-                F.col("dist").asc(), F.col("neighbor_id").asc()
-            )
-            return (
-                scored.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select("query_id", "neighbor_id", "rank", "dist")
-            )
+            return topk_agg(scored, k)
 
         # 1. rank centroids per query: tiny broadcast cross join + window
         probes = self._probes(queries, nprobe)
@@ -1363,12 +1149,9 @@ class IVFIndex:
             F.broadcast(probes).join(c_side, "partition_id")
             .join(F.broadcast(q_side), "query_id")
         )
-        # 3. exact rerank via the window form, NOT topk_agg: with no dedup
-        #    shuffle to eliminate (every corpus row lives in exactly one
-        #    partition), the window's WindowGroupLimit pushdown — local
-        #    per-query top-k BEFORE the exchange — beats an aggregation that
-        #    must shuffle every candidate into collect_list (measured ~20%
-        #    on the bench; the gap grows with candidates/query at scale).
+        # 3. exact rerank via topk_agg's window form (dedup=False): every
+        #    corpus row lives in exactly one partition, so no candidate
+        #    repeats (see topk_agg for why the window wins then).
         if self.metric == "cosine":
             d, asc = (
                 V.vec_cosine_distance_prenorm(
@@ -1379,15 +1162,12 @@ class IVFIndex:
             )
         else:
             d, asc = distance_col(self.metric, F.col("q_vec"), F.col(self.vec_col))
-        order = [F.col("dist").asc() if asc else F.col("dist").desc(), F.col("neighbor_id").asc()]
-        w = Window.partitionBy("query_id").orderBy(*order)
-        return (
+        return topk_agg(
             cand.select(
                 "query_id", F.col(self.id_col).alias("neighbor_id"), d.alias("dist")
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "dist")
+            ),
+            k,
+            asc=asc,
         )
 
     def range_search(
@@ -1417,7 +1197,7 @@ class IVFIndex:
 
         if arrow_score:
             # the batch-throughput form: probed buckets scored as vectorized
-            # blocks inside the scaffold's radius mode — the expression path
+            # blocks inside the kernel's radius mode — the expression path
             # below evaluates the interpreted HOF fold once per CANDIDATE
             # (queries x nprobe x bucket rows: ~3x10^9 at 5M/10kq/nprobe=32,
             # the same trap the graph kernel closed). Kernel rows ARE the
@@ -1428,18 +1208,15 @@ class IVFIndex:
                     "range_search(arrow_score=True) implements the "
                     f"sqeuclidean fold; got metric={self.metric!r}"
                 )
-            return _arrow_bucket_topk(
+            return _probed_scan(
                 queries,
                 corpus,
+                "range_search_arrow",
+                (centroid_matrix(self), nprobe, self.centroids),
+                scorer=_sqeuclidean_bucket_scorer,
+                top=0,  # unused in radius mode
                 id_col=self.id_col,
                 data_col=self.vec_col,
-                data_dtype="float64",
-                top=0,  # unused in radius mode
-                out_col="dist",
-                extra=(),
-                bucket_scorer=_sqeuclidean_bucket_scorer,
-                kernel_name="range_search_arrow",
-                probe_spec=(centroid_matrix(self), nprobe, self.centroids),
                 radius=radius,
             )
 
@@ -1479,24 +1256,20 @@ class IVFIndex:
         blas: bool = False,
     ) -> DataFrame:
         """Arrow-batched exact scoring of probed buckets (sqeuclidean) —
-        the shared `_arrow_bucket_topk` scaffold with the element-ascending
-        (x-y)^2 fold as the bucket scorer; bit-identical rows to the
-        expression form (tests assert it). ``blas=True`` swaps in the DGEMM
-        expansion (last-ulps-equal distances, same probe sets/tie-break).
-        Probe ranking happens inside the scaffold via ``probe_spec``
-        (driver-side, same fold/tie-break either way)."""
-        return _arrow_bucket_topk(
+        the shared kernel with the element-ascending (x-y)^2 fold as the
+        scorer; bit-identical rows to the expression form (tests assert
+        it). ``blas=True`` swaps in the DGEMM expansion (last-ulps-equal
+        distances, same probe sets/tie-break). Probe ranking is driver-side
+        (`_probed_scan`), same fold/tie-break either way."""
+        return _probed_scan(
             queries,
             corpus,
+            "arrow_score",
+            (centroid_matrix(self), nprobe, self.centroids),
+            scorer=_sqeuclidean_blas_scorer if blas else _sqeuclidean_bucket_scorer,
+            top=top,
             id_col=self.id_col,
             data_col=self.vec_col,
-            data_dtype="float64",
-            top=top,
-            out_col="dist",
-            extra=(),
-            bucket_scorer=_sqeuclidean_blas_scorer if blas else _sqeuclidean_bucket_scorer,
-            kernel_name="arrow_score",
-            probe_spec=(centroid_matrix(self), nprobe, self.centroids),
         )
 
     def unpersist(self) -> None:
@@ -1522,11 +1295,11 @@ def search_sharded(
     index,
     queries: DataFrame,
     k: int = 10,
-    shard_queries: int = _SCORE_MAX_QUERIES,
+    shard_queries: int = MAX_BROADCAST_QUERIES,
     **search_kwargs,
 ) -> DataFrame:
     """Search driver for query batches past the Arrow kernels' driver-side
-    collect cap (`_SCORE_MAX_QUERIES`): split the query relation into
+    collect cap (`topk.MAX_BROADCAST_QUERIES`): split the query relation into
     ``ceil(n / shard_queries)`` deterministic hash shards (xxhash64 on
     query_id — partition-invariant), run one search per shard, and union
     the results. Each query's top-k is complete within its own shard's job

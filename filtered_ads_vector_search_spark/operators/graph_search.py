@@ -62,7 +62,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..materialize import materialize, release
-from .topk import Metric, distance_col
+from .topk import Metric, distance_col, topk_agg
 
 __all__ = ["fixed_entry_nodes", "graph_search", "ivf_entries"]
 
@@ -198,11 +198,6 @@ def graph_search(
     q = queries.select("query_id", "q_vec")
 
     d, asc = distance_col(metric, F.col("q_vec"), F.col(vec_col))
-    order = [
-        F.col("dist").asc() if asc else F.col("dist").desc(),
-        F.col("node_id").asc(),
-    ]
-    w = Window.partitionBy("query_id").orderBy(*order)
 
     def score_all(cand: DataFrame) -> DataFrame:
         # (query_id, node_id) -> every candidate scored. The candidate set
@@ -231,8 +226,6 @@ def graph_search(
         # (query, node) distinct + the window repartition). Tie-break and
         # membership are identical to the window form (dist asc|desc,
         # node_id asc; asserted by topk_agg's cross-form test).
-        from .topk import topk_agg
-
         return topk_agg(
             scored.withColumnRenamed("node_id", "neighbor_id"),
             beam,
@@ -321,17 +314,19 @@ def graph_search(
 
     if passing is not None:
         # the result list: every visited passing node, deduped (the same
-        # node visited in two hops scores the same deterministic dist),
-        # final top-k — the FAISS-selector semantics
-        final = (
-            visited_passing.select("query_id", "node_id", "dist")
-            .distinct()
-            .withColumn("_r", F.row_number().over(w))
+        # node visited in two hops scores the same deterministic dist, so
+        # topk_agg's dedup collapses it), final top-k — the FAISS-selector
+        # semantics
+        return topk_agg(
+            visited_passing.select(
+                "query_id", F.col("node_id").alias("neighbor_id"), "dist"
+            ),
+            k,
+            asc=asc,
+            dedup=True,
         )
-    else:
-        final = frontier
     return (
-        final.filter(F.col("_r") <= k)
+        frontier.filter(F.col("_r") <= k)
         .select(
             "query_id",
             F.col("node_id").alias("neighbor_id"),

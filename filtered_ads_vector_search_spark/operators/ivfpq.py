@@ -44,16 +44,16 @@ from collections import OrderedDict
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..materialize import materialize, release
 from .ann import (
     IVFIndex,
-    _arrow_bucket_topk,
     _batch_root,
     _centroid_rows_matrix,
     _compact_layout,
+    _probed_scan,
     _read_layout,
     _read_sidecar,
     _sample_fraction,
@@ -71,7 +71,7 @@ from .pq import (
     pq_train,
     rotate_vecs,
 )
-from .topk import knn_window
+from .topk import knn_window, topk_agg
 
 def _adc_bucket_scorer(Q, qsel, b, codes, extra):
     """ADC via a per-bucket residual LUT: LUT entries accumulate subspace
@@ -637,9 +637,7 @@ class IVFPQIndex:
                 q_search, nprobe, corpus, top,
                 decomposed=(arrow_adc == "decomposed"),
             )
-            return self._finish_from_candidates(
-                cand, queries, corpus, k, rerank, joined_vectors=False
-            )
+            return self._finish_from_candidates(cand, queries, corpus, k, rerank)
 
         probes = knn_window(
             q_search,
@@ -703,17 +701,14 @@ class IVFPQIndex:
         adc = F.expr(
             f"aggregate(sequence(0, {m - 1}), 0.0D, (acc, j) -> acc + lut[j][codes[j]])"
         )
-        keep = [F.col(self.id_col).alias("neighbor_id")]
-        if rerank:
-            keep.append(F.col(self.vec_col))
         cand = (
             F.broadcast(probe_lut)
             .join(corpus, "partition_id")
-            .select("query_id", *keep, adc.alias("adc_dist"))
+            .select(
+                "query_id", F.col(self.id_col).alias("neighbor_id"), adc.alias("dist")
+            )
         )
-        return self._finish_from_candidates(
-            cand, queries, corpus, k, rerank, joined_vectors=True
-        )
+        return self._finish_from_candidates(cand, queries, corpus, k, rerank)
 
     def _rotated_centroids(self) -> tuple[np.ndarray, DataFrame]:
         """Memoized rotated centroids: the id-ordered matrix of the per-row
@@ -749,20 +744,20 @@ class IVFPQIndex:
         buckets (an isin on the partition column — stronger than the join's
         dynamic pruning), and scores each bucket x query-chunk block with
         numpy, emitting only a per-(query, chunk) local top-``top`` that the
-        shared window merge reduces — the knn_scalable partial-top-k shape.
-        The scaffolding (collect caps, broadcast, pre-sort/chunk/stable-
-        argsort discipline) is `ann._arrow_bucket_topk`, shared with
-        IVFIndex's exact kernel; only `_adc_bucket_scorer` is ADC-specific.
+        `topk_agg` merge reduces — the knn_scalable partial-top-k shape.
+        The scaffolding (collect cap, broadcast, pre-sort/chunk/top-k-set
+        discipline) is the shared kernel (`ann._probed_scan` ->
+        `topk.scan_topk`); only `_adc_bucket_scorer` is ADC-specific.
 
         Numerically BIT-IDENTICAL to the expression form (same discipline as
         pq_encode_udf): LUT entries accumulate subspace elements in
         ascending order from 0.0 and ADC sums LUT cells in ascending j — the
         same IEEE doubles as the 0.0D-seeded ascending aggregate folds — and
-        candidates are pre-sorted by neighbor_id so a STABLE argsort on
-        distance reproduces the (adc_dist, neighbor_id) tie-break exactly.
+        candidates are pre-sorted by neighbor_id so the top-k set mask
+        reproduces the (dist, neighbor_id) tie-break exactly.
 
         The one driver-side collect is the query matrix (bounded: raises
-        above ann._SCORE_MAX_QUERIES queries — shard the query batch
+        above topk.MAX_BROADCAST_QUERIES queries — shard the query batch
         upstream); the centroids come from the index's `centroid_matrix`,
         and the coded corpus never reaches the driver. Probe ranking happens
         right there over the collected matrix (ann._probe_lists_numpy, same
@@ -778,24 +773,23 @@ class IVFPQIndex:
         else:
             cent, cent_df = centroid_matrix(self), self.centroids
         CB = np.ascontiguousarray(self.codebooks, dtype=np.float64)
-        return _arrow_bucket_topk(
+        return _probed_scan(
             queries,
             corpus,
+            "arrow_adc",
+            (cent, nprobe, cent_df),
+            scorer=(
+                _adc_bucket_scorer_decomposed if decomposed else _adc_bucket_scorer
+            ),
+            top=top,
             id_col=self.id_col,
             data_col="codes",
             data_dtype="int64",
-            top=top,
-            out_col="adc_dist",
             # the pid:counter token uniquely names THIS search's broadcast
             # payload — the decomposed scorer's per-worker T3 cache keys on
             # it (content-true across tasks; see _DECOMP_CACHE)
             extra=(cent, CB, self.residual,
                    f"{os.getpid()}:{next(_DECOMP_TOKENS)}"),
-            bucket_scorer=(
-                _adc_bucket_scorer_decomposed if decomposed else _adc_bucket_scorer
-            ),
-            kernel_name="arrow_adc",
-            probe_spec=(cent, nprobe, cent_df),
         )
 
     def _finish_from_candidates(
@@ -805,50 +799,27 @@ class IVFPQIndex:
         corpus: DataFrame,
         k: int,
         rerank: int,
-        joined_vectors: bool,
     ) -> DataFrame:
         """Shared tail of both ADC physical forms: per-query ADC top-k (or
-        top-R + exact rerank). ``joined_vectors=False`` (the Arrow kernel's
-        candidates carry no vector column) fetches rerank vectors by
+        top-R + exact rerank) over (query_id, neighbor_id, dist) ADC
+        candidates. The rerank fetches the short list's vectors by
         streaming the corpus through one equi-join against the BROADCAST
-        <= queries x R short list — never a corpus-side shuffle."""
-        w_adc = Window.partitionBy("query_id").orderBy(
-            F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-        )
+        <= queries x R short list — never a corpus-side shuffle, and the
+        candidate merge never carries vectors."""
         if not rerank:
-            return (
-                cand.withColumn("rank", F.row_number().over(w_adc))
-                .filter(F.col("rank") <= k)
-                .select(
-                    "query_id", "neighbor_id", "rank", F.col("adc_dist").alias("dist")
-                )
-            )
-        short = cand.withColumn("_arn", F.row_number().over(w_adc)).filter(
-            F.col("_arn") <= max(rerank, k)
-        )
-        if not joined_vectors:
-            short = corpus.select(
-                F.col(self.id_col).alias("neighbor_id"), self.vec_col
-            ).join(
-                F.broadcast(short.select("query_id", "neighbor_id")), "neighbor_id"
-            )
-        short = short.join(
-            F.broadcast(queries.select("query_id", "q_vec")), "query_id"
+            return topk_agg(cand, k)
+        short = topk_agg(cand, max(rerank, k)).select("query_id", "neighbor_id")
+        short = (
+            corpus.select(F.col(self.id_col).alias("neighbor_id"), self.vec_col)
+            .join(F.broadcast(short), "neighbor_id")
+            .join(F.broadcast(queries.select("query_id", "q_vec")), "query_id")
         )
         exact = F.expr(
             f"aggregate(zip_with(cast(q_vec as array<double>), "
             f"cast({self.vec_col} as array<double>), (x, y) -> (x - y) * (x - y)), "
             "0.0D, (acc, x) -> acc + x)"
         )
-        w_ex = Window.partitionBy("query_id").orderBy(
-            F.col("dist").asc(), F.col("neighbor_id").asc()
-        )
-        return (
-            short.select("query_id", "neighbor_id", exact.alias("dist"))
-            .withColumn("rank", F.row_number().over(w_ex))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "dist")
-        )
+        return topk_agg(short.select("query_id", "neighbor_id", exact.alias("dist")), k)
 
     def unpersist(self) -> None:
         self.coded.unpersist()

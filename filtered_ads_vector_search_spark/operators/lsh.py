@@ -36,7 +36,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
-from .topk import Metric, distance_col, topk_agg
+from .topk import (
+    Metric,
+    _sqeuclidean_bucket_scorer,
+    _tiled_fold,
+    distance_col,
+    scan_topk,
+    topk_agg,
+)
 
 __all__ = ["LSHIndex"]
 
@@ -108,11 +115,7 @@ def _query_buckets_fold(Q: np.ndarray, planes: np.ndarray) -> np.ndarray:
     (queries x planes) but each scalar accumulator sees the identical IEEE
     operation sequence."""
     n_tables, n_bits, dim = planes.shape
-    P = planes.reshape(n_tables * n_bits, dim)
-    acc = np.zeros((Q.shape[0], n_tables * n_bits), dtype=np.float64)
-    for i in range(dim):  # ascending-element left fold
-        acc += Q[:, i, None] * P[None, :, i]
-    bits = acc > 0.0
+    bits = _dots_tiled(Q, planes.reshape(n_tables * n_bits, dim).T) > 0.0
     weights = 1 << np.arange(n_bits, dtype=np.int64)
     return (bits.reshape(len(Q), n_tables, n_bits) * weights[None, None, :]).sum(
         axis=2
@@ -130,36 +133,40 @@ def _norm_fold(M: np.ndarray) -> np.ndarray:
 
 
 def _dots_tiled(Qc: np.ndarray, VT: np.ndarray) -> np.ndarray:
-    """(q_chunk x n) inner products as the element-ascending left fold, over
-    corpus-column tiles (the `_sqeuclidean_bucket_scorer` tiling: each
-    (q_chunk x tile) temporary stays cache-resident; tiling partitions
-    columns, never the fold order, so each scalar accumulates ascending from
-    0.0 — bit-identical to `vec_inner_product`)."""
-    d, n = VT.shape
-    sc = np.empty((Qc.shape[0], n), dtype=np.float64)
-    for t0 in range(0, n, 4096):
-        t1 = min(t0 + 4096, n)
-        blk = np.zeros((Qc.shape[0], t1 - t0), dtype=np.float64)
-        for el in range(d):  # ascending-element left fold
-            blk += Qc[:, el, None] * VT[el, t0:t1][None, :]
-        sc[:, t0:t1] = blk
-    return sc
+    """(q_chunk x n) inner products as the element-ascending left fold
+    (`topk._tiled_fold`) — bit-identical to `vec_inner_product`."""
+    return _tiled_fold(Qc, VT, np.multiply)
 
 
-def _sqdiff_tiled(Qc: np.ndarray, VT: np.ndarray) -> np.ndarray:
-    """(q_chunk x n) squared-euclidean distances, element-ascending left fold
-    over column tiles — bit-identical to `vec_sqeuclidean` (the same recipe
-    as ann._sqeuclidean_bucket_scorer)."""
-    d, n = VT.shape
-    sc = np.empty((Qc.shape[0], n), dtype=np.float64)
-    for t0 in range(0, n, 4096):
-        t1 = min(t0 + 4096, n)
-        blk = np.zeros((Qc.shape[0], t1 - t0), dtype=np.float64)
-        for el in range(d):  # ascending-element left fold
-            diff = Qc[:, el, None] - VT[el, t0:t1][None, :]
-            blk += diff * diff
-        sc[:, t0:t1] = blk
-    return sc
+def _cosine_scorer(Q, qsel, _key, V, _extra):
+    """Cosine distance with the element-ascending folds (bit-identical to
+    `vec_cosine_distance_prenorm` over `vec_norm`s) plus the null mask of
+    zero-norm pairs, where the expression path's nullif yields a NULL
+    dist."""
+    VT = np.ascontiguousarray(V.T)
+    cn = _norm_fold(V)
+
+    def chunk(c0, c1):
+        Qc = Q[qsel[c0:c1]]
+        denom = _norm_fold(Qc)[:, None] * cn[None, :]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return 1.0 - _dots_tiled(Qc, VT) / denom, denom == 0.0
+
+    return chunk
+
+
+def _neg_dot_scorer(Q, qsel, _key, V, _extra):
+    """Negated inner products (larger = better, so smaller-is-better after
+    negation; the kernel emits them back with ``sign=-1``)."""
+    VT = np.ascontiguousarray(V.T)
+    return lambda c0, c1: -_dots_tiled(Q[qsel[c0:c1]], VT)
+
+
+_ARROW_SCORERS = {
+    "cosine": _cosine_scorer,
+    "sqeuclidean": _sqeuclidean_bucket_scorer,
+    "inner_product": _neg_dot_scorer,
+}
 
 
 def _tag_buckets(
@@ -363,9 +370,7 @@ class LSHIndex:
             corpus = corpus.filter(predicate)
         T, B = self.n_tables, self.n_bits
         m = min(multiprobe, B)
-        if kernel == "arrow" and self.metric in (
-            "cosine", "sqeuclidean", "inner_product"
-        ):
+        if kernel == "arrow" and self.metric in _ARROW_SCORERS:
             return self._search_arrow(corpus, queries, k, m)
         dim = self.planes.shape[2]
 
@@ -457,163 +462,51 @@ class LSHIndex:
         self, corpus: DataFrame, queries: DataFrame, k: int, m: int
     ) -> DataFrame:
         """Arrow-batched LSH search (guide §4.2: distribution/shuffles in
-        Spark, batch math in numpy inside the boundary).
+        Spark, batch math in numpy inside the boundary) — `scan_topk` with
+        one candidate-group column per table.
 
-        Query side: bounded collect, buckets (+ the first-``m`` multiprobe
-        bit flips) computed driver-side with the same element-ascending dot
-        fold as the tagging expression (`_query_buckets_fold` — bit-identical
-        signs), broadcast as (qids, Q, query norms, per-table bucket->query
-        maps). Corpus side: ONE pass, no explode — the kernel groups each
-        Arrow batch by every table's stored bucket column, scores each
-        probed (table, bucket) group as a (queries x rows) matrix with the
+        Query side: buckets (+ the first-``m`` multiprobe bit flips)
+        computed driver-side with the same element-ascending dot fold as
+        the tagging expression (`_query_buckets_fold` — bit-identical
+        signs), one bucket -> query map per table. Corpus side: ONE pass, no
+        explode — the kernel groups each Arrow batch by every table's stored
+        bucket column and scores each probed (table, bucket) group with the
         element-ascending folds (bit-identical doubles to the expression
         path; fold order is batch-shape-invariant, so a pair matched by two
         tables scores identically and `topk_agg(dedup=True)`'s
-        array_distinct collapses it, exactly as on the expression path), and
-        emits the exact per-group top-k SET under the (dist, neighbor_id)
-        tie-break (`_topk_set_mask` over id-ascending columns) — a pair in
-        the global top-k beats < k pairs globally, hence < k within any of
-        its groups, so per-group partials lose nothing. Zero-norm rows
-        (cosine): the expression path's nullif yields a NULL dist; the
-        kernel emits every such candidate pair with a NULL dist (never
-        top-k-cut, so the global merge sees the identical relation
-        regardless of how nulls order)."""
-        from .topk import (
-            MAX_BROADCAST_QUERIES,
-            _arrow_vectors,
-            _topk_set_mask,
-        )
+        array_distinct collapses it, exactly as on the expression path).
+        Zero-norm rows (cosine): the expression path's nullif yields a NULL
+        dist; the kernel emits every such candidate pair with a NULL dist."""
+        planes, T = self.planes, self.n_tables
 
-        spark = corpus.sparkSession
-        T = self.n_tables
-        metric = self.metric
-        q_rows = (
-            queries.select("query_id", "q_vec")
-            .limit(MAX_BROADCAST_QUERIES + 1)
-            .collect()
-        )
-        if len(q_rows) > MAX_BROADCAST_QUERIES:
-            raise ValueError(
-                f"LSHIndex.search collects the query matrix; got "
-                f"> {MAX_BROADCAST_QUERIES} queries — shard the batch upstream"
-            )
-        if not q_rows:
-            return spark.createDataFrame(
-                [], "query_id bigint, neighbor_id bigint, rank int, dist double"
-            )
-        qids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-        Q = np.array([list(r["q_vec"]) for r in q_rows], dtype=np.float64)
-        qb = _query_buckets_fold(Q, self.planes)
-        maps: list[dict[int, np.ndarray]] = []
-        for t in range(T):
-            mp: dict[int, list[int]] = {}
-            for qi in range(len(qids)):
-                b = int(qb[qi, t])
-                mp.setdefault(b, []).append(qi)
-                for j in range(m):  # multiprobe: hamming-1 flips, first m bits
-                    mp.setdefault(b ^ (1 << j), []).append(qi)
-            maps.append({b: np.array(v, dtype=np.int64) for b, v in mp.items()})
-        qn = _norm_fold(Q) if metric == "cosine" else None
-        bc = spark.sparkContext.broadcast((qids, Q, qn, maps))
-        vec_col = self.vec_col
-        pruned = corpus.select(
-            F.col(self.id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_v"),
-            *[F.col(f"bucket_{t}").alias(f"_b{t}") for t in range(T)],
-        )
+        def groups(qids, Q):
+            qb = _query_buckets_fold(Q, planes)
+            maps = {}
+            for t in range(T):
+                mp: dict[int, list[int]] = {}
+                for qi in range(len(qids)):
+                    b = int(qb[qi, t])
+                    mp.setdefault(b, []).append(qi)
+                    for j in range(m):  # multiprobe: hamming-1 flips, first m bits
+                        mp.setdefault(b ^ (1 << j), []).append(qi)
+                maps[f"bucket_{t}"] = {
+                    b: np.array(v, dtype=np.int64) for b, v in mp.items()
+                }
+            return maps
 
-        def score(batches):
-            import pyarrow as pa
-
-            qids_, Q_, qn_, maps_ = bc.value
-            n_tables = len(maps_)
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                nids = (
-                    batch.column(batch.schema.get_field_index("neighbor_id"))
-                    .to_numpy(zero_copy_only=False)
-                    .astype(np.int64)
-                )
-                mat = _arrow_vectors(batch, "_v")
-                cn = _norm_fold(mat) if metric == "cosine" else None
-                for t in range(n_tables):
-                    mp = maps_[t]
-                    pids = (
-                        batch.column(batch.schema.get_field_index(f"_b{t}"))
-                        .to_numpy(zero_copy_only=False)
-                        .astype(np.int64)
-                    )
-                    g_order = np.argsort(pids, kind="stable")
-                    g_pids = pids[g_order]
-                    bounds = np.flatnonzero(
-                        np.r_[True, g_pids[1:] != g_pids[:-1], True]
-                    )
-                    for s0, s1 in zip(bounds[:-1], bounds[1:]):
-                        qsel = mp.get(int(g_pids[s0]))
-                        if qsel is None or len(qsel) == 0:
-                            continue
-                        sel = g_order[s0:s1]
-                        ids = nids[sel]
-                        order = np.argsort(ids)  # ascending id => exact tie-break
-                        ids = ids[order]
-                        VT = np.ascontiguousarray(mat[sel][order].T)
-                        cnb = cn[sel][order] if cn is not None else None
-                        n = len(ids)
-                        kk = min(k, n)
-                        out_q: list[np.ndarray] = []
-                        out_n: list[np.ndarray] = []
-                        out_d: list[np.ndarray] = []
-                        out_z: list[np.ndarray] = []
-                        for c0 in range(0, len(qsel), 256):  # bound (q x n)
-                            c1 = min(c0 + 256, len(qsel))
-                            qs = qsel[c0:c1]
-                            Qc = Q_[qs]
-                            if metric == "cosine":
-                                dots = _dots_tiled(Qc, VT)
-                                denom = qn_[qs][:, None] * cnb[None, :]
-                                zero = denom == 0.0
-                                with np.errstate(
-                                    divide="ignore", invalid="ignore"
-                                ):
-                                    sc = 1.0 - dots / denom
-                                dsel = np.where(zero, np.inf, sc)
-                                mask = _topk_set_mask(dsel, kk) | zero
-                            elif metric == "sqeuclidean":
-                                sc = _sqdiff_tiled(Qc, VT)
-                                zero = None
-                                mask = _topk_set_mask(sc, kk)
-                            else:  # inner_product: larger = better
-                                sc = _dots_tiled(Qc, VT)
-                                zero = None
-                                mask = _topk_set_mask(-sc, kk)
-                            rows_i, cols = np.nonzero(mask)
-                            out_q.append(qids_[qs[rows_i]])
-                            out_n.append(ids[cols])
-                            out_d.append(sc[rows_i, cols])
-                            out_z.append(
-                                zero[rows_i, cols]
-                                if zero is not None
-                                else np.zeros(len(rows_i), dtype=bool)
-                            )
-                        zmask = np.concatenate(out_z)
-                        yield pa.RecordBatch.from_arrays(
-                            [
-                                pa.array(np.concatenate(out_q), type=pa.int64()),
-                                pa.array(np.concatenate(out_n), type=pa.int64()),
-                                pa.array(
-                                    np.concatenate(out_d),
-                                    type=pa.float64(),
-                                    mask=zmask if zmask.any() else None,
-                                ),
-                            ],
-                            names=["query_id", "neighbor_id", "dist"],
-                        )
-
-        pairs = pruned.mapInArrow(
-            score, "query_id long, neighbor_id long, dist double"
+        ip = self.metric == "inner_product"
+        pairs = scan_topk(
+            queries,
+            corpus,
+            "LSHIndex.search",
+            _ARROW_SCORERS[self.metric],
+            k,
+            id_col=self.id_col,
+            data_col=self.vec_col,
+            groups=groups,
+            sign=-1.0 if ip else 1.0,
         )
-        return topk_agg(pairs, k, asc=(metric != "inner_product"), dedup=True)
+        return topk_agg(pairs, k, asc=not ip, dedup=True)
 
     def unpersist(self) -> None:
         self.tagged.unpersist()

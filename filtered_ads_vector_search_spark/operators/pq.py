@@ -40,10 +40,11 @@ import os
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
+from .topk import topk_agg
 
 __all__ = [
     "fixed_codebooks",
@@ -779,8 +780,8 @@ def pq_adc_search(
     Plan shape: the query side carries its LUT (m × n_codes doubles, computed
     once per query row) and is broadcast; the coded corpus only streams; the
     per-row distance is an m-step fold of two array lookups; per-query top-k
-    goes through the rank window so WindowGroupLimit applies partial top-k
-    before the exchange (same shape as topk.knn_window, EXPLAIN.md)."""
+    goes through topk_agg's rank window so WindowGroupLimit applies partial
+    top-k before the exchange (same shape as topk.knn_window, EXPLAIN.md)."""
     m, n_codes, sd = _validate(codebooks)
     cb = _cb_spark_literal(codebooks)
     # same let-bound zip_with shape as _encode_body_sql (bit-identical fold)
@@ -797,9 +798,4 @@ def pq_adc_search(
         f"aggregate(sequence(0, {m - 1}), 0.0D, (acc, j) -> acc + lut[j][`{codes_col}`[j]])"
     )
     pairs = F.broadcast(q).crossJoin(coded_corpus).withColumn("dist", dist)
-    w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("neighbor_id").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "dist")
-    )
+    return topk_agg(pairs, k)

@@ -39,17 +39,10 @@ fold to last-ulps, so any gap wider than ~1e-9 relative is safe.
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .topk import (
-    MAX_BROADCAST_QUERIES,
-    Metric,
-    _arrow_vectors,
-    _np_distances,
-    distance_col,
-)
+from .topk import Metric, _metric_scorer, distance_col, scan_topk
 
 __all__ = ["range_window", "range_scalable", "range_count"]
 
@@ -96,67 +89,28 @@ def range_scalable(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Scale-out exact range search: broadcast query matrix, Arrow-batched
-    distance matrix per corpus partition, emit rows under the radius.
+    distance matrix per corpus batch, emit rows under the radius —
+    `scan_topk` in radius mode with no candidate groups.
 
     Unlike knn_scalable there is NO merge stage: a radius match is decided
     entirely within the partition that holds the corpus row, so the kernel
     output is the final relation (embarrassingly parallel end to end). The
     query side must be driver-broadcastable (same cap + rationale as
     knn_scalable; route corpus-sized query sets through the bucketed
-    IVF tier or a blockwise join).
+    IVF tier or a blockwise join). The scorer negates similarity metrics
+    so smaller-is-better holds uniformly; ``sign`` flips the threshold and
+    the emitted dist back for inner_product.
     """
-    qrows = queries.select("query_id", "q_vec").limit(MAX_BROADCAST_QUERIES + 1).collect()
-    if len(qrows) > MAX_BROADCAST_QUERIES:
-        raise ValueError(
-            f"range_scalable broadcasts the query matrix via the driver; got "
-            f"> {MAX_BROADCAST_QUERIES} queries. Use IVFIndex.range_search "
-            f"over a bucketed layout for corpus-sized query sets."
-        )
-    if not qrows:
-        return queries.sparkSession.createDataFrame(
-            [], "query_id bigint, neighbor_id bigint, dist double"
-        )
-    q_ids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
-    q_mat = np.array([r["q_vec"] for r in qrows], dtype=np.float64)
-    asc = metric != "inner_product"
-    bc = queries.sparkSession.sparkContext.broadcast((q_ids, q_mat))
-
-    def local_range(batches):
-        import pyarrow as pa
-
-        q_ids, q_mat = bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            c_ids = (
-                batch.column(batch.schema.get_field_index(id_col))
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            c_mat = _arrow_vectors(batch, vec_col)
-            # _np_distances negates similarity metrics so smaller-is-better
-            # holds uniformly; undo the sign for the emitted dist column and
-            # flip the threshold accordingly.
-            dmat = _np_distances(metric, q_mat, c_mat)
-            if asc:
-                qi, ci = np.nonzero(dmat <= radius)
-                dvals = dmat[qi, ci]
-            else:
-                qi, ci = np.nonzero(-dmat >= radius)
-                dvals = -dmat[qi, ci]
-            if len(qi) == 0:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(q_ids[qi], type=pa.int64()),
-                    pa.array(c_ids[ci], type=pa.int64()),
-                    pa.array(dvals, type=pa.float64()),
-                ],
-                names=["query_id", "neighbor_id", "dist"],
-            )
-
-    return corpus.select(id_col, vec_col).mapInArrow(
-        local_range, schema="query_id bigint, neighbor_id bigint, dist double"
+    return scan_topk(
+        queries,
+        corpus,
+        "range_scalable",
+        _metric_scorer(metric),
+        0,  # unused in radius mode
+        id_col=id_col,
+        data_col=vec_col,
+        radius=radius,
+        sign=-1.0 if metric == "inner_product" else 1.0,
     )
 
 

@@ -12,11 +12,18 @@ Two physical forms, one logical semantics:
   predicate below the join. Used for oracle-checked correctness at test SF.
 
 * ``knn_scalable`` — the 100 TB form: broadcast the (small) query matrix into
-  an Arrow-batched ``mapInPandas`` over corpus partitions, compute a LOCAL
-  top-k per query per partition with NumPy argpartition, then merge partials
-  with a per-query global top-k. Shuffle volume is O(partitions × queries × k)
-  instead of O(|corpus| × |queries|) — partial-agg/final-agg shaped, no
-  crossJoin ever materialized.
+  an Arrow-batched ``mapInArrow`` over corpus partitions, compute a LOCAL
+  top-k SET per query per batch with the exact-tie-break mask
+  (``_topk_set_mask``), then merge partials with a per-query global top-k.
+  Shuffle volume is O(partitions × queries × k) instead of
+  O(|corpus| × |queries|) — partial-agg/final-agg shaped, no crossJoin ever
+  materialized.
+
+One Arrow scan-and-top-k kernel, one top-k merge: every Arrow search form
+(exact k-NN and range, IVF fold/BLAS/range, IVFPQ ADC, LSH, the blockwise
+and k-NN-graph cogroups) runs ``scan_topk`` / ``topk_group`` and supplies
+only its candidate groups and its scorer; every per-query top-k merge is
+``topk_agg``, whose one switch is whether candidates can repeat.
 
 Filter-before-top-k: both forms take the corpus AFTER predicate application;
 callers filter first (a post-filter would return <k rows and wrong recall —
@@ -28,10 +35,11 @@ reference's order-insensitive recall (utils_grid_search.py:82-84).
 
 from __future__ import annotations
 
+import functools
+import operator
 from typing import Literal
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -40,9 +48,10 @@ from .filters import is_query_col
 
 Metric = Literal["sqeuclidean", "inner_product", "cosine", "hamming"]
 
-# knn_scalable collects + broadcasts the query matrix; at 64 dims float64 this
-# cap is ~50 MB of driver memory — far above the reference's 1-10k query sets,
-# far below anything corpus-shaped.
+# The Arrow kernels collect + broadcast the query matrix (collect_queries);
+# at 64 dims float64 this cap is ~50 MB of driver memory — far above the
+# reference's 1-10k query sets, far below anything corpus-shaped. The one
+# query cap: ann.search_sharded shards batches past it.
 MAX_BROADCAST_QUERIES = 100_000
 
 __all__ = [
@@ -123,39 +132,45 @@ def knn_window(
         asc = True
     else:
         d, asc = distance_col(metric, F.col("q_vec"), F.col(vec_col))
-    order = [F.col("dist").asc(), F.col("neighbor_id").asc()] if asc else [
-        F.col("dist").desc(),
-        F.col("neighbor_id").asc(),
-    ]
     # Broadcast the QUERY side: the corpus is the big relation at scale, so
     # the nested-loop join must stream corpus partitions against a broadcast
     # query matrix (BuildLeft), never the reverse.
-    pairs = (
-        F.broadcast(q_side)
-        .crossJoin(c_side)
-        .withColumn("dist", d)
-        .select("query_id", "neighbor_id", "dist")
-    )
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "dist")
-    )
+    pairs = F.broadcast(q_side).crossJoin(c_side).withColumn("dist", d)
+    return topk_agg(pairs, k, asc=asc)
 
 
 def topk_agg(pairs: DataFrame, k: int, asc: bool = True, dedup: bool = False) -> DataFrame:
-    """Per-query top-k over a (query_id, neighbor_id, dist) relation as ONE
-    hash aggregation: collect -> sort -> (distinct) -> slice -> re-explode.
+    """The one per-query top-k merge: (query_id, neighbor_id, dist) ->
+    (query_id, neighbor_id, rank, dist) under the (dist asc|desc,
+    neighbor_id asc) tie-break. Its one switch is whether candidates can
+    repeat.
 
-    One shuffle (with map-side partial aggregation) versus the window form's
-    shuffle + sort; ``dedup=True`` drops duplicate candidates, relying on
-    duplicates being bit-identical (dist computed from identical inputs).
-    Per-query aggregation state is the candidate set for that query — the
-    same rows the window form would sort — so it is safe whenever the
-    upstream candidate generator bounds per-query candidates (top-k inputs
-    always should; an unbounded candidate set is the bug, not the agg).
-    Tie-break matches the window form: (dist asc|desc, neighbor_id asc)."""
+    ``dedup=False`` (IVF buckets, exact scans, blockwise and graph
+    partials: every pair arrives once) is the row_number window. Catalyst
+    turns the rank filter into WindowGroupLimit, which applies a PARTIAL
+    per-query top-k before the exchange — with no duplicates to eliminate
+    that beats an aggregation that must shuffle every candidate into
+    collect_list (measured ~20% on the IVF bench; the gap grows with
+    candidates/query at scale).
+
+    ``dedup=True`` (LSH tables and graph-search hops repeat candidates) is
+    ONE hash aggregation: collect -> sort -> distinct -> slice ->
+    re-explode. One shuffle (with map-side partial aggregation) versus a
+    distinct + window's two; it relies on duplicates being bit-identical
+    (dist computed from identical inputs). Per-query aggregation state is
+    the candidate set for that query — the same rows the window form would
+    sort — so it is safe whenever the upstream candidate generator bounds
+    per-query candidates (top-k inputs always should; an unbounded
+    candidate set is the bug, not the agg)."""
+    pairs = pairs.select("query_id", "neighbor_id", "dist")
+    if not dedup:
+        order = F.col("dist").asc() if asc else F.col("dist").desc()
+        w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id").asc())
+        return (
+            pairs.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "neighbor_id", "rank", "dist")
+        )
     skey = F.col("dist") if asc else -F.col("dist")
     s = pairs.select(
         "query_id",
@@ -163,9 +178,7 @@ def topk_agg(pairs: DataFrame, k: int, asc: bool = True, dedup: bool = False) ->
             skey.alias("o"), F.col("neighbor_id").alias("nid"), F.col("dist").alias("dist")
         ).alias("s"),
     )
-    arr = F.array_sort(F.collect_list("s"))
-    if dedup:
-        arr = F.array_distinct(arr)
+    arr = F.array_distinct(F.array_sort(F.collect_list("s")))
     top = s.groupBy("query_id").agg(F.slice(arr, 1, k).alias("arr"))
     return top.select("query_id", F.posexplode("arr").alias("pos", "s")).select(
         "query_id",
@@ -216,50 +229,13 @@ def _topk_set_mask(dmat: np.ndarray, kk: int) -> np.ndarray:
     return lt | take_eq
 
 
-# bound the (q_chunk x n) distance block a single kernel invocation holds
-# (mirrors ann._arrow_bucket_topk's 256-query chunking)
+# bound the (q_chunk x n) distance block a single scorer call holds
 _QUERY_CHUNK = 256
+# corpus-column tile width of the element folds: each (q_chunk x tile)
+# temporary is ~8 MB (cache-resident) instead of (q_chunk x |group|)
+_FOLD_TILE = 4096
 
-
-def _local_topk_tuples(
-    q_ids: np.ndarray,
-    q_mat: np.ndarray,
-    c_ids: np.ndarray,
-    c_mat: np.ndarray,
-    metric: Metric,
-    k: int,
-    sign: float,
-) -> pd.DataFrame:
-    """Local top-k partials for one corpus block: presort the block by
-    ascending neighbor_id (making column order the id tie-break), chunk the
-    query side to bound the distance block, and emit the exact top-k SET per
-    query via `_topk_set_mask`. Partial rows are NOT rank-ordered within a
-    query — the global per-query window merge re-sorts by (dist,
-    neighbor_id), so only the set membership and dist values matter here,
-    and those are identical to the window form's."""
-    order0 = np.argsort(c_ids)
-    c_ids = c_ids[order0]
-    c_mat = c_mat[order0]
-    kk = min(k, c_mat.shape[0])
-    frames = []
-    for c0 in range(0, len(q_ids), _QUERY_CHUNK):
-        c1 = min(c0 + _QUERY_CHUNK, len(q_ids))
-        dmat = _np_distances(metric, q_mat[c0:c1], c_mat)
-        rows, cols = np.nonzero(_topk_set_mask(dmat, kk))
-        frames.append(
-            pd.DataFrame(
-                {
-                    "query_id": q_ids[c0:c1][rows],
-                    "neighbor_id": c_ids[cols],
-                    "dist": sign * dmat[rows, cols],
-                }
-            )
-        )
-    if not frames:
-        return pd.DataFrame({"query_id": [], "neighbor_id": [], "dist": []}).astype(
-            {"query_id": "int64", "neighbor_id": "int64", "dist": "float64"}
-        )
-    return pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
+_PARTIAL_SCHEMA = "query_id long, neighbor_id long, dist double"
 
 
 def _arrow_vectors(batch, vec_col: str, dtype=np.float64) -> np.ndarray:
@@ -286,6 +262,334 @@ def _arrow_vectors(batch, vec_col: str, dtype=np.float64) -> np.ndarray:
     )
 
 
+def _arrow_ids(batch, col: str) -> np.ndarray:
+    """An Arrow integer column as int64."""
+    return batch.column(col).to_numpy(zero_copy_only=False).astype(np.int64)
+
+
+def _tiled_fold(A: np.ndarray, BT: np.ndarray, term) -> np.ndarray:
+    """(len(A) x n) element-ascending left fold of ``term(a_el, b_el)``
+    between the rows of ``A`` and the columns of ``BT`` (d x n,
+    pre-transposed so row ``el`` is contiguous): the same IEEE doubles as
+    the 0.0D-seeded ascending aggregate folds of the expression forms and
+    the DuckDB oracles. The fold runs over corpus-column TILES: at 5M-row
+    scale a per-element (rows x n) temporary generated TBs of allocation
+    traffic across the el-loop. Every cell still accumulates elements in
+    ascending order from 0.0 — tiling partitions columns, never the fold
+    order — so the doubles are identical to the untiled fold."""
+    d, n = BT.shape
+    out = np.empty((A.shape[0], n), dtype=np.float64)
+    for t0 in range(0, n, _FOLD_TILE):
+        t1 = min(t0 + _FOLD_TILE, n)
+        blk = np.zeros((A.shape[0], t1 - t0), dtype=np.float64)
+        for el in range(d):  # ascending-element left fold
+            blk += term(A[:, el, None], BT[el, t0:t1][None, :])
+        out[:, t0:t1] = blk
+    return out
+
+
+def _sqdiff(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    diff = a - b
+    return diff * diff
+
+
+def _sqeuclidean_fold(A: np.ndarray, BT: np.ndarray) -> np.ndarray:
+    """Squared-euclidean distances as the element-ascending (x-y)^2 fold —
+    bit-identical to ``vec_sqeuclidean``."""
+    return _tiled_fold(A, BT, _sqdiff)
+
+
+# --- scorers -----------------------------------------------------------------
+#
+#     scorer(Q, qsel, key, data, extra) -> chunk_fn
+#     chunk_fn(c0, c1) -> score matrix, or (score matrix, null mask)
+#
+# ``data`` is one group's rows, already sorted by ascending neighbor_id;
+# ``key`` is the group value (bucket id; None for the exact forms); rows of
+# the (c1-c0, len(data)) float64 matrix are queries ``Q[qsel[c0:c1]]``.
+# Scores are smaller-is-better; the optional boolean mask marks pairs that
+# are emitted as NULL dist (LSH cosine's zero-norm pairs).
+
+
+def _sqeuclidean_bucket_scorer(Q, qsel, _key, V, _extra):
+    """The element-ascending fold (`_sqeuclidean_fold`): bit-identical to
+    the expression forms."""
+    VT = np.ascontiguousarray(V.T)  # (d, n): row `el` is contiguous
+    return lambda c0, c1: _sqeuclidean_fold(Q[qsel[c0:c1]], VT)
+
+
+def _sqeuclidean_blas_scorer(Q, qsel, _key, V, _extra):
+    """||q||^2 - 2 q.v + ||v||^2 via one DGEMM — the stable expansion of
+    `_np_distances`, ~d times faster than the element fold at 64 dims. The
+    summation order differs from the fold, so doubles agree only to
+    last-ulps — this is the THROUGHPUT form (`arrow_score="blas"`, the
+    exact tiers), not the bit-identity form. The top-k SET and ranks still
+    match the expression path unless two rows land within ~1e-12 relative
+    of a tie — including EXACT-duplicate rows: DGEMM's internal blocking
+    can give identical input columns doubles one ulp apart across a block
+    boundary (observed with n=109 duplicates: two distinct values on the
+    plateau), so which duplicate id represents a plateau in the top-k set
+    may differ from the fold's lowest-id pick; the selected distance
+    MULTISET is unchanged (the rows are the same vector), which is what the
+    fuzz contract asserts. The oracle gate compares at 6-decimal rounding,
+    which both expansions satisfy. Unlike the fold (elementwise,
+    batch-shape-invariant), DGEMM tiling varies with the matrix shapes, so
+    blas distances can also differ at last-ulps across query-batch
+    compositions (e.g. sharded vs single-shot) — ranks and result sets are
+    unaffected away from exact ties."""
+    Vn = (V * V).sum(axis=1)
+
+    def chunk(c0, c1):
+        Qc = Q[qsel[c0:c1]]
+        return (Qc * Qc).sum(axis=1)[:, None] - 2.0 * (Qc @ V.T) + Vn[None, :]
+
+    return chunk
+
+
+def _metric_scorer(metric: Metric):
+    """The exact forms' scorer: `_np_distances` (similarities negated, so
+    smaller is better; callers emit with ``sign=-1`` for inner_product)."""
+    if metric == "sqeuclidean":
+        return _sqeuclidean_blas_scorer  # same expansion, norms hoisted
+
+    def scorer(Q, qsel, _key, C, _extra):
+        return lambda c0, c1: _np_distances(metric, Q[qsel[c0:c1]], C)
+
+    return scorer
+
+
+# --- the kernel --------------------------------------------------------------
+
+
+def collect_queries(queries: DataFrame, who: str) -> tuple[np.ndarray, np.ndarray]:
+    """The (query_id, q_vec) batch as driver arrays ``(qids, Q)`` — the
+    query side every Arrow kernel broadcasts, so it must be small by design
+    (the reference's query set is 1-10k rows). Collecting through
+    ``limit(cap + 1)`` bounds driver memory in the same single job (no
+    extra count scan), so a mis-routed corpus-sized relation raises instead
+    of exhausting the driver. A repeated query_id raises too: results are
+    keyed by query_id, so a repeat would emit each neighbor twice. An empty
+    batch returns empty arrays."""
+    rows = queries.select("query_id", "q_vec").limit(MAX_BROADCAST_QUERIES + 1).collect()
+    if len(rows) > MAX_BROADCAST_QUERIES:
+        raise ValueError(
+            f"{who} broadcasts the query matrix via the driver; got "
+            f"> {MAX_BROADCAST_QUERIES} queries. Shard the batch upstream "
+            f"(ann.search_sharded), or use knn_blockwise for corpus-sized "
+            f"query sets."
+        )
+    qids = np.array([r["query_id"] for r in rows], dtype=np.int64)
+    n_ids = len(np.unique(qids))
+    if n_ids != len(qids):
+        raise ValueError(
+            f"{who}: duplicate query_id rows in the query batch "
+            f"({len(qids)} rows, {n_ids} distinct ids)"
+        )
+    return qids, np.array([r["q_vec"] for r in rows], dtype=np.float64)
+
+
+def topk_group(
+    qids: np.ndarray,
+    Q: np.ndarray,
+    qsel: np.ndarray,
+    ids: np.ndarray,
+    data: np.ndarray,
+    scorer,
+    top: int,
+    radius: float | None = None,
+    sign: float = 1.0,
+    key=None,
+    extra: tuple = (),
+):
+    """One candidate group's partial rows as an Arrow batch (query_id,
+    neighbor_id, dist), or None when nothing is selected: queries
+    ``Q[qsel]`` against the group's rows ``data`` (ids ``ids``).
+
+    The group is pre-sorted by ascending neighbor_id, so column order IS
+    the id tie-break; queries are scored in 256-row chunks to bound the
+    (q x n) block. Top-k mode selects each query's exact top-``top`` SET
+    (`_topk_set_mask`: O(n) partition + lowest-id tie fill) instead of a
+    full stable argsort — the `topk_agg` merge re-ranks by (dist, id)
+    globally, so only the SET and its score values matter, and a pair in
+    the global top-k beats < k pairs globally, hence < k within any group.
+    The row-wise O(n log n) sort dominated the kernel at 5M x 10k queries.
+    Radius mode (``radius`` given) keeps every pair with
+    ``score <= sign * radius``: membership is a per-pair predicate, so the
+    emitted rows ARE the final relation. Null-masked pairs are never
+    top-k-cut: every one is emitted with a NULL dist, so the merge sees the
+    identical relation regardless of how nulls order. ``dist`` is emitted
+    as ``sign * score``: scorers negate similarities (inner_product) to
+    rank smaller-is-better, and ``sign=-1`` restores the form's
+    larger-is-better values exactly (negation is exact)."""
+    import pyarrow as pa
+
+    order = np.argsort(ids)  # ascending id => exact tie-break
+    ids = ids[order]
+    chunk_fn = scorer(Q, qsel, key, data[order], extra)
+    t = min(top, len(ids))
+    out_q, out_n, out_d, out_z = [], [], [], []
+    for c0 in range(0, len(qsel), _QUERY_CHUNK):
+        c1 = min(c0 + _QUERY_CHUNK, len(qsel))
+        sc = chunk_fn(c0, c1)
+        sc, null = sc if isinstance(sc, tuple) else (sc, None)
+        if radius is not None:
+            hit = sc <= sign * radius
+        elif null is None:
+            hit = _topk_set_mask(sc, t)
+        else:
+            hit = _topk_set_mask(np.where(null, np.inf, sc), t) | null
+        rows, cols = np.nonzero(hit)
+        out_q.append(qids[qsel[c0:c1][rows]])
+        out_n.append(ids[cols])
+        out_d.append(sign * sc[rows, cols])
+        if null is not None:
+            out_z.append(null[rows, cols])
+    dist = np.concatenate(out_d)
+    if len(dist) == 0:
+        return None
+    z = np.concatenate(out_z) if out_z else None
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(np.concatenate(out_q), type=pa.int64()),
+            pa.array(np.concatenate(out_n), type=pa.int64()),
+            pa.array(dist, type=pa.float64(), mask=z if z is not None and z.any() else None),
+        ],
+        names=["query_id", "neighbor_id", "dist"],
+    )
+
+
+def scan_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    who: str,
+    scorer,
+    top: int,
+    id_col: str,
+    data_col: str,
+    groups=None,
+    radius: float | None = None,
+    sign: float = 1.0,
+    data_dtype: str = "float64",
+    extra: tuple = (),
+) -> DataFrame:
+    """The one Arrow scan-and-top-k kernel: (query_id, neighbor_id, dist)
+    partial rows of ``queries`` against ``corpus``, for the `topk_agg`
+    merge (top-k mode) or as the final relation (radius mode).
+
+    The query batch is collected once (`collect_queries`) and broadcast
+    with the candidate groups; the corpus streams ONCE through
+    ``mapInArrow``, its vector (or code) column reshaped straight from the
+    Arrow values buffer (`_arrow_vectors`), and every candidate group runs
+    `topk_group` with ``scorer``. Forms differ only in those two inputs:
+
+    * ``groups=None`` — the exact forms: every query scores every row.
+    * ``groups(qids, Q) -> {column: {group value: query positions}}`` —
+      rows are grouped by each column's value and scored against that
+      value's queries (IVF/IVFPQ: ``partition_id`` -> probing queries;
+      LSH: one ``bucket_t`` column per table). The scan is STATICALLY
+      pruned to rows in some probed group (an ``IN`` filter pushed to the
+      scan — stronger than a join's dynamic pruning).
+    """
+    qids, Q = collect_queries(queries, who)
+    spark = corpus.sparkSession
+    if len(qids) == 0:  # expression-path contract: empty in, empty out
+        return spark.createDataFrame([], _PARTIAL_SCHEMA)
+    maps = groups(qids, Q) if groups is not None else {}
+    cols = list(maps)
+    if cols:
+        corpus = corpus.filter(
+            functools.reduce(
+                operator.or_,
+                [F.col(c).isin([int(b) for b in maps[c]]) for c in cols],
+            )
+        )
+    scan = corpus.select(
+        *cols, F.col(id_col).alias("neighbor_id"), F.col(data_col).alias("_data")
+    )
+    # Real broadcast (one copy per executor), not closure capture (one copy
+    # per task): at 10k queries x high dim the matrix is megabytes.
+    bc = spark.sparkContext.broadcast((qids, Q, [maps[c] for c in cols], extra))
+
+    def score(batches):
+        qids_, Q_, maps_, extra_ = bc.value
+        everyone = np.arange(len(qids_))
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            nids = _arrow_ids(batch, "neighbor_id")
+            mat = _arrow_vectors(batch, "_data", dtype=data_dtype)
+            if not maps_:
+                found = [(None, everyone, slice(None))]
+            else:
+                found = _batch_groups(batch, cols, maps_)
+            # yield per GROUP, not per input batch: each yielded batch
+            # becomes ONE Arrow IPC batch on the Python->JVM wire, and an
+            # unbucketed corpus relation can interleave hundreds of probed
+            # buckets inside one input batch — concatenating them produced
+            # single ~1 GB batches (queries x buckets x top rows) that
+            # exhausted Arrow's direct-memory pool at 5M x 10k queries. A
+            # per-group batch is bounded by queries_probing x top rows.
+            # (Measured alternative, rejected: compacting to top-`top` per
+            # (query, task) before emission cuts the wire volume ~3x under
+            # widened probing but runs ~40% SLOWER end to end — the
+            # task-end lexsort stalls the pipeline into the JVM partial
+            # WindowGroupLimit, which absorbs the per-group volume while
+            # the Python worker is still scoring.)
+            for key, qsel, sel in found:
+                out = topk_group(
+                    qids_, Q_, qsel, nids[sel], mat[sel], scorer, top,
+                    radius=radius, sign=sign, key=key, extra=extra_,
+                )
+                if out is not None:
+                    yield out
+
+    return scan.mapInArrow(score, _PARTIAL_SCHEMA)
+
+
+def _batch_groups(batch, cols: list[str], maps: list[dict]):
+    """(group value, query positions, row positions) for every probed group
+    of an Arrow batch, per group column. A stable sort keeps intra-group
+    row order (`topk_group` re-sorts by id anyway)."""
+    for col, mp in zip(cols, maps):
+        keys = _arrow_ids(batch, col)
+        g_order = np.argsort(keys, kind="stable")
+        g_keys = keys[g_order]
+        bounds = np.flatnonzero(np.r_[True, g_keys[1:] != g_keys[:-1], True])
+        for s0, s1 in zip(bounds[:-1], bounds[1:]):
+            key = int(g_keys[s0])
+            qsel = mp.get(key)
+            if qsel is not None and len(qsel):
+                yield key, qsel, g_order[s0:s1]
+
+
+def _cogroup_topk(qtbl, q_vec: str, ctbl, c_vec: str, scorer, top: int, sign: float = 1.0):
+    """`topk_group` over one cogrouped (query rows, corpus rows) pair — the
+    shape of the kernels whose query side is too large to broadcast
+    (knn_blockwise, the k-NN graph), so it arrives by shuffle. Vector
+    columns become the scoring matrices by flat-buffer reshape."""
+    import pyarrow as pa
+
+    out = None
+    if qtbl.num_rows and ctbl.num_rows:
+        qb = qtbl.combine_chunks().to_batches()[0]
+        cb = ctbl.combine_chunks().to_batches()[0]
+        out = topk_group(
+            _arrow_ids(qb, "query_id"),
+            _arrow_vectors(qb, q_vec),
+            np.arange(qb.num_rows),
+            _arrow_ids(cb, "neighbor_id"),
+            _arrow_vectors(cb, c_vec),
+            scorer,
+            top,
+            sign=sign,
+        )
+    if out is None:
+        return pa.schema(
+            [("query_id", pa.int64()), ("neighbor_id", pa.int64()), ("dist", pa.float64())]
+        ).empty_table()
+    return pa.Table.from_batches([out])
+
+
 def knn_scalable(
     queries: DataFrame,
     corpus: DataFrame,
@@ -295,81 +599,23 @@ def knn_scalable(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Scale-out exact top-k: broadcast query matrix, per-batch local top-k
-    (NumPy argpartition — reference: cpu_search utils_grid_search.py:919-928),
-    then global per-query merge of the k-sized partials.
+    SET (the reference's argpartition, cpu_search utils_grid_search.py:
+    919-928, plus the deterministic id tie-break), then the global
+    per-query merge of the k-sized partials — `scan_topk` with no
+    candidate groups.
 
     At 100 TB the corpus scan is embarrassingly parallel, nothing shuffles
     except batches×queries×k partial rows, and the final merge is a
-    per-query top-k over bounded partials.
-
-    The scan is ``mapInArrow``: vectors cross the JVM→Python boundary as
-    Arrow list buffers and become the (n, d) scoring matrix by a flat-buffer
-    reshape (`_arrow_vectors`) — no per-row Python list objects; selection is
-    the vectorized exact-tie-break mask (`_topk_set_mask`), the same kernel
-    discipline as ann._arrow_bucket_topk.
-
-    The QUERY side is collected to the driver and broadcast, so it must be
-    small by design (the reference's query set is 1-10k rows). Collecting
-    through limit(cap+1) bounds driver memory in the same single job — no
-    extra count scan — and a mis-routed corpus-sized DataFrame raises
-    instead of OOMing the driver; route huge query sets through
-    knn_blockwise instead.
+    per-query top-k over bounded partials. The query side is collected to
+    the driver (`collect_queries`: bounded, raises past the cap); route
+    corpus-sized query sets through knn_blockwise instead.
     """
-    qrows = queries.select("query_id", "q_vec").limit(MAX_BROADCAST_QUERIES + 1).collect()
-    if len(qrows) > MAX_BROADCAST_QUERIES:
-        raise ValueError(
-            f"knn_scalable broadcasts the query matrix via the driver; got "
-            f"> {MAX_BROADCAST_QUERIES} queries. Use knn_blockwise for "
-            f"corpus-sized query sets."
-        )
-    if not qrows:
-        return queries.sparkSession.createDataFrame(
-            [], "query_id bigint, neighbor_id bigint, rank int, dist double"
-        )
-    q_ids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
-    q_mat = np.array([r["q_vec"] for r in qrows], dtype=np.float64)
-    sign = -1.0 if metric == "inner_product" else 1.0
-    # Real broadcast (one copy per executor), not closure capture (one copy
-    # per task): at 10k queries x high dim the matrix is megabytes.
-    bc = queries.sparkSession.sparkContext.broadcast((q_ids, q_mat))
-
-    def local_topk(batches):
-        import pyarrow as pa
-
-        q_ids, q_mat = bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            c_ids = (
-                batch.column(batch.schema.get_field_index(id_col))
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            c_mat = _arrow_vectors(batch, vec_col)
-            # tie-aware k-smallest (mirrors the reference's argpartition at
-            # utils_grid_search.py:923-928, plus the deterministic id
-            # tie-break the merge stage relies on)
-            out = _local_topk_tuples(q_ids, q_mat, c_ids, c_mat, metric, k, sign)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out["query_id"].to_numpy(), type=pa.int64()),
-                    pa.array(out["neighbor_id"].to_numpy(), type=pa.int64()),
-                    pa.array(out["dist"].to_numpy(), type=pa.float64()),
-                ],
-                names=["query_id", "neighbor_id", "dist"],
-            )
-
-    partials = corpus.select(id_col, vec_col).mapInArrow(
-        local_topk, schema="query_id bigint, neighbor_id bigint, dist double"
+    ip = metric == "inner_product"
+    partials = scan_topk(
+        queries, corpus, "knn_scalable", _metric_scorer(metric), k,
+        id_col=id_col, data_col=vec_col, sign=-1.0 if ip else 1.0,
     )
-    asc = metric != "inner_product"
-    order = [F.col("dist").asc() if asc else F.col("dist").desc(), F.col("neighbor_id").asc()]
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "dist")
-    )
+    return topk_agg(partials, k, asc=not ip)
 
 
 def knn_blockwise(
@@ -386,8 +632,8 @@ def knn_blockwise(
     block-nested-loop kNN as a cogrouped Spark job.
 
     Each side is hashed into blocks; every (query_block, corpus_block) pair is
-    cogrouped and answered with a NumPy local top-k (same argpartition kernel
-    as knn_scalable); a per-query window merges the k-sized partials.
+    cogrouped and answered with the shared per-group routine (`topk_group`,
+    the same kernel as knn_scalable); `topk_agg` merges the k-sized partials.
 
     Shuffle volume: |queries| x n_corpus_blocks + |corpus| x n_query_blocks —
     the block counts trade replication against per-task matrix size. Use
@@ -395,7 +641,8 @@ def knn_blockwise(
     this when it doesn't (e.g. 10M+ queries).
     """
     spark = queries.sparkSession
-    sign = -1.0 if metric == "inner_product" else 1.0
+    ip = metric == "inner_product"
+    scorer = _metric_scorer(metric)
 
     qb = queries.select(
         "query_id",
@@ -416,27 +663,12 @@ def knn_blockwise(
         spark.range(n_query_blocks).select(F.col("id").cast("int").alias("qblock"))
     )
 
-    def block_topk(key, qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        if qpdf.empty or cpdf.empty:
-            return pd.DataFrame({"query_id": [], "neighbor_id": [], "dist": []}).astype(
-                {"query_id": "int64", "neighbor_id": "int64", "dist": "float64"}
-            )
-        q_ids = qpdf["query_id"].to_numpy(dtype=np.int64)
-        q_mat = np.vstack(qpdf["q_vec"].to_numpy()).astype(np.float64)
-        c_ids = cpdf["neighbor_id"].to_numpy(dtype=np.int64)
-        c_mat = np.vstack(cpdf["c_vec"].to_numpy()).astype(np.float64)
-        return _local_topk_tuples(q_ids, q_mat, c_ids, c_mat, metric, k, sign)
+    def block_topk(qtbl, ctbl):
+        return _cogroup_topk(qtbl, "q_vec", ctbl, "c_vec", scorer, k, -1.0 if ip else 1.0)
 
     partials = (
         qrep.groupBy("qblock", "cblock")
         .cogroup(crep.groupBy("qblock", "cblock"))
-        .applyInPandas(block_topk, schema="query_id bigint, neighbor_id bigint, dist double")
+        .applyInArrow(block_topk, schema=_PARTIAL_SCHEMA)
     )
-    asc = metric != "inner_product"
-    order = [F.col("dist").asc() if asc else F.col("dist").desc(), F.col("neighbor_id").asc()]
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "dist")
-    )
+    return topk_agg(partials, k, asc=not ip)

@@ -109,7 +109,7 @@ def main() -> None:
         "The engine's scale properties are plan properties. `tests/test_plan_properties.py`",
         "asserts the load-bearing ones; this document shows the actual plans.",
         "",
-        "Three engine-wide rules shape every plan below:",
+        "Four engine-wide rules shape every plan below:",
         "",
         "- **Parallelism comes from the data.** A scan runs one task per input split;",
         "  a shuffle runs `spark.sql.shuffle.partitions` tasks (AQE coalesces them).",
@@ -133,6 +133,13 @@ def main() -> None:
         "  planners memoize each predicate's sample estimate until `unpersist()`.",
         "  Planning a filtered search the index has seen before launches no job;",
         "  the `centroids` relation stays for the expression-path probe join.",
+        '- **One Arrow scan-and-top-k kernel, one top-k merge (`topk_agg`).** Every',
+        '  Arrow search form (exact k-NN and range, IVF fold/BLAS/range, IVFPQ ADC,',
+        '  LSH, the blockwise and k-NN-graph cogroups) runs `topk.scan_topk` or its',
+        '  per-group routine `topk_group` and supplies only its candidate groups',
+        '  and its scorer. Every per-query merge is `topk_agg`: the row_number',
+        '  window (partial `WindowGroupLimit` before the exchange) when candidates',
+        '  cannot repeat, one dedup aggregation when they can.',
         "",
     ]
     for title, df in dfs.items():

@@ -64,9 +64,7 @@ def main() -> None:
     print(f"kernel (scan+score+partials): {t_kernel:.2f}s  rows={n_cand}")
 
     t0 = time.time()
-    merged = idx._finish_from_candidates(
-        cand, q, idx.coded, K, RERANK, joined_vectors=False
-    )
+    merged = idx._finish_from_candidates(cand, q, idx.coded, K, RERANK)
     n_out = merged.count()
     t_merge = time.time() - t0
     print(f"merge+rerank (on recomputed kernel): {t_merge:.2f}s  rows={n_out}")

@@ -132,7 +132,7 @@ def test_range_scalable_rejects_corpus_sized_queries(spark, monkeypatch):
     import filtered_ads_vector_search_spark.operators.range_search as RS
 
     q, c = _split(spark)
-    monkeypatch.setattr(RS, "MAX_BROADCAST_QUERIES", 2)
+    monkeypatch.setattr(TK, "MAX_BROADCAST_QUERIES", 2)
     with pytest.raises(ValueError, match="broadcasts the query matrix"):
         RS.range_scalable(q, c, radius=RADIUS)
 

@@ -4,6 +4,7 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
+import pytest
 from pyspark.sql import functions as F
 
 from filtered_ads_vector_search_spark.operators import filters as FL
@@ -444,7 +445,7 @@ def test_probe_ranking_routes_to_distributed_job(spark, monkeypatch):
     # (min(len(Q), 4096) x n_cent x 8) was dead code below the centroid
     # threshold (worst case 327 MB < 2 GiB), silently removing the
     # large-batch escape hatch to the distributed job (round-8 ADVICE);
-    # with _SCORE_MAX_QUERIES = 100k the total form only fires past
+    # with MAX_BROADCAST_QUERIES = 100k the total form only fires past
     # ~26.8k queries x 10k centroids, where the single-threaded driver
     # fold costs tens of seconds and the knn_window job wins.
     assert A._PROBE_CHUNK_QUERIES == 4096
@@ -581,24 +582,115 @@ def test_centroid_matrix_equals_collected_relation_bit_for_bit(spark, tmp_path):
 
 
 def test_arrow_kernels_empty_queries_return_empty(spark):
-    """Both Arrow kernels honor the expression-path contract: an empty
-    query batch returns an empty result instead of crashing on the
-    driver-side collect."""
+    """Every Arrow kernel form honors the expression-path contract: an
+    empty query batch returns an empty result with the form's columns
+    instead of crashing on the driver-side collect."""
     from pyspark.sql import functions as F
 
     from filtered_ads_vector_search_spark.operators.ann import IVFIndex
     from filtered_ads_vector_search_spark.operators.ivfpq import IVFPQIndex
+    from filtered_ads_vector_search_spark.operators.lsh import LSHIndex
+
+    topk_cols = ["query_id", "neighbor_id", "rank", "dist"]
+
+    def assert_empty(df, cols=topk_cols):
+        assert df.count() == 0
+        assert df.columns == cols
 
     q, c = _split(spark)
     empty_q = q.filter(F.lit(False))
     ivf = IVFIndex.build_fixed(c, n_centroids=4)
     assert ivf.search(empty_q, k=5, nprobe=2, arrow_score=True).count() == 0
+    assert_empty(
+        ivf.range_search(empty_q, radius=10.0, nprobe=2, arrow_score=True),
+        ["query_id", "neighbor_id", "dist"],
+    )
     ivf.unpersist()
     pq = IVFPQIndex.build_fixed(c, n_centroids=4, m=4, n_codes=16)
     assert (
         pq.search(empty_q, k=5, nprobe=2, rerank=10, arrow_adc=True).count() == 0
     )
     pq.unpersist()
+    assert_empty(TK.knn_scalable(empty_q, c, k=5))
+    lsh = LSHIndex.build(c, n_bits=4, n_tables=2, seed=42)
+    assert_empty(lsh.search(empty_q, k=5, kernel="arrow"))
+    lsh.unpersist()
+
+
+def test_arrow_kernel_query_cap_bounds_the_collect(spark, monkeypatch):
+    """The IVF Arrow kernel collects the query batch through the shared
+    bounded collect: past the one query cap it raises instead of pulling a
+    corpus-sized frame onto the driver."""
+    q, c = _split(spark)
+    corpus_rows = c.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
+    )
+    rows = corpus_rows.limit(20).collect()
+    assert len(rows) == 20
+    twenty = spark.createDataFrame(rows, corpus_rows.schema)
+    ivf = IVFIndex.build_fixed(c, n_centroids=4)
+    monkeypatch.setattr(TK, "MAX_BROADCAST_QUERIES", 5)
+    try:
+        with pytest.raises(ValueError, match="broadcasts the query matrix"):
+            ivf.search(twenty, k=5, nprobe=2, arrow_score="blas")
+    finally:
+        ivf.unpersist()
+
+
+def _arrow_form(name, c):
+    """(search callable over a query frame, index to release) for each
+    Arrow kernel form."""
+    from filtered_ads_vector_search_spark.operators.ivfpq import IVFPQIndex
+    from filtered_ads_vector_search_spark.operators.lsh import LSHIndex
+    from filtered_ads_vector_search_spark.operators.range_search import (
+        range_scalable,
+    )
+
+    if name == "knn_scalable":
+        return (lambda q: TK.knn_scalable(q, c, k=5)), None
+    if name == "range_scalable":
+        return (lambda q: range_scalable(q, c, radius=10.0)), None
+    if name == "ivf_search":
+        idx = IVFIndex.build_fixed(c, n_centroids=4)
+        return (lambda q: idx.search(q, k=5, nprobe=2, arrow_score=True)), idx
+    if name == "ivf_range_search":
+        idx = IVFIndex.build_fixed(c, n_centroids=4)
+        return (
+            lambda q: idx.range_search(q, radius=10.0, nprobe=2, arrow_score=True)
+        ), idx
+    if name == "ivfpq_arrow_adc":
+        idx = IVFPQIndex.build_fixed(c, n_centroids=4, m=4, n_codes=16)
+        return (lambda q: idx.search(q, k=5, nprobe=2, arrow_adc=True)), idx
+    idx = LSHIndex.build(c, n_bits=4, n_tables=2, seed=42)
+    return (lambda q: idx.search(q, k=5, kernel="arrow")), idx
+
+
+
+@pytest.mark.parametrize(
+    "form",
+    [
+        "knn_scalable",
+        "range_scalable",
+        "ivf_search",
+        "ivf_range_search",
+        "ivfpq_arrow_adc",
+        "lsh_arrow",
+    ],
+)
+def test_arrow_forms_refuse_duplicate_query_ids(spark, form):
+    """One duplicate-query-id rule for every Arrow form: results are keyed
+    by query_id, so a batch repeating one would emit each neighbor twice —
+    the shared query collect refuses it instead."""
+    q, c = _split(spark)
+    rows = q.limit(3).collect()
+    dup = spark.createDataFrame(rows + rows[:1], q.schema)
+    search, idx = _arrow_form(form, c)
+    try:
+        with pytest.raises(ValueError, match="duplicate query_id"):
+            search(dup).collect()
+    finally:
+        if idx is not None:
+            idx.unpersist()
 
 
 def test_ivfpq_rerank_requires_vectors(spark):

@@ -39,7 +39,7 @@ def test_topk_agg_matches_window_form(spark):
     from pyspark.sql import Window
 
     for asc in (True, False):
-        got = _ids(TK.topk_agg(pairs, k=5, asc=asc))
+        got = _ids(TK.topk_agg(pairs, k=5, asc=asc, dedup=True))
         order = [F.col("dist").asc() if asc else F.col("dist").desc(), F.col("neighbor_id").asc()]
         w = Window.partitionBy("query_id").orderBy(*order)
         want = _ids(
