@@ -33,7 +33,7 @@ import time
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
@@ -196,9 +196,13 @@ def _write_sidecars(
     rows."""
     spark = relation.sparkSession
     stats = relation.groupBy(bucket_col).agg(F.count(F.lit(1)).alias("n_rows"))
-    stats.coalesce(1).write.mode("overwrite").parquet(f"{root}/stats")
+    # the row total rides the stats write (observe()), not a read-back
+    obs = Observation()
+    stats.observe(obs, F.sum("n_rows").alias("total")).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{root}/stats")
     if fraction is None:
-        total = sum(r["n_rows"] for r in spark.read.parquet(f"{root}/stats").collect())
+        total = obs.get["total"] or 0
         fraction = min(1.0, SEL_SAMPLE_ROWS / total) if total else 1.0
     keep = [c for c in relation.columns if c not in drop_cols]
     (

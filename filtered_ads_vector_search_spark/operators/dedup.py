@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import (
@@ -555,13 +555,16 @@ def duplicate_components(
     is ("A~B, B~C" must drop two of {A,B,C}, not one). Computed by min-label
     propagation: every vertex starts labeled with itself; each iteration
     takes the min over its own and its neighbors' labels; fixpoint = the
-    component minimum. Per iteration: one equi-join (labels onto edge
-    endpoints) + one map-combinable min-groupBy — no crossJoin, no driver
-    materialization; convergence is a count of changed labels. Iterations
-    are bounded by graph DIAMETER, and near-dup clusters are shallow (dup
-    clusters of real corpora are cliques-ish); for adversarial long chains
-    swap in large-star/small-star (alternating pointer doubling, O(log n)
-    rounds) — same per-round plan shape.
+    component minimum. Round 1 needs no labels yet (min over self and
+    neighbour ids: one groupBy of the symmetric edges); every later round is
+    one equi-join (labels onto edge endpoints) + one map-combinable
+    min-groupBy — no crossJoin, no collect. Each round is one
+    materialization, and its count of changed labels is observed in the
+    same pass, so convergence costs no extra job. Iterations are bounded by
+    graph DIAMETER (``max_iter`` rounds, round 1 included), and near-dup
+    clusters are shallow (dup clusters of real corpora are cliques-ish); for
+    adversarial long chains use `duplicate_components_star` (large-star/
+    small-star, O(log n) rounds).
 
     Only vertices that appear in >= 1 pair are returned; unpaired docs are
     their own (trivial) components and don't need rows at 100 TB scale.
@@ -572,34 +575,47 @@ def duplicate_components(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         ).distinct()
     )
-    # Each round's plan references the previous round's TWICE (join + union),
-    # so without truncation the logical tree doubles per round and analyzer
-    # time alone goes exponential (measured: unusable past ~6 rounds on a
-    # chain graph). Materializing each round replaces its plan with a leaf —
-    # the same discipline GraphFrames' connected components uses.
-    labels = materialize(
-        edges.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
-    )
+
+    def _round(labels: DataFrame | None) -> tuple[DataFrame, int]:
+        # (id, label, old): the min over self and neighbours next to the
+        # vertex's previous label. Each round is materialized (its plan
+        # would otherwise nest the previous round's twice, join + union, and
+        # analyzer time goes exponential in the round count — the same
+        # discipline GraphFrames' connected components uses); the changed
+        # count is observed on that materialization.
+        if labels is None:
+            step = (
+                edges.groupBy("src")
+                .agg(F.min("dst").alias("m"))
+                .select(
+                    F.col("src").alias("id"),
+                    F.least("m", "src").alias("label"),
+                    F.col("src").alias("old"),
+                )
+            )
+        else:
+            none = F.lit(None).cast(labels.schema["label"].dataType)
+            step = (
+                edges.join(labels, edges["dst"] == labels["id"])
+                .select(F.col("src").alias("id"), "label", none.alias("old"))
+                .unionAll(labels.select("id", "label", F.col("label").alias("old")))
+                .groupBy("id")
+                .agg(F.min("label").alias("label"), F.min("old").alias("old"))
+            )
+        obs = Observation()
+        out = materialize(
+            step.observe(
+                obs, F.count(F.when(F.col("label") != F.col("old"), 1)).alias("n")
+            ).select("id", "label")
+        )
+        return out, int(obs.get["n"])
+
+    labels = None
     for _ in range(max_iter):
-        neighbor_min = materialize(
-            edges.join(labels, edges["dst"] == labels["id"])
-            .select(F.col("src").alias("id"), "label")
-            .unionAll(labels)
-            .groupBy("id")
-            .agg(F.min("label").alias("label"))
-        )
-        # existence probe only: limit(1) is safe here BECAUSE both sides are
-        # eagerly materialized leaves (with lazy caches a limited job would
-        # materialize only some partitions and poison later rounds)
-        changed = (
-            neighbor_min.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        release(labels)
-        labels = neighbor_min
+        stale = labels
+        labels, changed = _round(labels)
+        if stale is not None:
+            release(stale)
         if changed == 0:
             break
     else:
@@ -608,7 +624,7 @@ def duplicate_components(
         # clusters are shallow (cliques-ish), so hitting this means either
         # an adversarial input (raise and re-run with the large-star/
         # small-star O(log n) variant) or max_iter set too low.
-        release(edges, labels)
+        release(*[d for d in (edges, labels) if d is not None])
         raise RuntimeError(
             f"duplicate_components did not converge within max_iter={max_iter} "
             "label-propagation rounds (graph diameter exceeds max_iter); "
@@ -650,8 +666,6 @@ def duplicate_components_star(
         # the round's edges: observe() computes the aggregate as a side
         # effect of the eager materialization (one job per round instead of
         # two — the checksum collect was pure fixed cost at any scale)
-        from pyspark.sql import Observation
-
         obs = Observation()
         out = materialize(
             e.observe(
@@ -958,8 +972,6 @@ def contamination_flags_bloom(
     # duplicate_components_star discipline). It is the relation the exact
     # join already broadcasts, so holding it is bounded by the same
     # assumption (eval corpora are small by definition).
-    from pyspark.sql import Observation
-
     e = (
         eval_docs.select(F.explode(word_shingles(F.col(text_col), n)).alias("sh"))
         .select(str_hash_col(F.col("sh")).alias("shh"))

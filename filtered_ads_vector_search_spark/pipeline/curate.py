@@ -14,7 +14,8 @@ Stage order (each one scale-shaped, see the operators' own docstrings):
 Outputs under ``out_dir``:
   * documents.parquet  — surviving (doc_id, text, n_tok) rows
   * packing.parquet    — (doc_id, shard/seq assignment) from pack_sequences
-  * metrics.json       — per-stage row counts (the curation funnel)
+  * metrics.json       — per-stage row counts (the curation funnel), each
+                         observed on the action that computes the stage
 
 Everything is deterministic (portable hashing, no rand()), so reruns write
 byte-stable metrics and the same surviving doc_id set.
@@ -24,7 +25,7 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text as T
@@ -59,9 +60,22 @@ def curate_corpus(
     stage keeping that many documents. Returns the metrics dict it also
     writes to ``out_dir/metrics.json``.
 
+    Each stage runs as one materialization (or write), and its row count is
+    an ``observe()`` on that same action, never a second count:
+    ``input_docs`` and ``after_quality_gate`` ride the PII-redaction
+    materialization, ``after_exact_dedup`` its own, ``after_near_dedup``,
+    ``after_decontaminate`` and ``after_dsir_select`` the one
+    materialization of the survivors (the DSIR branch first materializes
+    its pool, which carries the two before it), and ``packed_rows`` the
+    ``packing.parquet`` write.
+
     ``stage_seconds`` (optional): a caller-supplied dict that receives the
     wall seconds of each funnel stage (keyed like the metrics rows, plus
-    ``write_artifacts``). Kept OUT of metrics.json so reruns stay
+    ``pii_redaction``, ``persist_survivors`` and ``write_artifacts``). A
+    count key whose value rides a later action is lapped just before that
+    action, so its jobs land in the stage that runs it (``pii_redaction``,
+    ``after_dsir_select``, ``persist_survivors`` or ``write_artifacts``).
+    Kept OUT of metrics.json so reruns stay
     byte-stable — timings are the bench harness's concern (the reference
     analog: ``all_runs_summary-2.csv`` ``run_time_minutes``).
 
@@ -73,7 +87,7 @@ def curate_corpus(
     """
     import time as _time
 
-    metrics: dict[str, int] = {}
+    counts: dict[str, Observation] = {}
     _t = {"mark": _time.time()}
 
     def _lap(key: str) -> None:
@@ -81,29 +95,41 @@ def curate_corpus(
         if stage_seconds is not None:
             stage_seconds[key] = round(now - _t["mark"], 3)
         _t["mark"] = now
+
+    def _observe(df: DataFrame, **keyed: Column) -> DataFrame:
+        # the funnel counts ride the action that computes the stage anyway;
+        # each observed node must appear once in that action's plan (a node
+        # read twice may run once, under exchange reuse, or not at all)
+        obs = Observation()
+        counts.update(dict.fromkeys(keyed, obs))
+        return df.observe(obs, *[c.alias(k) for k, c in keyed.items()])
+
+    n_rows = F.count(F.lit(1))
     base = docs.select(
         "doc_id",
         "text",
         T.token_count(F.col("text")).alias("n_tok"),
         T.quality_score(F.col("text")).alias("q"),
     )
-    metrics["input_docs"] = base.count()
-    _lap("input_docs")
 
-    # 1. quality gate: cheap scalar thresholds + the Gopher rule battery
-    gated = base.filter(
-        (F.col("n_tok") >= min_tokens) & (F.col("q") >= min_quality)
-    )
+    # 1. quality gate: cheap scalar thresholds + the Gopher rule battery.
+    # The rules run on the scalar survivors and come back by a left join,
+    # so the observed relation still holds every input row once.
+    keep = (F.col("n_tok") >= min_tokens) & (F.col("q") >= min_quality)
     if gopher:
-        gopher_keep = QL.gopher_rules(gated.select("doc_id", "text")).filter(
-            F.col("keep")
-        ).select("doc_id")
-        gated = gated.join(gopher_keep, "doc_id")
-    metrics["after_quality_gate"] = gated.count()
+        rules = QL.gopher_rules(base.filter(keep).select("doc_id", "text"))
+        base = base.join(
+            rules.select("doc_id", F.col("keep").alias("_gopher")), "doc_id", "left"
+        )
+        keep = keep & F.coalesce(F.col("_gopher"), F.lit(False))
+    gated = _observe(
+        base, input_docs=n_rows, after_quality_gate=F.count(F.when(keep, 1))
+    ).filter(keep)
+    _lap("input_docs")
     _lap("after_quality_gate")
 
     # 2. PII redaction (rewrites text; length/token stats recomputed).
-    # Materialized: every later stage count + both writes would otherwise
+    # Materialized: every later stage and both writes would otherwise
     # replay the gate + Gopher + regex chain from the scan.
     red = materialize(
         gated.select(
@@ -117,8 +143,9 @@ def curate_corpus(
     canon = red.groupBy(F.md5("text").alias("_h")).agg(
         F.min("doc_id").alias("doc_id")
     )
-    exact = materialize(red.join(canon.select("doc_id"), "doc_id"))
-    metrics["after_exact_dedup"] = exact.count()
+    exact = materialize(
+        _observe(red.join(canon.select("doc_id"), "doc_id"), after_exact_dedup=n_rows)
+    )
     _lap("after_exact_dedup")
 
     # 4. near-dup: banded MinHash pairs -> components -> keep canonical
@@ -127,47 +154,53 @@ def curate_corpus(
     dropped = comp.filter(F.col("doc_id") != F.col("component_id")).select(
         "doc_id"
     )
-    neardup = exact.join(dropped, "doc_id", "left_anti")
-    metrics["after_near_dedup"] = neardup.count()
+    neardup = _observe(
+        exact.join(dropped, "doc_id", "left_anti"), after_near_dedup=n_rows
+    )
     _lap("after_near_dedup")
 
-    # 5. decontamination against the eval slice (optional)
+    # 5. decontamination against the eval slice (optional). The flags are
+    # a per-document property, so they come from `exact` rather than from
+    # `neardup`, which the plan then reads once.
+    survivors = neardup
     if eval_docs is not None:
-        survivors = DD.decontaminate(neardup, eval_docs, n=decontam_ngram)
-    else:
-        survivors = neardup
-    metrics["after_decontaminate"] = survivors.count()
+        flagged = DD.contamination_flags(exact, eval_docs, n=decontam_ngram)
+        survivors = survivors.join(flagged.select("doc_id"), "doc_id", "left_anti")
+    survivors = _observe(survivors, after_decontaminate=n_rows)
     _lap("after_decontaminate")
 
     # 5b. DSIR importance-resampling selection toward the target slice
-    # (optional; seeded Gumbel-top-k, deterministic)
+    # (optional; seeded Gumbel-top-k, deterministic). The selection reads
+    # its pool more than once, so the pool is materialized first.
     if dsir_keep is not None:
         from ..operators.lmscore import dsir_resample
 
-        with_lang = survivors.join(docs.select("doc_id", "lang"), "doc_id")
+        pool = materialize(survivors)
+        with_lang = pool.join(docs.select("doc_id", "lang"), "doc_id")
         keep_ids = dsir_resample(
             with_lang, n_keep=dsir_keep, target_lang=dsir_target_lang
         ).select("doc_id")
-        survivors = survivors.join(keep_ids, "doc_id")
-        metrics["after_dsir_select"] = survivors.count()
+        survivors = _observe(pool.join(keep_ids, "doc_id"), after_dsir_select=n_rows)
         _lap("after_dsir_select")
 
-    # materialized on its own stage key so packed_rows (and the writes)
-    # time only their own work
+    # the one materialization of the survivors: every count observed since
+    # exact dedup (or since the DSIR pool) lands here
     kept = materialize(survivors)
     _lap("persist_survivors")
 
-    # 6. token-budget packing of the survivors
-    packing = pack_sequences(
-        kept.select("doc_id", "n_tok"), "n_tok", budget=pack_budget
+    # 6. token-budget packing of the survivors; its row count rides the
+    # packing write
+    packing = _observe(
+        pack_sequences(kept.select("doc_id", "n_tok"), "n_tok", budget=pack_budget),
+        packed_rows=n_rows,
     )
-    metrics["packed_rows"] = packing.count()
     _lap("packed_rows")
 
     kept.select("doc_id", "text", "n_tok").write.mode("overwrite").parquet(
         f"{out_dir}/documents.parquet"
     )
     packing.write.mode("overwrite").parquet(f"{out_dir}/packing.parquet")
+    metrics = {k: int(obs.get[k]) for k, obs in counts.items()}
     # metrics go through the Hadoop FS (not local open()) so hdfs://, s3a://,
     # file:// out_dirs all work — same discipline as layout compaction
     _write_text(
@@ -175,9 +208,9 @@ def curate_corpus(
     )
     _lap("write_artifacts")
     # everything the funnel materialized, the operators' own included:
-    # pairs reads minhash_pairs' signature table, survivors the component
-    # labels and decontaminate's eval shingle set
-    release(red, exact, pairs, survivors, kept)
+    # pairs reads minhash_pairs' signature table, comp the component labels,
+    # survivors the DSIR pool
+    release(red, exact, pairs, comp, survivors, kept)
     return metrics
 
 

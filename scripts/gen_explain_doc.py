@@ -126,6 +126,9 @@ def main() -> None:
         "  superseded rounds. The index artifacts (`IVFIndex.assigned`,",
         "  `IVFPQIndex.coded`, `LSHIndex.tagged`, the selectivity samples) stay",
         "  `persist()`ed and each index's `unpersist()` frees them.",
+        "  A funnel count is an `observe()` on a materialization (or write) the",
+        "  next stage reads, never a second action; the observed node appears once",
+        "  in that plan (a node read twice may run once, or not at all).",
         "- **An index holds one driver-side centroid matrix; selectivity is",
         "  estimated once per (index, predicate).** The Arrow kernels rank probes",
         "  over `centroid_matrix(index)` (the float32 values the `centroids`",

@@ -9,6 +9,22 @@ from filtered_ads_vector_search_spark.pipeline.curate import curate_corpus
 
 from tests.conftest import SF_TEST
 
+# The funnels curate_corpus wrote for the two inputs below when every stage
+# was counted by its own action; observed counts must reproduce them.
+FUNNEL_WITH_EVAL = {
+    "input_docs": 451, "after_quality_gate": 221, "after_exact_dedup": 221,
+    "after_near_dedup": 213, "after_decontaminate": 210, "packed_rows": 210,
+}
+FUNNEL_WITH_DSIR = {
+    "input_docs": 500, "after_quality_gate": 243, "after_exact_dedup": 243,
+    "after_near_dedup": 232, "after_decontaminate": 232, "after_dsir_select": 50,
+    "packed_rows": 50,
+}
+# Spark jobs of one ungated pass over the SF_TEST documents when each stage
+# was counted and then computed again, and each components round ran a
+# separate changed-label query.
+COUNT_THEN_COMPUTE_JOBS = 61
+
 
 def test_curate_corpus_funnel_and_determinism(spark, tmp_path):
     docs = spark.read.parquet(f"{SF_TEST}/documents.parquet")
@@ -26,6 +42,9 @@ def test_curate_corpus_funnel_and_determinism(spark, tmp_path):
     assert vals == sorted(vals, reverse=True) and vals[-1] > 0
     assert m1["packed_rows"] == m1["after_decontaminate"]
     assert json.load(open(f"{out1}/metrics.json")) == m1
+    assert m1 == FUNNEL_WITH_EVAL
+    with open(f"{out1}/metrics.json") as fh:
+        assert fh.read() == json.dumps(FUNNEL_WITH_EVAL, indent=1, sort_keys=True)
 
     surv1 = {r.doc_id for r in spark.read.parquet(f"{out1}/documents.parquet").collect()}
     out2 = str(tmp_path / "run2")
@@ -38,7 +57,7 @@ def test_curate_with_dsir_selection(spark, tmp_path):
     docs = spark.read.parquet(f"{SF_TEST}/documents.parquet")
     out = str(tmp_path / "dsir_run")
     m = curate_corpus(spark, docs, out, dsir_keep=50, dsir_target_lang="en")
-    assert m["after_dsir_select"] == 50
+    assert m == FUNNEL_WITH_DSIR
     assert m["packed_rows"] == 50
     surv = spark.read.parquet(f"{out}/documents.parquet")
     assert surv.count() == 50
@@ -59,3 +78,23 @@ def test_curate_corpus_releases_what_it_materialized(spark, tmp_path):
     curate_corpus(spark, docs, str(tmp_path / "out"), gopher=False, min_quality=0)
     assert set(sc._jsc.getPersistentRDDs().keySet()) - rdds == set()
     assert cache.cachedData().size() == cached
+
+
+def test_curate_corpus_launches_at_most_half_the_count_then_compute_jobs(
+    spark, tmp_path
+):
+    """Every funnel count is an observe() on the materialization or write the
+    next stage reads anyway, and each components round is one
+    materialization with its changed-label count observed in the same pass:
+    one pass needs at most half the jobs of counting every stage and then
+    computing it again."""
+    sc = spark.sparkContext
+    docs = spark.read.parquet(f"{SF_TEST}/documents.parquet")
+    group = "curate-job-bound"
+    sc.setJobGroup(group, "one curate_corpus pass")
+    try:
+        curate_corpus(spark, docs, str(tmp_path / "out"), gopher=False, min_quality=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= COUNT_THEN_COMPUTE_JOBS // 2, n_jobs
