@@ -33,11 +33,11 @@ import time
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
-from ..materialize import materialize, release
+from . import index_layout as layout
 from .topk import (
     MAX_BROADCAST_QUERIES,
     Metric,
@@ -160,206 +160,6 @@ def _probed_scan(
 
 __all__ = ["IVFIndex"]
 
-# --- layout sidecars: per-bucket stats + bounded selectivity sample ---------
-#
-# A written layout carries two tiny relations next to the bucketed data:
-#   {root}/stats   (partition_id, n_rows)   per-bucket row counts
-#   {root}/sample  non-vector columns of a hash-gated ~SEL_SAMPLE_ROWS row
-#                  sample (gate fraction persisted in {root}/sample_meta)
-# so that search-time policies (adaptive_nprobe's predicate-selectivity
-# estimate) and maintenance (compaction bookkeeping) never have to scan the
-# full coded/assigned relation — at 100 TB the index data may only ever be
-# touched by the probe scan itself.
-
-SEL_SAMPLE_ROWS = 65_536
-_GATE_MOD = 1_000_000
-
-
-def _sample_gate(id_col: str, fraction: float):
-    """Deterministic hash gate: keep ~fraction of rows, stable under reruns
-    and repartitioning (same discipline as sampling.seeded_sample)."""
-    h = F.crc32(F.concat(F.col(id_col).cast("string"), F.lit("/sel")))
-    return (h % _GATE_MOD) < F.lit(int(round(fraction * _GATE_MOD)))
-
-
-def _write_sidecars(
-    root: str,
-    relation: DataFrame,
-    id_col: str,
-    drop_cols: tuple[str, ...],
-    fraction: float | None = None,
-    bucket_col: str = "partition_id",
-) -> None:
-    """Write {root}/stats, {root}/sample, {root}/sample_meta for `relation`
-    (which must carry the bucket column). When `fraction` is None it is
-    derived from the relation's total row count to land ~SEL_SAMPLE_ROWS
-    rows."""
-    spark = relation.sparkSession
-    stats = relation.groupBy(bucket_col).agg(F.count(F.lit(1)).alias("n_rows"))
-    # the row total rides the stats write (observe()), not a read-back
-    obs = Observation()
-    stats.observe(obs, F.sum("n_rows").alias("total")).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{root}/stats")
-    if fraction is None:
-        total = obs.get["total"] or 0
-        fraction = min(1.0, SEL_SAMPLE_ROWS / total) if total else 1.0
-    keep = [c for c in relation.columns if c not in drop_cols]
-    (
-        relation.filter(_sample_gate(id_col, fraction))
-        .select(*keep)
-        .coalesce(4)
-        .write.mode("overwrite")
-        .parquet(f"{root}/sample")
-    )
-    spark.createDataFrame([(float(fraction),)], "sample_fraction double").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{root}/sample_meta")
-
-
-def _sample_fraction(spark, path: str) -> float:
-    return float(
-        spark.read.parquet(f"{path}/sample_meta").collect()[0]["sample_fraction"]
-    )
-
-
-def _batch_root(path: str, batch_id: int) -> str:
-    return f"{path}/batches/batch-{batch_id:012d}"
-
-
-# Compaction staging names. `batches__compacting` is the frozen snapshot a
-# running compaction folds from (readers union it exactly like `batches`, so
-# every batch is visible in exactly one place at all times); the marker file
-# gates the commit step so a crashed compaction can be finished idempotently
-# instead of double-folding on retry.
-_SNAP_DIR = "batches__compacting"
-_COMMIT_MARKER = "__compact_commit"
-
-
-def _hadoop_fs(spark, path: str):
-    """(fs, mkpath) pair for the Hadoop FileSystem owning `path` — all layout
-    maintenance goes through this API (never local shutil), so it works on
-    file://, hdfs:// and s3a:// alike."""
-    jvm = spark.sparkContext._jvm
-    mkpath = jvm.org.apache.hadoop.fs.Path
-    fs = mkpath(path).getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs, mkpath
-
-
-def _batch_roots(spark, path: str) -> list[str]:
-    """Existing per-batch append directories under a layout, sorted. Includes
-    batches parked in the compaction snapshot dir. Normally each batch lives
-    in exactly one of `batches/` or `batches__compacting/`; the one way both
-    can briefly hold the SAME batch id is a crashed compaction followed by a
-    streaming replay of an uncommitted batch (idempotent per-batch content),
-    so duplicates are deduped BY BATCH DIRECTORY NAME here, preferring the
-    parked snapshot copy — readers always see exactly one copy."""
-    fs, mkpath = _hadoop_fs(spark, path)
-    seen: dict[str, str] = {}
-    for sub in (_SNAP_DIR, "batches"):  # snapshot copy wins on a name clash
-        hpath = mkpath(f"{path}/{sub}")
-        if not fs.exists(hpath):
-            continue
-        for st in fs.listStatus(hpath):
-            if st.isDirectory():
-                seen.setdefault(
-                    str(st.getPath().getName()),
-                    str(st.getPath().toUri().getPath()),
-                )
-    return sorted(seen.values())
-
-
-def _snapshot_batches(spark, path: str) -> None:
-    """Freeze the batch set a compaction will fold: move `batches/` (or its
-    children, when a crashed run already left a snapshot) into
-    `batches__compacting/`. Renames only — no data copies on HDFS/local; on
-    an object store the rename is a copy, same as any directory swap."""
-    fs, mkpath = _hadoop_fs(spark, path)
-    src, dst = mkpath(f"{path}/batches"), mkpath(f"{path}/{_SNAP_DIR}")
-    if not fs.exists(src):
-        return
-    if not fs.exists(dst):
-        if not fs.rename(src, dst):
-            raise IOError(f"snapshot rename failed: {src} -> {dst}")
-        return
-    for st in fs.listStatus(src):
-        child_dst = mkpath(f"{path}/{_SNAP_DIR}/{st.getPath().getName()}")
-        if fs.exists(child_dst):
-            # same batch id parked by a crashed compaction AND re-created by
-            # a streaming replay: per-batch appends are idempotent (identical
-            # content for a batch id), so drop the duplicate copy
-            fs.delete(st.getPath(), True)
-        elif not fs.rename(st.getPath(), child_dst):
-            # Hadoop rename reports failure via its return value, not an
-            # exception — surface it instead of silently bulk-deleting src
-            raise IOError(
-                f"snapshot merge rename failed: {st.getPath()} -> {child_dst}"
-            )
-    fs.delete(src, True)
-
-
-def _commit_compaction(spark, path: str, names: tuple[str, ...]) -> None:
-    """Swap every staged `{name}__compact_tmp` into place, then drop the
-    snapshot and the marker. IDEMPOTENT over any crash point: each step is
-    conditioned on what exists, so re-running finishes a partial commit
-    (tmp already swapped -> skipped; live already renamed away -> tmp just
-    renamed in) without double-folding anything."""
-    fs, mkpath = _hadoop_fs(spark, path)
-    for name in names:
-        tmp = mkpath(f"{path}/{name}__compact_tmp")
-        live = mkpath(f"{path}/{name}")
-        old = mkpath(f"{path}/{name}__compact_old")
-        if fs.exists(tmp):
-            # Hadoop rename reports failure via its return value, not an
-            # exception — a silently failed swap followed by the snapshot
-            # delete below would lose the only surviving copy
-            if fs.exists(live) and not fs.rename(live, old):
-                raise IOError(f"compaction rename failed: {live} -> {old}")
-            if not fs.rename(tmp, live):
-                raise IOError(f"compaction rename failed: {tmp} -> {live}")
-        if fs.exists(old):
-            fs.delete(old, True)
-    fs.delete(mkpath(f"{path}/{_SNAP_DIR}"), True)
-    fs.delete(mkpath(f"{path}/{_COMMIT_MARKER}"), True)
-    # drop any session-shared cached file listings for the swapped dirs
-    spark.catalog.refreshByPath(path)
-
-
-def _write_commit_marker(spark, path: str) -> None:
-    fs, mkpath = _hadoop_fs(spark, path)
-    fs.create(mkpath(f"{path}/{_COMMIT_MARKER}"), True).close()
-
-
-def _has_commit_marker(spark, path: str) -> bool:
-    fs, mkpath = _hadoop_fs(spark, path)
-    return bool(fs.exists(mkpath(f"{path}/{_COMMIT_MARKER}")))
-
-
-def _data_roots(spark, path: str, data_subdir: str) -> list[str]:
-    """All parquet roots of a layout's data relation: the base directory plus
-    any idempotent per-batch appends (see append_to_layout's batch_id)."""
-    return [f"{path}/{data_subdir}"] + [
-        f"{b}/{data_subdir}" for b in _batch_roots(spark, path)
-    ]
-
-
-def _union_roots(spark, roots: list[str]) -> DataFrame:
-    # one read per root (multi-path partition discovery rejects nested roots);
-    # pruning predicates still push into every union branch's scan
-    out = spark.read.parquet(roots[0])
-    for r in roots[1:]:
-        out = out.unionByName(spark.read.parquet(r))
-    return out
-
-
-def _read_layout(spark, path: str, data_subdir: str) -> DataFrame:
-    return _union_roots(spark, _data_roots(spark, path, data_subdir))
-
-
-def _read_sidecar(spark, path: str, name: str) -> DataFrame:
-    roots = [f"{path}/{name}"] + [f"{b}/{name}" for b in _batch_roots(spark, path)]
-    return _union_roots(spark, roots)
-
 
 def _estimate_selectivity(relation: DataFrame, predicate: Column) -> float:
     """Fraction of `relation` rows passing `predicate`, in ONE pass (a single
@@ -373,12 +173,12 @@ def _estimate_selectivity(relation: DataFrame, predicate: Column) -> float:
             F.count(F.when(predicate, F.lit(1))).alias("kept"),
         ).collect()[0]
     except AnalysisException as ex:
-        # loaded layouts estimate from the sample sidecar, which drops the
-        # vector/codes columns — surface the contract instead of a raw
+        # loaded layouts estimate from their selectivity sample, which drops
+        # the vector/codes columns — surface the contract instead of a raw
         # unresolved-column error
         raise ValueError(
-            "adaptive_nprobe selectivity estimation runs on the sample "
-            f"sidecar (columns: {relation.columns}); the predicate must "
+            "adaptive_nprobe selectivity estimation runs on the layout's "
+            f"sample (columns: {relation.columns}); the predicate must "
             "reference only metadata columns carried by the sample — "
             "vector/codes columns are dropped from it by design"
         ) from ex
@@ -405,7 +205,7 @@ def _widened_nprobe(index, nprobe: int, predicate: Column) -> tuple[float, int]:
     """(selectivity s, ceil(nprobe / s)): a filter keeping s of the corpus
     thins every probed bucket to s of its rows, so holding the candidate
     count constant takes nprobe / s probes. Zero sample hits put the filter
-    below the sample's resolution (~1/SEL_SAMPLE_ROWS), the ultra-selective
+    below the sample's resolution (~1/index_layout.SEL_SAMPLE_ROWS), the ultra-selective
     case widening exists for: open every bucket."""
     sel = _selectivity(index, predicate)
     return sel, (int(math.ceil(nprobe / sel)) if sel > 0 else index.n_centroids)
@@ -424,15 +224,6 @@ def _centroid_relation(spark, centers: np.ndarray) -> tuple[DataFrame, np.ndarra
     return df, mat
 
 
-def _centroid_rows_matrix(rows) -> np.ndarray:
-    """Collected (centroid_id, centroid) rows as an id-ordered matrix."""
-    dim = len(rows[0]["centroid"]) if rows else 0
-    cent = np.zeros((len(rows), dim), dtype=np.float64)
-    for r in rows:
-        cent[int(r["centroid_id"])] = np.asarray(r["centroid"], dtype=np.float64)
-    return cent
-
-
 def centroid_matrix(index) -> np.ndarray:
     """The one driver-side centroid matrix of an IVF/IVFPQ index: id-ordered
     float64 holding the float32 values its ``centroids`` relation stores,
@@ -440,78 +231,10 @@ def centroid_matrix(index) -> np.ndarray:
     Builds and loads fill it; other indexes pay one cached collect."""
     mat = getattr(index, "_centroid_mat", None)
     if mat is None:
-        mat = _centroid_rows_matrix(index.centroids.collect())
+        rows = {int(r["centroid_id"]): r["centroid"] for r in index.centroids.collect()}
+        mat = np.array([rows[i] for i in range(len(rows))], dtype=np.float64)
         index._centroid_mat = mat
     return mat
-
-
-def _compact_layout(
-    spark,
-    path: str,
-    data_subdir: str,
-    id_col: str,
-    drop_cols: tuple[str, ...],
-    files_per_bucket: int = 1,
-    bucket_col: str = "partition_id",
-    write_sidecars: bool = True,
-    staged_names: tuple[str, ...] = (),
-) -> int:
-    """Maintenance: merge the base directory and all per-batch appends into a
-    fresh bucketed base with ~files_per_bucket files per bucket, rewrite the
-    stats/sample sidecars from the merged relation, and drop the batch dirs.
-
-    Append-heavy streaming maintenance (maintain_index_stream at a 10 s
-    trigger ≈ 8.6k appends/day) otherwise degrades the layout into a
-    small-file swamp. Run this from a maintenance window with the stream
-    QUIESCED AND ITS LAST BATCH CHECKPOINT-COMMITTED: compaction folds the
-    batch directories into the base and deletes them, so a batch that was
-    written but not yet committed would be re-delivered on restart and
-    duplicate its vectors.
-
-    CRASH SAFETY (single-writer contract): the batch set is first frozen by
-    renaming `batches/` -> `batches__compacting/` (readers union both, so
-    exactly one copy of every batch stays visible), then ALL merged output
-    is staged under `__compact_tmp` dirs, and only then does a marker-file-
-    guarded commit swap everything in and drop the snapshot. A crash before
-    the marker leaves base + snapshot untouched (retry recomputes from the
-    same state — no double-fold); a crash during the commit is finished
-    idempotently on the next call via `_commit_compaction`. Readers during
-    the commit's directory renames can briefly fail or see relations from
-    two generations — on an object store front this with a versioned
-    manifest. Returns the merged row count.
-
-    `staged_names` lets a caller (compact_term_index) pre-stage additional
-    sidecar relations whose swap must ride the SAME commit."""
-    marker_names = (data_subdir,) + tuple(staged_names)
-    if _has_commit_marker(spark, path):
-        # a previous run crashed mid-commit; its staged tmps are complete
-        # (the marker is written only after every tmp), so finish it first
-        _commit_compaction(spark, path, marker_names)
-    _snapshot_batches(spark, path)
-    merged = _read_layout(spark, path, data_subdir)
-    n_buckets = merged.select(bucket_col).distinct().count()
-    tmp = f"{path}/{data_subdir}__compact_tmp"
-    # hash-partitioning on the bucket column alone routes ALL of a bucket's
-    # rows to one task regardless of partition count, so files_per_bucket>1
-    # needs an explicit deterministic salt key alongside the bucket
-    salt = F.pmod(F.xxhash64(F.col(id_col)), F.lit(max(1, files_per_bucket)))
-    (
-        merged.repartition(
-            max(1, n_buckets * files_per_bucket), F.col(bucket_col), salt
-        )
-        .write.mode("overwrite")
-        .partitionBy(bucket_col)
-        .parquet(tmp)
-    )
-    _write_commit_marker(spark, path)
-    _commit_compaction(spark, path, marker_names)
-    compacted = spark.read.parquet(f"{path}/{data_subdir}")
-    if write_sidecars:
-        _write_sidecars(
-            path, compacted, id_col=id_col, drop_cols=drop_cols,
-            bucket_col=bucket_col,
-        )
-    return compacted.count()
 
 
 # JL seeding sketch thresholds (see _kmeans_numpy): the gate at 256 keeps
@@ -770,8 +493,8 @@ class IVFIndex:
     build_seconds: float
     id_col: str = "vec_id"
     vec_col: str = "embedding"
-    # tiny hash-gated sample of the non-vector columns, loaded from a written
-    # layout's sidecar; lets adaptive_nprobe estimate predicate selectivity
+    # tiny hash-gated sample of the non-vector columns, loaded with a
+    # written layout; lets adaptive_nprobe estimate predicate selectivity
     # without ever scanning the full assigned relation
     sel_sample: DataFrame | None = None
 
@@ -923,47 +646,41 @@ class IVFIndex:
         return idx
 
     def write_bucketed(self, path: str, n_buckets: int | None = None) -> None:
-        """Persist the IVF layout: corpus Parquet partitioned by partition_id
-        (so a probe scan prunes to nprobe directories) + the centroid table +
-        the stats/sample sidecars (per-bucket row counts and a bounded
-        selectivity sample — search-time policies read THESE, never the full
-        relation). `IVFIndex.load` restores a searchable index from this
-        layout."""
-        self.assigned.write.mode("overwrite").partitionBy("partition_id").parquet(
-            f"{path}/assigned"
-        )
-        self.centroids.write.mode("overwrite").parquet(f"{path}/centroids")
-        _write_sidecars(
-            path, self.assigned, id_col=self.id_col, drop_cols=(self.vec_col,)
+        """Persist the IVF layout (see `index_layout`): the corpus Parquet
+        partitioned by partition_id, so a probe scan prunes to nprobe
+        directories, the per-bucket stats, the selectivity sample, and the
+        manifest holding the centroid matrix, metric and column names.
+        `IVFIndex.load` restores a searchable index from it."""
+        layout.write_layout(
+            path,
+            self.assigned,
+            "ivf",
+            "assigned",
+            "partition_id",
+            self.id_col,
+            self.vec_col,
+            sample_drop=(self.vec_col,),
+            metric=self.metric,
+            centroids=centroid_matrix(self).tolist(),
         )
 
     @staticmethod
-    def load(
-        spark,
-        path: str,
-        metric: Metric = "sqeuclidean",
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-    ) -> "IVFIndex":
+    def load(spark, path: str) -> "IVFIndex":
         """Open a written IVF layout (base directory plus any per-batch
-        appends). Searches against a loaded index read only the probed
-        partition directories (partition pruning / dynamic partition pruning
-        at the scan — verified in tests)."""
-        centroids = spark.read.parquet(f"{path}/centroids")
-        mat = _centroid_rows_matrix(centroids.collect())
-        assigned = _read_layout(spark, path, "assigned")
-        try:
-            sel_sample = _read_sidecar(spark, path, "sample").persist()
-        except Exception:  # pre-sidecar layout vintage
-            sel_sample = None
+        appends) with the metric and columns it was written with. Searches
+        against a loaded index read only the probed partition directories
+        (partition pruning / dynamic partition pruning at the scan —
+        verified in tests)."""
+        manifest, assigned, sel_sample = layout.open_layout(spark, path, "ivf")
+        centroids, mat = _centroid_relation(spark, np.array(manifest["centroids"]))
         idx = IVFIndex(
             centroids=centroids,
             assigned=assigned,
-            metric=metric,
+            metric=manifest["metric"],
             n_centroids=len(mat),
             build_seconds=0.0,
-            id_col=id_col,
-            vec_col=vec_col,
+            id_col=manifest["id_col"],
+            vec_col=manifest["vec_col"],
             sel_sample=sel_sample,
         )
         idx._centroid_mat = mat
@@ -971,95 +688,31 @@ class IVFIndex:
 
     @staticmethod
     def append_to_layout(
-        spark,
-        path: str,
-        new_rows: DataFrame,
-        vec_col: str = "embedding",
-        id_col: str = "vec_id",
-        batch_id: int | None = None,
+        spark, path: str, new_rows: DataFrame, batch_id: int | None = None
     ) -> int:
         """Incremental index maintenance: assign NEW vectors to the layout's
         EXISTING centroids and append them to the bucketed Parquet — the
         standard IVF add-without-retrain operation (FAISS `index.add`;
-        retraining cadence is an offline policy decision).
-
-        With ``batch_id=None`` (caller-driven, non-replayed adds) the rows
-        append into the base directories. With a ``batch_id`` (streaming
-        foreachBatch, where a crash between write and checkpoint commit
-        REPLAYS the batch) the whole batch — data, stats, sample — is written
-        mode("overwrite") under a batchId-derived subdirectory, so a replay
-        rewrites the same deterministic content instead of duplicating it:
-        idempotent per batch id, i.e. effectively exactly-once. Loads union
-        the base with all batch directories; `compact_layout` folds them
-        back in. Returns the number of rows appended."""
-        centers = _centroid_rows_matrix(
-            spark.read.parquet(f"{path}/centroids").collect()
+        retraining cadence is an offline policy decision). ``batch_id``
+        makes the append idempotent per streaming batch (see
+        `index_layout.append_layout`). Returns the number of rows
+        appended."""
+        return layout.append_layout(
+            spark,
+            path,
+            "ivf",
+            new_rows,
+            lambda m, rows: _with_partition_id(
+                rows, np.array(m["centroids"]), m["vec_col"]
+            ),
+            batch_id,
         )
-        if len(centers) == 0:
-            raise ValueError(f"no centroids found under {path}")
-        # appended rows must carry every column the layout has — filtered
-        # searches bind predicates against them, and a NULL-backfilled append
-        # would silently hide the new vectors from filtered results
-        layout_cols = [
-            c
-            for c in spark.read.parquet(f"{path}/assigned").columns
-            if c != "partition_id"
-        ]
-        missing = [c for c in layout_cols if c not in new_rows.columns]
-        if missing:
-            raise ValueError(
-                f"new_rows lacks columns the written layout carries: {missing} "
-                f"(layout schema: {layout_cols})"
-            )
-        # restrict to the layout schema: extra new_rows columns would write
-        # wider parquet files whose union with the base fails on load
-        assigned = materialize(
-            _with_partition_id(new_rows.select(*layout_cols), centers, vec_col)
-        )
-        n = assigned.count()
-        try:
-            frac = _sample_fraction(spark, path)
-        except Exception:  # pre-sidecar layout vintage
-            frac = None
-        if batch_id is None:
-            assigned.write.mode("append").partitionBy("partition_id").parquet(
-                f"{path}/assigned"
-            )
-            if frac is not None:
-                assigned.groupBy("partition_id").agg(
-                    F.count(F.lit(1)).alias("n_rows")
-                ).coalesce(1).write.mode("append").parquet(f"{path}/stats")
-                assigned.filter(_sample_gate(id_col, frac)).drop(vec_col).coalesce(
-                    1
-                ).write.mode("append").parquet(f"{path}/sample")
-        else:
-            root = _batch_root(path, batch_id)
-            assigned.write.mode("overwrite").partitionBy("partition_id").parquet(
-                f"{root}/assigned"
-            )
-            if frac is not None:
-                _write_sidecars(
-                    root, assigned, id_col=id_col, drop_cols=(vec_col,), fraction=frac
-                )
-        release(assigned)
-        return n
 
     @staticmethod
     def compact_layout(spark, path: str, files_per_bucket: int = 1) -> int:
         """Fold per-batch appends into the base layout and bound files per
-        bucket (see _compact_layout for semantics/caveats)."""
-        idx = IVFIndex.load(spark, path)
-        id_col, vec_col = idx.id_col, idx.vec_col
-        if idx.sel_sample is not None:
-            idx.sel_sample.unpersist()
-        return _compact_layout(
-            spark,
-            path,
-            "assigned",
-            id_col=id_col,
-            drop_cols=(vec_col,),
-            files_per_bucket=files_per_bucket,
-        )
+        bucket (see `index_layout.compact_layout`)."""
+        return layout.compact_layout(spark, path, "ivf", files_per_bucket)
 
     def search(
         self,
@@ -1092,7 +745,7 @@ class IVFIndex:
         standard filtered-ANN practice — the reference's own best
         high-selectivity configs widen search_width (BASELINE.md: mid_rated
         best uses sw=4 vs low_rated's sw=2). Selectivity is estimated from
-        the layout's tiny persisted sample sidecar when one exists (loaded
+        the layout's tiny persisted selectivity sample when one exists (loaded
         indexes), else one single-pass aggregate over the in-memory persisted
         assignment — the full index relation of a written layout is never
         scanned by the search path. Each (index, predicate) is estimated
@@ -1375,7 +1028,7 @@ def plan_filtered_search(
         full-precision vectors an exact scan is impossible, so fall back to
         the ann tier with every bucket open.
 
-    Selectivity comes from the layout's tiny sample sidecar when one exists,
+    Selectivity comes from the layout's tiny selectivity sample when one exists,
     else one single-pass aggregate over the in-memory relation — identical
     policy to adaptive_nprobe, so planner routing is reproducible in SQL
     (the registry oracles both tiers, tier label included). It is estimated

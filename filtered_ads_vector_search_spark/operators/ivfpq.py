@@ -47,19 +47,13 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..materialize import materialize, release
+from . import index_layout as layout
 from .ann import (
     IVFIndex,
-    _batch_root,
-    _centroid_rows_matrix,
-    _compact_layout,
+    _centroid_relation,
     _probed_scan,
-    _read_layout,
-    _read_sidecar,
-    _sample_fraction,
-    _sample_gate,
     _widened_nprobe,
-    _write_sidecars,
+    _with_partition_id,
     centroid_matrix,
 )
 from .pq import (
@@ -186,6 +180,11 @@ def _adc_bucket_scorer_decomposed(Q, qsel, b, codes, extra):
 __all__ = ["IVFPQIndex"]
 
 
+def _rotation(manifest: dict) -> np.ndarray | None:
+    rot = manifest["rotation"]
+    return None if rot is None else np.array(rot, dtype=np.float64)
+
+
 @dataclass
 class IVFPQIndex:
     centroids: DataFrame  # (centroid_id int, centroid array<float>)
@@ -197,7 +196,7 @@ class IVFPQIndex:
     vec_col: str = "embedding"
     has_vectors: bool = True
     residual: bool = True
-    # tiny hash-gated sample sidecar of the non-vector/non-code columns
+    # tiny hash-gated sample of the non-vector/non-code columns
     # (loaded layouts): adaptive_nprobe's selectivity estimate reads this,
     # never the full coded relation
     sel_sample: DataFrame | None = None
@@ -379,169 +378,78 @@ class IVFPQIndex:
         )
 
     def write_bucketed(self, path: str) -> None:
-        """Persist the composed layout partitioned by bucket: probe scans
-        prune to nprobe directories of CODES (not vectors). Codebooks ride
-        along as a tiny one-row table so load() restores a searchable index;
-        stats/sample sidecars let search-time policies avoid ever scanning
-        the coded relation."""
-        self.coded.write.mode("overwrite").partitionBy("partition_id").parquet(
-            f"{path}/coded"
+        """Persist the composed layout (see `index_layout`) partitioned by
+        bucket: probe scans prune to nprobe directories of CODES (not
+        vectors). The manifest carries the centroid matrix, codebooks,
+        residual flag and OPQ rotation, so load() restores a searchable
+        index; the per-bucket stats and the selectivity sample let
+        search-time policies avoid ever scanning the coded relation."""
+        layout.write_layout(
+            path,
+            self.coded,
+            "ivfpq",
+            "coded",
+            "partition_id",
+            self.id_col,
+            self.vec_col,
+            sample_drop=(self.vec_col, "codes"),
+            derived=("codes",),
+            centroids=centroid_matrix(self).tolist(),
+            codebooks=[[[float(x) for x in c] for c in cb] for cb in self.codebooks],
+            residual=bool(self.residual),
+            rotation=None if self.rotation is None else self.rotation.tolist(),
         )
-        self.centroids.write.mode("overwrite").parquet(f"{path}/centroids")
-        _write_sidecars(
-            path, self.coded, id_col=self.id_col, drop_cols=(self.vec_col, "codes")
-        )
-        spark = self.coded.sparkSession
-        rot = (
-            [[float(x) for x in row] for row in self.rotation]
-            if self.rotation is not None
-            else None
-        )
-        meta = spark.createDataFrame(
-            [(self.codebooks, self.residual, self.id_col, self.vec_col, rot)],
-            "codebooks array<array<array<double>>>, residual boolean, "
-            "id_col string, vec_col string, rotation array<array<double>>",
-        )
-        meta.coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
 
     @staticmethod
     def append_to_layout(
-        spark,
-        path: str,
-        new_rows: DataFrame,
-        vec_col: str | None = None,
-        batch_id: int | None = None,
+        spark, path: str, new_rows: DataFrame, batch_id: int | None = None
     ) -> int:
         """Incremental add (FAISS `index.add` semantics): assign new vectors
         to the layout's existing centroids, residual-encode them with the
-        layout's codebooks, and append to the bucketed coded Parquet — only
-        the touched bucket directories grow; nothing is retrained or
-        rewritten.
+        layout's codebooks (under its OPQ rotation, if any), and append to
+        the bucketed coded Parquet — only the touched bucket directories
+        grow; nothing is retrained or rewritten. Appended rows carry EVERY
+        column of the written layout's schema; ``batch_id`` makes the
+        append idempotent per streaming batch (see
+        `index_layout.append_layout`). Returns rows appended."""
 
-        Appended rows carry EVERY column of the written layout's schema
-        (metadata like rating buckets included — the _from_ivf contract), so
-        filtered searches see appended vectors exactly like built ones;
-        new_rows missing a layout column is an error, not a silent NULL.
-        ``batch_id`` switches to an idempotent per-batch overwrite directory
-        (see IVFIndex.append_to_layout — same replay semantics). Returns rows
-        appended."""
-        from .ann import _with_partition_id
+        def encode(m: dict, rows: DataFrame) -> DataFrame:
+            centers = np.array(m["centroids"])
+            return pq_encode_with_codes_arrow(
+                _with_partition_id(rows, centers, m["vec_col"]),
+                m["codebooks"],
+                m["vec_col"],
+                centers=centers if m["residual"] else None,
+                rotation=_rotation(m),
+            )
 
-        idx = IVFPQIndex.load(spark, path)
-        vec = vec_col or idx.vec_col
-        layout_cols = [c for c in idx.coded.columns if c not in ("partition_id", "codes")]
-        needed = [vec if c == idx.vec_col else c for c in layout_cols]
-        if vec not in needed:  # codes-only layout still needs the vector to encode
-            needed.append(vec)
-        missing = [c for c in needed if c not in new_rows.columns]
-        if missing:
-            raise ValueError(
-                f"new_rows lacks columns the written layout carries: {missing} "
-                f"(layout schema: {layout_cols}); filtered searches bind "
-                "predicates against these, so appending NULLs would silently "
-                "hide appended vectors from filtered results"
-            )
-        centers = centroid_matrix(idx)
-        assigned = _with_partition_id(new_rows, centers, vec)
-        base = pq_encode_with_codes_arrow(
-            assigned,
-            idx.codebooks,
-            vec,
-            centers=centers if idx.residual else None,
-            rotation=idx.rotation,  # OPQ layouts encode (x - c) @ R
-        )
-        cols = [
-            F.col(vec).alias(idx.vec_col) if c == idx.vec_col else F.col(c)
-            for c in layout_cols
-        ]
-        out = materialize(base.select(*cols, F.col("partition_id"), F.col("codes")))
-        n = out.count()
-        try:
-            frac = _sample_fraction(spark, path)
-        except Exception:  # pre-sidecar layout vintage
-            frac = None
-        if batch_id is None:
-            out.write.mode("append").partitionBy("partition_id").parquet(
-                f"{path}/coded"
-            )
-            if frac is not None:
-                out.groupBy("partition_id").agg(
-                    F.count(F.lit(1)).alias("n_rows")
-                ).coalesce(1).write.mode("append").parquet(f"{path}/stats")
-                out.filter(_sample_gate(idx.id_col, frac)).drop(
-                    idx.vec_col, "codes"
-                ).coalesce(1).write.mode("append").parquet(f"{path}/sample")
-        else:
-            root = _batch_root(path, batch_id)
-            out.write.mode("overwrite").partitionBy("partition_id").parquet(
-                f"{root}/coded"
-            )
-            if frac is not None:
-                _write_sidecars(
-                    root,
-                    out,
-                    id_col=idx.id_col,
-                    drop_cols=(idx.vec_col, "codes"),
-                    fraction=frac,
-                )
-        release(out)
-        # load() persisted the selectivity sample sidecar; this sits in the
-        # foreachBatch hot path (one call per micro-batch), so the cache
-        # entry must be released or it leaks once per batch forever
-        if idx.sel_sample is not None:
-            idx.sel_sample.unpersist()
-        return n
+        return layout.append_layout(spark, path, "ivfpq", new_rows, encode, batch_id)
 
     @staticmethod
     def compact_layout(spark, path: str, files_per_bucket: int = 1) -> int:
         """Fold per-batch appends into the base coded layout and bound files
-        per bucket (see ann._compact_layout for semantics/caveats)."""
-        idx = IVFPQIndex.load(spark, path)
-        if idx.sel_sample is not None:
-            idx.sel_sample.unpersist()
-        return _compact_layout(
-            spark,
-            path,
-            "coded",
-            id_col=idx.id_col,
-            drop_cols=(idx.vec_col, "codes"),
-            files_per_bucket=files_per_bucket,
-        )
+        per bucket (see `index_layout.compact_layout`)."""
+        return layout.compact_layout(spark, path, "ivfpq", files_per_bucket)
 
     @staticmethod
     def load(spark, path: str) -> "IVFPQIndex":
         """Open a written IVFPQ layout. Searches read only the probed
         partition directories of the coded table (partition pruning at the
         scan — the bucketed layout is the point of the tier)."""
-        centroids = spark.read.parquet(f"{path}/centroids")
-        mat = _centroid_rows_matrix(centroids.collect())
-        coded = _read_layout(spark, path, "coded")
-        meta = spark.read.parquet(f"{path}/meta").collect()[0]
-        books = [
-            [[float(x) for x in code] for code in cb] for cb in meta["codebooks"]
-        ]
-        rot = None
-        if "rotation" in meta.asDict() and meta["rotation"] is not None:
-            rot = np.array(
-                [[float(x) for x in row] for row in meta["rotation"]],
-                dtype=np.float64,
-            )
-        try:
-            sel_sample = _read_sidecar(spark, path, "sample").persist()
-        except Exception:  # pre-sidecar layout vintage
-            sel_sample = None
+        manifest, coded, sel_sample = layout.open_layout(spark, path, "ivfpq")
+        centroids, mat = _centroid_relation(spark, np.array(manifest["centroids"]))
         idx = IVFPQIndex(
             centroids=centroids,
             coded=coded,
-            codebooks=books,
+            codebooks=manifest["codebooks"],
             n_centroids=len(mat),
             build_seconds=0.0,
-            id_col=meta["id_col"],
-            vec_col=meta["vec_col"],
-            has_vectors=meta["vec_col"] in coded.columns,
-            residual=meta["residual"],
+            id_col=manifest["id_col"],
+            vec_col=manifest["vec_col"],
+            has_vectors=manifest["vec_col"] in coded.columns,
+            residual=manifest["residual"],
             sel_sample=sel_sample,
-            rotation=rot,
+            rotation=_rotation(manifest),
         )
         idx._centroid_mat = mat
         return idx
@@ -600,8 +508,8 @@ class IVFPQIndex:
             )
         m, n_codes, sd = _validate(self.codebooks)
         if adaptive_nprobe and predicate is not None:
-            # same policy as IVFIndex.search, estimated from the tiny sample
-            # sidecar when loaded from a layout — the coded relation is
+            # same policy as IVFIndex.search, estimated from the layout's
+            # tiny selectivity sample when loaded — the coded relation is
             # never scanned outside the probe join itself
             nprobe = _widened_nprobe(self, nprobe, predicate)[1]
         nprobe = min(nprobe, self.n_centroids)

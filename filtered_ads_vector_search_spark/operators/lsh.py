@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
+from . import index_layout as layout
 from .topk import (
     Metric,
     _sqeuclidean_bucket_scorer,
@@ -234,51 +235,40 @@ class LSHIndex:
         )
 
     def write_partitioned(self, path: str) -> None:
-        """Persist the LSH layout: the tagged corpus partitioned by the first
-        table's bucket (searches prune files on the primary key; the other
-        tables' keys stay as columns) plus a one-row meta table carrying the
-        hyperplanes, so `load` restores a searchable index and
-        `append_to_layout` can tag new vectors identically."""
-        self.tagged.write.mode("overwrite").partitionBy("bucket_0").parquet(
-            f"{path}/tagged"
+        """Persist the LSH layout (see `index_layout`): the tagged corpus
+        partitioned by the first table's bucket (searches prune files on the
+        primary key; the other tables' keys stay as columns) plus the
+        manifest carrying the hyperplanes, so `load` restores a searchable
+        index and `append_to_layout` can tag new vectors identically."""
+        layout.write_layout(
+            path,
+            self.tagged,
+            "lsh",
+            "tagged",
+            "bucket_0",
+            self.id_col,
+            self.vec_col,
+            derived=tuple(f"bucket_{t}" for t in range(self.n_tables)),
+            metric=str(self.metric),
+            planes=self.planes.tolist(),
+            n_bits=int(self.n_bits),
+            n_tables=int(self.n_tables),
         )
-        spark = self.tagged.sparkSession
-        meta = spark.createDataFrame(
-            [
-                (
-                    [float(x) for x in self.planes.reshape(-1)],
-                    int(self.n_bits),
-                    int(self.n_tables),
-                    int(self.planes.shape[2]),
-                    str(self.metric),
-                    self.id_col,
-                    self.vec_col,
-                )
-            ],
-            "planes array<double>, n_bits int, n_tables int, dim int, "
-            "metric string, id_col string, vec_col string",
-        )
-        meta.coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
 
     @staticmethod
     def load(spark, path: str) -> "LSHIndex":
         """Open a written LSH layout (base directory plus any per-batch
         appends). Search predicates on bucket_0 prune partition directories."""
-        from .ann import _read_layout
-
-        meta = spark.read.parquet(f"{path}/meta").collect()[0]
-        planes = np.array(meta["planes"], dtype=np.float64).reshape(
-            meta["n_tables"], meta["n_bits"], meta["dim"]
-        )
+        manifest, tagged, _ = layout.open_layout(spark, path, "lsh")
         return LSHIndex(
-            tagged=_read_layout(spark, path, "tagged"),
-            planes=planes,
-            metric=meta["metric"],
-            n_bits=meta["n_bits"],
-            n_tables=meta["n_tables"],
+            tagged=tagged,
+            planes=np.array(manifest["planes"], dtype=np.float64),
+            metric=manifest["metric"],
+            n_bits=manifest["n_bits"],
+            n_tables=manifest["n_tables"],
             build_seconds=0.0,
-            id_col=meta["id_col"],
-            vec_col=meta["vec_col"],
+            id_col=manifest["id_col"],
+            vec_col=manifest["vec_col"],
         )
 
     @staticmethod
@@ -287,53 +277,20 @@ class LSHIndex:
     ) -> int:
         """Incremental add: tag NEW vectors with the layout's stored
         hyperplanes (LSH needs no retraining — the planes ARE the index) and
-        append them. Same append semantics as IVFIndex.append_to_layout:
-        ``batch_id=None`` appends into the base directories; a ``batch_id``
-        writes an idempotent overwrite-mode batch directory so foreachBatch
-        replays cannot duplicate vectors. Returns rows appended."""
-        from .ann import _batch_root
+        append them, idempotently per ``batch_id`` (see
+        `index_layout.append_layout`). Returns rows appended."""
 
-        idx = LSHIndex.load(spark, path)
-        layout_cols = [
-            c for c in idx.tagged.columns if not c.startswith("bucket_")
-        ]
-        missing = [c for c in layout_cols if c not in new_rows.columns]
-        if missing:
-            raise ValueError(
-                f"new_rows lacks columns the written layout carries: {missing} "
-                f"(layout schema: {layout_cols})"
-            )
-        tagged = _tag_buckets(
-            new_rows.select(*layout_cols), idx.vec_col, idx.planes, "bucket_"
-        )
-        n = tagged.count()
-        if batch_id is None:
-            tagged.write.mode("append").partitionBy("bucket_0").parquet(
-                f"{path}/tagged"
-            )
-        else:
-            tagged.write.mode("overwrite").partitionBy("bucket_0").parquet(
-                f"{_batch_root(path, batch_id)}/tagged"
-            )
-        return n
+        def encode(m: dict, rows: DataFrame) -> DataFrame:
+            planes = np.array(m["planes"], dtype=np.float64)
+            return _tag_buckets(rows, m["vec_col"], planes, "bucket_")
+
+        return layout.append_layout(spark, path, "lsh", new_rows, encode, batch_id)
 
     @staticmethod
     def compact_layout(spark, path: str, files_per_bucket: int = 1) -> int:
         """Fold per-batch appends into the base tagged layout and bound files
-        per bucket_0 directory (see ann._compact_layout for caveats)."""
-        from .ann import _compact_layout
-
-        idx = LSHIndex.load(spark, path)
-        return _compact_layout(
-            spark,
-            path,
-            "tagged",
-            id_col=idx.id_col,
-            drop_cols=(idx.vec_col,),
-            files_per_bucket=files_per_bucket,
-            bucket_col="bucket_0",
-            write_sidecars=False,  # LSH search has no selectivity policy
-        )
+        per bucket_0 directory (see `index_layout.compact_layout`)."""
+        return layout.compact_layout(spark, path, "lsh", files_per_bucket)
 
     def search(
         self,

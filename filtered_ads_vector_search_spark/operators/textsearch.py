@@ -38,6 +38,15 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokens, tokens_sql
 from ..materialize import materialize, release
+from .index_layout import (
+    _batch_root,
+    _commit_compaction,
+    _fold_batches,
+    _has_commit_marker,
+    _read_layout,
+    _read_sidecar,
+    _snapshot_batches,
+)
 
 __all__ = [
     "doc_terms",
@@ -279,8 +288,6 @@ def append_to_term_index(
     mode("overwrite") under a batchId-derived subdirectory — replays rewrite
     identical content: idempotent per batch id. `compact_term_index` folds
     batches back into the base. Returns postings rows appended."""
-    from .ann import _batch_root
-
     meta = spark.read.parquet(f"{path}/meta").collect()[0]
     n_buckets = int(meta["n_buckets"])
     # materialized: tot.collect, the row count, and three writes would
@@ -319,7 +326,7 @@ def compact_term_index(spark, path: str, files_per_bucket: int = 1) -> int:
     """Fold per-batch appends back into the base layout: merge doclen/stats/
     meta (additive aggregates) into fresh base tables, rewrite the postings
     relation to ~files_per_bucket files per bucket, and drop the batch
-    directories (same quiesced-stream caveats as ann.compact_layout).
+    directories (same quiesced-stream caveats as index_layout.compact_layout).
 
     All four relations are folded from ONE frozen batch snapshot
     (`batches/` renamed to `batches__compacting/` up front — readers union
@@ -330,14 +337,6 @@ def compact_term_index(spark, path: str, files_per_bucket: int = 1) -> int:
     re-running can never double-fold doc lengths or df into the base; a
     crash during the commit is finished idempotently by the next call.
     Returns the merged postings row count."""
-    from .ann import (
-        _commit_compaction,
-        _compact_layout,
-        _has_commit_marker,
-        _read_sidecar,
-        _snapshot_batches,
-    )
-
     if _has_commit_marker(spark, path):
         # previous run crashed mid-commit; its tmps are complete — finish it
         _commit_compaction(spark, path, _TERM_INDEX_RELATIONS)
@@ -361,17 +360,15 @@ def compact_term_index(spark, path: str, files_per_bucket: int = 1) -> int:
     _stage(meta.coalesce(1), "meta")
     # stages terms__compact_tmp, then commits ALL four staged relations,
     # drops the snapshot, and refreshes cached listings
-    return _compact_layout(
+    return _fold_batches(
         spark,
         path,
         "terms",
         id_col="doc_id",
-        drop_cols=(),
-        files_per_bucket=files_per_bucket,
         bucket_col="term_bucket",
-        write_sidecars=False,
+        files_per_bucket=files_per_bucket,
         staged_names=("doclen", "stats", "meta"),
-    )
+    ).count()
 
 
 def bm25_search_index(
@@ -389,8 +386,6 @@ def bm25_search_index(
     postings + the doc-length table stream. Reads union the base with any
     per-batch appends; df/meta are additive over the disjoint doc sets, so
     read-side sums reconstruct the global stats exactly."""
-    from .ann import _read_sidecar
-
     meta = (
         _read_sidecar(spark, path, "meta")
         .agg(
@@ -423,8 +418,6 @@ def bm25_search_index(
             _term_bucket(F.col("term"), n_buckets).alias("b")
         ).distinct().collect()
     ]
-    from .ann import _read_layout
-
     dt = _read_layout(spark, path, "terms").filter(
         F.col("term_bucket").isin(buckets)  # partition pruning at the scan
     )

@@ -33,6 +33,7 @@ from ..materialize import materialize, release
 from ..operators import dedup as DD
 from ..operators import quality as QL
 from ..operators.chunking import pack_sequences
+from ..operators.index_layout import write_text
 
 __all__ = ["curate_corpus"]
 
@@ -203,7 +204,7 @@ def curate_corpus(
     metrics = {k: int(obs.get[k]) for k, obs in counts.items()}
     # metrics go through the Hadoop FS (not local open()) so hdfs://, s3a://,
     # file:// out_dirs all work — same discipline as layout compaction
-    _write_text(
+    write_text(
         spark, f"{out_dir}/metrics.json", json.dumps(metrics, indent=1, sort_keys=True)
     )
     _lap("write_artifacts")
@@ -212,14 +213,3 @@ def curate_corpus(
     # survivors the DSIR pool
     release(red, exact, pairs, comp, survivors, kept)
     return metrics
-
-
-def _write_text(spark: SparkSession, path: str, content: str) -> None:
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    out = fs.create(hpath, True)
-    try:
-        out.write(bytearray(content.encode("utf-8")))
-    finally:
-        out.close()

@@ -109,7 +109,7 @@ def main() -> None:
         "The engine's scale properties are plan properties. `tests/test_plan_properties.py`",
         "asserts the load-bearing ones; this document shows the actual plans.",
         "",
-        "Four engine-wide rules shape every plan below:",
+        "Five engine-wide rules shape every plan below:",
         "",
         "- **Parallelism comes from the data.** A scan runs one task per input split;",
         "  a shuffle runs `spark.sql.shuffle.partitions` tasks (AQE coalesces them).",
@@ -136,6 +136,16 @@ def main() -> None:
         "  planners memoize each predicate's sample estimate until `unpersist()`.",
         "  Planning a filtered search the index has seen before launches no job;",
         "  the `centroids` relation stays for the expression-path probe join.",
+        '- **An index layout is one module and one manifest; load runs no metadata',
+        '  job.** IVF, IVFPQ and LSH write, load, append to and compact their',
+        '  bucketed layouts through `operators/index_layout.py`. The driver-side',
+        '  state of a layout (centroid matrix, codebooks, OPQ rotation, hyperplanes,',
+        '  metric, id and vector columns, sample fraction, Parquet schemas) is one',
+        '  JSON manifest, `{path}/_layout.json`, written last through the Hadoop FS',
+        '  under a temporary name and renamed into place. `load` reads it and',
+        '  declares the Parquet relations with their known schemas, so a layout of',
+        '  at most 32 buckets loads with no Spark job; a directory without a',
+        '  manifest is refused with a `ValueError` naming it.',
         '- **One Arrow scan-and-top-k kernel, one top-k merge (`topk_agg`).** Every',
         '  Arrow search form (exact k-NN and range, IVF fold/BLAS/range, IVFPQ ADC,',
         '  LSH, the blockwise and k-NN-graph cogroups) runs `topk.scan_topk` or its',

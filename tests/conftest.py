@@ -1,8 +1,10 @@
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# this checkout's package, whichever directory the checkout lives in
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from filtered_ads_vector_search_spark.session import get_spark
 

@@ -1,9 +1,5 @@
 """Planted-data semantics tests for the as-of join and bucketed range join."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from filtered_ads_vector_search_spark.operators.asof import asof_join, range_join_bucketed

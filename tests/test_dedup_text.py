@@ -1,9 +1,5 @@
 """Dedup + text-analysis operator properties."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from filtered_ads_vector_search_spark.functions import text as T

@@ -2,8 +2,6 @@
 the corpus k-NN graph — exactness at full beam, hop monotonicity, entry
 overrides, determinism, validation."""
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,8 +15,7 @@ from filtered_ads_vector_search_spark.operators.knn_graph import (
     knn_graph_window,
 )
 
-sys.path.insert(0, "/root/repo/tests")
-from conftest import SF_TEST  # noqa: E402
+from conftest import SF_TEST
 
 
 def _split(spark):

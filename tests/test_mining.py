@@ -2,8 +2,6 @@
 (Artetxe & Schwenk 2019 ratio margin, max retrieval) and DPR-style
 hard-negative mining — semantics, hub demotion, kernel parity, validation."""
 
-import sys
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -13,8 +11,7 @@ from filtered_ads_vector_search_spark.operators.mining import (
     mine_hard_negatives,
 )
 
-sys.path.insert(0, "/root/repo/tests")
-from conftest import SF_TEST  # noqa: E402
+from conftest import SF_TEST
 
 
 def _df(spark, rows, start_id=0):

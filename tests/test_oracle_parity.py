@@ -2,10 +2,6 @@
 registry queries must match their DuckDB oracles exactly (row count, columns,
 order-insensitive values). The full sweep lives in scripts/check_correctness.py."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import pytest
 
 from filtered_ads_vector_search_spark import registry

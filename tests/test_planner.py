@@ -273,6 +273,15 @@ def test_plan_then_unpersist_leaves_no_persistent_rdds(spark, qc, tmp_path):
     def persistent():
         return set(jsc.getPersistentRDDs().keys())
 
+    # earlier tests' unreleased materializations are garbage that the
+    # context cleaner unpersists whenever a GC runs; reclaim them before
+    # the baseline, so a GC during this test cannot shrink the set
+    import gc
+    import time
+
+    gc.collect()
+    spark._jvm.System.gc()
+    time.sleep(2)
     baseline = persistent()
     built = IVFIndex.build(c, n_centroids=16, seed=42)
     path = str(tmp_path / "ivf")

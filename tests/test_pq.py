@@ -1,10 +1,6 @@
 """Product-quantization tier (operators/pq.py): encode/ADC semantics,
 physical-form equivalence, and trained-codebook recall."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F

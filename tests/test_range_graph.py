@@ -9,10 +9,6 @@ exactness at full probing, radius/top-k consistency, filter semantics,
 graph self-exclusion + bucketed-graph recall, and empty/edge inputs.
 """
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import pytest
 from pyspark.sql import functions as F
 

@@ -1,9 +1,5 @@
 """Recall + ANN-tier properties (reference thresholds: tests.py:135,262,303)."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -971,6 +967,112 @@ def test_ivfpq_batch_append_and_compact(spark, tmp_path):
         )
     )
     assert after == before and len(after) > 0
+
+
+def test_layout_remembers_metric_and_columns(spark, tmp_path):
+    """A cosine IVF layout over (doc_id, vec) loads, appends (with and
+    without a batch id) and compacts with no metric or column arguments:
+    the manifest carries them. Every search over the layout equals the
+    in-memory search over the same rows."""
+    import pytest
+
+    from filtered_ads_vector_search_spark.operators.index_layout import MANIFEST
+
+    q, c = _split(spark)
+    q = q.limit(5).cache()
+    corpus = c.select(
+        F.col("vec_id").alias("doc_id"), F.col("embedding").alias("vec"), "label"
+    )
+    built = IVFIndex.build(
+        corpus, n_centroids=4, metric="cosine", seed=42, id_col="doc_id", vec_col="vec"
+    )
+    path = str(tmp_path / "ivf_cosine")
+    built.write_bucketed(path)
+
+    def rows(idx):
+        return sorted(map(tuple, idx.search(q, k=5, nprobe=2).collect()))
+
+    loaded = IVFIndex.load(spark, path)
+    assert (loaded.metric, loaded.id_col, loaded.vec_col) == ("cosine", "doc_id", "vec")
+    assert rows(loaded) == rows(built) and len(rows(built)) > 0
+
+    qvecs = [[float(x) for x in r["q_vec"]] for r in q.orderBy("query_id").collect()]
+    plain = spark.createDataFrame(
+        [(60_000_000, qvecs[0], 0)], "doc_id long, vec array<float>, label int"
+    )
+    batch = spark.createDataFrame(
+        [(60_000_001, qvecs[1], 0)], "doc_id long, vec array<float>, label int"
+    )
+    assert IVFIndex.append_to_layout(spark, path, plain) == 1
+    assert IVFIndex.append_to_layout(spark, path, batch, batch_id=2) == 1
+    grown = IVFIndex.load(spark, path)
+    # the in-memory twin: the built assignment plus the appended rows
+    # assigned to the same centroids
+    from filtered_ads_vector_search_spark.operators.ann import (
+        _with_partition_id,
+        centroid_matrix,
+    )
+
+    twin = IVFIndex(
+        centroids=built.centroids,
+        assigned=built.assigned.unionByName(
+            _with_partition_id(plain.unionByName(batch), centroid_matrix(built), "vec")
+        ),
+        metric="cosine",
+        n_centroids=built.n_centroids,
+        build_seconds=0.0,
+        id_col="doc_id",
+        vec_col="vec",
+    )
+    want = rows(twin)
+    assert rows(grown) == want
+    assert {60_000_000, 60_000_001} <= {r[1] for r in want}
+
+    n_grown = grown.assigned.count()
+    grown.unpersist()
+    assert IVFIndex.compact_layout(spark, path) == n_grown
+    assert rows(IVFIndex.load(spark, path)) == want
+    built.unpersist()
+
+    with pytest.raises(ValueError, match=MANIFEST):
+        IVFIndex.load(spark, str(tmp_path / "no_layout"))
+
+
+def test_layout_load_runs_no_job_and_write_at_most_three(spark, tmp_path):
+    """Loading an IVF, IVFPQ or LSH layout of at most 32 buckets launches no
+    Spark job (the manifest holds the driver-side state and the Parquet
+    schemas); writing an IVF layout launches at most three (data, stats,
+    sample)."""
+    from filtered_ads_vector_search_spark.operators.ivfpq import IVFPQIndex
+    from filtered_ads_vector_search_spark.operators.lsh import LSHIndex
+
+    sc = spark.sparkContext
+    _, c = _split(spark)
+
+    def jobs(name, fn):
+        group = f"layout-jobs-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    ivf = IVFIndex.build(c, n_centroids=32, seed=42)
+    assert jobs("ivf-write", lambda: ivf.write_bucketed(str(tmp_path / "ivf"))) <= 3
+    ivf.unpersist()
+    pq = IVFPQIndex.build_fixed(c, n_centroids=16, m=4, n_codes=16)
+    pq.write_bucketed(str(tmp_path / "ivfpq"))
+    pq.unpersist()
+    lsh = LSHIndex.build(c, n_bits=4, n_tables=2, seed=42)
+    lsh.write_partitioned(str(tmp_path / "lsh"))
+    lsh.unpersist()
+
+    for name, cls in (("ivf", IVFIndex), ("ivfpq", IVFPQIndex), ("lsh", LSHIndex)):
+        loaded = []
+        n = jobs(f"{name}-load", lambda: loaded.append(cls.load(spark, str(tmp_path / name))))
+        assert n == 0, (name, n)
+        loaded[0].unpersist()
 
 
 def test_adaptive_nprobe_never_scans_loaded_relation(spark, tmp_path):

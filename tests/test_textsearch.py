@@ -1,9 +1,5 @@
 """Lexical BM25 + RRF hybrid fusion (operators/textsearch.py)."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from filtered_ads_vector_search_spark.operators import textsearch as TS
@@ -143,7 +139,7 @@ def test_compact_term_index_crash_retry_no_double_fold(spark, tmp_path):
     base+snapshot state (no double-counted doc lengths / df).
     (2) crash DURING the commit (marker written, some relations swapped):
     the next call finishes the commit idempotently."""
-    from filtered_ads_vector_search_spark.operators.ann import (
+    from filtered_ads_vector_search_spark.operators.index_layout import (
         _snapshot_batches,
         _write_commit_marker,
     )
@@ -188,7 +184,7 @@ def test_compact_term_index_crash_retry_no_double_fold(spark, tmp_path):
     TS.write_term_index(old, path2, n_buckets=16)
     TS.append_to_term_index(spark, path2, new, batch_id=3)
     _snapshot_batches(spark, path2)
-    from filtered_ads_vector_search_spark.operators.ann import _read_sidecar
+    from filtered_ads_vector_search_spark.operators.index_layout import _read_sidecar
 
     _read_sidecar(spark, path2, "doclen").write.parquet(
         f"{path2}/doclen__compact_tmp"
@@ -201,7 +197,7 @@ def test_compact_term_index_crash_retry_no_double_fold(spark, tmp_path):
         F.sum("sum_dl").alias("sum_dl"),
         F.max("n_buckets").alias("n_buckets"),
     ).coalesce(1).write.parquet(f"{path2}/meta__compact_tmp")
-    from filtered_ads_vector_search_spark.operators.ann import _read_layout
+    from filtered_ads_vector_search_spark.operators.index_layout import _read_layout
 
     _read_layout(spark, path2, "terms").write.partitionBy("term_bucket").parquet(
         f"{path2}/terms__compact_tmp"

@@ -1,10 +1,6 @@
 """Exact k-NN properties — the Spark analogs of the reference's batch-size
 invariance tests (reference: tests.py:7-62, 308-348)."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from filtered_ads_vector_search_spark.operators import filters as FL
