@@ -13,12 +13,14 @@ fold order, same rounding), so both engines produce bit-identical values.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+# this checkout's package, wherever the checkout lives
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from filtered_ads_vector_search_spark import registry
 from filtered_ads_vector_search_spark.operators import filters as FL

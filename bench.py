@@ -92,11 +92,11 @@ def main() -> None:
 
     timed("ann_ivf_build", build)
     timed("ann_ivf_search", lambda: state["idx"].search(q, k=10, nprobe=8).count())
-    # the DGEMM Arrow kernel (round 6) — same ranked rows as the expression
-    # form, the batch-throughput physical shape
+    # the IVF Arrow form (DGEMM scoring) — same ranked rows as the
+    # expression form, the batch-throughput physical shape
     timed(
         "ann_ivf_search_blas",
-        lambda: state["idx"].search(q, k=10, nprobe=8, arrow_score="blas").count(),
+        lambda: state["idx"].search(q, k=10, nprobe=8, arrow_score=True).count(),
     )
     state["idx"].unpersist()
 

@@ -45,6 +45,7 @@ from .topk import (
     _sqeuclidean_blas_scorer,
     _sqeuclidean_bucket_scorer,
     _sqeuclidean_fold,
+    arrow_switch,
     distance_col,
     knn_window,
     scan_topk,
@@ -727,16 +728,15 @@ class IVFIndex:
         `predicate` (over assigned-corpus columns) is applied BEFORE candidate
         selection — filter-then-top-k semantics.
 
-        ``arrow_score=True`` (sqeuclidean only) swaps the per-candidate HOF
-        distance fold for the Arrow-batched numpy kernel — bit-identical
-        rows (same element-ascending fold, same (dist, id) tie-break), the
-        large-query-batch throughput form; see IVFPQIndex.search(arrow_adc)
-        for the shared rationale. ``arrow_score="blas"`` scores each bucket
-        with one DGEMM instead of the fold (the exact tier's stable
-        expansion): same probe sets, same tie-break, distances equal to
-        last-ulps rather than bit-identical — the fastest batch form (see
-        `_sqeuclidean_blas_scorer`). The expression path stays the default
-        (DuckDB-oracle tier, no driver-side query collect).
+        ``arrow_score=True`` (sqeuclidean only; ``"blas"`` is the same
+        switch, see `topk.arrow_switch`) runs the Arrow form: probes ranked
+        on the driver over the collected query matrix and each probed
+        bucket scored with one DGEMM (`_sqeuclidean_blas_scorer`, the exact
+        tier's stable expansion) — same probe sets and (dist, id)
+        tie-break as the expression form, distances equal to last-ulps
+        rather than bit-identical; the large-query-batch form. The
+        expression path stays the default (DuckDB-oracle tier, no
+        driver-side query collect).
 
         ``adaptive_nprobe=True`` widens the probe count by 1/selectivity under
         a selective predicate (clamped to n_centroids): a filter keeping s of
@@ -759,23 +759,25 @@ class IVFIndex:
         if predicate is not None:
             corpus = corpus.filter(predicate)
 
-        if arrow_score:
-            if arrow_score not in (True, "fold", "blas"):
-                raise ValueError(
-                    f"arrow_score must be False, True/'fold', or 'blas'; "
-                    f"got {arrow_score!r}"
-                )
+        if arrow_switch(arrow_score, "arrow_score"):
             if self.metric != "sqeuclidean":
                 raise NotImplementedError(
-                    "arrow_score implements the sqeuclidean fold; use the "
+                    "arrow_score implements sqeuclidean; use the "
                     f"expression path for metric={self.metric!r}"
                 )
             # probe ranking rides INSIDE the kernel (driver-side numpy over
-            # the collected query matrix, _probe_lists_numpy) — same fold +
+            # the collected query matrix, _probed_scan) — same fold +
             # tie-break as the knn_window job the expression path runs, at
             # none of its interpreted-HOF cost on large query batches
-            scored = self._score_candidates_arrow(
-                queries, nprobe, corpus, k, blas=(arrow_score == "blas")
+            scored = _probed_scan(
+                queries,
+                corpus,
+                "arrow_score",
+                (centroid_matrix(self), nprobe, self.centroids),
+                scorer=_sqeuclidean_blas_scorer,
+                top=k,
+                id_col=self.id_col,
+                data_col=self.vec_col,
             )
             return topk_agg(scored, k)
 
@@ -833,7 +835,7 @@ class IVFIndex:
         radius: float,
         nprobe: int = 8,
         predicate: Column | None = None,
-        arrow_score: bool = False,
+        arrow_score: bool | str = False,
     ) -> DataFrame:
         """Probed radius search: every corpus row within ``radius`` of each
         query, scanning only the nprobe nearest cells — FAISS's public IVF
@@ -852,7 +854,7 @@ class IVFIndex:
         if predicate is not None:
             corpus = corpus.filter(predicate)
 
-        if arrow_score:
+        if arrow_switch(arrow_score, "arrow_score"):
             # the batch-throughput form: probed buckets scored as vectorized
             # blocks inside the kernel's radius mode — the expression path
             # below evaluates the interpreted HOF fold once per CANDIDATE
@@ -904,31 +906,6 @@ class IVFIndex:
             vec_col="centroid",
         ).select("query_id", F.col("neighbor_id").alias("partition_id"))
 
-    def _score_candidates_arrow(
-        self,
-        queries: DataFrame,
-        nprobe: int,
-        corpus: DataFrame,
-        top: int,
-        blas: bool = False,
-    ) -> DataFrame:
-        """Arrow-batched exact scoring of probed buckets (sqeuclidean) —
-        the shared kernel with the element-ascending (x-y)^2 fold as the
-        scorer; bit-identical rows to the expression form (tests assert
-        it). ``blas=True`` swaps in the DGEMM expansion (last-ulps-equal
-        distances, same probe sets/tie-break). Probe ranking is driver-side
-        (`_probed_scan`), same fold/tie-break either way."""
-        return _probed_scan(
-            queries,
-            corpus,
-            "arrow_score",
-            (centroid_matrix(self), nprobe, self.centroids),
-            scorer=_sqeuclidean_blas_scorer if blas else _sqeuclidean_bucket_scorer,
-            top=top,
-            id_col=self.id_col,
-            data_col=self.vec_col,
-        )
-
     def unpersist(self) -> None:
         self.assigned.unpersist()
         if self.sel_sample is not None:
@@ -966,7 +943,9 @@ def search_sharded(
     deployment runs query shards as separate jobs anyway. Works for any
     index whose ``search`` takes (queries, k=..., **kwargs) — IVFIndex
     (``arrow_score=...``) and IVFPQIndex (``rerank=...``, ``arrow_adc=...``)
-    both qualify."""
+    both qualify. The IVF Arrow form scores with DGEMM, whose tiling varies
+    with the batch shape, so a sharded run's distances can differ from a
+    single-shot run's at last-ulps; ids and ranks are the same."""
     # cap probe, not a full count: limit(cap+1) early-exits the scan as soon
     # as cap+1 rows exist, so the common under-cap case never pays a full
     # count job over a (possibly huge) query relation
@@ -1035,9 +1014,14 @@ def plan_filtered_search(
     once per (index, predicate) and the Arrow tiers read the index's
     driver-side `centroid_matrix`, so planning a repeated query launches no
     Spark job.
+
+    ``arrow`` (False / True, ``"blas"`` = True; `topk.arrow_switch`) picks
+    the ann tier's form for either index family: the IVF DGEMM form or the
+    IVFPQ ADC fold form. The exact tier is ``knn_scalable`` either way.
     """
     from .topk import knn_scalable
 
+    arrow = arrow_switch(arrow)
     is_pq = hasattr(index, "codebooks")
     relation = index.coded if is_pq else index.assigned
     can_exact = bool(getattr(index, "has_vectors", True))
@@ -1086,7 +1070,7 @@ def plan_filtered_range_search(
     radius: float,
     nprobe: int = 8,
     predicate: Column | None = None,
-    arrow: bool = False,
+    arrow: bool | str = False,
 ) -> FilteredSearchPlan:
     """Selectivity-routed filtered RANGE search — the radius twin of
     :func:`plan_filtered_search`, same saturation rule.
@@ -1116,6 +1100,7 @@ def plan_filtered_range_search(
     FAISS's IVFPQ range_search rides ADC error bounds we don't claim)."""
     from .range_search import range_scalable, range_window
 
+    arrow = arrow_switch(arrow)
     if predicate is None:
         eff = min(nprobe, index.n_centroids)
         return FilteredSearchPlan(

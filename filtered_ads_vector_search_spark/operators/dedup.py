@@ -1617,6 +1617,7 @@ def _semdedup_assigned(
             .first()["m"]
         )
         if biggest is not None and biggest > max_cluster_rows:
+            release(assigned)
             raise ValueError(
                 f"SemDeDup degenerate clustering: largest cluster has "
                 f"{biggest} rows > max_cluster_rows={max_cluster_rows}; "

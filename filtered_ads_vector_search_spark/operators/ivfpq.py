@@ -37,10 +37,7 @@ tier, pytest-verified recall floors).
 
 from __future__ import annotations
 
-import itertools
-import os
 import time
-from collections import OrderedDict
 from dataclasses import dataclass
 
 import numpy as np
@@ -65,14 +62,15 @@ from .pq import (
     pq_train,
     rotate_vecs,
 )
-from .topk import knn_window, topk_agg
+from .topk import arrow_switch, knn_window, topk_agg
+
 
 def _adc_bucket_scorer(Q, qsel, b, codes, extra):
     """ADC via a per-bucket residual LUT: LUT entries accumulate subspace
     elements in ascending order from 0.0 and ADC sums LUT cells in
     ascending j — the same IEEE doubles as the 0.0D-seeded ascending
     aggregate folds of the expression form."""
-    cent, CB, residual = extra[:3]
+    cent, CB, residual = extra
     m, nc, sd = CB.shape
     qr = Q[qsel] - cent[b][None, :] if residual else Q[qsel]
     S = qr.reshape(len(qsel), m, sd)
@@ -87,92 +85,6 @@ def _adc_bucket_scorer(Q, qsel, b, codes, extra):
         for j in range(1, m):  # ascending-j left fold
             sc = sc + lc[:, j, codes[:, j]]
         return sc
-
-    return chunk
-
-
-# (query-LUT, codebook-norms) payloads per Python worker — the decomposed
-# scorer's T3 is bucket-INDEPENDENT, so every probed bucket (and every TASK
-# of the same search in a reused worker) reuses it. Bounded as a TWO-entry
-# token-keyed LRU: a single-entry clear() thrashed when two DISTINCT
-# concurrent searches interleaved tasks in one reused worker (the replay
-# harness runs mixed workloads) — each search evicted the other per bucket.
-# Two entries cover that interleave while capping worker residency at
-# ~330 MB worst case (each T3 is n_queries x m x n_codes doubles, ~164 MB
-# at 10k x 8 x 256). Keyed on the SEARCH TOKEN stamped into the broadcast
-# payload at plan time (_adc_candidates_arrow): the token identifies one
-# (Q, CB) payload by construction, so a hit is content-true even when
-# pyspark hands each task a freshly-deserialized array object — the earlier
-# id()-pair key relied on allocator address reuse for its cross-task hits
-# (and could in principle alias a *different* payload after GC), while a
-# bare object-identity check (round-8 first fix) missed every cross-task
-# reuse and rebuilt T3 per task, a measured ~1.4x slowdown on the 5M
-# nc=256 headline rows.
-_DECOMP_CACHE: OrderedDict = OrderedDict()
-_DECOMP_CACHE_MAX = 2
-_DECOMP_TOKENS = itertools.count()
-
-
-def _adc_bucket_scorer_decomposed(Q, qsel, b, codes, extra):
-    """Residual ADC via the precomputed-term decomposition (the FAISS
-    IVFPQ 'precomputed tables' identity):
-
-        ||(q - c_b)_j - r||^2 = ||q - c_b||^2_j            (T1, per query x bucket)
-                              + (||r||^2 + 2 c_bj . r)      (T2, per bucket — query-free)
-                              - 2 q_j . r                   (T3, per query — bucket-free)
-
-    The fold scorer rebuilds a per-(query, bucket) LUT in an sd-deep loop —
-    at n_codes=256 that LUT build dominated filtered 5M searches (adaptive
-    widening probes ~200+ buckets, each paying qsel x m x n_codes x sd
-    mult-adds). Here T3 is computed ONCE per worker for the whole query
-    matrix (m small DGEMMs, cached across buckets), T2 is one m x n_codes
-    pass per bucket, and the per-bucket LUT is a single add — ~sd x fewer
-    LUT flops. DECLARED THROUGHPUT FORM, same contract class as IVF's
-    arrow_score='blas': same candidate sets and (score, id) ranks up to
-    last-ulp score ties; the bit-oracled fold form stays the default
-    (tests assert rank/set equality and score closeness)."""
-    cent, CB, residual = extra[:3]
-    # search token stamped at plan time; absent only when a caller invokes
-    # the scorer directly with a bare 3-tuple (tests/ad-hoc) — then every
-    # call recomputes, which is correct just not cached
-    token = extra[3] if len(extra) > 3 else None
-    m, nc, sd = CB.shape
-    cached = _DECOMP_CACHE.get(token) if token is not None else None
-    if cached is not None:
-        _DECOMP_CACHE.move_to_end(token)  # LRU touch
-        T3, rnorm = cached
-    else:
-        S = Q.reshape(Q.shape[0], m, sd)
-        T3 = np.empty((Q.shape[0], m, nc), dtype=np.float64)
-        for j in range(m):
-            T3[:, j, :] = S[:, j, :] @ (-2.0 * CB[j].T)
-        rnorm = np.einsum("jcs,jcs->jc", CB, CB)
-        if token is not None:
-            while len(_DECOMP_CACHE) >= _DECOMP_CACHE_MAX:
-                _DECOMP_CACHE.popitem(last=False)  # evict least-recent
-            _DECOMP_CACHE[token] = (T3, rnorm)
-    if residual:
-        cb_ = cent[b]
-        T2 = rnorm + 2.0 * np.einsum("js,jcs->jc", cb_.reshape(m, sd), CB)
-        qr = Q[qsel] - cb_[None, :]
-        T1 = np.einsum("qs,qs->q", qr, qr)
-    else:
-        T2 = rnorm
-        T1 = np.einsum("qs,qs->q", Q[qsel], Q[qsel])
-    # T2 is query-free, so it collapses to ONE scalar per candidate row —
-    # never a (qsel, m, nc) LUT materialization (measured 4x on the chunk
-    # stage: the per-chunk T3 slice below is ~0.5 MB and L2-resident,
-    # while a materialized per-bucket LUT is tens of MB re-read per chunk)
-    t2row = T2[0, codes[:, 0]].copy()
-    for j in range(1, m):
-        t2row += T2[j, codes[:, j]]
-
-    def chunk(c0, c1):
-        lc = T3[qsel[c0:c1]]
-        sc = lc[:, 0, codes[:, 0]]
-        for j in range(1, m):
-            sc = sc + lc[:, j, codes[:, j]]
-        return sc + (t2row[None, :] + T1[c0:c1, None])
 
     return chunk
 
@@ -216,7 +128,6 @@ class IVFPQIndex:
         t0: float,
         id_col: str,
         vec_col: str,
-        encode_mode: str = "fold",
         rotation: np.ndarray | None = None,
     ) -> "IVFPQIndex":
         # Fused Arrow-batched exact encode (pq_encode_with_codes_arrow):
@@ -239,7 +150,6 @@ class IVFPQIndex:
                 vec_col,
                 centers=centers if residual else None,
                 drop_vec=not keep_vectors,
-                encode_mode=encode_mode,
                 rotation=rotation,
             )
             .repartition(F.col("partition_id"))
@@ -277,14 +187,12 @@ class IVFPQIndex:
         residual: bool = True,
         id_col: str = "vec_id",
         vec_col: str = "embedding",
-        encode_mode: str = "fold",
     ) -> "IVFPQIndex":
         """Deterministic composed index: hash-picked coarse centroids
         (IVFIndex.build_fixed) + arithmetic codebooks (pq.fixed_codebooks).
         Every stage — centroid pick, bucket assignment, residual code
         assignment, probe ranking, ADC scoring, rerank — is reproducible in
-        SQL. ``encode_mode='blas'`` swaps the code-assignment kernel for the
-        declared-throughput DGEMM form (see pq_encode_with_codes_arrow)."""
+        SQL."""
         t0 = time.time()
         ivf = IVFIndex.build_fixed(
             corpus, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col,
@@ -292,7 +200,7 @@ class IVFPQIndex:
         )
         books = fixed_codebooks(dim=dim, m=m, n_codes=n_codes)
         return IVFPQIndex._from_ivf(
-            ivf, books, keep_vectors, residual, t0, id_col, vec_col, encode_mode
+            ivf, books, keep_vectors, residual, t0, id_col, vec_col
         )
 
     @staticmethod
@@ -306,18 +214,13 @@ class IVFPQIndex:
         residual: bool = True,
         id_col: str = "vec_id",
         vec_col: str = "embedding",
-        encode_mode: str = "fold",
         opq: bool = False,
         opq_iters: int = 8,
     ) -> "IVFPQIndex":
         """Quality tier: trained KMeans coarse quantizer + per-subspace
         Lloyd's codebooks. With ``residual=True`` the codebooks are fitted on
         a (bounded, deterministic) sample of RESIDUALS — the distribution the
-        codes will actually quantize. ``encode_mode='blas'`` swaps the
-        code-assignment kernel for the declared-throughput DGEMM form (see
-        pq_encode_with_codes_arrow) — reconstruction-distance-equal codes,
-        ~sd x fewer argmin flops at wide codebooks (the n_codes=256 5M build
-        bottleneck).
+        codes will actually quantize.
 
         ``opq=True`` composes the OPQ pre-transform with the residual tier —
         FAISS's shipping ``OPQ{m},IVF{nc},PQ{m}`` configuration: an
@@ -373,7 +276,7 @@ class IVFPQIndex:
         else:
             books = pq_train(corpus, vec_col=vec_col, m=m, n_codes=n_codes, seed=seed)
         return IVFPQIndex._from_ivf(
-            ivf, books, keep_vectors, residual, t0, id_col, vec_col, encode_mode,
+            ivf, books, keep_vectors, residual, t0, id_col, vec_col,
             rotation=rotation,
         )
 
@@ -480,20 +383,15 @@ class IVFPQIndex:
         ``predicate`` (over coded-corpus columns) applies BEFORE candidate
         selection — filter-then-top-k, same contract as IVFIndex.search.
 
-        ``arrow_adc=True`` (or ``'fold'``) swaps step 3's per-candidate HOF
-        fold for the Arrow-batched numpy kernel (``_adc_candidates_arrow``)
-        — same results (bit-identical fold order, same (dist, id)
-        tie-break), ~5-10x the throughput on large query batches, because
-        HOF expressions run interpreted (~1us/candidate x m) while the
-        kernel scores a whole bucket x query-chunk block per numpy op.
-        ``arrow_adc='decomposed'`` further swaps the per-(query, bucket)
-        LUT build for the precomputed-term decomposition — the query LUT is
-        bucket-independent and cached across every probed bucket — the
-        fastest form under wide adaptive probing at large n_codes (same
-        candidate sets/ranks up to last-ulp score ties; see
-        `_adc_bucket_scorer_decomposed`). The expression path stays the
-        default: it is the DuckDB-oracle tier and has no driver-side query
-        collect.
+        ``arrow_adc=True`` (``"blas"`` is the same switch, see
+        `topk.arrow_switch`) swaps step 3's per-candidate HOF fold for the
+        Arrow-batched numpy kernel (``_adc_candidates_arrow``) — same
+        results (bit-identical fold order, same (dist, id) tie-break),
+        ~5-10x the throughput on large query batches, because HOF
+        expressions run interpreted (~1us/candidate x m) while the kernel
+        scores a whole bucket x query-chunk block per numpy op. The
+        expression path stays the default: it is the DuckDB-oracle tier
+        and has no driver-side query collect.
 
         OPQ indexes (``self.rotation`` set) search in ROTATED space: the
         query side and the centroid side are rotated once (one tiny DGEMM
@@ -530,21 +428,13 @@ class IVFPQIndex:
             q_search = queries
             cent_search = self.centroids
 
-        if arrow_adc:
-            if arrow_adc not in (True, "fold", "decomposed"):
-                raise ValueError(
-                    f"arrow_adc must be False, True/'fold', or 'decomposed'; "
-                    f"got {arrow_adc!r}"
-                )
+        if arrow_switch(arrow_adc, "arrow_adc"):
             # probe ranking rides INSIDE the kernel (driver-side numpy over
             # the collected query matrix) — same fold + tie-break as the
             # knn_window job below, at none of its interpreted-HOF cost on
             # large query batches
             top = max(rerank, k) if rerank else k
-            cand = self._adc_candidates_arrow(
-                q_search, nprobe, corpus, top,
-                decomposed=(arrow_adc == "decomposed"),
-            )
+            cand = self._adc_candidates_arrow(q_search, nprobe, corpus, top)
             return self._finish_from_candidates(cand, queries, corpus, k, rerank)
 
         probes = knn_window(
@@ -640,7 +530,6 @@ class IVFPQIndex:
         nprobe: int,
         corpus: DataFrame,
         top: int,
-        decomposed: bool = False,
     ) -> DataFrame:
         """Arrow-batched ADC scoring — the large-query-batch throughput form.
 
@@ -658,7 +547,7 @@ class IVFPQIndex:
         `topk.scan_topk`); only `_adc_bucket_scorer` is ADC-specific.
 
         Numerically BIT-IDENTICAL to the expression form (same discipline as
-        pq_encode_udf): LUT entries accumulate subspace elements in
+        pq_encode_with_codes_arrow): LUT entries accumulate subspace elements in
         ascending order from 0.0 and ADC sums LUT cells in ascending j — the
         same IEEE doubles as the 0.0D-seeded ascending aggregate folds — and
         candidates are pre-sorted by neighbor_id so the top-k set mask
@@ -686,18 +575,12 @@ class IVFPQIndex:
             corpus,
             "arrow_adc",
             (cent, nprobe, cent_df),
-            scorer=(
-                _adc_bucket_scorer_decomposed if decomposed else _adc_bucket_scorer
-            ),
+            scorer=_adc_bucket_scorer,
             top=top,
             id_col=self.id_col,
             data_col="codes",
             data_dtype="int64",
-            # the pid:counter token uniquely names THIS search's broadcast
-            # payload — the decomposed scorer's per-worker T3 cache keys on
-            # it (content-true across tasks; see _DECOMP_CACHE)
-            extra=(cent, CB, self.residual,
-                   f"{os.getpid()}:{next(_DECOMP_TOKENS)}"),
+            extra=(cent, CB, self.residual),
         )
 
     def _finish_from_candidates(

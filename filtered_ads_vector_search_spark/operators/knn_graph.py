@@ -83,7 +83,6 @@ def knn_graph_bucketed(
     k: int = 5,
     nprobe: int = 4,
     kernel: str = "expr",
-    probe_mode: str = "exact",
 ) -> DataFrame:
     """Approximate k-NN graph over an IVFIndex's assigned corpus (trained or
     fixed build — the fixed build makes the whole pipeline SQL-oracle-able).
@@ -102,18 +101,12 @@ def knn_graph_bucketed(
     the merge input to ~nprobe*k rows per src; distances are last-ulps of
     the expression form (stable ||q||^2-2qc+||c||^2 expansion), ranked rows
     identical under the (dist, neighbor_id) tie-break — the same contract
-    knn_scalable ships under its value oracle.
-
-    ``probe_mode`` (arrow kernel only): 'exact' keeps probe SETS
-    bit-identical to the expression form; 'blas' ranks probes with one
-    DGEMM per scan batch — the corpus-scale form (the exact fold's temp
-    traffic is ~24 bytes x n x n_centroids x dim: 31 TB at 5M x 4096c,
-    measured round 10 as the entire wall time). See ann._with_partition_id.
+    knn_scalable ships under its value oracle. Probes are ranked with the
+    element fold, so probe SETS are bit-identical to the expression form
+    (see ann._with_partition_id).
     """
     if kernel not in ("expr", "arrow"):
         raise ValueError(f"kernel must be 'expr' or 'arrow'; got {kernel!r}")
-    if probe_mode != "exact" and kernel != "arrow":
-        raise ValueError("probe_mode is an arrow-kernel knob")
     nprobe = min(nprobe, index.n_centroids)
     id_col, vec_col = index.id_col, index.vec_col
 
@@ -138,7 +131,7 @@ def knn_graph_bucketed(
         # as vectorized numpy and emits only the n x nprobe survivors (the
         # scale form; probe SETS bit-identical, see ann._with_partition_id).
         probes = _with_partition_id(
-            src, centroid_matrix(index), "q_vec", nprobe=nprobe, mode=probe_mode
+            src, centroid_matrix(index), "q_vec", nprobe=nprobe, mode="exact"
         )
         residents = index.assigned.select(
             F.col(id_col).alias("neighbor_id"), "partition_id", vec_col

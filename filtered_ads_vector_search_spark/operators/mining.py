@@ -97,15 +97,15 @@ def _knn_cos(
         if index.metric == "sqeuclidean":
             # FAISS's actual cosine recipe end to end: on unit vectors
             # d2 = 2 - 2*cos, so the sqeuclidean tier ranks identically to
-            # cosine — which unlocks the DGEMM batch scorer (arrow_score=
-            # 'blas', one BLAS call per scan batch x bucket) in place of
-            # the per-candidate interpreted fold. cos recovers as
+            # cosine — which unlocks the IVF Arrow form (arrow_score=True,
+            # one DGEMM per scan batch x bucket) in place of the
+            # per-candidate interpreted fold. cos recovers as
             # 1 - d2/2. The ivf tier is governed by the overlap-floor
             # contract oracles (bitext_mine_ann / hard_negatives_ann), not
             # value-pinned — ulp-level tie differences vs the cosine
             # expression path are inside the floor's 2x margin; the margin
             # arithmetic itself stays bit-oracled via the exact kernels.
-            out = index.search(qn, k=k, nprobe=nprobe, arrow_score="blas")
+            out = index.search(qn, k=k, nprobe=nprobe, arrow_score=True)
             return out.withColumn(
                 "cos", F.lit(1.0) - F.col("dist") / F.lit(2.0)
             ).drop("dist")

@@ -39,7 +39,6 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -523,98 +522,38 @@ def pq_encode_expr(vec_sql: str, codebooks: Codebooks) -> Column:
     return F.expr(_encode_body_sql(f"`{vec_sql}`", codebooks))
 
 
-def pq_encode_udf(codebooks: Codebooks, residual: bool = False):
-    """Arrow-batched PQ encode — the corpus-materialization scale path.
-
-    Higher-order-function expressions run INTERPRETED in Spark (no
-    whole-stage codegen), costing ~1ms/row for an m x n_codes x sd sweep;
-    at 100 TB that is the build bottleneck. This kernel is numerically
-    BIT-IDENTICAL to pq_encode_expr / pq_encode_residual_expr (and the
-    DuckDB twins), so the oracle contract survives the swap:
-    * (x - y) and (x - y)*(x - y) are single IEEE ops — exact in any order;
-    * the per-subspace distance accumulates one element index per step in
-      ascending order (a zero-initialized running sum) — the same doubles
-      as the 0.0-seeded element-ascending aggregate fold;
-    * np.argmin returns the FIRST minimum — the same tie-break as
-      array_position(d, array_min(d)).
-    Verified end to end by the knn_ivfpq_* / grid_search_ivfpq hash oracles.
-    """
-    CB = np.ascontiguousarray(codebooks, dtype=np.float64)  # (m, n_codes, sd)
-    m, n_codes, sd = CB.shape
-
-    def _codes(V: np.ndarray) -> pd.Series:
-        n = V.shape[0]
-        S = V.reshape(n, m, sd)
-        # sequential accumulation over the subspace-element axis: same
-        # left-to-right fold, (n x m x n_codes) working memory instead of a
-        # (n x m x n_codes x sd) difference cube
-        dist = np.zeros((n, m, n_codes), dtype=np.float64)
-        for i in range(sd):
-            d = S[:, :, None, i] - CB[None, :, :, i]
-            dist += d * d
-        return pd.Series(list(np.argmin(dist, axis=-1).astype("int32")))
-
-    if residual:
-
-        @F.pandas_udf("array<int>")
-        def encode(vecs: pd.Series, cents: pd.Series) -> pd.Series:
-            V = np.array(vecs.tolist(), dtype=np.float64)
-            C = np.array(cents.tolist(), dtype=np.float64)
-            return _codes(V - C)
-
-    else:
-
-        @F.pandas_udf("array<int>")
-        def encode(vecs: pd.Series) -> pd.Series:
-            return _codes(np.array(vecs.tolist(), dtype=np.float64))
-
-    return encode
-
-
 def pq_encode_with_codes_arrow(
     df,
     codebooks: Codebooks,
     vec_col: str,
     centers: np.ndarray | None = None,
     drop_vec: bool = False,
-    encode_mode: str = "fold",
     rotation: np.ndarray | None = None,
 ):
     """``df`` + a ``codes array<int>`` column in ONE mapInArrow pass — the
-    corpus-materialization scale path. Same bit-identical per-subspace fold
-    and first-minimum tie-break as `pq_encode_udf` (and the expression /
-    DuckDB twins); only the data movement differs:
+    corpus-materialization scale path, and the one Arrow PQ encode.
 
+    Numerically BIT-IDENTICAL to pq_encode_expr / pq_encode_residual_expr
+    (and the DuckDB twins), so the oracle contract survives the swap:
+    * (x - y) and (x - y)*(x - y) are single IEEE ops — exact in any order;
+    * the per-subspace distance accumulates one element index per step in
+      ascending order (a zero-initialized running sum) — the same doubles
+      as the 0.0-seeded element-ascending aggregate fold;
+    * np.argmin returns the FIRST minimum — the same tie-break as
+      array_position(d, array_min(d)).
+
+    Data movement:
     * the vector column is reshaped straight from the Arrow values buffer
       (no per-row ``tolist()`` — exact, primitive upcasts);
     * residual encoding (``centers`` given) reads the batch's
-      ``partition_id`` and subtracts the broadcast centroid matrix row,
-      replacing BOTH the broadcast centroid join and the per-row centroid
-      list decode the pandas_udf form paid (x - y is a single IEEE op on
-      the same doubles, so the residual is bit-identical to the joined
+      ``partition_id`` and subtracts the broadcast centroid matrix row
+      instead of joining the centroid relation (x - y is a single IEEE op
+      on the same doubles, so the residual is bit-identical to the joined
       zip_with form);
-    * codes are emitted as one flat int32 buffer + offsets, not a pandas
-      Series of Python lists.
+    * codes are emitted as one flat int32 buffer + offsets.
 
     ``drop_vec=True`` omits the vector column from the output (codes-only
     artifact). All other columns pass through untouched.
-
-    ``encode_mode`` picks the per-subspace argmin kernel:
-
-    * ``"fold"`` (default, the oracle tier) — the bit-exact elementwise
-      left fold above: an sd-deep loop accumulating ``(x-c)^2`` per code,
-      the same IEEE doubles as the SQL/DuckDB twins. At n_codes=256 this
-      256-way elementwise argmin dominated the 5M build (141 s vs the
-      reference's worst 59 s build).
-    * ``"blas"`` — DECLARED THROUGHPUT FORM, the encode-side twin of the
-      search kernels' ``arrow_score='blas'`` / ``arrow_adc='decomposed'``
-      contract class: per subspace, ``argmin_c(||c||^2 - 2 r.c)`` as ONE
-      DGEMM over the batch (the additive ``||r||^2`` term is code-free so
-      it never changes the argmin). Distances differ from the fold at
-      last-ulp, so a tie at the fold's minimum may pick a different (but
-      reconstruction-distance-EQUAL) code — tests assert per-(row,
-      subspace) reconstruction-distance equality, the scorer discipline.
-      ``np.argmin`` keeps the fold's first-minimum tie-break.
 
     ``rotation`` (OPQ): an orthogonal (dim, dim) matrix applied to the
     vector (after the residual subtraction, matching opq_train's
@@ -623,8 +562,6 @@ def pq_encode_with_codes_arrow(
 
     from .topk import _arrow_vectors
 
-    if encode_mode not in ("fold", "blas"):
-        raise ValueError(f"encode_mode must be 'fold' or 'blas', got {encode_mode!r}")
     ROT = (
         np.ascontiguousarray(rotation, dtype=np.float64)
         if rotation is not None
@@ -632,9 +569,6 @@ def pq_encode_with_codes_arrow(
     )
     CB = np.ascontiguousarray(codebooks, dtype=np.float64)  # (m, n_codes, sd)
     m, n_codes, sd = CB.shape
-    # (m, n_codes) per-code squared norms for the blas form; tiny, computed
-    # once on the driver and shipped in the closure
-    CNORM = np.einsum("jcs,jcs->jc", CB, CB) if encode_mode == "blas" else None
     CT = np.ascontiguousarray(centers, dtype=np.float64) if centers is not None else None
 
     keep = [f for f in df.schema.fields if not (drop_vec and f.name == vec_col)]
@@ -661,23 +595,14 @@ def pq_encode_with_codes_arrow(
                 V = V @ ROT
             n = V.shape[0]
             S = V.reshape(n, m, sd)
-            if CNORM is not None:
-                # blas form: one (n x sd)@(sd x n_codes) DGEMM per subspace;
-                # peak temporary is one (n, n_codes) float64 slab (~20 MB at
-                # the 10k Arrow batch ceiling x 256 codes), not the fold's
-                # (n, m, n_codes) cube
-                codes = np.empty((n, m), dtype=np.int32)
-                for j in range(m):
-                    G = S[:, j, :] @ CB[j].T
-                    codes[:, j] = np.argmin(CNORM[j][None, :] - 2.0 * G, axis=1)
-            else:
-                # sequential accumulation over the subspace-element axis: the
-                # same left-to-right fold as pq_encode_udf / the SQL twin
-                dist = np.zeros((n, m, n_codes), dtype=np.float64)
-                for i in range(sd):
-                    d = S[:, :, None, i] - CB[None, :, :, i]
-                    dist += d * d
-                codes = np.argmin(dist, axis=-1).astype(np.int32)  # first minimum
+            # sequential accumulation over the subspace-element axis: same
+            # left-to-right fold as the SQL twin, (n x m x n_codes) working
+            # memory instead of a (n x m x n_codes x sd) difference cube
+            dist = np.zeros((n, m, n_codes), dtype=np.float64)
+            for i in range(sd):
+                d = S[:, :, None, i] - CB[None, :, :, i]
+                dist += d * d
+            codes = np.argmin(dist, axis=-1).astype(np.int32)  # first minimum
             arr = pa.ListArray.from_arrays(
                 pa.array(np.arange(0, (n + 1) * m, m, dtype=np.int32)),
                 pa.array(codes.ravel()),

@@ -20,10 +20,12 @@ Two physical forms, one logical semantics:
   materialized.
 
 One Arrow scan-and-top-k kernel, one top-k merge: every Arrow search form
-(exact k-NN and range, IVF fold/BLAS/range, IVFPQ ADC, LSH, the blockwise
+(exact k-NN and range, IVF top-k and range, IVFPQ ADC, LSH, the blockwise
 and k-NN-graph cogroups) runs ``scan_topk`` / ``topk_group`` and supplies
 only its candidate groups and its scorer; every per-query top-k merge is
-``topk_agg``, whose one switch is whether candidates can repeat.
+``topk_agg``, whose one switch is whether candidates can repeat. An index
+family has at most one Arrow form, picked by one on/off switch
+(``arrow_switch``).
 
 Filter-before-top-k: both forms take the corpus AFTER predicate application;
 callers filter first (a post-filter would return <k rows and wrong recall —
@@ -53,6 +55,18 @@ Metric = Literal["sqeuclidean", "inner_product", "cosine", "hamming"]
 # reference's 1-10k query sets, far below anything corpus-shaped. The one
 # query cap: ann.search_sharded shards batches past it.
 MAX_BROADCAST_QUERIES = 100_000
+
+
+def arrow_switch(value, name: str = "arrow") -> bool:
+    """The one meaning of every search form's Arrow switch (IVF
+    ``arrow_score``, IVFPQ ``arrow_adc``, the planners' ``arrow``):
+    ``False`` runs the expression form, ``True`` the family's one Arrow
+    form. ``"blas"`` is accepted as a spelling of ``True``; any other
+    value raises."""
+    if value is not False and value is not True and value != "blas":
+        raise ValueError(f"{name} must be False, True or 'blas'; got {value!r}")
+    return value is not False
+
 
 __all__ = [
     "split_queries",
@@ -322,8 +336,9 @@ def _sqeuclidean_blas_scorer(Q, qsel, _key, V, _extra):
     """||q||^2 - 2 q.v + ||v||^2 via one DGEMM — the stable expansion of
     `_np_distances`, ~d times faster than the element fold at 64 dims. The
     summation order differs from the fold, so doubles agree only to
-    last-ulps — this is the THROUGHPUT form (`arrow_score="blas"`, the
-    exact tiers), not the bit-identity form. The top-k SET and ranks still
+    last-ulps — this is the scorer of the IVF Arrow form
+    (``IVFIndex.search(arrow_score=True)``) and of the exact tiers, not a
+    bit-identity form. The top-k SET and ranks still
     match the expression path unless two rows land within ~1e-12 relative
     of a tie — including EXACT-duplicate rows: DGEMM's internal blocking
     can give identical input columns doubles one ulp apart across a block

@@ -1949,22 +1949,19 @@ def _pq_codes_sql() -> str:
 
 
 def _pq_codes_blas_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The declared-throughput PQ encode (encode_mode='blas': one DGEMM per
-    subspace computing argmin(||c||^2 - 2 r.c), operators/pq.py) under its
-    CONTRACT oracle: the chosen codes' RECONSTRUCTION DISTANCE must equal
-    the bit-exact fold encoder's per row — DGEMM distances sit last-ulps
-    off the fold's, so a tie at the minimum may pick a different (but
-    reconstruction-distance-equal) code, which is why the oracle compares
-    distances, not code values (the same contract class as ann_ivf's
-    recall floor and the blas/decomposed search scorers). Spark emits each
-    row's blas-code reconstruction distance via the exact element-ascending
-    fold; DuckDB computes the fold encoder's codes and THEIR reconstruction
-    distance — equal iff blas always lands on an argmin."""
+    """The one Arrow PQ encode (`pq_encode_with_codes_arrow`, the
+    element-ascending fold in one mapInArrow pass, operators/pq.py) checked
+    through each row's RECONSTRUCTION DISTANCE: Spark emits the distance
+    from each vector to the reconstruction of its Arrow-encoded codes via
+    the exact element-ascending fold; DuckDB computes the SQL fold
+    encoder's codes and THEIR reconstruction distance — equal iff the Arrow
+    encode always lands on an argmin. (The name predates this form and is
+    kept for the query order.)"""
     from .operators import pq as PQ
 
     emb = _tbl(spark, sf_dir, "embeddings")
     books = _pq_books()
-    coded = PQ.pq_encode_with_codes_arrow(emb, books, "embedding", encode_mode="blas")
+    coded = PQ.pq_encode_with_codes_arrow(emb, books, "embedding")
     # per-subspace element-ascending folds summed left-to-right across
     # subspaces — the SAME association as the DuckDB twin's
     # pq_adc_dist_sql chain, so equal codes give identical doubles
@@ -2040,13 +2037,12 @@ def _knn_ivfpq_rerank_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _knn_ivfpq_decomposed_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The decomposed-ADC throughput kernel (arrow_adc='decomposed' —
-    bucket-independent precomputed query LUT, operators/ivfpq.py
-    `_adc_bucket_scorer_decomposed`) on the SAME fixed build and knobs as
-    knn_ivfpq_rerank: the exact rerank re-scores the shortlist, so the
-    output is value-checkable against the identical SQL — the oracle pins
-    that the decomposition changes scoring algebra at the ulp level only,
-    never the returned (ids, ranks, distances)."""
+    """The Arrow ADC form (arrow_adc=True — the per-bucket LUT fold,
+    operators/ivfpq.py `_adc_bucket_scorer`) on the SAME fixed build and
+    knobs as knn_ivfpq_rerank, so the output is value-checked against the
+    identical SQL: the Arrow form returns the expression form's (ids,
+    ranks, distances). (The name predates this form and is kept for the
+    query order.)"""
     from .operators.ivfpq import IVFPQIndex
 
     emb = _tbl(spark, sf_dir, "embeddings")
@@ -2055,8 +2051,7 @@ def _knn_ivfpq_decomposed_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         c, n_centroids=IVF_FIXED_CENTROIDS, m=_PQ_M, n_codes=_PQ_CODES
     )
     out = idx.search(
-        q, k=K, nprobe=_IVFPQ_NPROBE, rerank=_IVFPQ_RERANK,
-        arrow_adc="decomposed",
+        q, k=K, nprobe=_IVFPQ_NPROBE, rerank=_IVFPQ_RERANK, arrow_adc=True
     )
     return out.select(
         "query_id",
@@ -2673,11 +2668,13 @@ def _knn_scalable_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _knn_sharded_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sharded search driver (search_sharded) forced PAST a deliberately
     tiny query-collect cap: the query batch splits into hash shards, each
-    searched as its own Arrow-kernel job and unioned. Full-probe fixed IVF
-    makes the union equal the exact filtered kNN, so the WHOLE driver loop
-    — cap probe, deterministic shard split, per-shard kernel search, union
-    — is value-checked against the same SQL as the exact tier (reference
-    batch drivers: utils_grid_search.py:586-611)."""
+    searched as its own IVF Arrow-form job (DGEMM scoring) and unioned.
+    Full-probe fixed IVF makes the union equal the exact filtered kNN, so
+    the WHOLE driver loop — cap probe, deterministic shard split,
+    per-shard kernel search, union — is checked against the same SQL as
+    the exact tier. Output is ids and ranks only, like knn_blockwise and
+    knn_scalable, whose DGEMM distances also differ from the SQL fold at
+    last-ulps (reference batch drivers: utils_grid_search.py:586-611)."""
     from .operators.ann import IVFIndex, search_sharded
 
     emb = _tbl(spark, sf_dir, "embeddings")
@@ -5797,10 +5794,10 @@ QUERIES = {
 # evidence left. Round 8 leads with (a) queries NEW or code-touched this
 # round — pq_codes_blas (new: the declared-throughput DGEMM encode's
 # reconstruction-distance contract oracle), knn_ivfpq_decomposed (the
-# _DECOMP_CACHE identity-validated keying fix), ann_ivf + knn_sharded (the
+# ADC kernel's cache keying fix), ann_ivf + knn_sharded (the
 # probe-budget chunk-size fix in ann.py), the three BMP/WAV multimodal
 # queries (codecs.py assert->raise hardening), and knn_ivfpq_fixed /
-# knn_ivfpq_rerank (the encode_mode plumbing through ivfpq builds) — then
+# knn_ivfpq_rerank (the encode option plumbing through ivfpq builds) — then
 # (b) ALL 41 r5-vintage queries. 9 + 41 = 50; after this round no query's
 # latest driver-green is older than r6. (grid_search_ivfpq and the two
 # knn_filtered_auto_* queries were also behind touched files but are
@@ -5875,8 +5872,8 @@ QUERIES = {
 # hatch + memory-capped restart concurrency AND sampling.py's sliced
 # maxResultSize retry) — then (b) ALL 47 r6-vintage queries. 3 + 47 = 50;
 # after this round no query's latest driver-green is older than r7.
-# (knn_ivfpq_decomposed is also behind touched code — the _DECOMP_CACHE
-# 2-entry LRU — but is r8-green and pytest-pinned, so it yields its slot.)
+# (knn_ivfpq_decomposed is also behind touched code — the ADC kernel
+# cache's 2-entry LRU — but is r8-green and pytest-pinned, so it yields its slot.)
 # The seven range-search/k-NN-graph queries NEW this round ride BEHIND the
 # 50-slot prefix (the r6-vintage cohort takes priority per the r8 verdict);
 # they are value-oracled in the full registry run (scripts/
@@ -6276,7 +6273,7 @@ ORACLES: dict[str, str] = {
     "grid_search_ivf": _grid_search_ivf_sql(),
     "knn_ivfpq_fixed": _knn_ivfpq_fixed_sql(),
     "knn_ivfpq_rerank": _knn_ivfpq_rerank_sql(),
-    # decomposed ADC kernel, same fixed build + knobs + exact rerank -> same SQL
+    # Arrow ADC form, same fixed build + knobs + exact rerank -> same SQL
     "knn_ivfpq_decomposed": _knn_ivfpq_rerank_sql(),
     "grid_search_ivfpq": _grid_search_ivfpq_sql(),
     "knn_scalable_filtered": "SELECT query_id, neighbor_id, rnk FROM ("

@@ -8,9 +8,11 @@ in the same pandas dtype as Spark's type, so oracles can be CAST-fixed
 before the driver sees them.
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb
 

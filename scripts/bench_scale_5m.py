@@ -24,7 +24,7 @@ bit-identical — both contracts asserted in tests):
 
 Writes SCALE_BENCH_5M.json at the repo root and prints it as ONE line.
 
-Inputs: /root/repo/scale_data_5m/vectors.parquet — generate with
+Inputs: scale_data_5m/vectors.parquet under the repository root — generate with
   python -c "from scripts.gen_scale_data import ..."  (see __main__ below:
   passing --gen generates it first via gen_scale_data.gen_vectors).
 """
@@ -37,7 +37,8 @@ import resource
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
@@ -52,7 +53,7 @@ from filtered_ads_vector_search_spark.operators.ivfpq import IVFPQIndex
 from filtered_ads_vector_search_spark.operators.recall import recall_at_k
 from filtered_ads_vector_search_spark.session import get_spark
 
-DATA = os.environ.get("SPARK_GRAFT_5M_DIR", "/root/repo/scale_data_5m")
+DATA = os.environ.get("SPARK_GRAFT_5M_DIR", os.path.join(ROOT, "scale_data_5m"))
 # env-overridable so the script can be smoke-tested on the 1M corpus
 N_VECTORS = int(os.environ.get("SPARK_GRAFT_5M_N", 5_010_000))  # reference corpus size
 N_QUERIES = int(os.environ.get("SPARK_GRAFT_5M_Q", 10_000))     # reference query batch
@@ -189,7 +190,7 @@ def main() -> None:
 
     qps_row(
         "ivf", None,
-        lambda: loaded.search(q, k=K, nprobe=NPROBE, arrow_score="blas"),
+        lambda: loaded.search(q, k=K, nprobe=NPROBE, arrow_score=True),
         truth,
         {"n_centroids": IVF_CENTROIDS, "nprobe": NPROBE, "kernel": "arrow-blas"},
     )
@@ -199,7 +200,7 @@ def main() -> None:
             "ivf", fname,
             lambda pred=pred: loaded.search(
                 q, k=K, nprobe=NPROBE, predicate=pred,
-                adaptive_nprobe=True, arrow_score="blas",
+                adaptive_nprobe=True, arrow_score=True,
             ),
             truths_f[fname],
             {"n_centroids": IVF_CENTROIDS, "nprobe": NPROBE, "adaptive": True,
@@ -265,7 +266,7 @@ def main() -> None:
     high_pred = FL.named_filter_predicate("high_rated")
     t0 = time.time()
     plan_h = plan_filtered_search(
-        loaded, q, k=K, nprobe=NPROBE, predicate=high_pred, arrow="blas"
+        loaded, q, k=K, nprobe=NPROBE, predicate=high_pred, arrow=True
     )
     route_sec_h = round(time.time() - t0, 3)
     # at the anchor settings (512 centroids) ceil(32/0.156) ~ 206 < 512, so
@@ -297,7 +298,7 @@ def main() -> None:
 
     rep = replay_throughput_concurrent(
         spark,
-        lambda: loaded.search(q, k=K, nprobe=NPROBE, arrow_score="blas"),
+        lambda: loaded.search(q, k=K, nprobe=NPROBE, arrow_score=True),
         run_time_s=REPLAY_WINDOW_S,
         workers=2,
         rows_per_batch=N_QUERIES,
@@ -309,7 +310,7 @@ def main() -> None:
         lambda: loaded.search(
             q, k=K, nprobe=NPROBE,
             predicate=FL.named_filter_predicate("low_rated"),
-            adaptive_nprobe=True, arrow_score="blas",
+            adaptive_nprobe=True, arrow_score=True,
         ),
         run_time_s=REPLAY_WINDOW_S,
         workers=2,
@@ -341,7 +342,7 @@ def main() -> None:
             pt = replay_throughput_concurrent(
                 spark,
                 lambda q_bs=q_bs: loaded.search(
-                    q_bs, k=K, nprobe=NPROBE, arrow_score="blas"
+                    q_bs, k=K, nprobe=NPROBE, arrow_score=True
                 ),
                 run_time_s=curve_window,
                 workers=workers,
@@ -410,7 +411,7 @@ def main() -> None:
                     fname,
                     lambda g_idx=g_idx, pred=pred, np_=np_: g_idx.search(
                         q_truth, k=K, nprobe=np_, predicate=pred,
-                        adaptive_nprobe=pred is not None, arrow_score="blas",
+                        adaptive_nprobe=pred is not None, arrow_score=True,
                     ),
                     truth if fname is None else truths_f[fname],
                     {
@@ -453,27 +454,20 @@ def main() -> None:
     # m=8 n_codes=256 build) and 2x the per-query LUT/ADC cost for recall
     # already saturated at 1.0 by m=8 — at 5M it would add ~15 min for a
     # strictly dominated Pareto point.
-    # nc=256 builds run the DECLARED-THROUGHPUT encode (encode_mode='blas',
-    # one DGEMM per subspace instead of the 256-way elementwise fold) — the
-    # fold encode is the oracle tier and stays the default everywhere else;
-    # at this codebook width it cost 141 s at the anchor (2.4x the
-    # reference's slowest 59 s build) purely in the argmin. Codes are
-    # reconstruction-distance-equal (test_pq.py pins the contract).
+    # nc=256 builds run the one Arrow encode (the bit-exact elementwise
+    # fold); at this codebook width the argmin dominates the build.
     t0 = time.time()
     best_pq = IVFPQIndex.build(
-        c, n_centroids=IVF_CENTROIDS, m=8, n_codes=256, seed=42,
-        encode_mode="blas",
+        c, n_centroids=IVF_CENTROIDS, m=8, n_codes=256, seed=42
     )
     timings["ivfpq_build_512c_m8_nc256_5m"] = round(time.time() - t0, 3)
-    extras["ivfpq_nc256_encode_mode"] = "blas"
     ivfpq_family(best_pq, m=8, n_codes=256)
     # ... and the m=4 half-budget point the reference's grid also walks
     # (VERDICT r7 item 5): same coarse layout, half the code bytes — the
     # Pareto question is whether recall holds at half the LUT cost.
     t0 = time.time()
     m4_pq = IVFPQIndex.build(
-        c, n_centroids=IVF_CENTROIDS, m=4, n_codes=256, seed=42,
-        encode_mode="blas",
+        c, n_centroids=IVF_CENTROIDS, m=4, n_codes=256, seed=42
     )
     timings["ivfpq_build_512c_m4_nc256_5m"] = round(time.time() - t0, 3)
     ivfpq_family(m4_pq, m=4, n_codes=256)
@@ -484,21 +478,18 @@ def main() -> None:
     # the codebook-budget winner (m=8, n_codes=256) benched at the FULL 10k
     # batch — the claimed recall >= 0.90 QPS points. rerank stays 100 on
     # filtered rows (widened probing x rerank bounds the merge input; see
-    # the RERANK note above). These headline rows run the DECOMPOSED ADC
-    # scorer (the declared throughput form — bucket-independent query LUT,
-    # blas-mode contract class; 1.7x the fold on wide filtered probing);
-    # the grid above stays on the bit-oracled fold, and one fold control
-    # row records the delta inside the artifact itself. min-of-3 (VERDICT
-    # r8 item 1): these rows are the host-noise-sensitive ones — three
-    # samples let a future judge see convergence without an A/B.
+    # the RERANK note above). These headline rows run the Arrow ADC form
+    # (the bit-oracled fold). min-of-3 (VERDICT r8 item 1): these rows are
+    # the host-noise-sensitive ones — three samples let a future judge see
+    # convergence without an A/B.
     qps_row(
         "ivfpq_nc256", None,
         lambda: best_pq.search(
-            q, k=K, nprobe=NPROBE, rerank=RERANK, arrow_adc="decomposed"
+            q, k=K, nprobe=NPROBE, rerank=RERANK, arrow_adc=True
         ),
         truth,
         {"n_centroids": IVF_CENTROIDS, "m": 8, "n_codes": 256,
-         "nprobe": NPROBE, "rerank": RERANK, "kernel": "arrow-decomposed"},
+         "nprobe": NPROBE, "rerank": RERANK, "kernel": "arrow"},
         resample=3,
     )
     for fname in ("low_rated", "high_rated"):
@@ -507,27 +498,14 @@ def main() -> None:
             "ivfpq_nc256", fname,
             lambda pred=pred: best_pq.search(
                 q, k=K, nprobe=NPROBE, rerank=RERANK, predicate=pred,
-                adaptive_nprobe=True, arrow_adc="decomposed",
+                adaptive_nprobe=True, arrow_adc=True,
             ),
             truths_f[fname],
             {"n_centroids": IVF_CENTROIDS, "m": 8, "n_codes": 256,
              "nprobe": NPROBE, "rerank": RERANK, "adaptive": True,
-             "kernel": "arrow-decomposed"},
+             "kernel": "arrow"},
             resample=3,
         )
-    qps_row(
-        "ivfpq_nc256_fold", "high_rated",
-        lambda: best_pq.search(
-            q, k=K, nprobe=NPROBE, rerank=RERANK,
-            predicate=FL.named_filter_predicate("high_rated"),
-            adaptive_nprobe=True, arrow_adc=True,
-        ),
-        truths_f["high_rated"],
-        {"n_centroids": IVF_CENTROIDS, "m": 8, "n_codes": 256,
-         "nprobe": NPROBE, "rerank": RERANK, "adaptive": True,
-         "kernel": "arrow-fold-control", "control": True},
-        resample=3,
-    )
     best_pq.unpersist()
 
     # best-per-(run, filter) summary CSV in the reference's
@@ -537,7 +515,7 @@ def main() -> None:
     import csv
 
     summary_path = os.environ.get(
-        "SPARK_GRAFT_5M_SUMMARY", "/root/repo/all_runs_summary_5m.csv"
+        "SPARK_GRAFT_5M_SUMMARY", os.path.join(ROOT, "all_runs_summary_5m.csv")
     )
     grid_minutes = round(extras["grid_seconds"] / 60.0, 3)
     with open(summary_path, "w", newline="") as fh:
@@ -597,7 +575,9 @@ def main() -> None:
     }
     line = json.dumps(result)
     print(line)
-    out_path = os.environ.get("SPARK_GRAFT_5M_OUT", "/root/repo/SCALE_BENCH_5M.json")
+    out_path = os.environ.get(
+        "SPARK_GRAFT_5M_OUT", os.path.join(ROOT, "SCALE_BENCH_5M.json")
+    )
     with open(out_path, "w") as f:
         f.write(line + "\n")
     spark.stop()

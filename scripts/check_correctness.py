@@ -2,10 +2,12 @@
 registry query on Spark AND its DuckDB oracle at sf0.01; compare row count,
 column names, and order-insensitive values (columns sorted by name)."""
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb
 

@@ -1,8 +1,10 @@
 """Dev script: verify every Spark<->DuckDB portability assumption on real testdata."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb
 from pyspark.sql import functions as F

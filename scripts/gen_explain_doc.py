@@ -3,9 +3,11 @@
 Usage: python scripts/gen_explain_doc.py [sf_dir]
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from filtered_ads_vector_search_spark import registry
 from filtered_ads_vector_search_spark.operators import filters as FL
@@ -41,7 +43,7 @@ NOTES = {
 - The right row rides along as a struct column, so payload width never multiplies the sort key data.""",
     "IVF search (Arrow DGEMM kernel form)": """\
 - The probed-bucket scan carries a STATIC `partition_id IN (...)` filter (probe ranking happens driver-side over the collected query matrix — bounded by the kernel's 100k-query cap; `search_sharded` handles larger batches), so pruning is visible in the scan, not deferred to a runtime join.
-- ONE `MapInArrow score(...)` node scores each bucket with a single DGEMM over the flat-buffer-decoded vector matrix (`arrow_score="blas"`; `True` keeps the bit-identity element fold) and emits per-bucket local top-k partials.
+- ONE `MapInArrow score(...)` node scores each bucket with a single DGEMM over the flat-buffer-decoded vector matrix (`arrow_score=True`, the IVF family's one Arrow form: same ids and ranks as the expression form, distances to last-ulps) and emits per-bucket local top-k partials.
 - The shared per-query `WindowGroupLimit` merge re-ranks the partials by (dist, neighbor_id) — the same tail as every other top-k form. 5M x 10k queries: 125 s (HOF expression era) -> 15.3 s on this plan.""",
     "IVFPQ search (residual ADC + exact rerank)": """\
 - The probe list carries one residual LUT per (query, probed bucket) — computed on the broadcast side; the coded corpus enters through ONE `BroadcastHashJoin` on `partition_id` and only ever streams.
@@ -65,6 +67,36 @@ NOTES = {
 }
 
 
+FORMS = """\
+| Family | Form | Registry | perfbench | Package | Tests |
+|---|---|---|---|---|---|
+| Exact top-k | `knn_window` (expression) | `knn_exact`, `knn_filtered_*`, recall truths | — | IVF/IVFPQ expression probe ranking, graph search | `test_topk`, most recall tests |
+| Exact top-k | `knn_scalable` (Arrow, DGEMM) | `knn_scalable_filtered`, `knn_filtered_auto_exact` | `search_batch` exact route | planners' exact tier, grid search | `test_topk`, `test_planner` |
+| Exact top-k | `knn_blockwise` (Arrow cogroup) | `knn_blockwise` | — | — | `test_topk` |
+| IVF top-k | `IVFIndex.search` (expression) | `ann_ivf`, `ann_ivf_fixed`, `grid_search_ivf`, `knn_filtered_auto_ann` | — | grid search, mining (cosine index) | `test_recall_ann`, `test_planner` |
+| IVF top-k | `search(arrow_score=True)` (Arrow, DGEMM) | `knn_sharded` | `search_batch` ann route | mining (`bitext_mine_ann`, `hard_negatives_ann`) | `test_recall_ann`, `test_planner` |
+| IVF range | `range_search` (expression) | `range_search_ivf`, `range_filtered_auto_ann` | — | range planner | `test_range_graph` |
+| IVF range | `range_search(arrow_score=True)` (Arrow, element fold) | — | — | range planner | `test_range_graph`, `test_recall_ann` |
+| Exact range | `range_window` / `range_scalable` | `range_search_exact`, `range_search_filtered`, `range_filtered_auto` / `range_search_scale`, `range_density` | — | range planner | `test_range_graph`, `test_recall_ann` |
+| IVFPQ | `IVFPQIndex.search` (expression ADC) | `knn_ivfpq_fixed`, `knn_ivfpq_rerank`, `grid_search_ivfpq` | — | grid search | `test_recall_ann`, `test_planner` |
+| IVFPQ | `search(arrow_adc=True)` (Arrow ADC fold) | `knn_ivfpq_decomposed` | — | — | `test_recall_ann`, `test_planner` |
+| PQ encode | `pq_encode_expr` / `pq_encode_residual_expr` | `pq_codes`, `knn_pq_adc` | — | — | `test_pq` |
+| PQ encode | `pq_encode_with_codes_arrow` (Arrow fold) | `pq_codes_blas`, OPQ queries | `ingest_build` does not build IVFPQ | every IVFPQ build and append | `test_pq`, `test_empty_inputs` |
+| LSH | `search(kernel="expr")` | — | — | — | `test_lsh` |
+| LSH | `search(kernel="arrow")` (default) | `ann_lsh`, `grid_search_lsh` | — | grid search | `test_lsh`, `test_recall_ann` |
+| k-NN graph | `knn_graph_window` / `knn_graph_bucketed(kernel="expr")` | `knn_graph_exact` / `knn_graph_fixed` | — | — | `test_range_graph`, `test_graph_search` |
+| k-NN graph | `knn_graph_bucketed(kernel="arrow")` | `graph_search_recall` | — | — | `test_range_graph` |
+| SemDeDup | `semdedup_keep(arrow_kernel=False/True)` | `semdedup_keep` (expression) | — | — | `test_quality_pii` |
+
+Kept on purpose although they add a form: `knn_blockwise` is the only exact
+form that runs past the query-collect cap; LSH `kernel="expr"` is the only
+form for hamming and the reference the Arrow form is tested against;
+`semdedup_keep` keeps its two forms until it moves onto `topk_group`.
+Deleted: the IVF element-fold top-k form, the IVFPQ decomposed-LUT ADC
+form and its per-worker cache, the pandas-UDF PQ encode, the DGEMM PQ
+encode, and the k-NN graph's DGEMM probe ranking.""".splitlines()
+
+
 def _ivfpq_search(c, q, arrow=False):
     from filtered_ads_vector_search_spark.operators.ivfpq import IVFPQIndex
 
@@ -76,7 +108,10 @@ def _ivfpq_search(c, q, arrow=False):
 def _lsh_search(c, q):
     from filtered_ads_vector_search_spark.operators.lsh import LSHIndex
 
-    return LSHIndex.build(c, n_bits=4, n_tables=4, seed=42).search(q, k=10)
+    # the expression form: the notes below describe its join + fused rank
+    return LSHIndex.build(c, n_bits=4, n_tables=4, seed=42).search(
+        q, k=10, kernel="expr"
+    )
 
 
 def main() -> None:
@@ -91,7 +126,7 @@ def main() -> None:
         "Filtered exact top-k (window form)": TK.knn_window(q, ch, k=10),
         "IVF probe search": idx.search(q, k=10, nprobe=4),
         "IVF search (Arrow DGEMM kernel form)": idx.search(
-            q, k=10, nprobe=4, arrow_score="blas"
+            q, k=10, nprobe=4, arrow_score=True
         ),
         "TPC-H Q5 join tree": registry.QUERIES["tpch_q5"](spark, SF),
         "TPC-H Q6 pushdown": registry.QUERIES["tpch_q6"](spark, SF),
@@ -109,7 +144,7 @@ def main() -> None:
         "The engine's scale properties are plan properties. `tests/test_plan_properties.py`",
         "asserts the load-bearing ones; this document shows the actual plans.",
         "",
-        "Five engine-wide rules shape every plan below:",
+        "Six engine-wide rules shape every plan below:",
         "",
         "- **Parallelism comes from the data.** A scan runs one task per input split;",
         "  a shuffle runs `spark.sql.shuffle.partitions` tasks (AQE coalesces them).",
@@ -147,18 +182,26 @@ def main() -> None:
         '  at most 32 buckets loads with no Spark job; a directory without a',
         '  manifest is refused with a `ValueError` naming it.',
         '- **One Arrow scan-and-top-k kernel, one top-k merge (`topk_agg`).** Every',
-        '  Arrow search form (exact k-NN and range, IVF fold/BLAS/range, IVFPQ ADC,',
+        '  Arrow search form (exact k-NN and range, IVF top-k and range, IVFPQ ADC,',
         '  LSH, the blockwise and k-NN-graph cogroups) runs `topk.scan_topk` or its',
         '  per-group routine `topk_group` and supplies only its candidate groups',
         '  and its scorer. Every per-query merge is `topk_agg`: the row_number',
         '  window (partial `WindowGroupLimit` before the exchange) when candidates',
         '  cannot repeat, one dedup aggregation when they can.',
+        '- **One Arrow form per index family, one switch.** A family keeps its',
+        '  expression form where a registry oracle needs it and at most one Arrow',
+        '  form. IVF `arrow_score`, IVFPQ `arrow_adc` and both planners\' `arrow`',
+        '  mean the same thing (`topk.arrow_switch`): `False` is the expression',
+        '  form, `True` (or its spelling `"blas"`) the Arrow form, anything else a',
+        '  `ValueError`. The forms and who calls them:',
+        "",
+        *FORMS,
         "",
     ]
     for title, df in dfs.items():
         plan = "\n".join(l[:200] for l in physical_plan(df, "simple").splitlines()[:28])
         out += [f"## {title}", "", "```", plan, "```", "", NOTES[title], ""]
-    with open("/root/repo/EXPLAIN.md", "w") as f:
+    with open(os.path.join(ROOT, "EXPLAIN.md"), "w") as f:
         f.write("\n".join(out))
     print("EXPLAIN.md regenerated")
     spark.stop()

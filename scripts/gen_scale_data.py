@@ -20,7 +20,8 @@ import sys
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from filtered_ads_vector_search_spark.session import get_spark
 
@@ -104,7 +105,7 @@ def gen_documents(spark, n: int, out: str) -> None:
 def main() -> None:
     n_vec = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     n_doc = int(sys.argv[2]) if len(sys.argv) > 2 else 200_000
-    out = sys.argv[3] if len(sys.argv) > 3 else "/root/repo/scale_data"
+    out = sys.argv[3] if len(sys.argv) > 3 else os.path.join(ROOT, "scale_data")
     n_doc_large = int(sys.argv[4]) if len(sys.argv) > 4 else 1_000_000
     spark = get_spark(app_name="favs-gen-scale")
     spark.sparkContext.setLogLevel("ERROR")

@@ -1,11 +1,15 @@
 """Dedup + text-analysis operator properties."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from filtered_ads_vector_search_spark.functions import text as T
+from filtered_ads_vector_search_spark.materialize import release
 from filtered_ads_vector_search_spark.operators import dedup as DD
 
-from conftest import SF_TEST
+from conftest import SF_TEST, collect_released
+
+pytestmark = pytest.mark.usefixtures("no_leaked_rdds")
 
 
 def _docs(spark):
@@ -26,9 +30,13 @@ def test_minhash_pairs_subset_of_exact_jaccard(spark):
     threshold): LSH may MISS pairs (probabilistic recall) but never invents."""
     docs = _docs(spark)
     exact = {
-        (r.doc_a, r.doc_b) for r in DD.ngram_jaccard_pairs(docs, threshold=0.3).collect()
+        (r.doc_a, r.doc_b)
+        for r in collect_released(DD.ngram_jaccard_pairs(docs, threshold=0.3))
     }
-    lsh = {(r.doc_a, r.doc_b) for r in DD.minhash_pairs(docs, threshold=0.3).collect()}
+    lsh = {
+        (r.doc_a, r.doc_b)
+        for r in collect_released(DD.minhash_pairs(docs, threshold=0.3))
+    }
     assert lsh <= exact
 
 
@@ -40,7 +48,10 @@ def test_minhash_finds_planted_near_dupes(spark):
         F.concat(F.col("text"), F.lit(" xyzzy plugh")).alias("text"),
     )
     both = docs.select("doc_id", "text").unionAll(near)
-    pairs = {(r.doc_a, r.doc_b) for r in DD.minhash_pairs(both, threshold=0.5).collect()}
+    pairs = {
+        (r.doc_a, r.doc_b)
+        for r in collect_released(DD.minhash_pairs(both, threshold=0.5))
+    }
     planted = {(int(r.doc_id), int(r.doc_id) + 100000) for r in docs.select("doc_id").collect()}
     found_frac = len(pairs & planted) / len(planted)
     assert found_frac >= 0.9, f"LSH caught only {found_frac:.0%} of planted near-dups"
@@ -49,7 +60,7 @@ def test_minhash_finds_planted_near_dupes(spark):
 def test_simhash_identical_docs_collide(spark):
     docs = _docs(spark).limit(20).select("doc_id", "text")
     dup = docs.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
-    pairs = DD.simhash_pairs(docs.unionAll(dup), max_hamming=0).collect()
+    pairs = collect_released(DD.simhash_pairs(docs.unionAll(dup), max_hamming=0))
     planted = {(int(r.doc_id), int(r.doc_id) + 100000) for r in docs.select("doc_id").collect()}
     got = {(r.doc_a, r.doc_b) for r in pairs}
     assert planted <= got
@@ -81,8 +92,10 @@ def test_simhash_banded_equals_brute(spark):
     """Pigeonhole banding is EXACT: banded candidates + verify must equal the
     brute-force pairwise result."""
     docs = _docs(spark).limit(150)
-    brute = sorted(map(tuple, DD.simhash_pairs(docs, max_hamming=2).collect()))
-    banded = sorted(map(tuple, DD.simhash_pairs_banded(docs, max_hamming=2).collect()))
+    brute = sorted(map(tuple, collect_released(DD.simhash_pairs(docs, max_hamming=2))))
+    banded = sorted(
+        map(tuple, collect_released(DD.simhash_pairs_banded(docs, max_hamming=2)))
+    )
     assert brute == banded and len(brute) > 0
 
 
@@ -99,12 +112,15 @@ def test_duplicate_components_transitive_closure(spark):
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 20)],
         "doc_a long, doc_b long",
     )
-    comp = {r["doc_id"]: r["component_id"] for r in duplicate_components(pairs).collect()}
+    comp = {
+        r["doc_id"]: r["component_id"]
+        for r in collect_released(duplicate_components(pairs))
+    }
     assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
 
     canon = {
         r["component_id"]: (r["n_members"], r["canonical_doc_id"])
-        for r in canonical_docs(duplicate_components(pairs)).collect()
+        for r in collect_released(canonical_docs(duplicate_components(pairs)))
     }
     assert canon == {1: (4, 1), 10: (2, 10), 20: (2, 20)}
 
@@ -116,16 +132,14 @@ def test_duplicate_components_partition_invariance(spark):
 
     rows = [(i, i + 1) for i in range(0, 40, 2)] + [(5, 9), (9, 13)]
     base = spark.createDataFrame(rows, "doc_a long, doc_b long")
-    a = {tuple(r) for r in duplicate_components(base.repartition(1)).collect()}
-    b = {tuple(r) for r in duplicate_components(base.repartition(7)).collect()}
+    a = {tuple(r) for r in collect_released(duplicate_components(base.repartition(1)))}
+    b = {tuple(r) for r in collect_released(duplicate_components(base.repartition(7)))}
     assert a == b and len(a) > 0
 
 
 def test_duplicate_components_raises_on_non_convergence(spark):
     """Labels are only the transitive closure at fixpoint: a chain longer
     than max_iter hops must raise, not silently return split components."""
-    import pytest
-
     from filtered_ads_vector_search_spark.operators.dedup import duplicate_components
 
     chain = spark.createDataFrame(
@@ -134,7 +148,7 @@ def test_duplicate_components_raises_on_non_convergence(spark):
     with pytest.raises(RuntimeError, match="did not converge"):
         duplicate_components(chain, max_iter=3)
     # with enough rounds the same chain converges to one component
-    comp = duplicate_components(chain, max_iter=20).collect()
+    comp = collect_released(duplicate_components(chain, max_iter=20))
     assert {r["component_id"] for r in comp} == {0}
 
 
@@ -150,15 +164,16 @@ def test_duplicate_components_star_matches_label_propagation(spark):
 
     docs = spark.read.parquet(f"{SF_TEST}/documents.parquet")
     pairs = minhash_pairs(docs, threshold=0.3).select("doc_a", "doc_b").cache()
-    a = {tuple(r) for r in duplicate_components(pairs).collect()}
-    b = {tuple(r) for r in duplicate_components_star(pairs).collect()}
+    a = {tuple(r) for r in collect_released(duplicate_components(pairs))}
+    b = {tuple(r) for r in collect_released(duplicate_components_star(pairs))}
     assert a == b and len(a) > 0
     pairs.unpersist()
+    release(pairs)
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(64)], "doc_a long, doc_b long"
     )
-    comp = duplicate_components_star(chain, max_rounds=12).collect()
+    comp = collect_released(duplicate_components_star(chain, max_rounds=12))
     assert len(comp) == 65
     assert {r["component_id"] for r in comp} == {0}
 
@@ -172,8 +187,14 @@ def test_duplicate_components_star_partition_invariance(spark):
         [(1, 2), (2, 3), (10, 11), (5, 3), (20, 21), (21, 22), (22, 20)],
         "doc_a long, doc_b long",
     )
-    a = {tuple(r) for r in duplicate_components_star(base.repartition(1)).collect()}
-    b = {tuple(r) for r in duplicate_components_star(base.repartition(7)).collect()}
+    a = {
+        tuple(r)
+        for r in collect_released(duplicate_components_star(base.repartition(1)))
+    }
+    b = {
+        tuple(r)
+        for r in collect_released(duplicate_components_star(base.repartition(7)))
+    }
     assert a == b
     assert a == {
         (1, 1), (2, 1), (3, 1), (5, 1),
@@ -203,9 +224,12 @@ def test_decontamination_flags_planted_overlap(spark):
         [(100, "eval question: " + leak + " answer choice")],
         "doc_id long, text string",
     )
-    flagged = {r["doc_id"]: r["n_shared"] for r in contamination_flags(train, evald, n=5).collect()}
+    flagged = {
+        r["doc_id"]: r["n_shared"]
+        for r in collect_released(contamination_flags(train, evald, n=5))
+    }
     assert set(flagged) == {2} and flagged[2] >= 1
-    kept = {r["doc_id"] for r in decontaminate(train, evald, n=5).collect()}
+    kept = {r["doc_id"] for r in collect_released(decontaminate(train, evald, n=5))}
     assert kept == {1, 3}
 
 
@@ -392,12 +416,12 @@ def test_bloom_decontaminate_equals_exact_even_with_forced_fps(spark):
         [(0, "alpha beta gamma delta epsilon zeta"), (1, "nothing matches here at all friends")],
         "doc_id long, text string",
     )
-    exact = sorted(map(tuple, contamination_flags(docs, ev, n=5).collect()))
+    exact = sorted(map(tuple, collect_released(contamination_flags(docs, ev, n=5))))
     # 64/8192: literal-array expression path; 200_000 (>1024 words): the
     # broadcast + Arrow-batched bit-test path — same result either way
     for m in (64, 8192, 200_000):
         bloom = sorted(
-            map(tuple, contamination_flags_bloom(docs, ev, n=5, m=m).collect())
+            map(tuple, collect_released(contamination_flags_bloom(docs, ev, n=5, m=m)))
         )
         assert bloom == exact, m
     assert exact and exact[0][0] == 100

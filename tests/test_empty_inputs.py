@@ -6,6 +6,10 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from conftest import SF_SMOKE, collect_released
+
+pytestmark = pytest.mark.usefixtures("no_leaked_rdds")
+
 
 def _empty_docs(spark):
     return spark.createDataFrame([], "doc_id long, text string, lang string")
@@ -19,30 +23,30 @@ def test_lmscore_empty(spark):
     from filtered_ads_vector_search_spark.operators import lmscore as LM
 
     docs = _empty_docs(spark)
-    assert LM.ngram_lm_perplexity(docs).count() == 0
-    assert LM.dsir_weights(docs).count() == 0
-    assert LM.dsir_resample(docs, n_keep=5).count() == 0
+    assert collect_released(LM.ngram_lm_perplexity(docs)) == []
+    assert collect_released(LM.dsir_weights(docs)) == []
+    assert collect_released(LM.dsir_resample(docs, n_keep=5)) == []
 
 
 def test_sketch_empty(spark):
     from filtered_ads_vector_search_spark.operators import sketch as SK
 
     docs = _empty_docs(spark)
-    assert SK.cms_build(docs).count() == 0
-    assert SK.cms_heavy_hitters(docs).count() == 0
+    assert collect_released(SK.cms_build(docs)) == []
+    assert collect_released(SK.cms_heavy_hitters(docs)) == []
 
 
 def test_substr_and_decontaminate_empty(spark):
     from filtered_ads_vector_search_spark.operators import dedup as DD
 
     docs = _empty_docs(spark)
-    assert DD.substr_dup_stats(docs).count() == 0
-    assert DD.substr_dedup_remove(docs).count() == 0
+    assert collect_released(DD.substr_dup_stats(docs)) == []
+    assert collect_released(DD.substr_dedup_remove(docs)) == []
     some = spark.createDataFrame([(1, "a b c d e f", "en")], "doc_id long, text string, lang string")
     # empty eval set: nothing is contaminated; empty training set: no rows
-    assert DD.contamination_flags(some, docs).count() == 0
-    assert DD.contamination_flags(docs, some).count() == 0
-    assert DD.contamination_flags_bloom(some, docs).count() == 0
+    assert collect_released(DD.contamination_flags(some, docs)) == []
+    assert collect_released(DD.contamination_flags(docs, some)) == []
+    assert collect_released(DD.contamination_flags_bloom(some, docs)) == []
 
 
 def test_quality_empty(spark):
@@ -105,11 +109,11 @@ def test_round6_new_surfaces_empty(spark):
         search_sharded,
     )
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     idx = IVFIndex.build_fixed(emb, n_centroids=4)
     empty_q = spark.createDataFrame([], "query_id long, q_vec array<float>")
     assert (
-        search_sharded(idx, empty_q, k=5, nprobe=2, arrow_score="blas").count() == 0
+        search_sharded(idx, empty_q, k=5, nprobe=2, arrow_score=True).count() == 0
     )
     idx.unpersist()
 
@@ -120,19 +124,6 @@ def test_round6_new_surfaces_empty(spark):
 
     with _pytest.raises(ValueError, match="empty corpus"):
         PJ.pca_train(_empty_emb(spark), vec_col="embedding")
-
-
-def test_blas_encode_empty(spark):
-    """encode_mode='blas' handles the zero-row relation like the fold (the
-    per-batch kernel skips empty batches before any GEMM)."""
-    from filtered_ads_vector_search_spark.operators import pq as PQ
-
-    books = PQ.fixed_codebooks(dim=64, m=4, n_codes=16)
-    coded = PQ.pq_encode_with_codes_arrow(
-        _empty_emb(spark), books, "embedding", encode_mode="blas"
-    )
-    assert coded.count() == 0
-    assert coded.columns == ["vec_id", "embedding", "codes"]
 
 
 def test_mulaw_alaw_empty_signals():

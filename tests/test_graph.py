@@ -6,6 +6,10 @@ import pytest
 
 from filtered_ads_vector_search_spark.operators.graph import pagerank
 
+from conftest import collect_released
+
+pytestmark = pytest.mark.usefixtures("no_leaked_rdds")
+
 
 def _np_pagerank(n, edge_list, damping=0.85, n_iter=20, directed=False):
     A = np.zeros((n, n))
@@ -31,7 +35,7 @@ CHAIN_DIRECTED = [(0, 1), (1, 2), (2, 3)]  # 3 is dangling
 
 def test_pagerank_matches_numpy_star(spark):
     df = spark.createDataFrame(STAR, "doc_a long, doc_b long")
-    got = {r.node: r.rank for r in pagerank(df).collect()}
+    got = {r.node: r.rank for r in collect_released(pagerank(df))}
     want = _np_pagerank(5, STAR)
     for i in range(5):
         assert got[i] == pytest.approx(round(want[i], 6), abs=1e-9)
@@ -42,7 +46,7 @@ def test_pagerank_matches_numpy_star(spark):
 
 def test_pagerank_directed_with_dangling_matches_numpy(spark):
     df = spark.createDataFrame(CHAIN_DIRECTED, "doc_a long, doc_b long")
-    got = {r.node: r.rank for r in pagerank(df, directed=True).collect()}
+    got = {r.node: r.rank for r in collect_released(pagerank(df, directed=True))}
     want = _np_pagerank(4, CHAIN_DIRECTED, directed=True)
     for i in range(4):
         assert got[i] == pytest.approx(round(want[i], 6), abs=1e-9)
@@ -51,6 +55,6 @@ def test_pagerank_directed_with_dangling_matches_numpy(spark):
 
 def test_pagerank_partition_invariant(spark):
     df = spark.createDataFrame(STAR * 2, "doc_a long, doc_b long")
-    a = sorted(map(tuple, pagerank(df.repartition(1), n_iter=8).collect()))
-    b = sorted(map(tuple, pagerank(df.repartition(7), n_iter=8).collect()))
+    a = sorted(map(tuple, collect_released(pagerank(df.repartition(1), n_iter=8))))
+    b = sorted(map(tuple, collect_released(pagerank(df.repartition(7), n_iter=8))))
     assert a == b

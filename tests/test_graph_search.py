@@ -15,7 +15,9 @@ from filtered_ads_vector_search_spark.operators.knn_graph import (
     knn_graph_window,
 )
 
-from conftest import SF_TEST
+from conftest import SF_TEST, collect_released
+
+pytestmark = pytest.mark.usefixtures("no_leaked_rdds")
 
 
 def _split(spark):
@@ -32,7 +34,7 @@ def test_graph_search_full_beam_exact_graph_equals_exact_knn(spark):
     # enough hops to cover the graph diameter at this scale; beam >= corpus
     out = graph_search(g, c, q, k=5, beam=n, n_hops=8, n_entry=4)
     truth = TK.knn_window(q, c, k=5)
-    got = {(r["query_id"], r["neighbor_id"], r["rank"]) for r in out.collect()}
+    got = {(r["query_id"], r["neighbor_id"], r["rank"]) for r in collect_released(out)}
     want = {(r["query_id"], r["neighbor_id"], r["rank"]) for r in truth.collect()}
     assert got == want
 
@@ -50,7 +52,7 @@ def test_graph_search_hop_monotonicity_and_shape(spark):
 
     def recall(n_hops):
         out = graph_search(g, c, q, k=5, beam=16, n_hops=n_hops, n_entry=4)
-        rows = out.collect()
+        rows = collect_released(out)
         per_q = {}
         for r in rows:
             per_q.setdefault(r["query_id"], []).append(r["rank"])
@@ -69,7 +71,7 @@ def test_graph_search_hop_monotonicity_and_shape(spark):
     # hops=0: results are a subset of the entry nodes
     ents = {r["node_id"] for r in fixed_entry_nodes(c, 4).collect()}
     out0 = graph_search(g, c, q, k=3, beam=4, n_hops=0, n_entry=4)
-    assert {r["neighbor_id"] for r in out0.collect()} <= ents
+    assert {r["neighbor_id"] for r in collect_released(out0)} <= ents
 
 
 def test_graph_search_trained_graph_and_entry_override(spark):
@@ -84,12 +86,12 @@ def test_graph_search_trained_graph_and_entry_override(spark):
         (r["query_id"], r["neighbor_id"])
         for r in TK.knn_window(q, c, k=5).collect()
     }
-    out = graph_search(g, c, q, k=5, beam=32, n_hops=6, n_entry=16)
-    got = {(r["query_id"], r["neighbor_id"]) for r in out.collect()}
+    rows = collect_released(graph_search(g, c, q, k=5, beam=32, n_hops=6, n_entry=16))
+    got = {(r["query_id"], r["neighbor_id"]) for r in rows}
     assert len(got & truth) / len(truth) >= 0.6
     # determinism
     out2 = graph_search(g, c, q, k=5, beam=32, n_hops=6, n_entry=16)
-    assert {tuple(r) for r in out.collect()} == {tuple(r) for r in out2.collect()}
+    assert {tuple(r) for r in rows} == {tuple(r) for r in collect_released(out2)}
     # custom entries: seed at every query's exact nearest neighbor — recall
     # can only be >= the fixed-entry walk's on the same graph... the entry
     # relation is global (node_id only), so seed with the union of per-query
@@ -100,7 +102,7 @@ def test_graph_search_trained_graph_and_entry_override(spark):
         .distinct()
     )
     out3 = graph_search(g, c, q, k=5, beam=16, n_hops=1, entries=top1)
-    got3 = {(r["query_id"], r["neighbor_id"]) for r in out3.collect()}
+    got3 = {(r["query_id"], r["neighbor_id"]) for r in collect_released(out3)}
     # every query's own exact top-1 is among the seeds, is scored, and can
     # never be evicted from its top-k — it MUST appear in the results
     want1 = {

@@ -2,6 +2,7 @@
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from filtered_ads_vector_search_spark.operators.gridsearch import (
@@ -13,6 +14,8 @@ from filtered_ads_vector_search_spark.operators.gridsearch import (
 from filtered_ads_vector_search_spark.operators import topk as TK
 
 from conftest import SF_SMOKE
+
+pytestmark = pytest.mark.usefixtures("no_leaked_rdds")
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
 
@@ -84,6 +87,7 @@ def test_grid_search_end_to_end(spark, tmp_path):
     assert which == {"best_recall", "best_qps"}
     best_recall_row = [r for r in summ if r["which"] == "best_recall"][0]
     assert best_recall_row["recall"] == max(r["recall"] for r in rows)
+    metrics.unpersist()
 
 
 def test_summarize_works_for_both_grid_families(spark):

@@ -12,6 +12,10 @@ import pytest
 
 from filtered_ads_vector_search_spark.operators import lmscore as LM
 
+from conftest import collect_released
+
+pytestmark = pytest.mark.usefixtures("no_leaked_rdds")
+
 
 CORPUS = [
     (0, "the cat sat on the mat", "en"),
@@ -40,7 +44,7 @@ def _py_counts():
 def test_lm_perplexity_matches_python(spark):
     uni, big = _py_counts()
     v = len(uni)
-    got = {r.doc_id: r for r in LM.ngram_lm_perplexity(_docs(spark)).collect()}
+    got = {r.doc_id: r for r in collect_released(LM.ngram_lm_perplexity(_docs(spark)))}
     assert set(got) == {0, 1, 2, 3}  # doc 4 has no bigrams
     for doc_id, text, _ in CORPUS[:4]:
         toks = text.lower().split()
@@ -60,7 +64,7 @@ def test_lm_perplexity_repeated_text_scores_lower(spark):
     rows = [(0, "a b a b a b a b", "en"), (1, "a b a b a b a b", "en"),
             (2, "q w e r t y u i", "en")]
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    out = {r.doc_id: r.avg_nll for r in LM.ngram_lm_perplexity(df).collect()}
+    out = {r.doc_id: r.avg_nll for r in collect_released(LM.ngram_lm_perplexity(df))}
     assert out[0] < out[2]
 
 

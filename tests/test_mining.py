@@ -210,6 +210,7 @@ def test_mining_ivf_kernel_overlap_and_shape(spark):
     assert {(r["query_id"], r["neighbor_id"], r["rank"]) for r in ann2.collect()} == {
         (r["query_id"], r["neighbor_id"], r["rank"]) for r in a_rows
     }
+    idx.unpersist()
 
 
 def test_hard_negatives_fetch_validation(spark):

@@ -32,6 +32,60 @@ SUBSET = [
 ]
 
 
+# The registry's query order. The first 50 entries are the ones a
+# correctness driver checks, so a rename, removal or move is a visible
+# change to this list, not a side effect.
+QUERY_ORDER = [
+    "bitext_mine", "hard_negatives", "dedup_components", "decontaminate",
+    "multimodal_decode_jpeg_prog", "stratified_sample", "substr_dup_stats",
+    "doc_simhash", "bitext_mine_ann", "hard_negatives_ann",
+    "graph_search_fixed", "graph_search_recall", "pq_codes_blas",
+    "knn_ivfpq_decomposed", "knn_sharded", "multimodal_decode",
+    "knn_ivfpq_fixed", "knn_ivfpq_rerank", "ann_lsh",
+    "best_order_per_priority", "decontaminate_bloom", "dedup_exact",
+    "doc_fingerprint", "embed_pipeline", "embedding_dup_pairs",
+    "filter_selectivity", "frame_sample_counts", "grid_params",
+    "knn_blockwise", "knn_cosine", "knn_filtered_high", "knn_fp16",
+    "knn_hamming", "knn_inner_product", "knn_pq_adc", "knn_sq8",
+    "knn_sq8_filtered_high", "lang_id", "latency_percentiles",
+    "min_token_filter", "orders_pivot", "pq_codes", "rating_histogram",
+    "recall_curve_sq8", "recall_sq8_vs_fp", "semdedup_pairs",
+    "sq8_train_bounds", "token_counts", "tpch_q9", "vector_norms",
+    "range_search_exact", "range_search_scale", "range_search_filtered",
+    "range_search_ivf", "range_density", "knn_graph_exact", "knn_graph_fixed",
+    "opq_codes", "knn_opq_adc", "knn_ivfpq_opq", "range_filtered_auto",
+    "range_filtered_auto_ann", "multimodal_decode_jpeg_lossless",
+    "bm25_search", "cms_heavy_hitters", "collocations_pmi",
+    "curation_pipeline", "dedup_canonical", "dedup_chunk_pairs",
+    "dedup_components_star", "dedup_minhash_lsh", "dedup_pagerank",
+    "dedup_simhash_banded", "distinct_tokens_hll", "doc_chunks_cdc",
+    "domain_mix_weights", "dsir_resample", "dsir_weights",
+    "embedding_dim_stats", "event_funnel", "event_window_quantiles",
+    "gopher_quality", "grid_metrics_fixed", "grid_search_ivfpq",
+    "hist_quantiles", "hybrid_rrf", "jl_norm_distortion", "knn_exact",
+    "knn_jl", "lm_perplexity", "multimodal_decode_jpeg", "pii_redact",
+    "pii_scan", "repetition_stats", "stratified_topn", "text_stats",
+    "user_retention_cohorts", "value_outliers", "vocab_summary",
+    "vocab_top_terms", "multimodal_decode_bmp565", "multimodal_decode_wav24",
+    "ann_ivf", "ann_ivf_fixed", "customer_setops", "dedup_ngram_jaccard",
+    "doc_chunks", "doc_clean", "event_attribution", "event_error_context",
+    "event_lag_stats", "event_sliding_windows", "event_window_stats",
+    "grid_metrics_lsh_fixed", "grid_search_ivf", "grid_search_lsh",
+    "knn_filtered_auto_ann", "knn_filtered_auto_exact",
+    "knn_scalable_filtered", "line_dedup_corpus", "lineitem_rollup",
+    "pack_assignments", "pareto_frontier_suppliers",
+    "purchase_attribution_pairs", "qps_windows", "quality_brackets",
+    "semdedup_keep", "substr_dedup_remove", "token_fertility", "tpch_q1",
+    "tpch_q10", "tpch_q13", "tpch_q14", "tpch_q15", "tpch_q16", "tpch_q17",
+    "tpch_q18", "tpch_q19", "tpch_q1_sql_api", "tpch_q2", "tpch_q22",
+    "tpch_q3", "tpch_q4", "tpch_q5", "tpch_q6", "tpch_q7", "tpch_q8",
+    "user_sessions", "user_sessions_native", "zorder_keys", "multimodal_meta",
+    "multimodal_resize", "embedding_dup_pairs_lsh", "knn_filtered_low",
+    "knn_filtered_mid", "knn_hamming_packed", "latency_percentiles_v2",
+    "tpch_q11", "tpch_q12", "tpch_q20", "tpch_q21",
+]
+
+
 def test_fp16_sql_emulation_matches_numpy(duck):
     """fp16_roundtrip_sql must reproduce numpy's float16 cast bit-for-bit —
     it is the DuckDB oracle for the whole fp16 tier. Cover normals across
@@ -59,6 +113,11 @@ def test_fp16_sql_emulation_matches_numpy(duck):
     got = duck.sql(f"SELECT {V.fp16_roundtrip_sql('v')} FROM fp16_probe").fetchone()[0]
     duck.unregister("fp16_probe")
     assert got == expected
+
+
+def test_query_order_is_pinned():
+    assert len(QUERY_ORDER) == 161
+    assert list(registry.QUERIES) == QUERY_ORDER
 
 
 def test_every_oracle_key_has_a_query():

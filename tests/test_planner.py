@@ -117,6 +117,51 @@ def test_pq_with_vectors_routes_exact_and_beats_adc_recall(qc):
     assert r == pytest.approx(1.0)
 
 
+def test_arrow_switch_means_the_same_for_both_families(qc, ivf):
+    """``arrow`` is one on/off switch for either index family: True and its
+    spelling "blas" run the family's Arrow form on the ann route (IVF
+    DGEMM, IVFPQ ADC fold) and the same exact tier on the exact route,
+    returning the arrow=False rows' ids and ranks. Any other value raises,
+    on either route and in the range planner too."""
+    from filtered_ads_vector_search_spark.operators.ann import (
+        plan_filtered_range_search,
+    )
+    from filtered_ads_vector_search_spark.operators.ivfpq import IVFPQIndex
+
+    q, c = qc
+    pq = IVFPQIndex.build_fixed(c, n_centroids=8, m=4, n_codes=16)
+
+    def ranked(plan):
+        rows = plan.result.select("query_id", "neighbor_id", "rank").collect()
+        return sorted(map(tuple, rows))
+
+    try:
+        for idx in (ivf, pq):
+            for name, tier in (("low_rated", "ann"), ("mid_rated", "exact_filtered")):
+                pred = FL.named_filter_predicate(name)
+                off = plan_filtered_search(idx, q, k=10, nprobe=4, predicate=pred)
+                assert off.tier == tier
+                want = ranked(off)
+                assert want
+                for on in (True, "blas"):
+                    plan = plan_filtered_search(
+                        idx, q, k=10, nprobe=4, predicate=pred, arrow=on
+                    )
+                    assert plan.tier == tier, (type(idx).__name__, name, on)
+                    assert ranked(plan) == want, (type(idx).__name__, name, on)
+                for bad in ("nope", "exact", 1, None):
+                    with pytest.raises(ValueError, match="arrow"):
+                        plan_filtered_search(
+                            idx, q, k=10, nprobe=4, predicate=pred, arrow=bad
+                        )
+        with pytest.raises(ValueError, match="arrow"):
+            plan_filtered_range_search(ivf, q, radius=1.55, nprobe=4, arrow="nope")
+        with pytest.raises(ValueError, match="arrow_adc"):
+            pq.search(q, k=10, nprobe=4, arrow_adc="exact")
+    finally:
+        pq.unpersist()
+
+
 # --- range planner (round 10): plan_filtered_range_search — the radius
 # twin of the top-k planner, same saturation rule ---
 

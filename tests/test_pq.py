@@ -116,52 +116,14 @@ def test_codebook_validation():
         PQ._validate([], dim=64)
 
 
-def test_pq_encode_udf_matches_expr_bit_exact(spark):
-    """The Arrow-batched encode kernel (the corpus-materialization scale
-    path) must produce EXACTLY the codes of the SQL-expression form on real
-    vectors — absolute and residual variants. This is the bit-identity
-    contract (cumsum == ascending fold, first-min argmin == array_position
-    tie-break) the IVFPQ oracles rely on."""
-    q, c = _split(spark)
-    books = PQ.fixed_codebooks(dim=64, m=4, n_codes=16)
-
-    via_expr = c.select(
-        "vec_id", PQ.pq_encode_expr("embedding", books).alias("codes")
-    ).collect()
-    via_udf = c.select(
-        "vec_id", PQ.pq_encode_udf(books)(F.col("embedding")).alias("codes")
-    ).collect()
-    assert {r["vec_id"]: r["codes"] for r in via_expr} == {
-        r["vec_id"]: r["codes"] for r in via_udf
-    }
-
-    # residual variant against a planted centroid column
-    cent = c.limit(1).collect()[0]["embedding"]
-    with_cent = c.withColumn(
-        "centroid", F.expr("cast(array(" + ", ".join(repr(float(x)) for x in cent) + ") as array<float>)")
-    )
-    via_expr_r = with_cent.select(
-        "vec_id",
-        PQ.pq_encode_residual_expr("embedding", "centroid", books).alias("codes"),
-    ).collect()
-    via_udf_r = with_cent.select(
-        "vec_id",
-        PQ.pq_encode_udf(books, residual=True)(
-            F.col("embedding"), F.col("centroid")
-        ).alias("codes"),
-    ).collect()
-    assert {r["vec_id"]: r["codes"] for r in via_expr_r} == {
-        r["vec_id"]: r["codes"] for r in via_udf_r
-    }
-
-
 def test_pq_encode_fused_map_arrow_matches_expr_bit_exact(spark):
     """The fused mapInArrow encode (one pass: flat-buffer decode,
     partition_id-indexed residual against the broadcast centroid matrix,
     flat codes emission) must produce EXACTLY the SQL-expression form's
     codes — absolute and residual — and pass every other column through
-    untouched. This is the same bit-identity contract as pq_encode_udf's;
-    the IVFPQ build path now runs on this kernel."""
+    untouched. This is the bit-identity contract (ascending fold,
+    first-min argmin == array_position tie-break) the IVFPQ oracles rely
+    on; it is the one Arrow PQ encode and the IVFPQ build path runs on it."""
     import numpy as np
 
     q, c = _split(spark)
@@ -200,184 +162,6 @@ def test_pq_encode_fused_map_arrow_matches_expr_bit_exact(spark):
         tagged, books, "embedding", centers=centers
     )
     assert {r["vec_id"]: r["codes"] for r in fused_r.collect()} == via_expr_r
-
-
-def _decomp_payload(rng, nq=6, m=4, nc=16, sd=4, n_cent=3, n_rows=20):
-    dim = m * sd
-    Q = rng.standard_normal((nq, dim))
-    CB = rng.standard_normal((m, nc, sd))
-    cent = rng.standard_normal((n_cent, dim))
-    codes = rng.integers(0, nc, size=(n_rows, m)).astype(np.int64)
-    return Q, CB, cent, codes
-
-
-def test_decomposed_adc_cache_no_stale_reuse_across_interleaved_searches():
-    """The per-worker _DECOMP_CACHE must never serve a stale T3. The cache
-    keys on the SEARCH TOKEN stamped into the broadcast payload — content-
-    true by construction (one token names one (Q, CB) payload), unlike the
-    original id()-pair key that depended on allocator address reuse.
-    Interleave two independent payloads under distinct tokens — the
-    back-to-back serving loop the decomposed mode is benched for — and
-    assert every call matches the fold scorer; then pin the hit/eviction
-    semantics: same token is served from cache, the cache is a TWO-entry
-    token-keyed LRU (two interleaved searches BOTH keep their hits — the
-    single-entry clear() this replaces thrashed per bucket), a third token
-    evicts the least-recent, and a token-less bare extra recomputes
-    without caching."""
-    from filtered_ads_vector_search_spark.operators import ivfpq as IQ
-
-    rng = np.random.default_rng(7)
-    payloads = [
-        _decomp_payload(rng) + (f"tok{i}",) for i in range(2)
-    ]
-    IQ._DECOMP_CACHE.clear()
-    # task-interleaved order (A, B, A, B, ...): the mixed-workload replay
-    # pattern — both searches must keep cache hits, never growing past 2
-    for trial in range(2):
-        for b in range(payloads[0][2].shape[0]):
-            for Q, CB, cent, codes, tok in payloads:
-                qsel = np.arange(Q.shape[0])
-                want = IQ._adc_bucket_scorer(
-                    Q, qsel, b, codes, (cent, CB, True)
-                )(0, len(qsel))
-                got = IQ._adc_bucket_scorer_decomposed(
-                    Q, qsel, b, codes, (cent, CB, True, tok)
-                )(0, len(qsel))
-                assert np.allclose(want, got, rtol=1e-9, atol=1e-9), (trial, b)
-                assert len(IQ._DECOMP_CACHE) <= IQ._DECOMP_CACHE_MAX
-        # after the first (b=0, tok0) MISS filled the cache, every later
-        # call in the interleave is a HIT: both tokens stay resident
-        assert set(IQ._DECOMP_CACHE) == {"tok0", "tok1"}
-
-    # a token HIT is served from the cached terms: poison BOTH resident
-    # entries' rnorm and observe the poisoned values flow through on an
-    # A,B interleave (proving each search kept its own hit — the thrash
-    # the single-entry clear() had), then evict the least-recent with a
-    # THIRD token and observe correctness restored
-    Q, CB, cent, codes, tok = payloads[0]
-    qsel = np.arange(Q.shape[0])
-    IQ._DECOMP_CACHE.clear()
-    clean = IQ._adc_bucket_scorer_decomposed(
-        Q, qsel, 0, codes, (cent, CB, True, "tokA")
-    )(0, len(qsel))
-    Qb, CBb, centb, codesb, _ = payloads[1]
-    qselb = np.arange(Qb.shape[0])
-    cleanb = IQ._adc_bucket_scorer_decomposed(
-        Qb, qselb, 0, codesb, (centb, CBb, True, "tokB2")
-    )(0, len(qselb))
-    for t in ("tokA", "tokB2"):
-        T3, rnorm = IQ._DECOMP_CACHE[t]
-        IQ._DECOMP_CACHE[t] = (T3, rnorm + 1.0)  # poison
-    poisoned = IQ._adc_bucket_scorer_decomposed(
-        Q, qsel, 0, codes, (cent, CB, True, "tokA")
-    )(0, len(qsel))
-    poisonedb = IQ._adc_bucket_scorer_decomposed(
-        Qb, qselb, 0, codesb, (centb, CBb, True, "tokB2")
-    )(0, len(qselb))
-    assert not np.allclose(clean, poisoned)  # tokA hit actually happened
-    assert not np.allclose(cleanb, poisonedb)  # tokB2 hit survived tokA's
-    # third token evicts the least-recently-used (tokA, touched before
-    # tokB2's last hit) and recomputes cleanly
-    fresh = IQ._adc_bucket_scorer_decomposed(
-        Q, qsel, 0, codes, (cent, CB, True, "tokC")
-    )(0, len(qsel))
-    assert np.allclose(clean, fresh, rtol=1e-12, atol=1e-12)
-    assert list(IQ._DECOMP_CACHE) == ["tokB2", "tokC"]  # LRU order, tokA out
-
-    # bare 3-tuple extra (no token): recomputes, never caches
-    IQ._DECOMP_CACHE.clear()
-    bare = IQ._adc_bucket_scorer_decomposed(
-        Q, qsel, 0, codes, (cent, CB, True)
-    )(0, len(qsel))
-    assert np.allclose(clean, bare, rtol=1e-12, atol=1e-12)
-    assert IQ._DECOMP_CACHE == {}
-
-    # plan-time tokens are unique per search
-    t1 = f"x:{next(IQ._DECOMP_TOKENS)}"
-    t2 = f"x:{next(IQ._DECOMP_TOKENS)}"
-    assert t1 != t2
-
-
-def test_pq_encode_blas_mode_reconstruction_distance_equal(spark):
-    """encode_mode='blas' (the declared-throughput DGEMM argmin) must pick
-    codes whose RECONSTRUCTION DISTANCE equals the fold form's per (row,
-    subspace) — the scorer-tier discipline: DGEMM distances sit last-ulps
-    off the fold's, so a tie at the minimum may legitimately pick a
-    different code, but never a worse one. Absolute and residual paths."""
-    import math
-
-    q, c = _split(spark)
-    books = PQ.fixed_codebooks(dim=64, m=4, n_codes=16)
-    CB = np.ascontiguousarray(books, dtype=np.float64)
-    m, nc, sd = CB.shape
-
-    cents = c.orderBy("vec_id").limit(3).collect()
-    centers = np.array([r["embedding"] for r in cents], dtype=np.float64)
-    tagged = c.withColumn("partition_id", (F.col("vec_id") % 3).cast("int"))
-
-    for kwargs in (dict(), dict(centers=centers)):
-        src = tagged if "centers" in kwargs else c
-        fold = {
-            r["vec_id"]: (r["codes"], r["embedding"])
-            for r in PQ.pq_encode_with_codes_arrow(
-                src, books, "embedding", **kwargs
-            ).collect()
-        }
-        blas = {
-            r["vec_id"]: r["codes"]
-            for r in PQ.pq_encode_with_codes_arrow(
-                src, books, "embedding", encode_mode="blas", **kwargs
-            ).collect()
-        }
-        assert fold.keys() == blas.keys()
-        pid = {r["vec_id"]: r["partition_id"] for r in src.select(
-            "vec_id", "partition_id").collect()} if "centers" in kwargs else None
-        n_diff = 0
-        for vid, (codes_f, emb) in fold.items():
-            v = np.array(emb, dtype=np.float64)
-            if pid is not None:
-                v = v - centers[pid[vid]]
-            S = v.reshape(m, sd)
-            for j in range(m):
-                cf, cb = codes_f[j], blas[vid][j]
-                if cf == cb:
-                    continue
-                n_diff += 1
-                df_ = float(((S[j] - CB[j][cf]) ** 2).sum())
-                db_ = float(((S[j] - CB[j][cb]) ** 2).sum())
-                assert math.isclose(df_, db_, rel_tol=1e-9, abs_tol=1e-12), (
-                    vid, j, cf, cb, df_, db_,
-                )
-        # the two kernels should agree on virtually every non-tied argmin
-        assert n_diff <= 0.01 * len(fold) * m, n_diff
-
-    with pytest.raises(ValueError):
-        PQ.pq_encode_with_codes_arrow(c, books, "embedding", encode_mode="nope")
-
-
-def test_ivfpq_build_blas_encode_mode_search_parity(spark):
-    """An index built with encode_mode='blas' must search to the SAME
-    (query, neighbor) sets and ranks as the fold-built index whenever the
-    codes agree (reconstruction-tied rows may differ; the code-level test
-    above pins those to equal distance). On this corpus the codes agree
-    everywhere, so the search outputs are asserted identical."""
-    from filtered_ads_vector_search_spark.operators.ivfpq import IVFPQIndex
-
-    q, c = _split(spark)
-    fold_ix = IVFPQIndex.build_fixed(c, n_centroids=8, m=4, n_codes=16)
-    blas_ix = IVFPQIndex.build_fixed(
-        c, n_centroids=8, m=4, n_codes=16, encode_mode="blas"
-    )
-    codes_f = {r["vec_id"]: r["codes"] for r in fold_ix.coded.collect()}
-    codes_b = {r["vec_id"]: r["codes"] for r in blas_ix.coded.collect()}
-    if codes_f == codes_b:
-        want = sorted(map(tuple, fold_ix.search(
-            q, k=5, nprobe=4, rerank=20, arrow_adc=True).collect()))
-        got = sorted(map(tuple, blas_ix.search(
-            q, k=5, nprobe=4, rerank=20, arrow_adc=True).collect()))
-        assert want == got
-    fold_ix.unpersist()
-    blas_ix.unpersist()
 
 
 # --- OPQ (round 9): rotation-trained PQ — Ge et al. CVPR 2013 / FAISS's

@@ -8,10 +8,13 @@ import pyspark.sql.functions as F
 import pytest
 
 from filtered_ads_vector_search_spark.functions import text as T
+from filtered_ads_vector_search_spark.materialize import release
 from filtered_ads_vector_search_spark.operators import dedup as DD
 from filtered_ads_vector_search_spark.operators import quality as QL
 
-from tests.conftest import SF_TEST
+from tests.conftest import SF_TEST, collect_released
+
+pytestmark = pytest.mark.usefixtures("no_leaked_rdds")
 
 
 # --- SemDeDup ---------------------------------------------------------------
@@ -27,8 +30,8 @@ def test_semdedup_pairs_subset_of_brute_pairs(spark):
     emb = _emb(spark)
     sem = DD.semdedup_pairs(emb, n_clusters=8, max_cos_dist=0.7)
     brute = DD.embedding_dup_pairs(emb, max_cos_dist=0.7)
-    sem_set = {(r.id_a, r.id_b, r.cos_dist) for r in sem.collect()}
-    brute_set = {(r.id_a, r.id_b, r.cos_dist) for r in brute.collect()}
+    sem_set = {(r.id_a, r.id_b, r.cos_dist) for r in collect_released(sem)}
+    brute_set = {(r.id_a, r.id_b, r.cos_dist) for r in collect_released(brute)}
     assert sem_set, "threshold should yield pairs on the test corpus"
     assert sem_set <= brute_set
 
@@ -38,8 +41,8 @@ def test_semdedup_single_cluster_equals_brute(spark):
     emb = _emb(spark).limit(120)
     sem = DD.semdedup_pairs(emb, n_clusters=1, max_cos_dist=0.7)
     brute = DD.embedding_dup_pairs(emb, max_cos_dist=0.7)
-    assert {(r.id_a, r.id_b) for r in sem.collect()} == {
-        (r.id_a, r.id_b) for r in brute.collect()
+    assert {(r.id_a, r.id_b) for r in collect_released(sem)} == {
+        (r.id_a, r.id_b) for r in collect_released(brute)
     }
 
 
@@ -68,8 +71,7 @@ def test_semdedup_derived_n_clusters_and_shared_build(spark, monkeypatch):
         return orig(*args, **kwargs)
 
     monkeypatch.setattr(ANN.IVFIndex, "build_fixed", staticmethod(counting))
-    kept = DD.semdedup_keep(emb, n_clusters=None, max_cos_dist=0.7)
-    kept.collect()
+    collect_released(DD.semdedup_keep(emb, n_clusters=None, max_cos_dist=0.7))
     assert calls == [2], calls  # 80 rows -> max(2, ceil(80/50k)) = 2, once
 
 
@@ -80,9 +82,9 @@ def test_semdedup_keep_no_remaining_intra_cluster_pair(spark):
     emb = _emb(spark)
     kept = DD.semdedup_keep(emb, n_clusters=8, max_cos_dist=0.7)
     pairs = DD.semdedup_pairs(emb, n_clusters=8, max_cos_dist=0.7)
-    kept_ids = {r.id for r in kept.collect()}
+    kept_ids = {r.id for r in collect_released(kept)}
     assert kept_ids
-    for r in pairs.collect():
+    for r in collect_released(pairs):
         assert not (r.id_a in kept_ids and r.id_b in kept_ids), (
             r.id_a,
             r.id_b,
@@ -216,9 +218,9 @@ def test_semdedup_no_cartesian_product(spark):
     from filtered_ads_vector_search_spark.plans import physical_plan
 
     emb = _emb(spark)
-    plan = physical_plan(
-        DD.semdedup_pairs(emb, n_clusters=8, max_cos_dist=0.7), "simple"
-    )
+    pairs = DD.semdedup_pairs(emb, n_clusters=8, max_cos_dist=0.7)
+    plan = physical_plan(pairs, "simple")
+    release(pairs)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -283,8 +285,8 @@ def test_semdedup_keep_arrow_kernel_matches_expression(spark):
     emb = _emb(spark)
     expr = DD.semdedup_keep(emb, n_clusters=8, max_cos_dist=0.7)
     arw = DD.semdedup_keep(emb, n_clusters=8, max_cos_dist=0.7, arrow_kernel=True)
-    e = sorted((r.id, r.cluster_id) for r in expr.collect())
-    a = sorted((r.id, r.cluster_id) for r in arw.collect())
+    e = sorted((r.id, r.cluster_id) for r in collect_released(expr))
+    a = sorted((r.id, r.cluster_id) for r in collect_released(arw))
     assert e and e == a
 
 
@@ -295,6 +297,7 @@ def test_semdedup_keep_arrow_kernel_sharded_matches_expression(spark):
     id is identical to the single-task and expression forms."""
     emb = _emb(spark)
     expr = DD.semdedup_keep(emb, n_clusters=8, max_cos_dist=0.7)
+    e = sorted((r.id, r.cluster_id) for r in collect_released(expr))
     for shard_rows in (7, 64):
         arw = DD.semdedup_keep(
             emb,
@@ -303,8 +306,7 @@ def test_semdedup_keep_arrow_kernel_sharded_matches_expression(spark):
             arrow_kernel=True,
             kernel_shard_rows=shard_rows,
         )
-        e = sorted((r.id, r.cluster_id) for r in expr.collect())
-        a = sorted((r.id, r.cluster_id) for r in arw.collect())
+        a = sorted((r.id, r.cluster_id) for r in collect_released(arw))
         assert e and e == a, shard_rows
 
 
@@ -320,13 +322,16 @@ def test_semdedup_keep_arrow_kernel_duplicates_and_zero_vectors(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     for thr in (0.2, 1.0):
         e = sorted(
-            r.id for r in DD.semdedup_keep(df, n_clusters=2, max_cos_dist=thr).collect()
+            r.id
+            for r in collect_released(
+                DD.semdedup_keep(df, n_clusters=2, max_cos_dist=thr)
+            )
         )
         a = sorted(
             r.id
-            for r in DD.semdedup_keep(
-                df, n_clusters=2, max_cos_dist=thr, arrow_kernel=True
-            ).collect()
+            for r in collect_released(
+                DD.semdedup_keep(df, n_clusters=2, max_cos_dist=thr, arrow_kernel=True)
+            )
         )
         assert e == a, (thr, e, a)
         assert 2 in a and 3 in a  # zero vectors always survive

@@ -225,38 +225,3 @@ def test_graph_bucketed_symmetric_edge_sanity(spark):
     assert both, "expected at least one mutual edge"
     for a, b in both:
         assert abs(d[(a, b)] - d[(b, a)]) < 1e-9
-
-
-def test_graph_blas_probe_mode_matches_exact(spark):
-    """probe_mode='blas' (one-DGEMM probe ranking — the corpus-scale form;
-    the exact fold's temp traffic is O(n x n_centroids x dim) bytes and was
-    measured as the whole wall time of the first 5M graph bench) returns the
-    same graph as probe_mode='exact' on tie-free real-valued embeddings, at
-    partial and full probing."""
-    emb = spark.read.parquet(f"{SF_TEST}/embeddings.parquet")
-    idx = IVFIndex.build_fixed(emb, n_centroids=8)
-    for np_ in (2, 8):
-        exact = {
-            (r.src_id, r.neighbor_id, r.rank)
-            for r in knn_graph_bucketed(
-                idx, k=5, nprobe=np_, kernel="arrow", probe_mode="exact"
-            ).collect()
-        }
-        blas = {
-            (r.src_id, r.neighbor_id, r.rank)
-            for r in knn_graph_bucketed(
-                idx, k=5, nprobe=np_, kernel="arrow", probe_mode="blas"
-            ).collect()
-        }
-        assert blas == exact, f"nprobe={np_}"
-
-
-def test_graph_probe_mode_validation(spark):
-    emb = spark.read.parquet(f"{SF_TEST}/embeddings.parquet")
-    idx = IVFIndex.build_fixed(emb, n_centroids=8)
-    with pytest.raises(ValueError, match="probe mode"):
-        knn_graph_bucketed(
-            idx, k=5, nprobe=2, kernel="arrow", probe_mode="bogus"
-        ).collect()
-    with pytest.raises(ValueError, match="arrow-kernel knob"):
-        knn_graph_bucketed(idx, k=5, nprobe=2, kernel="expr", probe_mode="blas")

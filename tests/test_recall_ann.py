@@ -1,5 +1,7 @@
 """Recall + ANN-tier properties (reference thresholds: tests.py:135,262,303)."""
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,6 +18,20 @@ K = 10
 def _split(spark):
     emb = spark.read.parquet(f"{SF_TEST}/embeddings.parquet")
     return TK.split_queries(emb)
+
+
+def _assert_same_ranks(want_rows, got_rows, *ctx):
+    """Same (query_id, neighbor_id, rank) rows with distances equal to
+    last-ulps — the IVF Arrow form's DGEMM contract against the fold and
+    across batch shapes (see topk._sqeuclidean_blas_scorer)."""
+    want = {(r.query_id, r.neighbor_id): (r.rank, r.dist) for r in want_rows}
+    got = {(r.query_id, r.neighbor_id): (r.rank, r.dist) for r in got_rows}
+    assert want.keys() == got.keys(), ctx
+    for key, (rank, dist) in want.items():
+        assert got[key][0] == rank, (ctx, key)
+        assert math.isclose(got[key][1], dist, rel_tol=1e-9, abs_tol=1e-9), (
+            ctx, key, dist, got[key][1],
+        )
 
 
 def test_recall_exact_vs_exact_is_one(spark):
@@ -226,13 +242,13 @@ def test_ivfpq_arrow_adc_bit_identical_to_expression_form(spark):
         idx.unpersist()
 
 
-def test_ivf_arrow_score_bit_identical_to_expression_form(spark):
-    """IVFIndex.search(arrow_score=True) must return EXACTLY the expression
-    form's rows — plain, predicate-filtered, and adaptive — on both build
-    flavors; non-sqeuclidean metrics raise toward the expression path."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
+def test_ivf_arrow_blas_scorer_matches_fold_to_ulps(spark):
+    """The IVF Arrow form (DGEMM scorer; arrow_score=True or its spelling
+    "blas") must return the expression form's (query_id, neighbor_id,
+    rank) rows with distances equal to last-ulps — plain,
+    predicate-filtered and adaptive, on both build flavors. Non-sqeuclidean
+    metrics raise toward the expression path; any other switch value
+    raises."""
     from filtered_ads_vector_search_spark.operators.ann import IVFIndex
 
     q, c = _split(spark)
@@ -250,53 +266,19 @@ def test_ivf_arrow_score_bit_identical_to_expression_form(spark):
                 adaptive_nprobe=True,
             ),
         ):
-            want = sorted(map(tuple, idx.search(q, **kwargs).collect()))
-            got = sorted(
-                map(tuple, idx.search(q, arrow_score=True, **kwargs).collect())
-            )
-            assert got == want, (kwargs, got[:3], want[:3])
+            want = idx.search(q, **kwargs).collect()
+            for on in (True, "blas"):
+                got = idx.search(q, arrow_score=on, **kwargs).collect()
+                _assert_same_ranks(want, got, on, kwargs)
         idx.unpersist()
     cos = IVFIndex.build_fixed(c, n_centroids=4, metric="cosine")
-    with _pytest.raises(NotImplementedError):
+    with pytest.raises(NotImplementedError):
         cos.search(q, k=K, nprobe=2, arrow_score=True)
     cos.unpersist()
-
-
-def test_ivf_arrow_blas_scorer_matches_fold_to_ulps(spark):
-    """arrow_score='blas' (the DGEMM throughput scorer) must return the SAME
-    (query_id, neighbor_id, rank) rows as the bit-identity fold form, with
-    distances equal to numerical noise — the contract the exact tier already
-    ships on against the DuckDB fold oracle. Bad mode strings are rejected."""
-    import math
-
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from filtered_ads_vector_search_spark.operators.ann import IVFIndex
-
-    q, c = _split(spark)
-    idx = IVFIndex.build_fixed(c, n_centroids=8)
-    for kwargs in (
-        dict(k=K, nprobe=4),
-        dict(k=K, nprobe=4, predicate=F.col("vec_id") % 3 != 0),
-    ):
-        fold = {
-            (r.query_id, r.neighbor_id): (r.rank, r.dist)
-            for r in idx.search(q, arrow_score=True, **kwargs).collect()
-        }
-        blas = {
-            (r.query_id, r.neighbor_id): (r.rank, r.dist)
-            for r in idx.search(q, arrow_score="blas", **kwargs).collect()
-        }
-        assert fold.keys() == blas.keys(), kwargs
-        for key, (rank_f, dist_f) in fold.items():
-            rank_b, dist_b = blas[key]
-            assert rank_f == rank_b, (kwargs, key)
-            assert math.isclose(dist_f, dist_b, rel_tol=1e-9, abs_tol=1e-9), (
-                kwargs, key, dist_f, dist_b,
-            )
-    with _pytest.raises(ValueError, match="arrow_score"):
-        idx.search(q, k=K, nprobe=4, arrow_score="vectorized")
+    idx = IVFIndex.build_fixed(c, n_centroids=4)
+    for bad in ("vectorized", 1):
+        with pytest.raises(ValueError, match="arrow_score"):
+            idx.search(q, k=K, nprobe=4, arrow_score=bad)
     idx.unpersist()
 
 
@@ -304,58 +286,29 @@ def test_search_sharded_matches_single_shot(spark):
     """search_sharded must return exactly the single-shot result once the
     per-shard unions are combined — shards partition queries, never the
     corpus, so each query's top-k is complete in its own shard's job. Holds
-    for the IVF blas kernel and the IVFPQ ADC kernel alike; at or under the
-    shard size it degrades to one plain search call."""
+    for the IVF DGEMM form (ids and ranks; distances to last-ulps) and the
+    IVFPQ ADC fold form (bit-identical); at or under the shard size it
+    degrades to one plain search call."""
     from filtered_ads_vector_search_spark.operators.ann import (
         IVFIndex,
         search_sharded,
     )
     from filtered_ads_vector_search_spark.operators.ivfpq import IVFPQIndex
 
-    import math
-
     q, c = _split(spark)
     ivf = IVFIndex.build_fixed(c, n_centroids=8)
-    # fold kernel: elementwise ops are batch-shape-invariant, so sharding
-    # reproduces the single-shot rows EXACTLY
-    want = sorted(map(tuple, ivf.search(q, k=K, nprobe=4, arrow_score=True).collect()))
-    got = sorted(
-        map(
-            tuple,
-            search_sharded(
-                ivf, q, k=K, shard_queries=7, nprobe=4, arrow_score=True
-            ).collect(),
-        )
-    )
-    assert got == want
-    # passthrough when the batch fits one shard
-    got1 = sorted(
-        map(
-            tuple,
-            search_sharded(
-                ivf, q, k=K, shard_queries=10**6, nprobe=4, arrow_score=True
-            ).collect(),
-        )
-    )
-    assert got1 == want
-    # blas kernel: DGEMM tiling depends on the batch shape, so distances
-    # agree to last-ulps, not bit-for-bit — ranks and the result set must
-    # still match exactly
-    want_b = {
-        (r.query_id, r.neighbor_id): (r.rank, r.dist)
-        for r in ivf.search(q, k=K, nprobe=4, arrow_score="blas").collect()
-    }
-    got_b = {
-        (r.query_id, r.neighbor_id): (r.rank, r.dist)
-        for r in search_sharded(
-            ivf, q, k=K, shard_queries=7, nprobe=4, arrow_score="blas"
-        ).collect()
-    }
-    assert want_b.keys() == got_b.keys()
-    for key, (rank_w, dist_w) in want_b.items():
-        rank_g, dist_g = got_b[key]
-        assert rank_w == rank_g, key
-        assert math.isclose(dist_w, dist_g, rel_tol=1e-9, abs_tol=1e-9), key
+    # DGEMM tiling depends on the batch shape, so distances agree to
+    # last-ulps, not bit-for-bit — ranks and the result set match exactly
+    want = ivf.search(q, k=K, nprobe=4, arrow_score=True).collect()
+    got = search_sharded(
+        ivf, q, k=K, shard_queries=7, nprobe=4, arrow_score=True
+    ).collect()
+    _assert_same_ranks(want, got)
+    # passthrough when the batch fits one shard: the same single call
+    got1 = search_sharded(
+        ivf, q, k=K, shard_queries=10**6, nprobe=4, arrow_score=True
+    ).collect()
+    assert sorted(map(tuple, got1)) == sorted(map(tuple, want))
     ivf.unpersist()
 
     pq = IVFPQIndex.build_fixed(c, n_centroids=8, m=4, n_codes=16)
@@ -374,62 +327,14 @@ def test_search_sharded_matches_single_shot(spark):
     pq.unpersist()
 
 
-def test_ivfpq_decomposed_adc_matches_fold(spark):
-    """arrow_adc='decomposed' (the precomputed-term LUT decomposition) must
-    return the SAME candidate sets and ranks as the bit-oracled fold form,
-    with ADC scores equal to last-ulps — the IVF blas-mode contract class.
-    Holds with and without rerank, filtered and unfiltered, on both build
-    flavors (residual and absolute codes both exercise the identity)."""
-    import math
-
-    from filtered_ads_vector_search_spark.operators.ivfpq import IVFPQIndex
-
-    q, c = _split(spark)
-    for build in (
-        lambda: IVFPQIndex.build_fixed(c, n_centroids=8, m=4, n_codes=16),
-        lambda: IVFPQIndex.build(c, n_centroids=8, m=4, n_codes=16, seed=42),
-        lambda: IVFPQIndex.build_fixed(
-            c, n_centroids=8, m=4, n_codes=16, residual=False
-        ),
-    ):
-        pq = build()
-        for kwargs in (
-            dict(k=K, nprobe=4),
-            dict(k=K, nprobe=4, rerank=20),
-            dict(k=K, nprobe=8, rerank=20,
-                 predicate=F.col("vec_id") % 3 != 0),
-        ):
-            want = {
-                (r.query_id, r.neighbor_id): (r.rank, r.dist)
-                for r in pq.search(q, arrow_adc=True, **kwargs).collect()
-            }
-            got = {
-                (r.query_id, r.neighbor_id): (r.rank, r.dist)
-                for r in pq.search(q, arrow_adc="decomposed", **kwargs).collect()
-            }
-            assert want.keys() == got.keys(), kwargs
-            for key, (rank_w, dist_w) in want.items():
-                rank_g, dist_g = got[key]
-                assert rank_w == rank_g, (kwargs, key)
-                assert math.isclose(dist_w, dist_g, rel_tol=1e-9, abs_tol=1e-9), (
-                    kwargs, key,
-                )
-        pq.unpersist()
-    bad = IVFPQIndex.build_fixed(c, n_centroids=4, m=4, n_codes=16)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        bad.search(q, k=K, nprobe=2, arrow_adc="nope")
-    bad.unpersist()
-
-
 def test_probe_ranking_routes_to_distributed_job(spark, monkeypatch):
     """Above the centroid (or Q x C byte) threshold the Arrow kernels rank
     probes with the distributed knn_window job instead of the driver numpy
     matrix. The probe sets are identical by construction (same fold, same
     (dist, centroid_id) tie-break), so forcing the route must reproduce the
-    driver path's rows EXACTLY — for the IVF kernel and the IVFPQ ADC
-    kernel alike. The routing thresholds are pinned here."""
+    driver path's rows — ids and ranks exactly with distances to last-ulps
+    for the IVF DGEMM form, bit-identically for the IVFPQ ADC fold form.
+    The routing thresholds are pinned here."""
     from filtered_ads_vector_search_spark.operators import ann as A
     from filtered_ads_vector_search_spark.operators.ivfpq import IVFPQIndex
 
@@ -449,9 +354,7 @@ def test_probe_ranking_routes_to_distributed_job(spark, monkeypatch):
     q, c = _split(spark)
     ivf = IVFIndex.build_fixed(c, n_centroids=8)
     pq = IVFPQIndex.build_fixed(c, n_centroids=8, m=4, n_codes=16)
-    want = sorted(
-        map(tuple, ivf.search(q, k=K, nprobe=4, arrow_score=True).collect())
-    )
+    want = ivf.search(q, k=K, nprobe=4, arrow_score=True).collect()
     want_pq = sorted(
         map(tuple, pq.search(q, k=K, nprobe=4, rerank=20, arrow_adc=True).collect())
     )
@@ -462,10 +365,8 @@ def test_probe_ranking_routes_to_distributed_job(spark, monkeypatch):
         raise AssertionError("driver probe ranking must not run above the threshold")
 
     monkeypatch.setattr(A, "_probe_lists_numpy", _boom)
-    got = sorted(
-        map(tuple, ivf.search(q, k=K, nprobe=4, arrow_score=True).collect())
-    )
-    assert got == want
+    got = ivf.search(q, k=K, nprobe=4, arrow_score=True).collect()
+    _assert_same_ranks(want, got)
     got_pq = sorted(
         map(tuple, pq.search(q, k=K, nprobe=4, rerank=20, arrow_adc=True).collect())
     )
@@ -477,7 +378,8 @@ def test_probe_ranking_routes_to_distributed_job(spark, monkeypatch):
 def test_probe_ranking_100k_centroids_no_driver_matrix(spark):
     """A kernel search over a 100k-centroid layout routes probe ranking
     through the distributed job (the driver route's 4096 x 100k chunk is
-    ~3 GB of temporaries), and its rows equal the expression path's.
+    ~3 GB of temporaries), and its rows equal the expression path's (ids
+    and ranks; distances to last-ulps).
     Synthetic layout: corpus rows sit at jittered centroid positions so
     probed buckets are non-empty; IVFIndex is constructed directly — this
     pins the SEARCH path at extreme centroid counts, not the build."""
@@ -510,12 +412,10 @@ def test_probe_ranking_100k_centroids_no_driver_matrix(spark):
         [(10**6 + j, [float(x) for x in cent[picks[j]]]) for j in range(25)],
         "query_id long, q_vec array<float>",
     )
-    want = sorted(map(tuple, idx.search(queries, k=5, nprobe=4).collect()))
+    want = idx.search(queries, k=5, nprobe=4).collect()
     assert want  # probed buckets hold the planted rows
-    got = sorted(
-        map(tuple, idx.search(queries, k=5, nprobe=4, arrow_score=True).collect())
-    )
-    assert got == want
+    got = idx.search(queries, k=5, nprobe=4, arrow_score=True).collect()
+    _assert_same_ranks(want, got)
     corpus.unpersist()
 
 
@@ -1203,8 +1103,8 @@ def test_ivfpq_opq_adc_matches_original_space_exact_to_ulps(spark):
 
 
 def test_ivfpq_opq_arrow_forms_match_expression(spark):
-    """Both Arrow kernels (fold + decomposed) return the expression form's
-    rows on an OPQ index — the rotation happens once on the query/centroid
+    """The Arrow ADC form returns the expression form's rows on an OPQ
+    index — the rotation happens once on the query/centroid
     side, so the shared fold/tie-break discipline is untouched."""
     from filtered_ads_vector_search_spark.operators.ivfpq import IVFPQIndex
 
@@ -1218,11 +1118,6 @@ def test_ivfpq_opq_arrow_forms_match_expression(spark):
         want = sorted(map(tuple, idx.search(q, **kwargs).collect()))
         got = sorted(map(tuple, idx.search(q, arrow_adc=True, **kwargs).collect()))
         assert got == want, (kwargs, got[:3], want[:3])
-        dec = sorted(
-            (r[0], r[1], r[2])
-            for r in idx.search(q, arrow_adc="decomposed", **kwargs).collect()
-        )
-        assert dec == [(r[0], r[1], r[2]) for r in want], kwargs
     idx.unpersist()
 
 

@@ -1,9 +1,13 @@
 """Count-min sketch (operators/sketch.py): overestimate property, exactness
 at collision-free width, bounded state, partition invariance."""
 
+import pytest
+
 from filtered_ads_vector_search_spark.operators import sketch as SK
 
-from tests.conftest import SF_TEST
+from tests.conftest import SF_TEST, collect_released
+
+pytestmark = pytest.mark.usefixtures("no_leaked_rdds")
 
 
 def _docs(spark):
@@ -13,7 +17,7 @@ def _docs(spark):
 def test_cms_never_underestimates_under_forced_collisions(spark):
     """width=4 forces heavy collisions on the 31-term synthetic vocab; the
     min-over-depth estimate must still never undercount."""
-    out = SK.cms_heavy_hitters(_docs(spark), top_n=1000, depth=3, width=4).collect()
+    out = collect_released(SK.cms_heavy_hitters(_docs(spark), top_n=1000, depth=3, width=4))
     assert len(out) > 0
     assert all(r.est_count >= r.true_count for r in out)
     # with only 4 cells per row, SOME collision must have inflated an estimate
@@ -24,7 +28,7 @@ def test_cms_exact_at_collision_free_width(spark):
     """At the default 4x1024 grid the 31-term vocabulary is (statistically
     certainly) collision-free in at least one of the 4 rows per term, so
     every estimate equals the true count."""
-    out = SK.cms_heavy_hitters(_docs(spark), top_n=1000).collect()
+    out = collect_released(SK.cms_heavy_hitters(_docs(spark), top_n=1000))
     assert all(r.est_count == r.true_count for r in out)
 
 
@@ -35,8 +39,8 @@ def test_cms_sketch_state_is_bounded(spark):
 
 def test_cms_partition_invariance(spark):
     docs = _docs(spark)
-    a = SK.cms_heavy_hitters(docs.repartition(1), top_n=10).collect()
-    b = SK.cms_heavy_hitters(docs.repartition(16), top_n=10).collect()
+    a = collect_released(SK.cms_heavy_hitters(docs.repartition(1), top_n=10))
+    b = collect_released(SK.cms_heavy_hitters(docs.repartition(16), top_n=10))
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
 
