@@ -23,10 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from filtered_ads_vector_search_spark import registry
+from filtered_ads_vector_search_spark.datasets import SMOKE_SF_DIR, load_table
 from filtered_ads_vector_search_spark.operators import filters as FL
 from filtered_ads_vector_search_spark.operators import topk as TK
-
-SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -35,7 +34,7 @@ def entry(spark: SparkSession) -> DataFrame:
     BEFORE the k-NN, reference: utils_grid_search.py:999-1002) using the
     scale-out physical form (broadcast queries + mapInPandas local top-k +
     per-query merge)."""
-    emb = spark.read.parquet(f"{SMOKE_SF_DIR}/embeddings.parquet")
+    emb = load_table(spark, SMOKE_SF_DIR, "embeddings")
     queries_df, corpus = TK.split_queries(emb)
     corpus = FL.with_rating_bucket(corpus).filter(FL.named_filter_predicate("high_rated"))
     return TK.knn_scalable(queries_df, corpus, k=10, metric="sqeuclidean")

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
+from ..materialize import materialize
 from .topk import knn_scalable, knn_window
 
 __all__ = ["mine_bitext", "mine_hard_negatives"]
@@ -87,7 +88,8 @@ def _knn_cos(
     if kernel == "ivf":
         from .ann import IVFIndex
 
-        if index is None:
+        owned = index is None
+        if owned:
             index = IVFIndex.build(
                 _unit_norm(corpus.select("vec_id", "embedding"), "embedding"),
                 n_centroids=n_centroids,
@@ -106,9 +108,17 @@ def _knn_cos(
             # expression path are inside the floor's 2x margin; the margin
             # arithmetic itself stays bit-oracled via the exact kernels.
             out = index.search(qn, k=k, nprobe=nprobe, arrow_score=True)
-            return out.withColumn(
+            out = out.withColumn(
                 "cos", F.lit(1.0) - F.col("dist") / F.lit(2.0)
             ).drop("dist")
+            if owned:
+                # the index built here is freed here: the result is
+                # materialized first, and the caller release()s it
+                try:
+                    out = materialize(out)
+                finally:
+                    index.unpersist()
+            return out
         # back-compat: an externally built cosine-metric index handle
         out = index.search(qn, k=k, nprobe=nprobe)
     else:
@@ -146,7 +156,9 @@ def mine_bitext(
     approximate k-NN lists, the CCMatrix/LASER production recipe) —
     approximate, governed by ``nprobe``/``n_centroids``; pass prebuilt
     cosine indexes over the normalized tgt/src as ``fwd_index`` /
-    ``bwd_index`` to amortize builds across mining calls.
+    ``bwd_index`` to amortize builds across mining calls. Without them the
+    result reads materialized searches: ``release()`` it after its last
+    action.
     """
     if kernel not in _KERNELS:
         raise ValueError(f"kernel must be one of {_KERNELS}; got {kernel!r}")
@@ -161,6 +173,7 @@ def mine_bitext(
     src_c = src.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
     tgt_c = tgt.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
 
+    built = []
     if kernel == "ivf" and (fwd_index is None or bwd_index is None):
         # The two direction indexes are INDEPENDENT builds (fwd over tgt,
         # bwd over src) whose driver phases (bounded-sample collect, seeded
@@ -187,6 +200,7 @@ def mine_bitext(
             bfut = None if bwd_index is not None else pool.submit(_build, src_c)
             fwd_index = fwd_index if ffut is None else ffut.result()
             bwd_index = bwd_index if bfut is None else bfut.result()
+            built = [f.result() for f in (ffut, bfut) if f is not None]
 
     # forward: every source's k nearest targets (candidates AND the x-side
     # penalty come from this ONE k-NN job);
@@ -194,18 +208,24 @@ def mine_bitext(
     # On the ivf kernel each direction's CONSTRUCTION is eager driver work
     # (bounded query collect + probe ranking inside the Arrow scorer), so
     # the two independent directions overlap on a 2-thread pool — same
-    # §2.6 rationale as the builds; pure construction, no result state.
+    # §2.6 rationale as the builds. An index built above is freed here:
+    # both directions are materialized before it is unpersisted, and the
+    # caller release()s the result (the duplicate_components contract).
     if kernel == "ivf":
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            ffut = pool.submit(
-                _knn_cos, s, tgt_c, k, kernel, nprobe, n_centroids, fwd_index
-            )
-            bfut = pool.submit(
-                _knn_cos, t, src_c, k, kernel, nprobe, n_centroids, bwd_index
-            )
-            fwd, bwd = ffut.result(), bfut.result()
+        def _search(queries, corpus, index):
+            out = _knn_cos(queries, corpus, k, kernel, nprobe, n_centroids, index)
+            return materialize(out) if built else out
+
+        try:
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                ffut = pool.submit(_search, s, tgt_c, fwd_index)
+                bfut = pool.submit(_search, t, src_c, bwd_index)
+                fwd, bwd = ffut.result(), bfut.result()
+        finally:
+            for index in built:
+                index.unpersist()
     else:
         fwd = _knn_cos(s, tgt_c, k, kernel, nprobe, n_centroids, fwd_index)
         bwd = _knn_cos(t, src_c, k, kernel, nprobe, n_centroids, bwd_index)
@@ -296,7 +316,8 @@ def mine_hard_negatives(
     governed by ``nprobe``/``n_centroids``; pass a prebuilt cosine
     ``index`` over the unit-normalized corpus to amortize the build) —
     the DPR production shape, where negatives come from the serving ANN
-    index rather than an exact scan.
+    index rather than an exact scan. Without ``index`` the result reads a
+    materialized search: ``release()`` it after its last action.
     """
     if kernel not in _KERNELS:
         raise ValueError(f"kernel must be one of {_KERNELS}; got {kernel!r}")

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..datasets import stream_table
 from ..functions import text as T
 from ..functions.text import word_shingles
 from ..functions.hashing import str_hash_col
@@ -40,15 +41,7 @@ def stream_documents(spark, sf_dir: str) -> DataFrame:
     """File-source document stream over the testdata parquet (one file per
     trigger with availableNow — the batch-twin harness other streaming
     surfaces use)."""
-    batch = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        # FileStreamSource requires a directory: stream the sf dir, glob to
-        # the documents file(s) — same pattern as stream_events
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    return stream_table(spark, sf_dir, "documents")
 
 
 def curate_stream_transform(

@@ -13,50 +13,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-def _events_schema(ts_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
+from ..datasets import stream_table
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet, ts normalized to a
-    microsecond TIMESTAMP — same normalization as ``datasets.load_events``.
-
-    Streaming file sources need an explicit schema, and the driver testdata's
-    on-disk ts type has shifted vintages (TIMESTAMP(NANOS) → TIMESTAMP(MICROS)),
-    so probe the actual type with a one-off batch metadata read and branch.
-    """
-    import os
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    on_disk = dict(
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet")).dtypes
-    )["ts"]
-    legacy_nanos = on_disk in ("bigint", "long")
-    ts_type = T.LongType() if legacy_nanos else T.TimestampNTZType()
-    raw = (
-        spark.readStream.schema(_events_schema(ts_type))
-        .option("maxFilesPerTrigger", 1)
-        # FileStreamSource requires a directory: stream the sf dir, glob to
-        # the events file(s).
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    if legacy_nanos:
-        # integer DIV, not floor(double /): epoch-nanos exceed float64 precision
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    # NTZ -> LTZ: session runs in UTC, cast preserves wall-clock and instant.
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    """File-source stream over the events parquet, one file per trigger,
+    with ``datasets.load_events``' schema and ``ts`` normalization."""
+    return stream_table(spark, sf_dir, "events")
 
 
 def _window_agg(events: DataFrame, window: str, watermark: str | None) -> DataFrame:

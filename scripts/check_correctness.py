@@ -1,6 +1,10 @@
 """Dev harness simulating the driver's t2 correctness gate: run every
 registry query on Spark AND its DuckDB oracle at sf0.01; compare row count,
-column names, and order-insensitive values (columns sorted by name)."""
+column names, and order-insensitive values (columns sorted by name).
+
+Each query runs under a Spark job group named after it, and its line reports
+how many jobs building its DataFrame launched (``build_jobs``), before any
+action ran."""
 
 import os
 import sys
@@ -44,13 +48,16 @@ qs = entrymod.queries()
 oracles = entrymod.oracle_sql()
 failures, passes, rows_only = [], [], []
 per_query_s: dict[str, float] = {}
+build_jobs: dict[str, int] = {}
 t_all0 = time.time()
 for name, fn in qs.items():
     if ONLY and name not in ONLY:
         continue
+    spark.sparkContext.setJobGroup(name, name)
     t0 = time.time()
     try:
         sdf = fn(spark, SF)
+        build_jobs[name] = len(spark.sparkContext.statusTracker().getJobIdsForGroup(name))
         scols = sdf.columns
         srows = [tuple(r) for r in sdf.collect()]
     except Exception as ex:
@@ -93,7 +100,10 @@ for name, fn in qs.items():
         per_query_s[name] = time.time() - t0
         continue
     passes.append((name, len(sn)))
-    print(f"ok   {name}: {len(sn)} rows match [{time.time()-t0:.1f}s]")
+    print(
+        f"ok   {name}: {len(sn)} rows match "
+        f"[{time.time()-t0:.1f}s, build_jobs {build_jobs[name]}]"
+    )
     per_query_s[name] = time.time() - t0
 
 # time-budget report (VERDICT r8 item 7): the full run grows each round —
@@ -101,7 +111,10 @@ for name, fn in qs.items():
 # verify gate.
 print()
 slow = sorted(per_query_s.items(), key=lambda kv: -kv[1])[:10]
-print(f"wall {time.time()-t_all0:.1f}s over {len(per_query_s)} queries; top-10 slowest:")
+print(
+    f"wall {time.time()-t_all0:.1f}s over {len(per_query_s)} queries, "
+    f"{sum(build_jobs.values())} build jobs; top-10 slowest:"
+)
 for n, dt in slow:
     print(f"  {dt:6.1f}s  {n}")
 print()

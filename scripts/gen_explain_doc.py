@@ -144,7 +144,7 @@ def main() -> None:
         "The engine's scale properties are plan properties. `tests/test_plan_properties.py`",
         "asserts the load-bearing ones; this document shows the actual plans.",
         "",
-        "Six engine-wide rules shape every plan below:",
+        "Seven engine-wide rules shape every plan below:",
         "",
         "- **Parallelism comes from the data.** A scan runs one task per input split;",
         "  a shuffle runs `spark.sql.shuffle.partitions` tasks (AQE coalesces them).",
@@ -152,6 +152,12 @@ def main() -> None:
         "  partition count, so building a lazily returned result launches no Spark",
         "  job. The only repartitions left group rows by a key (index buckets,",
         "  compaction, Z-order layouts, WebDataset shards).",
+        "- **A testdata table is read with its footer-declared schema; building a",
+        "  registry query launches a job only for trained artifacts or iterative",
+        "  rounds.** `datasets.table_schema` reads the Parquet footer on the driver",
+        "  (`timestamp_ntz` for naive timestamps, `bigint` for the legacy",
+        "  `timestamp[ns]` vintage), and `load_table` and the stream loaders declare",
+        "  it, so no read runs Spark's schema-inference job.",
         "- **One way to materialize.** An intermediate read more than once, or an",
         "  iterative round whose lineage must be cut, goes through",
         "  `materialize(df)` (`filtered_ads_vector_search_spark/materialize.py`):",

@@ -5,11 +5,30 @@ normalized events.ts must be a timestamp regardless of the on-disk vintage
 This is the failure class that crashed BENCH_r02 — catch it in pytest instead.
 """
 
-import pytest
+import uuid
 
-from filtered_ads_vector_search_spark import datasets
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from filtered_ads_vector_search_spark import datasets, registry
+from filtered_ads_vector_search_spark.streaming import stream_events
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def _jobs_launched(spark, fn):
+    """Spark jobs ``fn()`` launches, counted under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.mark.parametrize("table", datasets.TABLES)
@@ -129,3 +148,46 @@ def test_table_dtypes(spark, table):
             f"{table}.{col} loaded as {got[col]!r}, expected one of {allowed} "
             "(driver testdata vintage drift — update loaders/oracles together)"
         )
+
+
+def test_nanos_vintage_events_load_and_stream(spark, tmp_path):
+    """The legacy ``timestamp[ns]`` vintage of events.ts: the batch loader
+    converts epoch nanos to micros with integer division, and the stream
+    loader declares the same schema from the footer, with no batch read."""
+    nanos = [1_700_000_000_123_456_789, 1_700_000_061_000_000_999, 1_700_000_122_999_999_999]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2, 3], pa.int64()),
+                "ts": pa.array(nanos, pa.timestamp("ns")),
+                "user_id": pa.array([7, 7, 8], pa.int64()),
+                "event_type": ["view", "click", "view"],
+                "value": [1.0, 2.0, 3.0],
+                "props": ["{}", "{}", "{}"],
+            }
+        ),
+        tmp_path / "events.parquet",
+    )
+    got = datasets.load_events(spark, str(tmp_path))
+    want = spark.createDataFrame(
+        list(zip([1, 2, 3], nanos)), "event_id bigint, nanos bigint"
+    ).select("event_id", F.timestamp_micros(F.expr("nanos DIV 1000")).alias("ts"))
+    assert dict(got.dtypes)["ts"] == "timestamp"
+    assert sorted(got.select("event_id", "ts").collect()) == sorted(want.collect())
+
+    holder = {}
+    jobs = _jobs_launched(
+        spark, lambda: holder.setdefault("s", stream_events(spark, str(tmp_path)))
+    )
+    assert jobs == 0
+    assert holder["s"].isStreaming
+    assert holder["s"].schema == got.schema
+
+
+def test_reads_and_query_construction_launch_no_job(spark):
+    """A read with a footer-declared schema launches no schema-inference
+    job, so neither does building a registry query over plain reads."""
+    for table in datasets.TABLES:
+        assert _jobs_launched(spark, lambda: datasets.load_table(spark, SF_DIR, table)) == 0, table
+    for name in ("tpch_q1", "text_stats", "knn_exact", "event_funnel"):
+        assert _jobs_launched(spark, lambda: registry.QUERIES[name](spark, SF_DIR)) == 0, name

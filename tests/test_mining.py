@@ -6,12 +6,15 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from filtered_ads_vector_search_spark.materialize import release
 from filtered_ads_vector_search_spark.operators.mining import (
     mine_bitext,
     mine_hard_negatives,
 )
 
 from conftest import SF_TEST
+
+pytestmark = pytest.mark.usefixtures("no_leaked_rdds")
 
 
 def _df(spark, rows, start_id=0):
@@ -197,6 +200,7 @@ def test_mining_ivf_kernel_overlap_and_shape(spark):
     pe = {(r["src_id"], r["tgt_id"]) for r in bx.collect()}
     pa = {(r["src_id"], r["tgt_id"]) for r in bx_ann.collect()}
     assert len(pe & pa) / len(pe) >= 0.8
+    release(ann, bx_ann)
     # prebuilt-index handles: identical to the internally-built path
     from filtered_ads_vector_search_spark.operators.ann import IVFIndex
     from filtered_ads_vector_search_spark.operators.mining import _unit_norm
