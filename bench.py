@@ -146,7 +146,6 @@ def main() -> None:
         "knn_sq8",
         "dedup_exact",
         "dedup_minhash_lsh",
-        "dedup_components_star",
         "dedup_pagerank",
         "decontaminate_bloom",
         "substr_dup_stats",

@@ -103,13 +103,3 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         .parquet(sf_dir)
     )
     return _normalize(name, raw)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so spark.sql can see them."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -43,7 +43,6 @@ from .topk import (
     Metric,
     _arrow_vectors,
     _sqeuclidean_blas_scorer,
-    _sqeuclidean_bucket_scorer,
     _sqeuclidean_fold,
     arrow_switch,
     distance_col,
@@ -835,7 +834,6 @@ class IVFIndex:
         radius: float,
         nprobe: int = 8,
         predicate: Column | None = None,
-        arrow_score: bool | str = False,
     ) -> DataFrame:
         """Probed radius search: every corpus row within ``radius`` of each
         query, scanning only the nprobe nearest cells — FAISS's public IVF
@@ -853,31 +851,6 @@ class IVFIndex:
         corpus = self.assigned
         if predicate is not None:
             corpus = corpus.filter(predicate)
-
-        if arrow_switch(arrow_score, "arrow_score"):
-            # the batch-throughput form: probed buckets scored as vectorized
-            # blocks inside the kernel's radius mode — the expression path
-            # below evaluates the interpreted HOF fold once per CANDIDATE
-            # (queries x nprobe x bucket rows: ~3x10^9 at 5M/10kq/nprobe=32,
-            # the same trap the graph kernel closed). Kernel rows ARE the
-            # final relation — no window, no dedup (one bucket per corpus
-            # row).
-            if self.metric != "sqeuclidean":
-                raise NotImplementedError(
-                    "range_search(arrow_score=True) implements the "
-                    f"sqeuclidean fold; got metric={self.metric!r}"
-                )
-            return _probed_scan(
-                queries,
-                corpus,
-                "range_search_arrow",
-                (centroid_matrix(self), nprobe, self.centroids),
-                scorer=_sqeuclidean_bucket_scorer,
-                top=0,  # unused in radius mode
-                id_col=self.id_col,
-                data_col=self.vec_col,
-                radius=radius,
-            )
 
         probes = self._probes(queries, nprobe)
         cand = (
@@ -1070,7 +1043,6 @@ def plan_filtered_range_search(
     radius: float,
     nprobe: int = 8,
     predicate: Column | None = None,
-    arrow: bool | str = False,
 ) -> FilteredSearchPlan:
     """Selectivity-routed filtered RANGE search — the radius twin of
     :func:`plan_filtered_search`, same saturation rule.
@@ -1080,9 +1052,9 @@ def plan_filtered_range_search(
     ``ceil(nprobe / s)`` probes. When that widening SATURATES
     (``>= n_centroids``) the probed tier would scan every cell of the
     filtered corpus anyway, so an exact range scan over the filtered
-    relation (range_window / range_scalable — both are single fused scans
-    with NO exchange, strictly less machinery than probe ranking + bucket
-    join) returns the same epsilon-ball with recall 1.0 by construction.
+    relation (``range_window``: one fused scan with NO exchange, strictly
+    less machinery than probe ranking + bucket join) returns the same
+    epsilon-ball with recall 1.0 by construction.
     Measured at 5M x 64d: the unfiltered exact Arrow scan is 216 s, but at
     mid_rated selectivity (~0.77%) the filtered scan touches ~39k rows
     (~seconds) while saturated probing pays full probe ranking + a widened
@@ -1094,31 +1066,25 @@ def plan_filtered_range_search(
       * ``predicate is None``  -> probed tier at the base nprobe;
       * ``ceil(nprobe/s) < C`` -> probed tier at the widened nprobe;
       * saturated (or s == 0, the filter below the sample's resolution)
-        -> exact filtered range scan (``arrow`` picks the kernel form).
+        -> exact filtered range scan (``range_window``).
     IVFIndex only: range semantics need full vectors (the assigned relation
     always carries them; the coded IVFPQ tier has no radius contract —
     FAISS's IVFPQ range_search rides ADC error bounds we don't claim)."""
-    from .range_search import range_scalable, range_window
+    from .range_search import range_window
 
-    arrow = arrow_switch(arrow)
     if predicate is None:
         eff = min(nprobe, index.n_centroids)
         return FilteredSearchPlan(
-            "ann", None, eff,
-            index.range_search(
-                queries, radius=radius, nprobe=eff, arrow_score=arrow
-            ),
+            "ann", None, eff, index.range_search(queries, radius=radius, nprobe=eff)
         )
 
     sel, widened = _widened_nprobe(index, nprobe, predicate)
     eff = min(widened, index.n_centroids)
 
     if widened >= index.n_centroids:
-        filt = index.assigned.filter(predicate)
-        form = range_scalable if arrow else range_window
-        res = form(
+        res = range_window(
             queries,
-            filt,
+            index.assigned.filter(predicate),
             radius=radius,
             metric=index.metric,
             id_col=index.id_col,
@@ -1127,7 +1093,6 @@ def plan_filtered_range_search(
         return FilteredSearchPlan("exact_filtered", sel, eff, res)
 
     res = index.range_search(
-        queries, radius=radius, nprobe=eff, predicate=predicate,
-        arrow_score=arrow,
+        queries, radius=radius, nprobe=eff, predicate=predicate
     )
     return FilteredSearchPlan("ann", sel, eff, res)

@@ -562,9 +562,9 @@ def duplicate_components(
     materialization, and its count of changed labels is observed in the
     same pass, so convergence costs no extra job. Iterations are bounded by
     graph DIAMETER (``max_iter`` rounds, round 1 included), and near-dup
-    clusters are shallow (dup clusters of real corpora are cliques-ish); for
-    adversarial long chains use `duplicate_components_star` (large-star/
-    small-star, O(log n) rounds).
+    clusters are shallow (dup clusters of real corpora are cliques-ish); an
+    adversarial long chain that exceeds ``max_iter`` raises, and the caller
+    re-runs with a larger ``max_iter``.
 
     Only vertices that appear in >= 1 pair are returned; unpaired docs are
     their own (trivial) components and don't need rows at 100 TB scale.
@@ -622,8 +622,8 @@ def duplicate_components(
         # Labels are only correct at fixpoint; a chain longer than max_iter
         # hops would silently split one component into several. Real dup
         # clusters are shallow (cliques-ish), so hitting this means either
-        # an adversarial input (raise and re-run with the large-star/
-        # small-star O(log n) variant) or max_iter set too low.
+        # an adversarial input or max_iter set too low: raise, and the
+        # caller re-runs with a larger max_iter.
         release(*[d for d in (edges, labels) if d is not None])
         raise RuntimeError(
             f"duplicate_components did not converge within max_iter={max_iter} "
@@ -632,113 +632,6 @@ def duplicate_components(
         )
     release(edges)
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("component_id"))
-
-
-def duplicate_components_star(
-    pairs: DataFrame,
-    id_a: str = "doc_a",
-    id_b: str = "doc_b",
-    max_rounds: int = 50,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star rounds —
-    the O(log n)-round variant for adversarially deep graphs (long chains),
-    where min-label propagation (`duplicate_components`) needs one round per
-    hop of graph diameter. Semantics and output schema are identical:
-    (doc_id, component_id = min reachable id), one row per vertex that
-    appears in >= 1 pair.
-
-    Per round (the MapReduce connected-components pattern from the public
-    literature: alternate two star operations until the edge set is stable):
-      large-star: group the symmetrized edges by u; m = min(N(u) + {u});
-                  every neighbor v > u re-attaches as (v, m).
-      small-star: group edges oriented large->small by the larger endpoint
-                  u; m = min of its (all smaller) neighbors; u and every
-                  neighbor attach to m.
-    Both are one map-combinable min-groupBy + one equi-join; each round's
-    edge set is materialized (same plan-truncation discipline as
-    duplicate_components — the round's plan would otherwise nest the
-    previous round's twice). At fixpoint the edges form stars rooted at
-    component minima; labels fall out of one final min-groupBy.
-    """
-
-    def _materialize_with_checksum(e: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
-        # fuse the fixpoint checksum into the SAME job that materializes
-        # the round's edges: observe() computes the aggregate as a side
-        # effect of the eager materialization (one job per round instead of
-        # two — the checksum collect was pure fixed cost at any scale)
-        obs = Observation()
-        out = materialize(
-            e.observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-            )
-        )
-        m = obs.get
-        return out, (int(m["n"]), int(m["h"]))
-
-    edges, prev = _materialize_with_checksum(
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    vertices = materialize(
-        edges.select(F.col("u").alias("id"))
-        .unionAll(edges.select(F.col("v").alias("id")))
-        .distinct()
-    )
-
-    def _large_star(e: DataFrame) -> DataFrame:
-        sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        return (
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def _small_star(e: DataFrame) -> DataFrame:
-        # orient large -> small so every group's neighbors are < u
-        d = e.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        mins = d.groupBy("u").agg(F.min("v").alias("m"))
-        attach_u = mins.select(F.col("u"), F.col("m").alias("v"))
-        attach_n = (
-            d.join(mins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        return (
-            attach_u.unionAll(attach_n)
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    for _ in range(max_rounds):
-        stale = edges
-        edges, cur = _materialize_with_checksum(_small_star(_large_star(edges)))
-        release(stale)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        release(edges, vertices)
-        raise RuntimeError(
-            f"duplicate_components_star did not stabilize in {max_rounds} "
-            "rounds (expected O(log n)); the edge set is still changing"
-        )
-    # at fixpoint every non-root points at its component minimum
-    labels = (
-        vertices.join(edges, vertices["id"] == edges["u"], "left")
-        .groupBy("id")
-        .agg(F.coalesce(F.min("v"), F.first("id")).alias("component_id"))
-        .select(F.col("id").alias("doc_id"), "component_id")
-    )
-    return labels
 
 
 def duplicate_components_sql(pairs_sql: str, id_a: str = "doc_a", id_b: str = "doc_b") -> str:
@@ -969,7 +862,7 @@ def contamination_flags_bloom(
     # The eval shingle set is read three times (the sizing count, the
     # bitmap build, the exact join) — materialize it ONCE with the sizing
     # count fused into the same job via observe() (the
-    # duplicate_components_star discipline). It is the relation the exact
+    # duplicate_components discipline). It is the relation the exact
     # join already broadcasts, so holding it is bounded by the same
     # assumption (eval corpora are small by definition).
     e = (
@@ -1572,6 +1465,10 @@ FROM base b LEFT JOIN rebuilt r ON b.doc_id = r.doc_id
 # here when ``n_clusters`` is not pinned.
 SEMDEDUP_ROWS_PER_CLUSTER = 50_000
 
+# Target rows per (cluster, shard) task of the SemDeDup keep kernel: bounds
+# one task's pair work to SEMDEDUP_SHARD_ROWS x |cell| whatever the skew.
+SEMDEDUP_SHARD_ROWS = 32_768
+
 
 def _semdedup_assigned(
     embeddings: DataFrame,
@@ -1634,7 +1531,6 @@ def semdedup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_cluster_rows: int | None = 200_000,
-    _assigned: DataFrame | None = None,
 ) -> DataFrame:
     """Within-cluster cosine near-dup pairs (cluster_id, id_a, id_b,
     cos_dist), id_a < id_b.  One shuffle on cluster_id for the self-join;
@@ -1645,12 +1541,8 @@ def semdedup_pairs(
     (the SemDeDup paper's regime); pin it for reproducible oracle runs.
     ``max_cluster_rows`` raises on a degenerate cell before the quadratic
     join launches — see ``_semdedup_assigned``."""
-    assigned = (
-        _assigned
-        if _assigned is not None
-        else _semdedup_assigned(
-            embeddings, n_clusters, id_col, vec_col, max_cluster_rows
-        )
+    assigned = _semdedup_assigned(
+        embeddings, n_clusters, id_col, vec_col, max_cluster_rows
     )
     # norms hoisted below the self-join (vec_cosine_distance_prenorm): one
     # interpreted fold per PAIR instead of three — the norm is per-row and
@@ -1685,59 +1577,33 @@ def semdedup_keep(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_cluster_rows: int | None = 200_000,
-    arrow_kernel: bool = False,
-    kernel_shard_rows: int = 32_768,
 ) -> DataFrame:
     """Survivors of the greedy keep rule: a vector is dropped iff some
-    lower-id vector in ITS cluster is within max_cos_dist.  Exactly the
-    pairs' id_b side, removed with one left_anti join — no iteration.
+    lower-id vector in ITS cluster is within max_cos_dist — exactly the id_b
+    side of ``semdedup_pairs``, decided per cell without materializing the
+    pair relation and with no iteration.
 
-    Runs ONE shared cluster assignment (a single ``IVFIndex.build_fixed``,
-    materialized) feeding both the pair generation and the keep base — not a
-    second full-corpus quantizer pass.
-
-    ``arrow_kernel=True`` swaps the within-cluster |cluster|² expression
-    self-join for a column-sharded NumPy kernel (`_semdedup_keep_arrow`) —
-    the throughput form for paper-regime cluster sizes (~50k rows/cell),
-    where the interpreted HOF cosine over billions of pair rows is the
-    bottleneck; ``kernel_shard_rows`` bounds each task's target block so a
-    skewed cell cannot become a single-task straggler. Decision-identical
-    to the expression path (boundary-banded exact refine); asserted against
-    it in tests."""
+    Runs ONE cluster assignment (a single ``IVFIndex.build_fixed``,
+    materialized) and feeds it to the column-sharded NumPy kernel
+    ``_semdedup_keep_arrow``: tiled BLAS with an exact refine on the
+    boundary band, so the kept set equals the pairs' anti-join (asserted in
+    tests) and the DuckDB oracle ``semdedup_keep_sql``."""
     assigned = _semdedup_assigned(
         embeddings, n_clusters, id_col, vec_col, max_cluster_rows
     )
-    if arrow_kernel:
-        return _semdedup_keep_arrow(
-            assigned, max_cos_dist, shard_rows=kernel_shard_rows
-        )
-    pairs = semdedup_pairs(
-        embeddings,
-        max_cos_dist=max_cos_dist,
-        id_col=id_col,
-        vec_col=vec_col,
-        _assigned=assigned,
-    )
-    dropped = pairs.select(F.col("id_b").alias("id")).distinct()
-    return (
-        assigned.select("id", "cluster_id")
-        .join(dropped, "id", "left_anti")
-        .select("id", "cluster_id")
-    )
+    return _semdedup_keep_arrow(assigned, max_cos_dist)
 
 
-def _semdedup_keep_arrow(
-    assigned: DataFrame, max_cos_dist: float, shard_rows: int = 32_768
-) -> DataFrame:
+def _semdedup_keep_arrow(assigned: DataFrame, max_cos_dist: float) -> DataFrame:
     """Per-cluster survivors via column-sharded ``applyInArrow`` kernels.
 
-    The expression path materializes every within-cluster (id_a < id_b) pair
-    and evaluates the cosine HOF fold per row — |cluster|²/2 interpreted
-    fold evaluations, the scale bottleneck at paper-regime ~50k-row cells
-    (1.25e9 pairs/cell). This kernel answers the SAME decision per pair with
-    tiled BLAS over the cell's (n, d) matrix, plus an exact-arithmetic
-    refine on the (measure-zero) boundary band so the kept SET is
-    decision-identical to the expression form:
+    The pair form (``semdedup_pairs``) materializes every within-cluster
+    (id_a < id_b) pair and evaluates the cosine HOF fold per row —
+    |cluster|²/2 interpreted fold evaluations, the scale bottleneck at
+    paper-regime ~50k-row cells (1.25e9 pairs/cell). This kernel answers the
+    SAME decision per pair with tiled BLAS over the cell's (n, d) matrix,
+    plus an exact-arithmetic refine on the (measure-zero) boundary band so
+    the kept SET is decision-identical to the pair form's anti-join:
 
     * fast path: normalized matmul gives cos_dist_blas; the expression
       decision ``round(d, 4) <= thr`` (Spark HALF_UP on an on-grid thr) is
@@ -1753,14 +1619,14 @@ def _semdedup_keep_arrow(
     Straggler control — the 100 TB point of this function: one task per
     CELL makes wall time the quadratic of the LARGEST cell (a 150k-row cell
     is ~20x the pair work of a 50k paper-regime one). So cells are
-    column-sharded: targets split into ``shard_rows``-sized id-ordered
-    blocks, and each (cluster, shard) task receives its target block plus
-    every lower-id row of the cell as scoring sources (an explode over
-    shards >= the row's own — bounded <= ceil(guard/shard_rows)-fold
+    column-sharded: targets split into ``SEMDEDUP_SHARD_ROWS``-sized
+    id-ordered blocks, and each (cluster, shard) task receives its target
+    block plus every lower-id row of the cell as scoring sources (an explode
+    over shards >= the row's own — bounded <= ceil(guard/shard)-fold
     duplication of cell rows, ~123 MB worst-case per 150k cell at d=64).
-    Per-task pair work is then <= shard_rows * |cell| regardless of cell
-    skew, and shards spread across executors like any other task. Cells at
-    or under ``shard_rows`` keep exactly one task and duplicate nothing."""
+    Per-task pair work is then <= shard * |cell| regardless of cell skew,
+    and shards spread across executors like any other task. Cells at or
+    under one shard keep exactly one task and duplicate nothing."""
     import decimal
 
     from pyspark.sql import Window
@@ -1905,7 +1771,8 @@ def _semdedup_keep_arrow(
     sharded = (
         assigned.withColumn(
             "own_shard",
-            ((F.row_number().over(w) - F.lit(1)) / F.lit(int(shard_rows))).cast("int"),
+            ((F.row_number().over(w) - F.lit(1)) / F.lit(SEMDEDUP_SHARD_ROWS))
+            .cast("int"),
         )
         .withColumn(
             "max_shard", F.max("own_shard").over(Window.partitionBy("cluster_id"))

@@ -1,7 +1,7 @@
 """Iterative graph analytics over relation-shaped edges: damped PageRank.
 
-Complements the connected-components tier (dedup.duplicate_components /
-_star): where components answers "which docs are the same cluster",
+Complements the connected-components tier (dedup.duplicate_components):
+where components answers "which docs are the same cluster",
 PageRank ranks WITHIN the similarity graph — e.g. pick the most central
 representative of a dup cluster instead of min-id, or rank documents by
 citation/link structure.

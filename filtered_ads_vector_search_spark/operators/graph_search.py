@@ -27,7 +27,7 @@ hop moves the beam monotonically closer (the beam never worsens — the
 union keeps current members). Fixed ``n_hops`` bounds the walk statically
 — the CAGRA policy, not HNSW's dynamic stop, which a declarative plan
 cannot express without a driver-side convergence loop. Each hop's scored
-relation is materialized (the pagerank / duplicate_components_star
+relation is materialized (the pagerank / duplicate_components
 plan-truncation discipline): the per-hop plan stays constant-size instead
 of nesting every previous hop's subtree.
 
@@ -256,7 +256,7 @@ def graph_search(
     # which is what actually dominated — a 6-hop walk pinned the driver
     # single-core for >25 min in PlanStringConcat with 18 GB of plan
     # strings. Materializing per hop truncates the lineage to a leaf (the
-    # pagerank / duplicate_components_star discipline): hop-local
+    # pagerank / duplicate_components discipline): hop-local
     # constant-size plans, one tiny materialization job per hop.
     # Materialized relations are frontier-sized — bounded at any corpus
     # scale; each hop releases the previous hop's.

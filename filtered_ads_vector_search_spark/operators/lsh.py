@@ -53,7 +53,7 @@ def _hyperplanes(dim: int, n_bits: int, n_tables: int, seed: int) -> np.ndarray:
     return np.random.RandomState(seed).standard_normal((n_tables, n_bits, dim))
 
 
-def _all_dots_col(vec_sql: str, flat_planes: np.ndarray) -> Column:
+def _all_dots_sql(vec_sql: str, flat_planes: np.ndarray) -> str:
     """All M = n_tables*n_bits hyperplane dot products in ONE fold, built as
     ONE SQL string.
 
@@ -70,10 +70,6 @@ def _all_dots_col(vec_sql: str, flat_planes: np.ndarray) -> Column:
     ~10× the actual executor time at bench scale. One ``F.expr`` parse is
     milliseconds, and Catalyst constant-folds the literal matrix once.
     """
-    return F.expr(_all_dots_sql(vec_sql, flat_planes))
-
-
-def _all_dots_sql(vec_sql: str, flat_planes: np.ndarray) -> str:
     n_planes, dim = flat_planes.shape
     pt = (
         "array("

@@ -167,68 +167,22 @@ def mine_bitext(
     s = src.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
     t = tgt.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
     # canonical corpus-side names up front: every downstream kernel
-    # (knn_window/knn_scalable defaults, the ivf _build, _knn_cos's index
-    # build) assumes (vec_id, embedding) — aliasing here makes non-default
+    # (knn_window/knn_scalable defaults, _knn_cos's index build) assumes
+    # (vec_id, embedding) — aliasing here makes non-default
     # id_col/vec_col work on all paths instead of only the query side
     src_c = src.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
     tgt_c = tgt.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
 
-    built = []
-    if kernel == "ivf" and (fwd_index is None or bwd_index is None):
-        # The two direction indexes are INDEPENDENT builds (fwd over tgt,
-        # bwd over src) whose driver phases (bounded-sample collect, seeded
-        # k-means, assignment materialization) otherwise serialize; submit
-        # them from a 2-thread pool so each build's Spark jobs back-fill
-        # the other's driver-side k-means (guide §2.6 overlap independent
-        # jobs). Builds are seeded + hash-sample deterministic, so
-        # concurrency cannot change the trained artifacts.
-        from concurrent.futures import ThreadPoolExecutor
-
-        from .ann import IVFIndex
-
-        def _build(rel: DataFrame):
-            # sqeuclidean over unit vectors == cosine ranking (see
-            # _knn_cos), which unlocks the BLAS batch scorer at search time
-            return IVFIndex.build(
-                _unit_norm(rel.select("vec_id", "embedding"), "embedding"),
-                n_centroids=n_centroids,
-                metric="sqeuclidean",
-            )
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            ffut = None if fwd_index is not None else pool.submit(_build, tgt_c)
-            bfut = None if bwd_index is not None else pool.submit(_build, src_c)
-            fwd_index = fwd_index if ffut is None else ffut.result()
-            bwd_index = bwd_index if bfut is None else bfut.result()
-            built = [f.result() for f in (ffut, bfut) if f is not None]
-
     # forward: every source's k nearest targets (candidates AND the x-side
     # penalty come from this ONE k-NN job);
     # backward: every target's k nearest sources — the y-side penalty only.
-    # On the ivf kernel each direction's CONSTRUCTION is eager driver work
-    # (bounded query collect + probe ranking inside the Arrow scorer), so
-    # the two independent directions overlap on a 2-thread pool — same
-    # §2.6 rationale as the builds. An index built above is freed here:
-    # both directions are materialized before it is unpersisted, and the
-    # caller release()s the result (the duplicate_components contract).
-    if kernel == "ivf":
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _search(queries, corpus, index):
-            out = _knn_cos(queries, corpus, k, kernel, nprobe, n_centroids, index)
-            return materialize(out) if built else out
-
-        try:
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                ffut = pool.submit(_search, s, tgt_c, fwd_index)
-                bfut = pool.submit(_search, t, src_c, bwd_index)
-                fwd, bwd = ffut.result(), bfut.result()
-        finally:
-            for index in built:
-                index.unpersist()
-    else:
-        fwd = _knn_cos(s, tgt_c, k, kernel, nprobe, n_centroids, fwd_index)
-        bwd = _knn_cos(t, src_c, k, kernel, nprobe, n_centroids, bwd_index)
+    # On the ivf kernel without a prebuilt index, _knn_cos builds the
+    # direction's index, materializes the search and frees the index, so
+    # the caller release()s the result (the duplicate_components contract).
+    # Both directions run on the caller's thread: their Spark jobs carry
+    # its job group.
+    fwd = _knn_cos(s, tgt_c, k, kernel, nprobe, n_centroids, fwd_index)
+    bwd = _knn_cos(t, src_c, k, kernel, nprobe, n_centroids, bwd_index)
 
     # order-fixed penalty fold (the bm25_search discipline): per id, sort
     # the k neighbor cosines by neighbor_id and sum ascending — the same

@@ -59,10 +59,10 @@ MAX_BROADCAST_QUERIES = 100_000
 
 def arrow_switch(value, name: str = "arrow") -> bool:
     """The one meaning of every search form's Arrow switch (IVF
-    ``arrow_score``, IVFPQ ``arrow_adc``, the planners' ``arrow``):
-    ``False`` runs the expression form, ``True`` the family's one Arrow
-    form. ``"blas"`` is accepted as a spelling of ``True``; any other
-    value raises."""
+    ``arrow_score``, IVFPQ ``arrow_adc``, ``plan_filtered_search``'s
+    ``arrow``): ``False`` runs the expression form, ``True`` the family's
+    one Arrow form. ``"blas"`` is accepted as a spelling of ``True``; any
+    other value raises."""
     if value is not False and value is not True and value != "blas":
         raise ValueError(f"{name} must be False, True or 'blas'; got {value!r}")
     return value is not False

@@ -3204,14 +3204,6 @@ def _dedup_components_sql() -> str:
     return DD.duplicate_components_sql(DD.minhash_pairs_sql(threshold=0.3))
 
 
-def _dedup_components_star_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same transitive closure via the O(log n)-round large-star/small-star
-    algorithm (duplicate_components_star) — the scale path for adversarially
-    deep dup graphs, checked against the identical recursive-CTE oracle."""
-    pairs = DD.minhash_pairs(_tbl(spark, sf_dir, "documents"), threshold=0.3)
-    return DD.duplicate_components_star(pairs)
-
-
 def _dedup_canonical_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = DD.minhash_pairs(_tbl(spark, sf_dir, "documents"), threshold=0.3)
     return DD.canonical_docs(DD.duplicate_components(pairs))
@@ -4324,7 +4316,8 @@ def _semdedup_pairs_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _semdedup_keep_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup survivors: greedy keep rule (drop iff a lower-id in-cluster
-    vector is within the threshold) as one left_anti join."""
+    vector is within the threshold), decided per cell by the column-sharded
+    Arrow kernel."""
     return DD.semdedup_keep(
         _tbl(spark, sf_dir, "embeddings"), n_clusters=8, max_cos_dist=0.7
     )
@@ -5506,7 +5499,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "curation_pipeline": _curation_pipeline_spark,
     "dedup_canonical": _dedup_canonical_spark,
     "dedup_chunk_pairs": _dedup_chunk_pairs_spark,
-    "dedup_components_star": _dedup_components_star_spark,
     "dedup_minhash_lsh": _minhash_pairs_spark,
     "dedup_pagerank": _dedup_pagerank_spark,
     "dedup_simhash_banded": lambda s, d: DD.simhash_pairs_banded(_tbl(s, d, "documents"), max_hamming=3),
@@ -5650,7 +5642,6 @@ ORACLES: dict[str, str] = {
     "dedup_ngram_jaccard": DD.ngram_jaccard_pairs_sql(threshold=0.3),
     "dedup_minhash_lsh": DD.minhash_pairs_sql(threshold=0.3),
     "dedup_components": _dedup_components_sql(),
-    "dedup_components_star": _dedup_components_sql(),
     "bm25_search": _bm25_sql(),
     "hybrid_rrf": _hybrid_rrf_sql(),
     "dedup_chunk_pairs": _dedup_chunk_pairs_sql(),

@@ -614,7 +614,6 @@ def main() -> None:
         emb.select("vec_id", "embedding"),
         n_clusters=None,
         max_cos_dist=SEMDEDUP_1M_THRESHOLD,
-        arrow_kernel=True,
     ).count()
     timings["semdedup_keep_1m"] = round(time.time() - t0, 3)
     extras["semdedup_1m_kept"] = kept_1m

@@ -75,9 +75,8 @@ FORMS = """\
 | Exact top-k | `knn_blockwise` (Arrow cogroup) | `knn_blockwise` | — | — | `test_topk` |
 | IVF top-k | `IVFIndex.search` (expression) | `ann_ivf`, `ann_ivf_fixed`, `grid_search_ivf`, `knn_filtered_auto_ann` | — | grid search, mining (cosine index) | `test_recall_ann`, `test_planner` |
 | IVF top-k | `search(arrow_score=True)` (Arrow, DGEMM) | `knn_sharded` | `search_batch` ann route | mining (`bitext_mine_ann`, `hard_negatives_ann`) | `test_recall_ann`, `test_planner` |
-| IVF range | `range_search` (expression) | `range_search_ivf`, `range_filtered_auto_ann` | — | range planner | `test_range_graph` |
-| IVF range | `range_search(arrow_score=True)` (Arrow, element fold) | — | — | range planner | `test_range_graph`, `test_recall_ann` |
-| Exact range | `range_window` / `range_scalable` | `range_search_exact`, `range_search_filtered`, `range_filtered_auto` / `range_search_scale`, `range_density` | — | range planner | `test_range_graph`, `test_recall_ann` |
+| IVF range | `range_search` (expression) | `range_search_ivf`, `range_filtered_auto_ann` | — | range planner | `test_range_graph`, `test_planner` |
+| Exact range | `range_window` / `range_scalable` | `range_search_exact`, `range_search_filtered`, `range_filtered_auto` / `range_search_scale`, `range_density` | — | range planner (`range_window`) | `test_range_graph`, `test_recall_ann` |
 | IVFPQ | `IVFPQIndex.search` (expression ADC) | `knn_ivfpq_fixed`, `knn_ivfpq_rerank`, `grid_search_ivfpq` | — | grid search | `test_recall_ann`, `test_planner` |
 | IVFPQ | `search(arrow_adc=True)` (Arrow ADC fold) | `knn_ivfpq_decomposed` | — | — | `test_recall_ann`, `test_planner` |
 | PQ encode | `pq_encode_expr` / `pq_encode_residual_expr` | `pq_codes`, `knn_pq_adc` | — | — | `test_pq` |
@@ -86,15 +85,16 @@ FORMS = """\
 | LSH | `search(kernel="arrow")` (default) | `ann_lsh`, `grid_search_lsh` | — | grid search | `test_lsh`, `test_recall_ann` |
 | k-NN graph | `knn_graph_window` / `knn_graph_bucketed(kernel="expr")` | `knn_graph_exact` / `knn_graph_fixed` | — | — | `test_range_graph`, `test_graph_search` |
 | k-NN graph | `knn_graph_bucketed(kernel="arrow")` | `graph_search_recall` | — | — | `test_range_graph` |
-| SemDeDup | `semdedup_keep(arrow_kernel=False/True)` | `semdedup_keep` (expression) | — | — | `test_quality_pii` |
+| SemDeDup | `semdedup_keep` (Arrow, column-sharded BLAS) | `semdedup_keep` | — | — | `test_quality_pii` |
 
 Kept on purpose although they add a form: `knn_blockwise` is the only exact
 form that runs past the query-collect cap; LSH `kernel="expr"` is the only
-form for hamming and the reference the Arrow form is tested against;
-`semdedup_keep` keeps its two forms until it moves onto `topk_group`.
+form for hamming and the reference the Arrow form is tested against.
 Deleted: the IVF element-fold top-k form, the IVFPQ decomposed-LUT ADC
 form and its per-worker cache, the pandas-UDF PQ encode, the DGEMM PQ
-encode, and the k-NN graph's DGEMM probe ranking.""".splitlines()
+encode, the k-NN graph's DGEMM probe ranking, the IVF range Arrow form,
+the SemDeDup expression keep (pairs + anti-join) and the large-star/
+small-star connected components.""".splitlines()
 
 
 def _ivfpq_search(c, q, arrow=False):
@@ -188,7 +188,7 @@ def main() -> None:
         '  at most 32 buckets loads with no Spark job; a directory without a',
         '  manifest is refused with a `ValueError` naming it.',
         '- **One Arrow scan-and-top-k kernel, one top-k merge (`topk_agg`).** Every',
-        '  Arrow search form (exact k-NN and range, IVF top-k and range, IVFPQ ADC,',
+        '  Arrow search form (exact k-NN and range, IVF top-k, IVFPQ ADC,',
         '  LSH, the blockwise and k-NN-graph cogroups) runs `topk.scan_topk` or its',
         '  per-group routine `topk_group` and supplies only its candidate groups',
         '  and its scorer. Every per-query merge is `topk_agg`: the row_number',
@@ -196,7 +196,7 @@ def main() -> None:
         '  cannot repeat, one dedup aggregation when they can.',
         '- **One Arrow form per index family, one switch.** A family keeps its',
         '  expression form where a registry oracle needs it and at most one Arrow',
-        '  form. IVF `arrow_score`, IVFPQ `arrow_adc` and both planners\' `arrow`',
+        '  form. IVF `arrow_score`, IVFPQ `arrow_adc` and the top-k planner\'s `arrow`',
         '  mean the same thing (`topk.arrow_switch`): `False` is the expression',
         '  form, `True` (or its spelling `"blas"`) the Arrow form, anything else a',
         '  `ValueError`. The forms and who calls them:',

@@ -4,7 +4,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from filtered_ads_vector_search_spark.functions import text as T
-from filtered_ads_vector_search_spark.materialize import release
 from filtered_ads_vector_search_spark.operators import dedup as DD
 
 from conftest import SF_TEST, collect_released
@@ -137,6 +136,27 @@ def test_duplicate_components_partition_invariance(spark):
     assert a == b and len(a) > 0
 
 
+def test_duplicate_components_star_partition_invariance(spark):
+    """Star-shaped components (node 3 joined from both 2 and 5), a pair and a
+    triangle: the labels are pinned, not only compared across partitionings."""
+    from filtered_ads_vector_search_spark.operators.dedup import duplicate_components
+
+    base = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (5, 3), (20, 21), (21, 22), (22, 20)],
+        "doc_a long, doc_b long",
+    )
+    for n in (1, 7):
+        got = {
+            tuple(r)
+            for r in collect_released(duplicate_components(base.repartition(n)))
+        }
+        assert got == {
+            (1, 1), (2, 1), (3, 1), (5, 1),
+            (10, 10), (11, 10),
+            (20, 20), (21, 20), (22, 20),
+        }, n
+
+
 def test_duplicate_components_raises_on_non_convergence(spark):
     """Labels are only the transitive closure at fixpoint: a chain longer
     than max_iter hops must raise, not silently return split components."""
@@ -150,57 +170,6 @@ def test_duplicate_components_raises_on_non_convergence(spark):
     # with enough rounds the same chain converges to one component
     comp = collect_released(duplicate_components(chain, max_iter=20))
     assert {r["component_id"] for r in comp} == {0}
-
-
-def test_duplicate_components_star_matches_label_propagation(spark):
-    """The O(log n) large-star/small-star variant must produce exactly the
-    labels of min-label propagation on real near-dup pairs, and must handle
-    a 64-hop chain (where propagation needs 64 rounds) in O(log n) rounds."""
-    from filtered_ads_vector_search_spark.operators.dedup import (
-        duplicate_components,
-        duplicate_components_star,
-        minhash_pairs,
-    )
-
-    docs = spark.read.parquet(f"{SF_TEST}/documents.parquet")
-    pairs = minhash_pairs(docs, threshold=0.3).select("doc_a", "doc_b").cache()
-    a = {tuple(r) for r in collect_released(duplicate_components(pairs))}
-    b = {tuple(r) for r in collect_released(duplicate_components_star(pairs))}
-    assert a == b and len(a) > 0
-    pairs.unpersist()
-    release(pairs)
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(64)], "doc_a long, doc_b long"
-    )
-    comp = collect_released(duplicate_components_star(chain, max_rounds=12))
-    assert len(comp) == 65
-    assert {r["component_id"] for r in comp} == {0}
-
-
-def test_duplicate_components_star_partition_invariance(spark):
-    from filtered_ads_vector_search_spark.operators.dedup import (
-        duplicate_components_star,
-    )
-
-    base = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (5, 3), (20, 21), (21, 22), (22, 20)],
-        "doc_a long, doc_b long",
-    )
-    a = {
-        tuple(r)
-        for r in collect_released(duplicate_components_star(base.repartition(1)))
-    }
-    b = {
-        tuple(r)
-        for r in collect_released(duplicate_components_star(base.repartition(7)))
-    }
-    assert a == b
-    assert a == {
-        (1, 1), (2, 1), (3, 1), (5, 1),
-        (10, 10), (11, 10),
-        (20, 20), (21, 20), (22, 20),
-    }
 
 
 def test_decontamination_flags_planted_overlap(spark):

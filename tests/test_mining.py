@@ -217,6 +217,33 @@ def test_mining_ivf_kernel_overlap_and_shape(spark):
     idx.unpersist()
 
 
+def test_mine_bitext_ivf_jobs_carry_the_callers_job_group(spark):
+    """kernel='ivf' builds and searches on the caller's thread, so every
+    Spark job it launches carries the caller's job group: none lands among
+    the jobs that have no group."""
+    from filtered_ads_vector_search_spark.operators import topk as TK
+
+    emb = spark.read.parquet(f"{SF_TEST}/embeddings.parquet")
+    q, c = TK.split_queries(emb)
+    src = q.withColumnRenamed("query_id", "vec_id").withColumnRenamed(
+        "q_vec", "embedding"
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = "mine-bitext-ivf"
+    sc.setJobGroup(group, "mine_bitext kernel='ivf'")
+    try:
+        out = mine_bitext(src, c, k=4, kernel="ivf", nprobe=4, n_centroids=16)
+        assert out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    release(out)
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    assert tracker.getJobIdsForGroup(group)
+
+
 def test_hard_negatives_fetch_validation(spark):
     emb = spark.read.parquet(f"{SF_TEST}/embeddings.parquet")
     from filtered_ads_vector_search_spark.operators import topk as TK

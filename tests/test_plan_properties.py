@@ -19,7 +19,7 @@ from filtered_ads_vector_search_spark.plans import (
     physical_plan,
 )
 
-from conftest import SF_TEST
+from conftest import SF_TEST, collect_released
 
 
 def _knn(spark):
@@ -82,7 +82,9 @@ def test_minhash_partition_count_invariance(spark):
     docs = spark.read.parquet(f"{SF_TEST}/documents.parquet")
     a = DD.minhash_pairs(docs.repartition(1), threshold=0.3)
     b = DD.minhash_pairs(docs.repartition(16), threshold=0.3)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    assert sorted(map(tuple, collect_released(a))) == sorted(
+        map(tuple, collect_released(b))
+    )
 
 
 def test_ivfpq_adc_search_single_shuffle(spark):

@@ -231,11 +231,11 @@ def test_blas_scorer_topk_set_matches_fold_fuzz(seed, n, q, d, top, dup_every):
     where the plateau carries two distinct doubles and blas represents it
     with a different — identical-vector — row id than the fold's lowest-id
     pick). Away from plateaus the column sets must agree exactly."""
-    from filtered_ads_vector_search_spark.operators.ann import (
+    from filtered_ads_vector_search_spark.operators.topk import (
         _sqeuclidean_blas_scorer,
         _sqeuclidean_bucket_scorer,
+        _topk_set_mask,
     )
-    from filtered_ads_vector_search_spark.operators.topk import _topk_set_mask
 
     rng = np.random.RandomState(seed)
     V = rng.randn(n, d)

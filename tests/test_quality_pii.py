@@ -59,7 +59,7 @@ def test_semdedup_degenerate_cluster_guard_raises(spark):
 
 def test_semdedup_derived_n_clusters_and_shared_build(spark, monkeypatch):
     """n_clusters=None derives ceil(N/50k) (>=2); semdedup_keep runs exactly
-    ONE IVFIndex.build_fixed for pairs + keep combined."""
+    ONE IVFIndex.build_fixed."""
     from filtered_ads_vector_search_spark.operators import ann as ANN
 
     emb = _emb(spark).limit(80)
@@ -279,41 +279,46 @@ def test_token_fertility_planted(spark):
     assert out["de"].bpe_per_ws_token > 1.0
 
 
+def _semdedup_keep_reference(df, n_clusters, max_cos_dist):
+    """The keep rule stated as pairs: every row of the shared cluster
+    assignment whose id is not the higher id of a within-threshold pair."""
+    assigned = DD._semdedup_assigned(df, n_clusters, "vec_id", "embedding", None)
+    pairs = DD.semdedup_pairs(df, n_clusters=n_clusters, max_cos_dist=max_cos_dist)
+    dropped = pairs.select(F.col("id_b").alias("id")).distinct()
+    return assigned.select("id", "cluster_id").join(dropped, "id", "left_anti")
+
+
 def test_semdedup_keep_arrow_kernel_matches_expression(spark):
-    """The BLAS kernel's kept SET must equal the expression self-join's —
-    the decision-identity contract (boundary-banded exact refine)."""
+    """The BLAS kernel's kept SET must equal the expression pairs'
+    anti-join — the decision-identity contract (boundary-banded exact
+    refine)."""
     emb = _emb(spark)
-    expr = DD.semdedup_keep(emb, n_clusters=8, max_cos_dist=0.7)
-    arw = DD.semdedup_keep(emb, n_clusters=8, max_cos_dist=0.7, arrow_kernel=True)
-    e = sorted((r.id, r.cluster_id) for r in collect_released(expr))
+    ref = _semdedup_keep_reference(emb, 8, 0.7)
+    arw = DD.semdedup_keep(emb, n_clusters=8, max_cos_dist=0.7)
+    e = sorted((r.id, r.cluster_id) for r in collect_released(ref))
     a = sorted((r.id, r.cluster_id) for r in collect_released(arw))
     assert e and e == a
 
 
-def test_semdedup_keep_arrow_kernel_sharded_matches_expression(spark):
-    """Forcing multi-shard cells (kernel_shard_rows far below the cell
+def test_semdedup_keep_arrow_kernel_sharded_matches_expression(spark, monkeypatch):
+    """Forcing multi-shard cells (SEMDEDUP_SHARD_ROWS far below the cell
     sizes) must not change the kept SET: every shard task sees its target
     block plus ALL lower-id cell rows as sources, so the drop decision per
-    id is identical to the single-task and expression forms."""
+    id is identical to the single-task form and the pairs' anti-join."""
     emb = _emb(spark)
-    expr = DD.semdedup_keep(emb, n_clusters=8, max_cos_dist=0.7)
-    e = sorted((r.id, r.cluster_id) for r in collect_released(expr))
+    ref = _semdedup_keep_reference(emb, 8, 0.7)
+    e = sorted((r.id, r.cluster_id) for r in collect_released(ref))
     for shard_rows in (7, 64):
-        arw = DD.semdedup_keep(
-            emb,
-            n_clusters=8,
-            max_cos_dist=0.7,
-            arrow_kernel=True,
-            kernel_shard_rows=shard_rows,
-        )
+        monkeypatch.setattr(DD, "SEMDEDUP_SHARD_ROWS", shard_rows)
+        arw = DD.semdedup_keep(emb, n_clusters=8, max_cos_dist=0.7)
         a = sorted((r.id, r.cluster_id) for r in collect_released(arw))
         assert e and e == a, shard_rows
 
 
 def test_semdedup_keep_arrow_kernel_duplicates_and_zero_vectors(spark):
-    """Planted exact duplicates drop their higher id in BOTH forms; zero-norm
-    vectors never pair (expression: nullif -> NULL) even when the threshold
-    exceeds 1.0 (the kernel's D=1.0 fast-path trap)."""
+    """Planted exact duplicates drop their higher id; zero-norm vectors
+    never pair (expression: nullif -> NULL) even when the threshold exceeds
+    1.0 (the kernel's D=1.0 fast-path trap)."""
     rows = [
         (0, [1.0, 0.0]), (1, [1.0, 0.0]),        # exact dup pair
         (2, [0.0, 0.0]), (3, [0.0, 0.0]),        # zero vectors
@@ -322,16 +327,14 @@ def test_semdedup_keep_arrow_kernel_duplicates_and_zero_vectors(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     for thr in (0.2, 1.0):
         e = sorted(
+            r.id for r in collect_released(_semdedup_keep_reference(df, 2, thr))
+        )
+        a = sorted(
             r.id
             for r in collect_released(
                 DD.semdedup_keep(df, n_clusters=2, max_cos_dist=thr)
             )
         )
-        a = sorted(
-            r.id
-            for r in collect_released(
-                DD.semdedup_keep(df, n_clusters=2, max_cos_dist=thr, arrow_kernel=True)
-            )
-        )
         assert e == a, (thr, e, a)
+        assert 1 not in a  # the higher id of the exact duplicate drops
         assert 2 in a and 3 in a  # zero vectors always survive

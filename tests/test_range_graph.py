@@ -98,24 +98,6 @@ def test_range_ivf_subset_and_exact_at_full_probe(spark):
     assert full == exact
 
 
-def test_range_ivf_arrow_kernel_matches_expr(spark):
-    """The radius mode of the Arrow bucket scaffold returns the same
-    (query, neighbor) sets and tolerance-equal distances as the expression
-    path, at partial and full probing."""
-    q, c = _split(spark)
-    idx = IVFIndex.build_fixed(c, n_centroids=8)
-    for np_ in (2, 8):
-        expr_rows = idx.range_search(q, radius=RADIUS, nprobe=np_).collect()
-        arrow_rows = idx.range_search(
-            q, radius=RADIUS, nprobe=np_, arrow_score=True
-        ).collect()
-        expr = {(r.query_id, r.neighbor_id): r.dist for r in expr_rows}
-        arrow = {(r.query_id, r.neighbor_id): r.dist for r in arrow_rows}
-        assert set(expr) == set(arrow), f"nprobe={np_}"
-        for kk, v in arrow.items():
-            assert abs(expr[kk] - v) < 1e-9
-
-
 def test_range_count_includes_empty_balls(spark):
     q, c = _split(spark)
     tiny = 0.5  # below the min pairwise distance — every ball empty

@@ -487,20 +487,14 @@ def test_arrow_kernels_empty_queries_return_empty(spark):
     from filtered_ads_vector_search_spark.operators.ivfpq import IVFPQIndex
     from filtered_ads_vector_search_spark.operators.lsh import LSHIndex
 
-    topk_cols = ["query_id", "neighbor_id", "rank", "dist"]
-
-    def assert_empty(df, cols=topk_cols):
+    def assert_empty(df):
         assert df.count() == 0
-        assert df.columns == cols
+        assert df.columns == ["query_id", "neighbor_id", "rank", "dist"]
 
     q, c = _split(spark)
     empty_q = q.filter(F.lit(False))
     ivf = IVFIndex.build_fixed(c, n_centroids=4)
     assert ivf.search(empty_q, k=5, nprobe=2, arrow_score=True).count() == 0
-    assert_empty(
-        ivf.range_search(empty_q, radius=10.0, nprobe=2, arrow_score=True),
-        ["query_id", "neighbor_id", "dist"],
-    )
     ivf.unpersist()
     pq = IVFPQIndex.build_fixed(c, n_centroids=4, m=4, n_codes=16)
     assert (
@@ -549,11 +543,6 @@ def _arrow_form(name, c):
     if name == "ivf_search":
         idx = IVFIndex.build_fixed(c, n_centroids=4)
         return (lambda q: idx.search(q, k=5, nprobe=2, arrow_score=True)), idx
-    if name == "ivf_range_search":
-        idx = IVFIndex.build_fixed(c, n_centroids=4)
-        return (
-            lambda q: idx.range_search(q, radius=10.0, nprobe=2, arrow_score=True)
-        ), idx
     if name == "ivfpq_arrow_adc":
         idx = IVFPQIndex.build_fixed(c, n_centroids=4, m=4, n_codes=16)
         return (lambda q: idx.search(q, k=5, nprobe=2, arrow_adc=True)), idx
@@ -568,7 +557,6 @@ def _arrow_form(name, c):
         "knn_scalable",
         "range_scalable",
         "ivf_search",
-        "ivf_range_search",
         "ivfpq_arrow_adc",
         "lsh_arrow",
     ],
