@@ -3313,7 +3313,7 @@ def _exact_dedup_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming twins, sessions, multimodal, pipeline, grid driver
+# Streaming twins, sessions, pipeline, grid driver
 # ---------------------------------------------------------------------------
 
 
@@ -3452,325 +3452,6 @@ SELECT user_id, event_id,
            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS running_value,
        row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS event_seq
 FROM events
-"""
-
-
-def _multimodal_meta_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synthetic payload -> binary header parse via mapInPandas. The oracle
-    re-derives the same metadata arithmetically from md5(doc_id) — a full
-    cross-check of the binary plumbing (payload gen + header decode)."""
-    from .multimodal import decode_media_meta, with_synthetic_media
-
-    docs = _tbl(spark, sf_dir, "documents").select("doc_id")
-    return decode_media_meta(with_synthetic_media(docs)).select(
-        "doc_id", "media_type", "codec", "width", "height", "duration_ms", "n_bytes"
-    )
-
-
-def _multimodal_meta_sql() -> str:
-    # byte i of md5(doc_id) = ('0x' || substr(md5_hex, 2i+1, 2))::INT
-    def byte(i: int) -> str:
-        return f"(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), {2 * i + 1}, 2))::INT)"
-
-    t = f"({byte(0)} % 3)"
-    return f"""
-SELECT doc_id,
-       CASE {t} WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS media_type,
-       CASE {t} WHEN 0 THEN 'fakejpeg' WHEN 1 THEN 'fakepcm' ELSE 'fakeh264' END AS codec,
-       64 + {byte(1)} % 192 AS width,
-       64 + {byte(2)} % 192 AS height,
-       CASE WHEN {t} = 0 THEN 0 ELSE ({byte(3)} % 120) * 1000 END AS duration_ms,
-       CAST(13 + 128 + {byte(4)} AS BIGINT) AS n_bytes
-FROM documents
-"""
-
-
-def _multimodal_resize_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resize stage composed with decode: images take the target dims, audio/
-    video pass through — the oracle re-derives both cases arithmetically
-    from md5(doc_id), cross-checking the payload rewrite end-to-end."""
-    from .multimodal import decode_media_meta, resize_images, with_synthetic_media
-
-    docs = _tbl(spark, sf_dir, "documents").select("doc_id")
-    resized = resize_images(with_synthetic_media(docs), width=128, height=96)
-    return decode_media_meta(resized).select("doc_id", "media_type", "width", "height")
-
-
-def _multimodal_resize_sql() -> str:
-    def byte(i: int) -> str:
-        return f"(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), {2 * i + 1}, 2))::INT)"
-
-    t = f"({byte(0)} % 3)"
-    return f"""
-SELECT doc_id,
-       CASE {t} WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS media_type,
-       CASE WHEN {t} = 0 THEN 128 ELSE 64 + {byte(1)} % 192 END AS width,
-       CASE WHEN {t} = 0 THEN 96 ELSE 64 + {byte(2)} % 192 END AS height
-FROM documents
-"""
-
-
-def _multimodal_decode_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL-format media decode: BMP/WAV payloads (arithmetically specified
-    pixels/samples, columns.real_payload) are encoded by the pure-Python
-    codecs, then decoded back — header fields AND a full content checksum —
-    by the mapInPandas decode path. The oracle recomputes every output field
-    from doc_id alone, so a single wrong byte anywhere in the encode->decode
-    round trip fails the hash."""
-    from .multimodal import content_stats, decode_media_meta, with_real_media
-
-    docs = _tbl(spark, sf_dir, "documents").select("doc_id")
-    decoded = decode_media_meta(with_real_media(docs))
-    return content_stats(decoded).select(
-        "doc_id",
-        "media_type",
-        "codec",
-        "width",
-        "height",
-        "duration_ms",
-        "n_bytes",
-        "content_sum",
-    )
-
-
-def _multimodal_decode_sql() -> str:
-    w, h = "(4 + doc_id % 5)", "(3 + doc_id % 4)"
-    n = "(800 + (doc_id % 7) * 100)"
-    pix = (
-        f"list_sum(list_transform(range(0, {h} * {w} * 3), "
-        f"i -> (doc_id * 7 + (i // ({w} * 3)) * 31 "
-        f"+ ((i % ({w} * 3)) // 3) * 13 + (i % 3) * 5) % 256))"
-    )
-    samp = f"list_sum(list_transform(range(0, {n}), i -> (doc_id * 11 + i * 17) % 2048 - 1024))"
-    return f"""
-SELECT doc_id,
-       CASE WHEN doc_id % 2 = 0 THEN 'image' ELSE 'audio' END AS media_type,
-       CASE WHEN doc_id % 2 = 0 THEN 'bmp' ELSE 'pcm_s16le' END AS codec,
-       CAST(CASE WHEN doc_id % 2 = 0 THEN {w} ELSE 0 END AS INT) AS width,
-       CAST(CASE WHEN doc_id % 2 = 0 THEN {h} ELSE 0 END AS INT) AS height,
-       CAST(CASE WHEN doc_id % 2 = 0 THEN 0 ELSE {n} // 8 END AS INT) AS duration_ms,
-       CAST(CASE WHEN doc_id % 2 = 0
-            THEN 54 + ((3 * {w} + 3) // 4 * 4) * {h}
-            ELSE 44 + 2 * {n} END AS BIGINT) AS n_bytes,
-       CAST(CASE WHEN doc_id % 2 = 0 THEN {pix} ELSE {samp} END AS BIGINT) AS content_sum
-FROM documents
-"""
-
-
-def _multimodal_decode_bmp565_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL-format 16-bit BI_BITFIELDS RGB565 BMP decode (round-9 codec
-    lift): the arithmetic pixels real_payload uses are encoded through
-    encode_bmp_565 (masks F800/07E0/001F after the info header), decoded
-    back — header fields AND the full content checksum — by the same
-    mapInPandas path as multimodal_decode. 565 quantization is a pure
-    per-channel arithmetic map, so the oracle recomputes every field
-    including content_sum from doc_id alone: one wrong byte in the masked
-    encode->decode round trip fails the hash."""
-    from .multimodal import content_stats, decode_media_meta, with_real_media_565
-
-    docs = _tbl(spark, sf_dir, "documents").select("doc_id")
-    decoded = decode_media_meta(with_real_media_565(docs))
-    return content_stats(decoded).select(
-        "doc_id",
-        "media_type",
-        "codec",
-        "width",
-        "height",
-        "n_bytes",
-        "content_sum",
-    )
-
-
-def _multimodal_decode_bmp565_sql() -> str:
-    w, h = "(4 + doc_id % 5)", "(3 + doc_id % 4)"
-    # p = source pixel; channel c quantizes to its top 5 (R/B) or 6 (G)
-    # bits and expands by top-bit replication: v*8 + v//4 (5-bit) or
-    # v*4 + v//16 (6-bit) — OR-free forms exact because the replicated
-    # low bits never collide with the shifted value
-    p = (
-        f"((doc_id * 7 + (i // ({w} * 3)) * 31 "
-        f"+ ((i % ({w} * 3)) // 3) * 13 + (i % 3) * 5) % 256)"
-    )
-    pix = (
-        f"list_sum(list_transform(range(0, {h} * {w} * 3), "
-        f"i -> CASE WHEN i % 3 = 1 "
-        f"THEN ({p} // 4) * 4 + ({p} // 4) // 16 "
-        f"ELSE ({p} // 8) * 8 + ({p} // 8) // 4 END))"
-    )
-    return f"""
-SELECT doc_id,
-       'image' AS media_type,
-       'bmp' AS codec,
-       CAST({w} AS INT) AS width,
-       CAST({h} AS INT) AS height,
-       CAST(66 + ((2 * {w} + 3) // 4 * 4) * {h} AS BIGINT) AS n_bytes,
-       CAST({pix} AS BIGINT) AS content_sum
-FROM documents
-"""
-
-
-def _multimodal_decode_wav24_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL-format PCM s24le WAV decode (round-9 codec lift): the
-    arithmetic samples real_payload uses, scaled x4096 into the signed
-    24-bit range, encoded as three-byte little-endian frames and decoded
-    back through the generic RIFF chunk walk. s24le is LOSSLESS, so the
-    oracle recomputes the content sum exactly — a wrong byte order, sign
-    extension, or frame count anywhere fails the hash."""
-    from .multimodal import content_stats, decode_media_meta, with_real_media_wav24
-
-    docs = _tbl(spark, sf_dir, "documents").select("doc_id")
-    decoded = decode_media_meta(with_real_media_wav24(docs))
-    return content_stats(decoded).select(
-        "doc_id",
-        "media_type",
-        "codec",
-        "duration_ms",
-        "n_bytes",
-        "content_sum",
-    )
-
-
-def _multimodal_decode_wav24_sql() -> str:
-    n = "(800 + (doc_id % 7) * 100)"
-    samp = (
-        f"list_sum(list_transform(range(0, {n}), "
-        f"i -> ((doc_id * 11 + i * 17) % 2048 - 1024) * 4096))"
-    )
-    return f"""
-SELECT doc_id,
-       'audio' AS media_type,
-       'pcm_s24le' AS codec,
-       CAST({n} // 8 AS INT) AS duration_ms,
-       CAST(44 + 3 * {n} AS BIGINT) AS n_bytes,
-       CAST({samp} AS BIGINT) AS content_sum
-FROM documents
-"""
-
-
-def _multimodal_decode_jpeg_spark(
-    spark: SparkSession, sf_dir: str, progressive: bool = False
-) -> DataFrame:
-    """JPEG decode: deterministic smooth-gradient images are encoded by the
-    pure-NumPy JPEG encoder (columns.real_jpeg_payload — 4:4:4 for even
-    ids, 4:2:0 for odd; baseline SOF0, or the ten-scan progressive SOF2
-    stream of the same coefficients when ``progressive``), then decoded
-    back by the mapInPandas meta path AND pixel-decoded against the
-    arithmetic source image. JPEG is lossy, so the value check is a bound:
-    `content_ok` is true iff max |decoded - source| <= 16 over every pixel
-    (q90 on a smooth gradient stays within a few counts; a Huffman/DCT/
-    upsampling — or progressive refinement — bug blows far past the
-    bound). The oracle recomputes the header fields from doc_id and expects
-    content_ok = true everywhere; n_bytes is excluded (entropy-coded length
-    is not SQL-expressible)."""
-    from .multimodal import decode_media_meta, with_real_jpeg
-    from .multimodal.columns import jpeg_content_ok_udf
-
-    docs = _tbl(spark, sf_dir, "documents").select("doc_id").filter(
-        F.col("doc_id") < 200
-    )
-    decoded = decode_media_meta(with_real_jpeg(docs, progressive=progressive))
-    return decoded.select(
-        "doc_id",
-        "media_type",
-        "codec",
-        "width",
-        "height",
-        jpeg_content_ok_udf(F.col("doc_id"), F.col("payload")).alias("content_ok"),
-    )
-
-
-def _multimodal_decode_jpeg_prog_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _multimodal_decode_jpeg_spark(spark, sf_dir, progressive=True)
-
-
-def _multimodal_decode_jpeg_sql() -> str:
-    return """
-SELECT doc_id,
-       'image' AS media_type,
-       'jpeg' AS codec,
-       CAST(16 + doc_id % 9 AS INT) AS width,
-       CAST(16 + doc_id % 7 AS INT) AS height,
-       TRUE AS content_ok
-FROM documents
-WHERE doc_id < 200
-"""
-
-
-def _multimodal_decode_jpeg_lossless_spark(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """LOSSLESS JPEG (SOF3, round-10 codec lift) decode: the same
-    arithmetic gradient the lossy JPEG queries use, encoded as
-    predictor-coded lossless streams (predictor cycling 1..7 with doc_id,
-    restart intervals on every third id — columns.real_jpeg_lossless_payload)
-    and decoded back through the mapInPandas meta + content_stats paths.
-    Lossless means the decoded pixel sum EQUALS the source-pixel sum, so —
-    unlike the bounded lossy checks — the oracle recomputes content_sum
-    exactly in closed form: one wrong bit in any predictor, restart reset,
-    or Huffman path fails the hash. n_bytes is excluded (entropy-coded
-    length is not SQL-expressible)."""
-    from .multimodal import (
-        content_stats,
-        decode_media_meta,
-        with_real_jpeg_lossless,
-    )
-
-    docs = _tbl(spark, sf_dir, "documents").select("doc_id").filter(
-        F.col("doc_id") < 200
-    )
-    decoded = decode_media_meta(with_real_jpeg_lossless(docs))
-    return content_stats(decoded).select(
-        "doc_id",
-        "media_type",
-        "codec",
-        "width",
-        "height",
-        "content_sum",
-    )
-
-
-def _multimodal_decode_jpeg_lossless_sql() -> str:
-    # pixel(y,x,c) = base + 2y + 2x + 2c with base=(doc_id*7)%96 sums in
-    # closed form: 3*w*h*(base + (h-1) + (w-1) + 2) = 3*w*h*(base + w + h)
-    w, h = "(16 + doc_id % 9)", "(16 + doc_id % 7)"
-    return f"""
-SELECT doc_id,
-       'image' AS media_type,
-       'jpeg' AS codec,
-       CAST({w} AS INT) AS width,
-       CAST({h} AS INT) AS height,
-       CAST(3 * {w} * {h} * (((doc_id * 7) % 96) + {w} + {h}) AS BIGINT)
-           AS content_sum
-FROM documents
-WHERE doc_id < 200
-"""
-
-
-def _frame_counts_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-sampling fan-out: rows per doc after sampling every 10s — the
-    oracle recomputes the fan-out arithmetically."""
-    from .multimodal import sample_frames, with_synthetic_media
-
-    docs = _tbl(spark, sf_dir, "documents").select("doc_id")
-    return (
-        sample_frames(with_synthetic_media(docs), every_ms=10_000)
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_frames"))
-    )
-
-
-def _frame_counts_sql() -> str:
-    def byte(i: int) -> str:
-        return f"(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), {2 * i + 1}, 2))::INT)"
-
-    t = f"({byte(0)} % 3)"
-    dur = f"(({byte(3)} % 120) * 1000)"
-    return f"""
-SELECT doc_id,
-       CASE WHEN {t} = 2 AND {dur} > 0
-            THEN CAST(ceil({dur} / 10000.0) AS BIGINT)
-            ELSE 1 END AS n_frames
-FROM documents
 """
 
 
@@ -5288,7 +4969,8 @@ def _hard_negatives_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     pos = TK.knn_window(q, c, k=1, metric="cosine").select(
         "query_id", F.col("neighbor_id").alias("pos_id")
     )
-    out = mine_hard_negatives(q, c, pos, k=5)
+    # knn_window(k=1) gives each query at most one positive: fetch = k + 1
+    out = mine_hard_negatives(q, c, pos, k=5, fetch=6)
     return out.select(
         "query_id", "neighbor_id", "rank", F.round("cos", 4).alias("cos")
     )
@@ -5383,12 +5065,14 @@ def _hard_negatives_ann_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     pos = TK.knn_window(q, c, k=1, metric="cosine").select(
         "query_id", F.col("neighbor_id").alias("pos_id")
     )
-    exact = mine_hard_negatives(q, c, pos, k=5)
+    # knn_window(k=1) gives each query at most one positive: fetch = k + 1
+    exact = mine_hard_negatives(q, c, pos, k=5, fetch=6)
     ann = mine_hard_negatives(
         q,
         c,
         pos,
         k=5,
+        fetch=6,
         kernel="ivf",
         nprobe=MINING_ANN_NPROBE,
         n_centroids=MINING_ANN_CENTROIDS,
@@ -5434,7 +5118,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "hard_negatives": _hard_negatives_spark,
     "dedup_components": _dedup_components_spark,
     "decontaminate": _decontaminate_spark,
-    "multimodal_decode_jpeg_prog": _multimodal_decode_jpeg_prog_spark,
     "stratified_sample": _stratified_sample_spark,
     "substr_dup_stats": _substr_dup_stats_spark,
     "doc_simhash": _simhash_spark,
@@ -5445,7 +5128,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "pq_codes_blas": _pq_codes_blas_spark,
     "knn_ivfpq_decomposed": _knn_ivfpq_decomposed_spark,
     "knn_sharded": _knn_sharded_spark,
-    "multimodal_decode": _multimodal_decode_spark,
     "knn_ivfpq_fixed": _knn_ivfpq_fixed_spark,
     "knn_ivfpq_rerank": _knn_ivfpq_rerank_spark,
     "ann_lsh": _ann_lsh_spark,
@@ -5456,7 +5138,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "embed_pipeline": _embed_pipeline_spark,
     "embedding_dup_pairs": _embedding_dups_spark,
     "filter_selectivity": _selectivity_spark,
-    "frame_sample_counts": _frame_counts_spark,
     "grid_params": _grid_params_spark,
     "knn_blockwise": _knn_blockwise_spark,
     "knn_cosine": lambda s, d: _knn_spark(s, d, "cosine", round_digits=4),
@@ -5492,7 +5173,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "knn_ivfpq_opq": _knn_ivfpq_opq_spark,
     "range_filtered_auto": _range_auto_exact_spark,
     "range_filtered_auto_ann": _range_auto_ann_spark,
-    "multimodal_decode_jpeg_lossless": _multimodal_decode_jpeg_lossless_spark,
     "bm25_search": _bm25_spark,
     "cms_heavy_hitters": _cms_heavy_hitters_spark,
     "collocations_pmi": _collocations_pmi_spark,
@@ -5519,7 +5199,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "knn_exact": lambda s, d: _knn_spark(s, d, "sqeuclidean"),
     "knn_jl": _knn_jl_spark,
     "lm_perplexity": _lm_perplexity_spark,
-    "multimodal_decode_jpeg": _multimodal_decode_jpeg_spark,
     "pii_redact": _pii_redact_spark,
     "pii_scan": _pii_scan_spark,
     "repetition_stats": _repetition_stats_spark,
@@ -5529,8 +5208,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "value_outliers": _value_outliers_spark,
     "vocab_summary": _vocab_summary_spark,
     "vocab_top_terms": _vocab_top_terms_spark,
-    "multimodal_decode_bmp565": _multimodal_decode_bmp565_spark,
-    "multimodal_decode_wav24": _multimodal_decode_wav24_spark,
     "ann_ivf": _ann_ivf_spark,
     "ann_ivf_fixed": _ann_ivf_fixed_spark,
     "customer_setops": _customer_setops_spark,
@@ -5579,8 +5256,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "user_sessions": _sessions_spark,
     "user_sessions_native": _sessions_native_spark,
     "zorder_keys": _zorder_keys_spark,
-    "multimodal_meta": _multimodal_meta_spark,
-    "multimodal_resize": _multimodal_resize_spark,
     "embedding_dup_pairs_lsh": _embedding_dups_lsh_spark,
     "knn_filtered_low": lambda s, d: _knn_spark(s, d, "sqeuclidean", filter_name="low_rated"),
     "knn_filtered_mid": lambda s, d: _knn_spark(s, d, "sqeuclidean", filter_name="mid_rated"),
@@ -5700,9 +5375,6 @@ ORACLES: dict[str, str] = {
     "user_sessions": _sessions_sql(),
     "user_sessions_native": _sessions_native_sql(),
     "event_lag_stats": _event_lag_stats_sql(),
-    "multimodal_meta": _multimodal_meta_sql(),
-    "frame_sample_counts": _frame_counts_sql(),
-    "multimodal_resize": _multimodal_resize_sql(),
     "ann_lsh": _ann_lsh_sql(),
     "ann_ivf_fixed": _ann_ivf_fixed_sql(),
     # fp16 tier: numpy's float16 cast on the Spark side vs an arithmetic
@@ -5713,9 +5385,6 @@ ORACLES: dict[str, str] = {
     "grid_metrics_fixed": _grid_metrics_fixed_sql(),
     "grid_metrics_lsh_fixed": _grid_metrics_lsh_fixed_sql(),
     "grid_search_lsh": _grid_search_lsh_sql(),
-    "multimodal_decode": _multimodal_decode_sql(),
-    "multimodal_decode_bmp565": _multimodal_decode_bmp565_sql(),
-    "multimodal_decode_wav24": _multimodal_decode_wav24_sql(),
     "range_search_exact": _range_sql(),
     "range_search_scale": _range_sql(),
     "range_search_filtered": _range_sql(filter_name="high_rated"),
@@ -5740,9 +5409,6 @@ ORACLES: dict[str, str] = {
     "hard_negatives_ann": _hard_negatives_ann_sql(),
     "graph_search_fixed": _graph_search_fixed_sql(),
     "graph_search_recall": _graph_search_recall_sql(),
-    "multimodal_decode_jpeg": _multimodal_decode_jpeg_sql(),
-    "multimodal_decode_jpeg_prog": _multimodal_decode_jpeg_sql(),
-    "multimodal_decode_jpeg_lossless": _multimodal_decode_jpeg_lossless_sql(),
     "tpch_q21": _tpch_q21_sql(),
     "tpch_q9": _tpch_q9_sql(),
     "tpch_q11": _tpch_q11_sql(),

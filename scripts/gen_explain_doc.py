@@ -151,7 +151,7 @@ def main() -> None:
         "  No operator repartitions for parallelism or asks an input for its",
         "  partition count, so building a lazily returned result launches no Spark",
         "  job. The only repartitions left group rows by a key (index buckets,",
-        "  compaction, Z-order layouts, WebDataset shards).",
+        "  compaction, Z-order layouts).",
         "- **A testdata table is read with its footer-declared schema; building a",
         "  registry query launches a job only for trained artifacts or iterative",
         "  rounds.** `datasets.table_schema` reads the Parquet footer on the driver",
