@@ -164,6 +164,7 @@ def main() -> None:
         "pareto_frontier_suppliers",
         "event_window_stats",
         "user_sessions",
+        "multimodal_meta",
         "embed_pipeline",
     ):
         timed(name, lambda n=name: registry.QUERIES[n](spark, SF_DIR).count())

@@ -11,6 +11,7 @@ This package re-expresses that capability surface Spark-first:
 - ``sources``    — ingestion (JSONL, Parquet, bigann-style bin) (SURVEY.md §2 A)
 - ``pipeline``   — the embed/quantize ingest pipeline (SURVEY.md §3.2)
 - ``streaming``  — Structured Streaming throughput/replay analogs (SURVEY.md §2 J)
+- ``multimodal`` — opaque binary-column plumbing for image/audio payloads
 
 Everything is DataFrame-API (Catalyst-optimized); Python UDFs appear only where
 declarative Spark genuinely cannot express the semantics, and then always as

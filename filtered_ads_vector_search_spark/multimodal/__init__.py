@@ -2,23 +2,15 @@
 ``binary`` columns with typed metadata; decode/feature-extract as Pandas UDFs
 over ``mapInPandas``).
 
-Uncompressed BMP, PCM WAV, and all three real-world JPEG Huffman modes —
-baseline (SOF0), progressive (SOF2), and lossless (SOF3) — are decoded
-FOR REAL by the pure-Python codecs/jpeg modules (headers, pixels, samples
-— no external libs); the deterministic fake payload covers the remaining
-media types, and the remaining compressed formats (H.264/AAC, plus JPEG's
-arithmetic and hierarchical modes, which are essentially absent from real
-corpora) raise NotImplementedError at the clearly marked seam where
+Uncompressed BMP and PCM WAV are decoded FOR REAL by the pure-Python codecs
+module (headers, pixels, samples — no external libs); the deterministic fake
+payload covers the remaining media types, and compressed formats (JPEG,
+H.264/AAC) raise NotImplementedError at the clearly marked seam where
 PIL/ffmpeg would plug in.
 """
 
 from .columns import (
     MEDIA_META_SCHEMA,
-    jpeg_source_pixels,
-    real_jpeg_lossless_payload,
-    real_jpeg_payload,
-    with_real_jpeg,
-    with_real_jpeg_lossless,
     with_real_media,
     with_real_media_565,
     with_real_media_wav24,
@@ -34,11 +26,6 @@ from .udfs import (
 
 __all__ = [
     "MEDIA_META_SCHEMA",
-    "jpeg_source_pixels",
-    "real_jpeg_lossless_payload",
-    "real_jpeg_payload",
-    "with_real_jpeg",
-    "with_real_jpeg_lossless",
     "with_real_media",
     "with_real_media_565",
     "with_real_media_wav24",

@@ -1,16 +1,13 @@
-"""Minimal pure-Python real-media codecs: BMP, PCM WAV, and JPEG.
+"""Minimal pure-Python real-media codecs: BMP and PCM WAV.
 
 This makes the real-codec seam in udfs._parse_header exercisable without any
 external image/audio library: BI_RGB 8-bit-palette, 16-bit RGB555, 24-bit, and 32-bit BGRA
 BMP plus 16/32-bit BI_BITFIELDS (contiguous masks, e.g. RGB565; info
 headers V1-V5), and RIFF/WAVE PCM s16le/s24le + G.711 A-law/mu-law + IMA
-ADPCM mono/stereo, are simple enough to encode/decode with struct + numpy,
-and JPEG — both baseline sequential (SOF0) and progressive (SOF2), together
-essentially all real-world files — is a full pure-NumPy implementation in
-the sibling ``jpeg`` module, re-exported here. Remaining compressed codecs
-(H.264/AAC, JPEG arithmetic/hierarchical/lossless, RLE4 BMP, MS-ADPCM WAV)
-stay behind the NotImplementedError seam (8-bit BI_RLE8 graduated to a
-supported lossless mode in round 9).
+ADPCM mono/stereo, are simple enough to encode/decode with struct + numpy.
+Compressed codecs (JPEG, H.264/AAC, RLE4 BMP, MS-ADPCM WAV) stay behind
+the NotImplementedError seam (8-bit BI_RLE8 graduated to a supported
+lossless mode in round 9).
 
 The reference has no media pipeline at all — this is part of the
 beyond-reference training-data-pipeline surface (brief: multimodal columns).
@@ -21,13 +18,6 @@ from __future__ import annotations
 import struct
 
 import numpy as np
-
-from .jpeg import (
-    decode_jpeg_meta,
-    decode_jpeg_pixels,
-    encode_jpeg,
-    encode_jpeg_lossless,
-)
 
 __all__ = [
     "encode_bmp",
@@ -49,10 +39,6 @@ __all__ = [
     "alaw_decode",
     "decode_wav_meta",
     "decode_wav_samples",
-    "encode_jpeg",
-    "encode_jpeg_lossless",
-    "decode_jpeg_meta",
-    "decode_jpeg_pixels",
     "decode_image_pixels",
     "resize_image",
     "sniff",
@@ -67,13 +53,11 @@ def _row_size(width: int) -> int:
 
 
 def sniff(raw: bytes) -> str | None:
-    """'bmp' | 'wav' | 'jpeg' | None for unrecognized payloads."""
+    """'bmp' | 'wav' | None for unrecognized payloads."""
     if raw[:2] == b"BM":
         return "bmp"
     if raw[:4] == b"RIFF" and raw[8:12] == b"WAVE":
         return "wav"
-    if raw[:3] == b"\xff\xd8\xff":
-        return "jpeg"
     return None
 
 
@@ -82,31 +66,14 @@ def decode_image_pixels(raw: bytes) -> np.ndarray:
     kind = sniff(raw)
     if kind == "bmp":
         return decode_bmp_pixels(raw)
-    if kind == "jpeg":
-        return decode_jpeg_pixels(raw)
     raise ValueError(f"not a decodable image payload (sniffed {kind!r})")
 
 
 def resize_image(raw: bytes, width: int, height: int) -> bytes:
-    """Codec-preserving resize: BMP stays BMP, JPEG is re-encoded as JPEG
-    with the source's chroma mode preserved (read from the SOF sampling
-    factors). Quality is not recoverable from a JPEG (only its quant
-    tables survive), so the re-encode uses the encoder's q90 default."""
+    """Codec-preserving resize: a BMP payload is resampled and stays BMP."""
     kind = sniff(raw)
     if kind == "bmp":
         return resize_bmp(raw, width, height)
-    if kind == "jpeg":
-        from .jpeg import _parse_segments
-
-        subsample = False
-        for marker, payload, _ in _parse_segments(raw):
-            if marker == 0xC0:  # SOF0: first component's h/v factors
-                subsample = payload[7] != 0x11
-                break
-        return encode_jpeg(
-            _nn_resample(decode_jpeg_pixels(raw), width, height),
-            subsample=subsample,
-        )
     raise ValueError(f"not a resizable image payload (sniffed {kind!r})")
 
 

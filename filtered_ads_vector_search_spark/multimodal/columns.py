@@ -12,7 +12,7 @@ import hashlib
 import struct
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -128,97 +128,6 @@ def with_real_media_wav24(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         return ids.map(lambda i: real_payload_wav24(int(i)))
 
     return df.withColumn("payload", gen(F.col(id_col)))
-
-
-def jpeg_source_pixels(doc_id: int):
-    """The arithmetic source image the deterministic JPEG payload encodes:
-    a smooth gradient pixel(y, x, c) = (doc_id * 7) % 96 + y*2 + x*2 + c*2
-    at width 16 + id%9, height 16 + id%7 (odd dims exercise MCU padding).
-    The value range stays below 256 for every (id, y, x, c) — no uint8
-    wraparound cliffs — so smoothness keeps baseline-JPEG quantization
-    error within a few counts and a decoded-vs-source error bound is a
-    meaningful content check."""
-    import numpy as np
-
-    w, h = 16 + doc_id % 9, 16 + doc_id % 7
-    y, x, c = np.ogrid[0:h, 0:w, 0:3]
-    return ((doc_id * 7) % 96 + y * 2 + x * 2 + c * 2).astype("uint8")
-
-
-def real_jpeg_payload(doc_id: int, progressive: bool = False) -> bytes:
-    """Deterministic JPEG payload of the arithmetic source image; odd ids
-    use 4:2:0 chroma subsampling (exercises the decoder's upsampling path),
-    even ids 4:4:4. ``progressive=True`` emits the SOF2 multi-scan form of
-    the SAME quantized coefficients (decodes pixel-identically)."""
-    from . import codecs as C
-
-    return C.encode_jpeg(
-        jpeg_source_pixels(doc_id),
-        quality=90,
-        subsample=bool(doc_id % 2),
-        progressive=progressive,
-    )
-
-
-def with_real_jpeg(
-    df: DataFrame, id_col: str = "doc_id", progressive: bool = False
-) -> DataFrame:
-    """Attach the deterministic JPEG payload column keyed by id (baseline
-    SOF0 by default, progressive SOF2 with ``progressive=True``)."""
-    @F.pandas_udf(T.BinaryType())
-    def gen(ids: pd.Series) -> pd.Series:
-        return ids.map(lambda i: real_jpeg_payload(int(i), progressive))
-
-    return df.withColumn("payload", gen(F.col(id_col)))
-
-
-def real_jpeg_lossless_payload(doc_id: int) -> bytes:
-    """Deterministic LOSSLESS JPEG (SOF3) payload of the SAME arithmetic
-    gradient jpeg_source_pixels defines. The predictor cycles 1..7 with
-    doc_id and every third id adds a restart interval, so a corpus-wide
-    decode exercises every T.81 Table H.1 predictor and the restart
-    prediction reset. Lossless means the decoded pixel sum is EXACTLY the
-    source-pixel sum — a SQL oracle recomputes it from doc_id alone."""
-    from . import codecs as C
-
-    return C.encode_jpeg_lossless(
-        jpeg_source_pixels(doc_id),
-        predictor=1 + doc_id % 7,
-        restart_interval=17 if doc_id % 3 == 0 else 0,
-    )
-
-
-def with_real_jpeg_lossless(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Attach the deterministic lossless-JPEG payload column keyed by id."""
-    @F.pandas_udf(T.BinaryType())
-    def gen(ids: pd.Series) -> pd.Series:
-        return ids.map(lambda i: real_jpeg_lossless_payload(int(i)))
-
-    return df.withColumn("payload", gen(F.col(id_col)))
-
-
-def jpeg_content_ok_udf(ids: Column, payloads: Column) -> Column:
-    """True iff the decoded JPEG payload matches the arithmetic source image
-    within max|err| <= 16 per pixel (JPEG is lossy; q90 on the smooth
-    gradient stays within a few counts, while a Huffman/DCT/upsampling bug
-    blows far past the bound)."""
-
-    @F.pandas_udf(T.BooleanType())
-    def run(id_s: pd.Series, payload_s: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from .codecs import decode_jpeg_pixels
-
-        out = []
-        for i, raw in zip(id_s, payload_s):
-            src = jpeg_source_pixels(int(i)).astype("int64")
-            dec = decode_jpeg_pixels(bytes(raw)).astype("int64")
-            out.append(
-                dec.shape == src.shape and int(np.abs(dec - src).max()) <= 16
-            )
-        return pd.Series(out)
-
-    return run(ids, payloads)
 
 
 def with_synthetic_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:

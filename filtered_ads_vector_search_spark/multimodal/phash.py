@@ -47,8 +47,7 @@ def ahash_bits(raw: bytes) -> int:
 
     True aHash: each of the 8x8 grid cells is the MEAN of its pixel block
     (not a single sampled pixel — point sampling is far more sensitive to
-    resampling/noise), thresholded against the grid mean. Accepts any
-    decodable image payload (BMP or baseline JPEG)."""
+    resampling/noise), thresholded against the grid mean."""
     px = decode_image_pixels(raw).astype(np.float64)
     gray = px.mean(axis=2)
     h, w = gray.shape
@@ -80,7 +79,7 @@ def ahash_udf(payload: Column) -> Column:
         for raw in col:
             try:
                 b = bytes(raw)
-                if sniff(b) not in ("bmp", "jpeg"):
+                if sniff(b) != "bmp":
                     out.append(None)
                     continue
                 out.append(ahash_bits(b))

@@ -5,11 +5,10 @@ stay inside the executor, batches are bounded by
 ``spark.sql.execution.arrow.maxRecordsPerBatch``, and the output schema is
 explicit so downstream operators are fully declarative.
 
-Real codecs: uncompressed BMP, PCM WAV, and JPEG (baseline SOF0 and
-progressive SOF2) payloads are decoded for real by the pure-Python codecs
-module (no external libs). The deterministic fake header from
-columns.synth_payload remains the stand-in for everything else; remaining
-compressed formats (H.264/...) raise NotImplementedError at the clearly
+Real codecs: uncompressed BMP and PCM WAV payloads are decoded for real by
+the pure-Python codecs module (no external libs). The deterministic fake
+header from columns.synth_payload remains the stand-in for everything else;
+compressed formats (JPEG, H.264/...) raise NotImplementedError at the clearly
 marked seam — PIL/ffmpeg would plug in there.
 """
 
@@ -36,14 +35,11 @@ def _parse_header(raw: bytes) -> dict:
             return C.decode_bmp_meta(raw)
         if kind == "wav":
             return C.decode_wav_meta(raw)
-        if kind == "jpeg":
-            return C.decode_jpeg_meta(raw)  # pure-NumPy baseline decoder
         # ---- real-codec seam: plug PIL/ffmpeg probing here for formats
-        # ---- beyond BMP / PCM WAV / JPEG (baseline + progressive) ----
+        # ---- beyond BMP / PCM WAV ----
         raise NotImplementedError(
-            "compressed media decoding beyond JPEG requires image/audio "
-            "libs not present in this container; payload is neither FAKE, "
-            "BMP, WAV, nor JPEG"
+            "compressed media decoding requires image/audio libs that are "
+            "not installed; payload is neither FAKE, BMP, nor WAV"
         )
     t, width, height, duration = struct.unpack("<BHHI", raw[4:13])
     media_type = _TYPES[t]
@@ -117,11 +113,11 @@ def resize_images(
             meta = _parse_header(raw)
             if meta["media_type"] != "image":
                 return raw
-            if meta["codec"] in ("bmp", "jpeg"):
+            if meta["codec"] == "bmp":
                 return C.resize_image(raw, width, height)  # real resample
             t, _, _, duration = struct.unpack("<BHHI", raw[4:13])
             # ---- real-codec seam: plug PIL resampling here for formats
-            # ---- beyond BMP/baseline JPEG; the fake path just rewrites
+            # ---- beyond BMP; the fake path just rewrites
             # ---- header + body hash ----
             body = hashlib.md5(raw[13:] + struct.pack("<HH", width, height)).digest()
             return MAGIC + struct.pack("<BHHI", t, width, height, duration) + body
@@ -151,9 +147,6 @@ def content_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
             return int(C.decode_bmp_pixels(raw).astype(np.int64).sum())
         if kind == "wav":
             return int(C.decode_wav_samples(raw).astype(np.int64).sum())
-        if kind == "jpeg":
-            # decoded-pixel sum; exact (SQL-oracle-able) for lossless SOF3
-            return int(C.decode_jpeg_pixels(raw).astype(np.int64).sum())
         _parse_header(raw)  # FAKE (or raises the seam error)
         return int(np.frombuffer(raw[13:], dtype=np.uint8).astype(np.int64).sum())
 

@@ -3313,7 +3313,7 @@ def _exact_dedup_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming twins, sessions, pipeline, grid driver
+# Streaming twins, sessions, multimodal, pipeline, grid driver
 # ---------------------------------------------------------------------------
 
 
@@ -3452,6 +3452,226 @@ SELECT user_id, event_id,
            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS running_value,
        row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS event_seq
 FROM events
+"""
+
+
+def _multimodal_meta_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Synthetic payload -> binary header parse via mapInPandas. The oracle
+    re-derives the same metadata arithmetically from md5(doc_id) — a full
+    cross-check of the binary plumbing (payload gen + header decode)."""
+    from .multimodal import decode_media_meta, with_synthetic_media
+
+    docs = _tbl(spark, sf_dir, "documents").select("doc_id")
+    return decode_media_meta(with_synthetic_media(docs)).select(
+        "doc_id", "media_type", "codec", "width", "height", "duration_ms", "n_bytes"
+    )
+
+
+def _multimodal_meta_sql() -> str:
+    # byte i of md5(doc_id) = ('0x' || substr(md5_hex, 2i+1, 2))::INT
+    def byte(i: int) -> str:
+        return f"(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), {2 * i + 1}, 2))::INT)"
+
+    t = f"({byte(0)} % 3)"
+    return f"""
+SELECT doc_id,
+       CASE {t} WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS media_type,
+       CASE {t} WHEN 0 THEN 'fakejpeg' WHEN 1 THEN 'fakepcm' ELSE 'fakeh264' END AS codec,
+       64 + {byte(1)} % 192 AS width,
+       64 + {byte(2)} % 192 AS height,
+       CASE WHEN {t} = 0 THEN 0 ELSE ({byte(3)} % 120) * 1000 END AS duration_ms,
+       CAST(13 + 128 + {byte(4)} AS BIGINT) AS n_bytes
+FROM documents
+"""
+
+
+def _multimodal_resize_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Resize stage composed with decode: images take the target dims, audio/
+    video pass through — the oracle re-derives both cases arithmetically
+    from md5(doc_id), cross-checking the payload rewrite end-to-end."""
+    from .multimodal import decode_media_meta, resize_images, with_synthetic_media
+
+    docs = _tbl(spark, sf_dir, "documents").select("doc_id")
+    resized = resize_images(with_synthetic_media(docs), width=128, height=96)
+    return decode_media_meta(resized).select("doc_id", "media_type", "width", "height")
+
+
+def _multimodal_resize_sql() -> str:
+    def byte(i: int) -> str:
+        return f"(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), {2 * i + 1}, 2))::INT)"
+
+    t = f"({byte(0)} % 3)"
+    return f"""
+SELECT doc_id,
+       CASE {t} WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS media_type,
+       CASE WHEN {t} = 0 THEN 128 ELSE 64 + {byte(1)} % 192 END AS width,
+       CASE WHEN {t} = 0 THEN 96 ELSE 64 + {byte(2)} % 192 END AS height
+FROM documents
+"""
+
+
+def _multimodal_decode_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """REAL-format media decode: BMP/WAV payloads (arithmetically specified
+    pixels/samples, columns.real_payload) are encoded by the pure-Python
+    codecs, then decoded back — header fields AND a full content checksum —
+    by the mapInPandas decode path. The oracle recomputes every output field
+    from doc_id alone, so a single wrong byte anywhere in the encode->decode
+    round trip fails the hash."""
+    from .multimodal import content_stats, decode_media_meta, with_real_media
+
+    docs = _tbl(spark, sf_dir, "documents").select("doc_id")
+    decoded = decode_media_meta(with_real_media(docs))
+    return content_stats(decoded).select(
+        "doc_id",
+        "media_type",
+        "codec",
+        "width",
+        "height",
+        "duration_ms",
+        "n_bytes",
+        "content_sum",
+    )
+
+
+def _multimodal_decode_sql() -> str:
+    w, h = "(4 + doc_id % 5)", "(3 + doc_id % 4)"
+    n = "(800 + (doc_id % 7) * 100)"
+    pix = (
+        f"list_sum(list_transform(range(0, {h} * {w} * 3), "
+        f"i -> (doc_id * 7 + (i // ({w} * 3)) * 31 "
+        f"+ ((i % ({w} * 3)) // 3) * 13 + (i % 3) * 5) % 256))"
+    )
+    samp = f"list_sum(list_transform(range(0, {n}), i -> (doc_id * 11 + i * 17) % 2048 - 1024))"
+    return f"""
+SELECT doc_id,
+       CASE WHEN doc_id % 2 = 0 THEN 'image' ELSE 'audio' END AS media_type,
+       CASE WHEN doc_id % 2 = 0 THEN 'bmp' ELSE 'pcm_s16le' END AS codec,
+       CAST(CASE WHEN doc_id % 2 = 0 THEN {w} ELSE 0 END AS INT) AS width,
+       CAST(CASE WHEN doc_id % 2 = 0 THEN {h} ELSE 0 END AS INT) AS height,
+       CAST(CASE WHEN doc_id % 2 = 0 THEN 0 ELSE {n} // 8 END AS INT) AS duration_ms,
+       CAST(CASE WHEN doc_id % 2 = 0
+            THEN 54 + ((3 * {w} + 3) // 4 * 4) * {h}
+            ELSE 44 + 2 * {n} END AS BIGINT) AS n_bytes,
+       CAST(CASE WHEN doc_id % 2 = 0 THEN {pix} ELSE {samp} END AS BIGINT) AS content_sum
+FROM documents
+"""
+
+
+def _multimodal_decode_bmp565_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """REAL-format 16-bit BI_BITFIELDS RGB565 BMP decode (round-9 codec
+    lift): the arithmetic pixels real_payload uses are encoded through
+    encode_bmp_565 (masks F800/07E0/001F after the info header), decoded
+    back — header fields AND the full content checksum — by the same
+    mapInPandas path as multimodal_decode. 565 quantization is a pure
+    per-channel arithmetic map, so the oracle recomputes every field
+    including content_sum from doc_id alone: one wrong byte in the masked
+    encode->decode round trip fails the hash."""
+    from .multimodal import content_stats, decode_media_meta, with_real_media_565
+
+    docs = _tbl(spark, sf_dir, "documents").select("doc_id")
+    decoded = decode_media_meta(with_real_media_565(docs))
+    return content_stats(decoded).select(
+        "doc_id",
+        "media_type",
+        "codec",
+        "width",
+        "height",
+        "n_bytes",
+        "content_sum",
+    )
+
+
+def _multimodal_decode_bmp565_sql() -> str:
+    w, h = "(4 + doc_id % 5)", "(3 + doc_id % 4)"
+    # p = source pixel; channel c quantizes to its top 5 (R/B) or 6 (G)
+    # bits and expands by top-bit replication: v*8 + v//4 (5-bit) or
+    # v*4 + v//16 (6-bit) — OR-free forms exact because the replicated
+    # low bits never collide with the shifted value
+    p = (
+        f"((doc_id * 7 + (i // ({w} * 3)) * 31 "
+        f"+ ((i % ({w} * 3)) // 3) * 13 + (i % 3) * 5) % 256)"
+    )
+    pix = (
+        f"list_sum(list_transform(range(0, {h} * {w} * 3), "
+        f"i -> CASE WHEN i % 3 = 1 "
+        f"THEN ({p} // 4) * 4 + ({p} // 4) // 16 "
+        f"ELSE ({p} // 8) * 8 + ({p} // 8) // 4 END))"
+    )
+    return f"""
+SELECT doc_id,
+       'image' AS media_type,
+       'bmp' AS codec,
+       CAST({w} AS INT) AS width,
+       CAST({h} AS INT) AS height,
+       CAST(66 + ((2 * {w} + 3) // 4 * 4) * {h} AS BIGINT) AS n_bytes,
+       CAST({pix} AS BIGINT) AS content_sum
+FROM documents
+"""
+
+
+def _multimodal_decode_wav24_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """REAL-format PCM s24le WAV decode (round-9 codec lift): the
+    arithmetic samples real_payload uses, scaled x4096 into the signed
+    24-bit range, encoded as three-byte little-endian frames and decoded
+    back through the generic RIFF chunk walk. s24le is LOSSLESS, so the
+    oracle recomputes the content sum exactly — a wrong byte order, sign
+    extension, or frame count anywhere fails the hash."""
+    from .multimodal import content_stats, decode_media_meta, with_real_media_wav24
+
+    docs = _tbl(spark, sf_dir, "documents").select("doc_id")
+    decoded = decode_media_meta(with_real_media_wav24(docs))
+    return content_stats(decoded).select(
+        "doc_id",
+        "media_type",
+        "codec",
+        "duration_ms",
+        "n_bytes",
+        "content_sum",
+    )
+
+
+def _multimodal_decode_wav24_sql() -> str:
+    n = "(800 + (doc_id % 7) * 100)"
+    samp = (
+        f"list_sum(list_transform(range(0, {n}), "
+        f"i -> ((doc_id * 11 + i * 17) % 2048 - 1024) * 4096))"
+    )
+    return f"""
+SELECT doc_id,
+       'audio' AS media_type,
+       'pcm_s24le' AS codec,
+       CAST({n} // 8 AS INT) AS duration_ms,
+       CAST(44 + 3 * {n} AS BIGINT) AS n_bytes,
+       CAST({samp} AS BIGINT) AS content_sum
+FROM documents
+"""
+
+
+def _frame_counts_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Frame-sampling fan-out: rows per doc after sampling every 10s — the
+    oracle recomputes the fan-out arithmetically."""
+    from .multimodal import sample_frames, with_synthetic_media
+
+    docs = _tbl(spark, sf_dir, "documents").select("doc_id")
+    return (
+        sample_frames(with_synthetic_media(docs), every_ms=10_000)
+        .groupBy("doc_id")
+        .agg(F.count("*").alias("n_frames"))
+    )
+
+
+def _frame_counts_sql() -> str:
+    def byte(i: int) -> str:
+        return f"(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), {2 * i + 1}, 2))::INT)"
+
+    t = f"({byte(0)} % 3)"
+    dur = f"(({byte(3)} % 120) * 1000)"
+    return f"""
+SELECT doc_id,
+       CASE WHEN {t} = 2 AND {dur} > 0
+            THEN CAST(ceil({dur} / 10000.0) AS BIGINT)
+            ELSE 1 END AS n_frames
+FROM documents
 """
 
 
@@ -5128,6 +5348,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "pq_codes_blas": _pq_codes_blas_spark,
     "knn_ivfpq_decomposed": _knn_ivfpq_decomposed_spark,
     "knn_sharded": _knn_sharded_spark,
+    "multimodal_decode": _multimodal_decode_spark,
     "knn_ivfpq_fixed": _knn_ivfpq_fixed_spark,
     "knn_ivfpq_rerank": _knn_ivfpq_rerank_spark,
     "ann_lsh": _ann_lsh_spark,
@@ -5138,6 +5359,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "embed_pipeline": _embed_pipeline_spark,
     "embedding_dup_pairs": _embedding_dups_spark,
     "filter_selectivity": _selectivity_spark,
+    "frame_sample_counts": _frame_counts_spark,
     "grid_params": _grid_params_spark,
     "knn_blockwise": _knn_blockwise_spark,
     "knn_cosine": lambda s, d: _knn_spark(s, d, "cosine", round_digits=4),
@@ -5208,6 +5430,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "value_outliers": _value_outliers_spark,
     "vocab_summary": _vocab_summary_spark,
     "vocab_top_terms": _vocab_top_terms_spark,
+    "multimodal_decode_bmp565": _multimodal_decode_bmp565_spark,
+    "multimodal_decode_wav24": _multimodal_decode_wav24_spark,
     "ann_ivf": _ann_ivf_spark,
     "ann_ivf_fixed": _ann_ivf_fixed_spark,
     "customer_setops": _customer_setops_spark,
@@ -5256,6 +5480,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "user_sessions": _sessions_spark,
     "user_sessions_native": _sessions_native_spark,
     "zorder_keys": _zorder_keys_spark,
+    "multimodal_meta": _multimodal_meta_spark,
+    "multimodal_resize": _multimodal_resize_spark,
     "embedding_dup_pairs_lsh": _embedding_dups_lsh_spark,
     "knn_filtered_low": lambda s, d: _knn_spark(s, d, "sqeuclidean", filter_name="low_rated"),
     "knn_filtered_mid": lambda s, d: _knn_spark(s, d, "sqeuclidean", filter_name="mid_rated"),
@@ -5375,6 +5601,9 @@ ORACLES: dict[str, str] = {
     "user_sessions": _sessions_sql(),
     "user_sessions_native": _sessions_native_sql(),
     "event_lag_stats": _event_lag_stats_sql(),
+    "multimodal_meta": _multimodal_meta_sql(),
+    "frame_sample_counts": _frame_counts_sql(),
+    "multimodal_resize": _multimodal_resize_sql(),
     "ann_lsh": _ann_lsh_sql(),
     "ann_ivf_fixed": _ann_ivf_fixed_sql(),
     # fp16 tier: numpy's float16 cast on the Spark side vs an arithmetic
@@ -5385,6 +5614,9 @@ ORACLES: dict[str, str] = {
     "grid_metrics_fixed": _grid_metrics_fixed_sql(),
     "grid_metrics_lsh_fixed": _grid_metrics_lsh_fixed_sql(),
     "grid_search_lsh": _grid_search_lsh_sql(),
+    "multimodal_decode": _multimodal_decode_sql(),
+    "multimodal_decode_bmp565": _multimodal_decode_bmp565_sql(),
+    "multimodal_decode_wav24": _multimodal_decode_wav24_sql(),
     "range_search_exact": _range_sql(),
     "range_search_scale": _range_sql(),
     "range_search_filtered": _range_sql(filter_name="high_rated"),

@@ -106,9 +106,10 @@ def curate_stream_transform(
         return red.filter(~F.coalesce(contaminated, F.lit(False)))
     # mapInPandas, not a pandas_udf-in-filter: the micro-batch planner
     # cannot evaluate a Python UDF predicate against the file-stream
-    # source, while a MapInPandas stage is fully stream-safe. Shingle
-    # hashes are still computed by the SHARED Spark expression — only the
-    # set membership runs in Python.
+    # source, while a MapInPandas stage is fully stream-safe (the same
+    # vehicle the multimodal streaming paths use). Shingle hashes are
+    # still computed by the SHARED Spark expression — only the set
+    # membership runs in Python.
     bc = docs.sparkSession.sparkContext.broadcast(
         frozenset(int(h) for h in eval_hashes)
     )

@@ -124,3 +124,20 @@ def test_round6_new_surfaces_empty(spark):
 
     with _pytest.raises(ValueError, match="empty corpus"):
         PJ.pca_train(_empty_emb(spark), vec_col="embedding")
+
+
+def test_mulaw_alaw_empty_signals():
+    """Zero-length signals compand to zero-length codes and container
+    roundtrips stay well-formed (0-frame, 0 ms)."""
+    import numpy as np
+
+    from filtered_ads_vector_search_spark.multimodal import codecs as C
+
+    empty = np.array([], dtype=np.int16)
+    assert C.mulaw_encode(empty).shape == (0,)
+    assert C.alaw_encode(empty).shape == (0,)
+    for enc in (C.encode_wav_mulaw, C.encode_wav_alaw, C.encode_wav):
+        raw = enc(empty, sample_rate=8000)
+        meta = C.decode_wav_meta(raw)
+        assert meta["duration_ms"] == 0
+        assert C.decode_wav_samples(raw).shape == (0,)

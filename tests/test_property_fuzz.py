@@ -1,7 +1,8 @@
 """Hypothesis property fuzz — Spark-free, so hundreds of examples run in
 seconds. These triangulate: the registry already proves Spark == DuckDB on
 the fixed testdata; here the DuckDB twins and numpy twins are checked
-against INDEPENDENT pure-Python references on randomized inputs."""
+against INDEPENDENT pure-Python references on randomized inputs, and the
+BMP/WAV codecs are fuzzed across shapes and signals."""
 
 import duckdb
 import numpy as np
@@ -160,3 +161,46 @@ def test_blas_scorer_topk_set_matches_fold_fuzz(seed, n, q, d, top, dup_every):
             twins = np.nonzero((V == V[col]).all(axis=1))[0]
             assert len(twins) > 1, (qi, col)  # col sits on a plateau
             assert any(m_fold[qi][c] or m_blas[qi][c] for c in twins if c != col)
+
+
+@given(seed=st.integers(0, 10**6), n=st.integers(1, 400))
+@settings(max_examples=40, deadline=None)
+def test_mulaw_companding_fuzz(seed, n):
+    """G.711 mu-law on arbitrary int16 signals: the companded error is
+    bounded by half the segment step everywhere (segment step = 8 << exp,
+    exp from the magnitude's bit position), and re-encoding a decoded
+    signal is a fixed point (decode . encode . decode == decode)."""
+    from filtered_ads_vector_search_spark.multimodal import codecs as C
+
+    rng = np.random.RandomState(seed)
+    x = rng.randint(-32768, 32768, size=n).astype(np.int16)
+    y = C.mulaw_decode(C.mulaw_encode(x))
+    mag = np.minimum(np.abs(x.astype(np.int32)), 32635) + 0x84
+    exp = (np.floor(np.log2(mag)).astype(np.int32) - 7).clip(0, 7)
+    step = (8 << exp).astype(np.int32)
+    clip_slack = np.abs(x.astype(np.int32)) - 32635
+    err = np.abs(y.astype(np.int32) - x.astype(np.int32))
+    assert np.all(err <= step // 2 + np.maximum(clip_slack, 0) + 1)
+    # decoded signals are exactly representable -> companding is idempotent
+    np.testing.assert_array_equal(C.mulaw_decode(C.mulaw_encode(y)), y)
+
+
+@given(
+    seed=st.integers(0, 10**6),
+    h=st.integers(1, 24),
+    w=st.integers(1, 24),
+    with_alpha=st.booleans(),
+)
+@settings(max_examples=40, deadline=None)
+def test_bmp32_roundtrip_fuzz(seed, h, w, with_alpha):
+    """32-bit BGRA BMP: any shape round-trips pixel-exact regardless of the
+    alpha plane content (BI_RGB alpha is carried but not interpreted)."""
+    from filtered_ads_vector_search_spark.multimodal import codecs as C
+
+    rng = np.random.RandomState(seed)
+    px = rng.randint(0, 256, size=(h, w, 3)).astype(np.uint8)
+    alpha = rng.randint(0, 256, size=(h, w)).astype(np.uint8) if with_alpha else None
+    raw = C.encode_bmp_32bit(px, alpha)
+    meta = C.decode_bmp_meta(raw)
+    assert (meta["width"], meta["height"]) == (w, h)
+    np.testing.assert_array_equal(C.decode_bmp_pixels(raw), px)
